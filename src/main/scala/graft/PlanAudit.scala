@@ -224,15 +224,22 @@ object PlanAudit {
     *    other joins need both sides bounded; unions need all children;
     *  - Generate (explode) fan-out is data-dependent → unbounded;
     *  - file/RDD/checkpoint scans → unbounded;
-    *  - everything else with one child (Project/Filter/Sort/Exchange/
-    *    Window/Expand/WSCG) neither adds unbounded rows nor hides a
-    *    scan, so it passes the child verdict through. */
+    *  - the known row-preserving or row-reducing one-child nodes
+    *    (Project/Filter/Sort/Exchange/Window/Expand/Sample and the
+    *    codegen and AQE wrappers) pass the child verdict through;
+    *  - any OTHER node is unbounded (fail closed): a MapPartitions-,
+    *    FlatMapGroups- or UDTF-style node may emit any number of rows
+    *    per input row. */
   private[graft] def boundedOutput(p: SparkPlan): Boolean = {
-    import org.apache.spark.sql.execution.{CollectLimitExec, GenerateExec,
-      GlobalLimitExec, LocalLimitExec, LocalTableScanExec, RangeExec,
-      TakeOrderedAndProjectExec, UnionExec}
+    import org.apache.spark.sql.execution.{CollectLimitExec, ExpandExec, FilterExec,
+      GenerateExec, GlobalLimitExec, InputAdapter, LocalLimitExec, LocalTableScanExec,
+      ProjectExec, RangeExec, SampleExec, SortExec, TakeOrderedAndProjectExec, UnionExec,
+      WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AQEShuffleReadExec
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.Exchange
     import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.execution.window.WindowExec
     import org.apache.spark.sql.catalyst.plans.{ExistenceJoin, LeftAnti, LeftSemi}
     p match {
       case a: AdaptiveSparkPlanExec => boundedOutput(a.executedPlan)
@@ -249,7 +256,9 @@ object PlanAudit {
       }
       case u: UnionExec => u.children.forall(boundedOutput)
       case _: GenerateExec => false
-      case other if other.children.size == 1 => boundedOutput(other.children.head)
+      case _: ProjectExec | _: FilterExec | _: SortExec | _: Exchange | _: WindowExec |
+          _: ExpandExec | _: SampleExec | _: WholeStageCodegenExec | _: InputAdapter |
+          _: AQEShuffleReadExec => boundedOutput(p.children.head)
       case _ => false
     }
   }

@@ -55,9 +55,7 @@ object SinkVolumeProbe {
     Dedup.buildBandIndex(docs, spark, bandTbl, s"$path/$bandTbl")
     Similarity.buildIvfIndexPinned(emb, s"$path/ivf")
     try {
-      val seeds = spark.read.parquet(s"$path/ivf/seeds").collect()
-        .map(r => (r.getLong(r.fieldIndex("seed_id")),
-          r.getSeq[Double](r.fieldIndex("sv")).toSeq)).toSeq
+      val seeds = Similarity.pinnedSeeds(spark, s"$path/ivf")
       val assignedStatic = spark.table(Similarity.ivfPinnedTable(s"$path/ivf"))
         .select(col("vec_id").as("corpus_id"), col("cluster"))
       val evG = Curation.evalGrams(docs, col("doc_id") % 7 === 0).localCheckpoint()

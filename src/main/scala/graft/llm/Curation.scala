@@ -1276,9 +1276,7 @@ object Curation {
     val ex = Dedup.probeHashIndex(deltaDocs, spark, hashTable)
     val nr = Dedup.probeBandIndex(deltaDocs, spark, bandTable)
     val assigned = spark.table(Similarity.ivfPinnedTable(ivfPath))
-    val seeds = spark.read.parquet(s"$ivfPath/seeds").collect()
-      .map(r => (r.getLong(r.fieldIndex("seed_id")),
-        r.getSeq[Double](r.fieldIndex("sv")).toSeq)).toSeq
+    val seeds = Similarity.pinnedSeeds(spark, ivfPath)
     val pairs = deltaEmb
       .select(col("vec_id").as("delta_id"), col("v").as("dv"))
       .withColumn("cluster", Similarity.pinnedAssignExpr(seeds, col("dv")))

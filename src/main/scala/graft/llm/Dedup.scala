@@ -1165,7 +1165,8 @@ object Dedup {
     // (tasks × buckets) files instead of one per bucket (measured:
     // 16 files for 8 buckets). A plain read carries no partitioning
     // claim, so the repartition survives and aligns task ↔ bucket.
-    val rewritten = spark.read.parquet(meta.location.toString)
+    // The catalog already holds the schema: no footer-schema job.
+    val rewritten = spark.read.schema(meta.schema).parquet(meta.location.toString)
       .repartition(spec.numBuckets, cols.map(col): _*)
       .write.mode("overwrite")
       .bucketBy(spec.numBuckets, cols.head, cols.tail: _*)

@@ -307,32 +307,16 @@ object Similarity {
     * serving shape builds the index ONCE per corpus and every query
     * thereafter is a search-only partition-pruned scan (VERDICT r6
     * weak #1 — the declared/benched query used to refit KMeans per
-    * invocation). The fingerprint (file listing size/mtime hash,
-    * ADVICE r7) means a REWRITTEN corpus at the same dir gets a fresh
+    * invocation). The fingerprint ([[Tables.fingerprint]] of
+    * `<dir>/embeddings.parquet`; its first 16 hex digits name the
+    * index dir) means a REWRITTEN corpus at the same dir gets a fresh
     * index instead of silently serving a stale one; `computeIfAbsent`
     * gives per-key locking, so first builds for unrelated corpora no
     * longer serialize behind one global lock. Bounded driver state:
     * one path string per key (a superseded fingerprint's entry is one
     * orphaned string). */
   private val ivfIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int, Int), String]
-
-  /** Cheap corpus identity: MurmurHash3 of the sorted (relative path,
-    * size, mtime) listing of `<dir>/embeddings.parquet`. Harness-local
-    * filesystem walk; at scale the same contract is the storage
-    * layer's listing (object-store ETags). Unreadable dir → 0 (the
-    * key then degrades to round-6 (dir, k) behavior, never throws). */
-  private[llm] def corpusFingerprint(dir: String): Int =
-    try {
-      import java.nio.file.{Files, Paths}
-      import scala.jdk.CollectionConverters._
-      val root = Paths.get(dir, "embeddings.parquet")
-      val listing = Files.walk(root).iterator().asScala
-        .filter(p => Files.isRegularFile(p))
-        .map(p => s"${root.relativize(p)}:${Files.size(p)}:${Files.getLastModifiedTime(p).toMillis}")
-        .toSeq.sorted
-      scala.util.hashing.MurmurHash3.stringHash(listing.mkString("\n"))
-    } catch { case _: Throwable => 0 }
+    new java.util.concurrent.ConcurrentHashMap[(String, Int, String), String]
 
   /** Diagnostic: how many KMeans fits have run in this JVM (LlmSpec
     * pins that repeat declared-query invocations do NOT increment it). */
@@ -426,9 +410,9 @@ object Similarity {
     * both the key and the path keeps a regenerated corpus from
     * reading — or overwriting — the previous generation's index. */
   def ivfIndexFor(spark: SparkSession, dir: String, nClusters: Int = 16): String = {
-    val fp = corpusFingerprint(dir)
+    val fp = Tables.fingerprint(spark, s"$dir/embeddings.parquet").take(16)
     ivfIndexCache.computeIfAbsent((dir, nClusters, fp), { _ =>
-      val p = ivfTmp(s"idx_${nClusters}_${math.abs(dir.hashCode)}_${Integer.toHexString(fp)}")
+      val p = ivfTmp(s"idx_${nClusters}_${math.abs(dir.hashCode)}_$fp")
       buildIvfIndex(Tables.embeddings(spark, dir), p, nClusters)
       p
     })
@@ -470,10 +454,10 @@ object Similarity {
   def ivfSearch(
       spark: SparkSession, path: String, probeId: Long, k: Int,
       nProbe: Int = 2): DataFrame = {
-    val assigned = spark.read.parquet(s"$path/assigned")
+    val assigned = Tables.parquet(spark, s"$path/assigned")
     val probeVec = assigned.filter(col("vec_id") === probeId)
       .select(col("v")).head().getSeq[Double](0).toArray
-    val nearClusters = spark.read.parquet(s"$path/centroids")
+    val nearClusters = Tables.parquet(spark, s"$path/centroids")
       .collect()
       .map { r =>
         val c = r.getSeq[Double](r.fieldIndex("centroid"))
@@ -542,7 +526,7 @@ object Similarity {
       assignedDelta: DataFrame, spark: SparkSession, assignedPath: String): DataFrame = {
     val targets = assignedDelta.select(col("cluster")).distinct()
       .collect().map(_.get(0))
-    val existing = spark.read.parquet(assignedPath)
+    val existing = Tables.parquet(spark, assignedPath)
       .filter(col("cluster").isin(targets: _*))
       .select(col("vec_id"))
     assignedDelta.join(existing, Seq("vec_id"), "left_anti")
@@ -587,7 +571,7 @@ object Similarity {
     * re-runs from the last committed index state, exactly like an
     * interrupted build). */
   def refitIvfIndex(spark: SparkSession, path: String, nClusters: Int = 16): Unit = {
-    val rows = spark.read.parquet(s"$path/assigned")
+    val rows = Tables.parquet(spark, s"$path/assigned")
       .select(col("vec_id"), col("label"), col("v").as("embedding"))
       .localCheckpoint()
     buildIvfIndex(rows, path, nClusters)
@@ -599,7 +583,7 @@ object Similarity {
     * pins it). Exposed for [[appendIvfIndexRows]] and the plan pin. */
   private[graft] def ivfAssignRows(
       delta: DataFrame, spark: SparkSession, path: String): DataFrame = {
-    val cents = spark.read.parquet(s"$path/centroids").collect()
+    val cents = Tables.parquet(spark, s"$path/centroids").collect()
       .map(r => (r.getInt(r.fieldIndex("cluster")),
         r.getSeq[Double](r.fieldIndex("centroid")).toSeq))
       .sortBy(_._1)
@@ -635,14 +619,14 @@ object Similarity {
     * IvfStaleProbe refit-cadence question, not a correctness one. */
   def appendPqIndex(delta: DataFrame, spark: SparkSession, path: String): Unit = {
     ivfAppendCount.incrementAndGet()
-    val books = spark.read.parquet(s"$path/codebooks").collect()
+    val books = Tables.parquet(spark, s"$path/codebooks").collect()
     require(books.nonEmpty, s"no codebooks at $path — build the index first")
     val m = books.iterator.map(_.getInt(0)).max + 1
     val bySub: Map[Int, Seq[Seq[Double]]] = books
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toSeq))
       .groupBy(_._1).map { case (s, rs) => s -> rs.sortBy(_._2).map(_._3).toSeq }
     val subDim = bySub(0).head.size
-    val coarse = spark.read.parquet(s"$path/centroids").collect()
+    val coarse = Tables.parquet(spark, s"$path/centroids").collect()
       .map(r => (r.getInt(r.fieldIndex("cluster")),
         r.getSeq[Double](r.fieldIndex("centroid")).toSeq))
       .sortBy(_._1).map(_._2).toSeq
@@ -681,7 +665,7 @@ object Similarity {
     import java.nio.file.{Files, Paths}
     val dir = Paths.get(path, "assigned")
     val tmp = Paths.get(path, "assigned_compacting")
-    spark.read.parquet(dir.toString)
+    Tables.parquet(spark, dir.toString)
       .repartition(col("cluster"))
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .partitionBy("cluster").parquet(tmp.toString)
@@ -907,7 +891,7 @@ object Similarity {
     * target clusters (cluster `isin` → bucket pruning), mirroring the
     * path family's [[dropAlreadyIndexed]]. */
   def appendIvfIndexPinned(delta: DataFrame, spark: SparkSession, path: String): Unit = {
-    val seeds = spark.read.parquet(s"$path/seeds")
+    val seeds = Tables.parquet(spark, s"$path/seeds")
     val e = delta.select(col("vec_id"), col("label"), asDouble(col("embedding")).as("v"))
     val assignedDelta = pinnedAssign(e, seeds)
     val targets = assignedDelta.select(col("cluster")).distinct()
@@ -999,7 +983,7 @@ object Similarity {
     // for a lost or unreadable seeds file only.
     val storedN =
       try {
-        val n = spark.read.parquet(s"$path/seeds").count().toInt
+        val n = Tables.parquet(spark, s"$path/seeds").count().toInt
         if (n > 0) n else nCells
       } catch { case _: Throwable => nCells }
     val expected = spark.table(t)
@@ -1010,7 +994,7 @@ object Similarity {
       .map(r => (r.getLong(r.fieldIndex("seed_id")),
         r.getSeq[Double](r.fieldIndex("sv")).toSeq)).sortBy(_._1).toSeq
     val stale =
-      try key(spark.read.parquet(s"$path/seeds")) != key(expected)
+      try key(Tables.parquet(spark, s"$path/seeds")) != key(expected)
       catch { case _: Throwable => true } // unreadable/missing → rewrite
     if (stale)
       expected.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
@@ -1250,6 +1234,14 @@ object Similarity {
             element_at(col("v"), ((i + lit(7)) % lit(Dim)) + 1)).as("v")))
   }
 
+  /** The persisted seed set of a [[buildIvfIndexPinned]] index at
+    * `path` as (seed_id, seed vector) pairs — the bounded driver-side
+    * input of [[pinnedAssignExpr]]. Read through the schema resolver. */
+  private[graft] def pinnedSeeds(spark: SparkSession, path: String): Seq[(Long, Seq[Double])] =
+    Tables.parquet(spark, s"$path/seeds").collect()
+      .map(r => (r.getLong(r.fieldIndex("seed_id")),
+        r.getSeq[Double](r.fieldIndex("sv")).toSeq)).toSeq
+
   /** MAP-ONLY pinned cell assignment — the streaming form of
     * [[pinnedAssign]]: the (bounded) seed set rides as two array
     * literals and the argmax-rounded-cosine-with-min-seed-tiebreak
@@ -1397,7 +1389,7 @@ object Similarity {
     val assigned = spark.table(ivfPinnedTable(path))
     val probeVec = assigned.filter(col("vec_id") === probeId)
       .select(col("v")).head().getSeq[Double](0)
-    val near = spark.read.parquet(s"$path/seeds")
+    val near = Tables.parquet(spark, s"$path/seeds")
       .withColumn("cs", round(cosine(col("sv"), typedLit(probeVec)), 6) + lit(0.0))
       .orderBy(col("cs").desc, col("seed_id"))
       .limit(nProbe)
@@ -1599,7 +1591,7 @@ object Similarity {
   val pqBuildCount = new java.util.concurrent.atomic.AtomicLong(0L)
 
   private val pqIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int, Int, Int), String]
+    new java.util.concurrent.ConcurrentHashMap[(String, Int, Int, String), String]
 
   /** The persisted-PQ-index path for a corpus dir, building on first
     * use only — same serving discipline, per-key locking, and corpus
@@ -1608,9 +1600,9 @@ object Similarity {
   def pqIndexFor(
       spark: SparkSession, dir: String,
       m: Int = PqM, k: Int = PqK, nClusters: Int = 16): String = {
-    val fp = corpusFingerprint(dir)
+    val fp = Tables.fingerprint(spark, s"$dir/embeddings.parquet").take(16)
     pqIndexCache.computeIfAbsent((dir, m, k * 65536 + nClusters, fp), { _ =>
-      val p = ivfTmp(s"pq_${m}_${k}_${nClusters}_${math.abs(dir.hashCode)}_${Integer.toHexString(fp)}")
+      val p = ivfTmp(s"pq_${m}_${k}_${nClusters}_${math.abs(dir.hashCode)}_$fp")
       buildPqIndex(Tables.embeddings(spark, dir), p, m, k, nClusters)
       p
     })
@@ -1696,7 +1688,7 @@ object Similarity {
     * IVF sizing rule); cross-cluster near-dups are the recall trade the
     * paper accepts (duplicates land in one cluster by construction). */
   def semDeDup(spark: SparkSession, indexPath: String, tau: Double): DataFrame = {
-    val assigned = spark.read.parquet(s"$indexPath/assigned")
+    val assigned = Tables.parquet(spark, s"$indexPath/assigned")
       .select(col("vec_id"), col("label"), col("v"), col("cluster"))
     val victims = assigned.as("x").join(assigned.as("y"),
         col("x.cluster") === col("y.cluster") && col("x.vec_id") > col("y.vec_id"))
@@ -1732,10 +1724,10 @@ object Similarity {
   def pqSearch(
       spark: SparkSession, path: String, probeId: Long, kResults: Int,
       nProbe: Int = 0): DataFrame = {
-    val assigned = spark.read.parquet(s"$path/assigned")
+    val assigned = Tables.parquet(spark, s"$path/assigned")
     val probe = assigned.filter(col("vec_id") === probeId)
       .select(col("u")).head().getSeq[Double](0).toArray
-    val books = spark.read.parquet(s"$path/codebooks").collect()
+    val books = Tables.parquet(spark, s"$path/codebooks").collect()
     val m = books.iterator.map(_.getInt(0)).max + 1
     val k = books.iterator.map(_.getInt(1)).max + 1
     val subDim = probe.length / m
@@ -1749,7 +1741,7 @@ object Similarity {
       lut(s * k + r.getInt(1)) = acc
     }
     val scanned = if (nProbe <= 0) assigned else {
-      val near = spark.read.parquet(s"$path/centroids").collect()
+      val near = Tables.parquet(spark, s"$path/centroids").collect()
         .map { r =>
           val c = r.getSeq[Double](r.fieldIndex("centroid"))
           var d = 0.0
@@ -1781,7 +1773,7 @@ object Similarity {
   def pqSearchRerank(
       spark: SparkSession, path: String, probeId: Long, kResults: Int,
       candMult: Int = 4, nProbe: Int = 0): DataFrame = {
-    val assigned = spark.read.parquet(s"$path/assigned")
+    val assigned = Tables.parquet(spark, s"$path/assigned")
     val probeU = assigned.filter(col("vec_id") === probeId)
       .select(col("u")).head().getSeq[Double](0)
     val shortlist = pqSearch(spark, path, probeId, kResults * candMult, nProbe)

@@ -33,10 +33,11 @@ object StreamingAlerts {
     * batch loader (`Tables.events` — nanos-as-long OR TIMESTAMP_NTZ,
     * whichever this testdata generation shipped), but through
     * `readStream` — parquet streaming sources need an explicit schema,
-    * taken from the batch footer read (no inference pass over the data). */
+    * taken from the schema resolver (`Tables.parquet`: one footer read
+    * per file listing, no inference pass over the data). */
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = Tables.parquet(spark, s"$dir/events.parquet").schema
     // the table is a single parquet FILE; the streaming file source
     // requires a directory or a glob pattern (a bare file path makes it
     // derive basePath = the file and fail), so address it as a glob —
@@ -835,7 +836,7 @@ object StreamingAlerts {
           .outputMode("append").trigger(Trigger.AvailableNow()).start()
         q.awaitTermination()
         Dedup.nearDupVerdictFrom(
-            s.read.parquet(s"$path/sink").localCheckpoint(),
+            Tables.parquet(s, s"$path/sink").localCheckpoint(),
             docs, Dedup.incrementalNearDelta(docs))
           .orderBy(col("doc_id")).localCheckpoint()
       } finally {
@@ -865,9 +866,7 @@ object StreamingAlerts {
       val path = java.nio.file.Files.createTempDirectory("graft_stream_sdp").toString
       Similarity.buildIvfIndexPinned(emb, path)
       try {
-        val seeds = s.read.parquet(s"$path/seeds").collect()
-          .map(r => (r.getLong(r.fieldIndex("seed_id")),
-            r.getSeq[Double](r.fieldIndex("sv")).toSeq)).toSeq
+        val seeds = Similarity.pinnedSeeds(s, path)
         val assignedStatic = s.table(Similarity.ivfPinnedTable(path))
           .select(col("vec_id").as("corpus_id"), col("cluster"))
         // file sink (r20): same driver-budget fix as
@@ -884,7 +883,7 @@ object StreamingAlerts {
           .outputMode("append").trigger(Trigger.AvailableNow()).start()
         q.awaitTermination()
         Similarity.semVerdictFrom(
-            s.read.parquet(s"$path/probe_sink").localCheckpoint(),
+            Tables.parquet(s, s"$path/probe_sink").localCheckpoint(),
             emb, Similarity.semDeDupDelta(emb))
           .localCheckpoint()
       } finally Similarity.dropIvfIndexPinned(s, path)
@@ -923,9 +922,7 @@ object StreamingAlerts {
       Dedup.buildBandIndex(docs, s, bandTbl, s"$path/$bandTbl")
       Similarity.buildIvfIndexPinned(emb, s"$path/ivf")
       try {
-        val seeds = s.read.parquet(s"$path/ivf/seeds").collect()
-          .map(r => (r.getLong(r.fieldIndex("seed_id")),
-            r.getSeq[Double](r.fieldIndex("sv")).toSeq)).toSeq
+        val seeds = Similarity.pinnedSeeds(s, s"$path/ivf")
         val assignedStatic = s.table(Similarity.ivfPinnedTable(s"$path/ivf"))
           .select(col("vec_id").as("corpus_id"), col("cluster"))
         val evG = Curation.evalGrams(docs, col("doc_id") % 7 === 0)
@@ -952,7 +949,7 @@ object StreamingAlerts {
           .option("checkpointLocation", s"$path/hit_ckpt")
           .outputMode("append").trigger(Trigger.AvailableNow()).start()
         q.awaitTermination()
-        val hits = s.read.parquet(s"$path/hit_sink").localCheckpoint()
+        val hits = Tables.parquet(s, s"$path/hit_sink").localCheckpoint()
         val delta = Curation.refreshDeltaDocs(docs)
         val ex = hits.filter(col("tier") === "x")
           .select(col("delta_id").as("doc_id"), col("cand_id")).distinct()
@@ -1081,9 +1078,9 @@ object StreamingAlerts {
     })
 
   /** `orders` as an unbounded source (same glob-addressing trick as
-    * `eventsStream`; schema from the batch footer read). */
+    * `eventsStream`; schema from the schema resolver). */
   def ordersStream(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/orders.parquet").schema
+    val schema = Tables.parquet(spark, s"$dir/orders.parquet").schema
     spark.readStream.schema(schema).parquet(s"$dir/orders.*")
   }
 
@@ -1137,16 +1134,16 @@ object StreamingAlerts {
   }
 
   /** `documents` as an unbounded source (same glob-addressing trick as
-    * `eventsStream`; schema from the batch footer read). */
+    * `eventsStream`; schema from the schema resolver). */
   def docsStream(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
+    val schema = Tables.parquet(spark, s"$dir/documents.parquet").schema
     spark.readStream.schema(schema).parquet(s"$dir/documents.*")
   }
 
   /** `embeddings` as an unbounded source (same glob trick; schema
-    * from the batch footer read). */
+    * from the schema resolver). */
   def embStream(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/embeddings.parquet").schema
+    val schema = Tables.parquet(spark, s"$dir/embeddings.parquet").schema
     spark.readStream.schema(schema).parquet(s"$dir/embeddings.*")
   }
 

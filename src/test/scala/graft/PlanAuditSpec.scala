@@ -468,6 +468,18 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
+  test("boundedOutput fails closed: a MapPartitions-style node over a bounded child is unbounded") {
+    import spark.implicits._
+    val bounded = spark.range(100).orderBy(col("id")).limit(5)
+    assert(PlanAudit.boundedOutput(bounded.queryExecution.executedPlan),
+      s"control: a limit must prove bounded:\n${bounded.queryExecution.executedPlan}")
+    // one row in, any number out: the prover cannot bound it
+    val fanned = bounded.as[Long].mapPartitions(_.flatMap(x => Iterator.fill(1000)(x)))
+    assert(!PlanAudit.boundedOutput(fanned.queryExecution.executedPlan),
+      s"a row-expanding one-child node passed the bounded verdict through:\n" +
+        fanned.queryExecution.executedPlan)
+  }
+
   test("global-window census: every unpartitioned Window in a declared query is plan-bounded or allowlisted (r21)") {
     // VERDICT r20 task 3: Verify's tail carries repeated `WindowExec:
     // No Partition Defined` WARNs — every such site moves ALL its input
