@@ -19,11 +19,11 @@ import org.apache.spark.sql.DataFrame
   *
   * Setting `graft.iter.checkpointDir` (session conf) upgrades the
   * policy to cluster-grade: a RELIABLE `checkpoint()` to that
-  * directory at every `everyK`-th round (default EVERY round), local
-  * checkpoints in between for `everyK` > 1 — so at a checkpointed
-  * round the loop's state survives any executor loss (recovery reads
-  * the checkpoint files; nothing is recomputed), and the job's
-  * unrecoverable window shrinks to the in-between rounds.
+  * directory at EVERY round — so the loop's state survives any
+  * executor loss (recovery reads the checkpoint files; nothing is
+  * recomputed), and no round holds its state only in executor-local
+  * blocks. Unset, a lost block fails the job loudly (GraphsSpec pins
+  * both outcomes); it never yields partial data.
   *
   * Why every round must still TRUNCATE (not persist): the loops
   * compose their frames — BFS unions `dist` with each round's
@@ -34,15 +34,6 @@ import org.apache.spark.sql.DataFrame
   * variant OOM'd the analyzer in DeduplicateRelations before any
   * task ran). Truncation every round is what keeps analysis O(1)
   * per round; the only policy choice is WHICH truncation.
-  *
-  * The `everyK` trade-off (PLANS.md r19): each reliable checkpoint is
-  * a full write of the frame to the checkpoint filesystem. k = 1
-  * (default) makes every round's state durable — executor loss never
-  * kills the job. k > 1 cuts the write traffic k× but the in-between
-  * rounds hold only executor-local blocks with severed lineage, so a
-  * loss inside that window still fails the job ((k−1)/k of the time)
-  * — it is a cost knob for operators whose retry-the-job cost is low
-  * relative to the checkpoint write, not a smaller recovery window.
   */
 object IterCkpt {
 
@@ -67,86 +58,65 @@ object IterCkpt {
   // not once per round
   private var pushedDir: Option[String] = None
 
-  /** Session-conf key for the reliable-checkpoint CADENCE (r20,
-    * VERDICT r19 task 3): every k-th round writes the reliable
-    * checkpoint, the in-between rounds localCheckpoint. Default 1
-    * (every round durable). The loops of the iterative tier read this
-    * through the 2-arg [[truncate]], so the knob reaches BFS / SSSP /
-    * k-core / CC / PageRank / LPA without a signature change. Cost
-    * guidance (measured, PLANS.md r20 cost-curve table): k trades the
-    * checkpoint WRITE k× against an unrecoverable window of k−1
-    * rounds — a loss there fails the job; pick k > 1 only when
-    * re-running the whole job is cheap relative to the write. */
-  val EveryKConfKey = "graft.iter.reliableEveryK"
-
-  /** [[truncate]] with the cadence taken from the session conf
-    * ([[EveryKConfKey]], default 1) — the form the iterative tier's
-    * loops call. */
-  def truncate(df: DataFrame, round: Int): DataFrame =
-    truncate(df, round,
-      df.sparkSession.conf.getOption(EveryKConfKey).map(_.toInt).getOrElse(1))
-
-  /** Bound `df`'s lineage at iteration `round` (0 for pre-loop seed
-    * frames — those always truncate) under the session's policy. */
-  def truncate(df: DataFrame, round: Int, everyK: Int): DataFrame = {
-    require(everyK >= 1, s"IterCkpt.truncate: everyK must be >= 1, got $everyK")
+  /** Bound `df`'s lineage under the session's policy: a reliable
+    * checkpoint into [[ConfKey]]'s directory when it is set, a local
+    * checkpoint otherwise. */
+  def truncate(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     spark.conf.getOption(ConfKey).filter(_.nonEmpty) match {
       case Some(dir) =>
-        if (round % everyK == 0) {
-          val sc = spark.sparkContext
-          // the CONF is the operator's explicit durability intent for
-          // these loops, so it takes precedence over whatever context-
-          // level dir happens to be set (review r19: deferring to a
-          // pre-existing sc dir silently sent "reliable" checkpoints
-          // to an unrelated — possibly local, non-durable — location)
-          // persist around the reliable write (review r19): RDD
-          // checkpointing recomputes the lineage when the files are
-          // written after the materializing action — Spark's
-          // documented caveat — so an unpersisted frame pays every
-          // round's join+agg TWICE; the cache makes the second pass a
-          // read. Superseded round files are reclaimed on GC when
-          // spark.cleaner.referenceTracking.cleanCheckpoints=true —
-          // set it on long-running clusters or the checkpoint dir
-          // grows one frame copy per round.
-          val cached = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          // the lock spans the CHECKPOINT itself, not just the dir
-          // push (r20, ADVICE r19): SparkContext.checkpointDir is
-          // process-global, so a push-then-checkpoint-outside-the-lock
-          // window let a second session with a DIFFERENT conf value
-          // interleave and send this session's "reliable" write under
-          // the other session's directory. Serializing the write is
-          // the correctness choice; see [[ConfKey]] for the
-          // one-value-per-SparkContext deployment rule. Inside the
-          // lock the context dir is RE-VERIFIED against the session's
-          // intent each time — an operator-set (or other-session-set)
-          // context dir is re-pinned, never silently trusted.
-          val out = synchronized {
-            val current = sc.getCheckpointDir
-            // re-push when the global dir is not one this conf value
-            // minted (setCheckpointDir creates a random subdir of
-            // `dir`, so prefix-match, not equality). The stored value
-            // is the FS-QUALIFIED subdir path ("file:/…/<uuid>"), so
-            // the conf dir must be qualified the same way before
-            // comparing — a bare-path compare re-pushed (new UUID
-            // subdir) every round, and a qualified-prefix conf value
-            // could silently match a SIBLING dir ("…/ck" vs "…/ck-old")
-            // without the separator terminator (review r20).
-            val qualifiedPrefix = {
-              val p = new org.apache.hadoop.fs.Path(dir)
-              val q = p.getFileSystem(sc.hadoopConfiguration).makeQualified(p).toString
-              if (q.endsWith("/")) q else q + "/"
-            }
-            if (!pushedDir.contains(dir) ||
-                !current.exists(_.startsWith(qualifiedPrefix))) {
-              sc.setCheckpointDir(dir)
-              pushedDir = Some(dir)
-            }
-            cached.checkpoint()
+        val sc = spark.sparkContext
+        // the CONF is the operator's explicit durability intent for
+        // these loops, so it takes precedence over whatever context-
+        // level dir happens to be set (review r19: deferring to a
+        // pre-existing sc dir silently sent "reliable" checkpoints
+        // to an unrelated — possibly local, non-durable — location)
+        // persist around the reliable write (review r19): RDD
+        // checkpointing recomputes the lineage when the files are
+        // written after the materializing action — Spark's
+        // documented caveat — so an unpersisted frame pays every
+        // round's join+agg TWICE; the cache makes the second pass a
+        // read. Superseded round files are reclaimed on GC when
+        // spark.cleaner.referenceTracking.cleanCheckpoints=true —
+        // set it on long-running clusters or the checkpoint dir
+        // grows one frame copy per round.
+        val cached = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        // the lock spans the CHECKPOINT itself, not just the dir
+        // push (r20, ADVICE r19): SparkContext.checkpointDir is
+        // process-global, so a push-then-checkpoint-outside-the-lock
+        // window let a second session with a DIFFERENT conf value
+        // interleave and send this session's "reliable" write under
+        // the other session's directory. Serializing the write is
+        // the correctness choice; see [[ConfKey]] for the
+        // one-value-per-SparkContext deployment rule. Inside the
+        // lock the context dir is RE-VERIFIED against the session's
+        // intent each time — an operator-set (or other-session-set)
+        // context dir is re-pinned, never silently trusted.
+        val out = synchronized {
+          val current = sc.getCheckpointDir
+          // re-push when the global dir is not one this conf value
+          // minted (setCheckpointDir creates a random subdir of
+          // `dir`, so prefix-match, not equality). The stored value
+          // is the FS-QUALIFIED subdir path ("file:/…/<uuid>"), so
+          // the conf dir must be qualified the same way before
+          // comparing — a bare-path compare re-pushed (new UUID
+          // subdir) every round, and a qualified-prefix conf value
+          // could silently match a SIBLING dir ("…/ck" vs "…/ck-old")
+          // without the separator terminator (review r20).
+          val qualifiedPrefix = {
+            val p = new org.apache.hadoop.fs.Path(dir)
+            val q = p.getFileSystem(sc.hadoopConfiguration).makeQualified(p).toString
+            if (q.endsWith("/")) q else q + "/"
           }
-          cached.unpersist()
-          out
-        } else df.localCheckpoint()
+          if (!pushedDir.contains(dir) ||
+              !current.exists(_.startsWith(qualifiedPrefix))) {
+            sc.setCheckpointDir(dir)
+            pushedDir = Some(dir)
+          }
+          cached.checkpoint()
+        }
+        cached.unpersist()
+        out
       case None => df.localCheckpoint()
     }
   }

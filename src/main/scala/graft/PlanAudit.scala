@@ -430,13 +430,9 @@ object PlanAudit {
     // not an inline copy (r20: the old inline block silently kept the
     // retired self-join shape after the one-grouped-pass rewrite)
     audit("sourceOverlapExact", llm.Curation.sourceOverlapPlan(docs))
-    // exact-dedup regimes (r21 knob): "agg" = the declared survivor
-    // aggregate + semi-join (broadcast regime, keeps scan
-    // partitioning); "window" = the one-scan one-exchange window-min
-    // for survivor frames past broadcast — both shared variants
+    // exact dedup: the declared survivor aggregate + semi-join
+    // (broadcast regime, keeps scan partitioning) — the shared variant
     audit("exactDedup(agg)", llm.Curation.exactDedupCorpus(docs))
-    audit("exactDedup(window)",
-      llm.Curation.exactDedupCorpus(docs, dedupLayout = "window"))
     // round-9 ops tier: the merge rewrite is delta ∪ (base ANTI delta)
     // — the anti join must broadcast the delta (small side), and the
     // skew profile is one keyed count + a broadcast totals row
@@ -449,14 +445,10 @@ object PlanAudit {
         "o_orderkey")
     })
     audit("keySkew", queries.Audit.keySkew(Tables.orders(spark, sfDir), "o_custkey", 10))
-    // familiarity (headline, r9): both regimes of the SHARED plan
-    // variant (r21 knob; the sourceOverlapPlan discipline): "join" =
-    // gram-keyed freq aggregate + join + doc rollup (the declared
-    // query's broadcast-regime plan); "window" = count window over
-    // gram_h + doc rollup (the non-broadcast regime — no freq join)
+    // familiarity (headline, r9): the SHARED plan variant (the
+    // sourceOverlapPlan discipline) — gram-keyed freq aggregate + join
+    // + doc rollup
     audit("familiarity(core)", llm.TextAnalysis.familiarityPlan(docs))
-    audit("familiarity(core,window)",
-      llm.TextAnalysis.familiarityPlan(docs, freqLayout = "window"))
     audit("negativePairs", llm.Curation.negativePairs(docs, 4))
     // round-9: within-doc repetition coverage — recurrence test is a
     // window over (doc_id, gram_h), islands+rollup share the doc_id

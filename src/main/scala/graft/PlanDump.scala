@@ -63,10 +63,10 @@ object PlanDump {
 
   /** r19-shape replicas of the cores CHANGED by the r20 optimization
     * round, reconstructed inline for before/after plan evidence (the
-    * LpaLayoutProbe.lpaOld precedent — the old code is not runnable
-    * from this build, so the retired shape is replicated verbatim from
-    * the r19 tree and dumped as `<query>_core_before.txt` by the same
-    * run that dumps the shipped core as `_core_after.txt`). */
+    * old code is not runnable from this build, so the retired shape is
+    * replicated verbatim from the r19 tree and dumped as
+    * `<query>_core_before.txt` by the same run that dumps the shipped
+    * core as `_core_after.txt`). */
   private def legacyCores(
       spark: SparkSession, sfDir: String,
       fixtureDocs: () => DataFrame): Map[String, () => DataFrame] = Map(

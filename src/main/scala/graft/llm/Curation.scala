@@ -829,48 +829,31 @@ object Curation {
   }
 
   /** The capstone's exact-dedup stage: first doc_id per content hash
-    * wins. Two REGIMES behind `dedupLayout` (the edgeLayoutKey
-    * convention — r21, VERDICT r20 task 1):
+    * wins, as a survivor aggregate over the content hash + doc_id
+    * semi-join back (the declared queries' plan; the oracle replays
+    * the same SQL). In the broadcast regime the corpus is never
+    * shuffled and the output KEEPS the scan partitioning — which
+    * matters here because every caller persists this frame for two
+    * downstream consumers, and the narrow cache keeps their per-job
+    * task count low.
     *
-    *  - `"agg"` (default — the declared queries' plan): survivor
-    *    aggregate over the content hash + doc_id semi-join back. In
-    *    the broadcast regime the corpus is never shuffled and the
-    *    output KEEPS the scan partitioning — which matters here
-    *    because every caller persists this frame for two downstream
-    *    consumers, and the narrow cache keeps their per-job task
-    *    count low. Measured end-to-end at sf0.1 (trainingReady,
-    *    count consumer, min-of-7, both orders): agg 1.00–1.41 s vs
-    *    window 1.78–2.19 s — the A/B that decided the default.
-    *  - `"window"` (the at-scale regime): ONE window-min pass over
-    *    the 16-byte content-key partition — one scan and one corpus
-    *    exchange where the agg shape pays two scans, the survivor
-    *    exchange AND a corpus-sized join-back once the survivor set
-    *    outgrows a broadcast (isolated-stage A/B, noop sink:
-    *    0.24 → 0.15 s with broadcast disabled). The regime for
-    *    corpora whose survivor frame cannot broadcast.
-    *
-    * Identical rows in both regimes under the documents contract
-    * (doc_id unique); the oracle replays the agg SQL unchanged. */
-  private[graft] def exactDedupCorpus(
-      docs: DataFrame, dedupLayout: String = "agg"): DataFrame = {
-    require(dedupLayout == "agg" || dedupLayout == "window",
-      s"exactDedupCorpus: dedupLayout must be \"agg\" (broadcast regime) or " +
-        s"\"window\" (non-broadcast regime), got $dedupLayout")
-    if (dedupLayout == "window")
-      keepMinDocByText(docs)
-        .select(col("doc_id"), col("lang"), col("source"), col("text"))
-    else {
-      val survivors = docs.groupBy(Dedup.contentKey(col("text")).as("h"))
-        .agg(min(col("doc_id")).as("doc_id")).select("doc_id")
-      docs.join(survivors, Seq("doc_id"), "left_semi")
-        .select(col("doc_id"), col("lang"), col("source"), col("text"))
-    }
+    * Documents contract: `doc_id` is unique. When it is not, the
+    * survivor is still chosen per content hash, but the semi-join
+    * keeps EVERY row carrying a surviving `doc_id` — including rows
+    * of that id whose text hashes elsewhere (CurationSpec pins this).
+    * No runtime check: it would cost a job on every call. */
+  private[graft] def exactDedupCorpus(docs: DataFrame): DataFrame = {
+    val survivors = docs.groupBy(Dedup.contentKey(col("text")).as("h"))
+      .agg(min(col("doc_id")).as("doc_id")).select("doc_id")
+    docs.join(survivors, Seq("doc_id"), "left_semi")
+      .select(col("doc_id"), col("lang"), col("source"), col("text"))
   }
 
   /** Keep-first exact dedup as one content-hash-partitioned window
-    * min (see [[exactDedupCorpus]]); preserves the caller's columns.
-    * Window state is bounded by the duplicate multiplicity of one
-    * content hash — the groups the old aggregate built anyway. */
+    * min — one scan and one corpus exchange (`corpus_curated`'s form);
+    * preserves the caller's columns. Window state is bounded by the
+    * duplicate multiplicity of one content hash — the groups
+    * [[exactDedupCorpus]]'s survivor aggregate builds anyway. */
   private[graft] def keepMinDocByText(docs: DataFrame): DataFrame =
     docs
       // 16-byte binary content key (Dedup.contentKey): the window's
@@ -890,9 +873,8 @@ object Curation {
     * map-side re-derivation differs. */
   private[graft] def trainingReadyPlan(
       docs: DataFrame, evalPred: Column, minTokens: Int,
-      rates: Seq[(String, Int)], defaultRate: Int, budget: Int,
-      dedupLayout: String = "agg"): DataFrame = {
-    val corpus = exactDedupCorpus(docs, dedupLayout)
+      rates: Seq[(String, Int)], defaultRate: Int, budget: Int): DataFrame = {
+    val corpus = exactDedupCorpus(docs)
     trainingReadyFrom(
       corpus, decontaminatePlan(corpus, evalPred).select(col("doc_id")),
       evalPred, minTokens, rates, defaultRate, budget)

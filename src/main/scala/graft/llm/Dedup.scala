@@ -3220,7 +3220,7 @@ object Dedup {
       .distinct() // dedup rides the layout exchange (r20)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     var labels = graft.IterCkpt.truncate(
-      nodes.select(col("id"), col("id").as("label")), 0)
+      nodes.select(col("id"), col("id").as("label")))
     var iter = 0
     var changed = 1L
     while (changed > 0 && iter < maxIter) {
@@ -3230,8 +3230,7 @@ object Dedup {
       val next = graft.IterCkpt.truncate(
         labels.join(nbrMin, labels("id") === nbrMin("nid"), "left")
           .select(labels("id"),
-            least(col("label"), coalesce(col("nbr_label"), col("label"))).as("label")),
-        iter + 1)
+            least(col("label"), coalesce(col("nbr_label"), col("label"))).as("label")))
       changed = next.as("n")
         .join(labels.as("o"), col("n.id") === col("o.id"))
         .filter(col("n.label") =!= col("o.label"))
@@ -3414,7 +3413,7 @@ object Dedup {
     val ids = nodes.select(col("id"))
     val n = ids.count().toDouble
     var ranks = graft.IterCkpt.truncate(
-      ids.select(col("id"), (lit(1.0) / n).as("rank")), 0)
+      ids.select(col("id"), (lit(1.0) / n).as("rank")))
     for (i <- 1 to iters) {
       val contrib = undDeg
         .join(ranks.withColumnRenamed("id", "a"), "a")
@@ -3425,7 +3424,7 @@ object Dedup {
         .select(col("id"),
           (lit((1 - damping) / n) + lit(damping) * coalesce(col("in_rank"), lit(0.0)))
             .as("rank"))
-      ranks = graft.IterCkpt.truncate(ranks, i)
+      ranks = graft.IterCkpt.truncate(ranks)
     }
     undDeg.unpersist()
     ranks.select(col("id"), (round(col("rank") * n, 6) + lit(0.0)).as("rank_norm"))
@@ -3458,7 +3457,7 @@ object Dedup {
   def ccStarWithRounds(
       nodes: DataFrame, edges: DataFrame, maxIter: Int = 50): (DataFrame, Int) = {
     var e = graft.IterCkpt.truncate(edges.select(col("a"), col("b"))
-      .filter(col("a") =!= col("b")).distinct(), 0)
+      .filter(col("a") =!= col("b")).distinct())
     var iter = 0
     var changed = 1L
     while (changed > 0 && iter < maxIter) {
@@ -3482,7 +3481,7 @@ object Dedup {
         .select(col("b").as("a"), col("m").as("b"))
         .unionByName(mins2.select(col("a"), col("m").as("b")))
         .distinct()
-      val nextT = graft.IterCkpt.truncate(next, iter + 1)
+      val nextT = graft.IterCkpt.truncate(next)
       changed = nextT.except(e).count() + e.except(nextT).count()
       e = nextT
       iter += 1
@@ -3519,36 +3518,14 @@ object Dedup {
     * (max_by over (count, −label) — an aggregate, NOT a per-node
     * window sort), with lineage checkpoint-truncated per round. */
   def labelPropagation(
-      nodes: DataFrame, edges: DataFrame, iters: Int = 5,
-      checkpointEvery: Int = 1, edgeLayoutKey: String = "a"): DataFrame = {
+      nodes: DataFrame, edges: DataFrame, iters: Int = 5): DataFrame = {
     // r19 (VERDICT r18 task 7, "pre-bucket the edge table by src"):
-    // the undirected edge frame is PRE-PARTITIONED once and persisted,
-    // so all `iters` rounds reuse one layout. The RIGHT key depends on
-    // the label-frame regime, and `edgeLayoutKey` is that choice as
-    // API (r20, VERDICT r19 task 2 — previously scaladoc prose, now
-    // plan-census-pinned in LlmSpec/LpaLayoutProbe):
-    //  - "a" (default) for the BROADCAST regime (labels broadcastable,
-    //    up to ~10⁸ nodes): each round's join streams the persisted
-    //    edges and the fused label_mode aggregation reuses hash(a) —
-    //    a round runs with ZERO edge-sized exchanges (r19 census).
-    //  - "b" for the NON-BROADCAST regime (labels beyond broadcast —
-    //    the join plans as SMJ keyed on b): the persisted hash(b)
-    //    layout makes the EDGE side of the join exchange-free, so the
-    //    round pays ONE edge-sized exchange (the label_mode re-key to
-    //    hash(a) — LPA's irreducible communication) plus one
-    //    NODE-sized labels re-key. Under the default "a" layout the
-    //    same regime pays a SECOND edge-sized exchange (the SMJ
-    //    re-keys the edges by b every round) — the flip saves one
-    //    full edge pass per round. Measured census (LpaLayoutProbe /
-    //    LlmSpec plan pin): 2 exchanges under "b" vs 3 under "a".
-    //    The node-sized labels re-key is irreducible under the
-    //    per-round lineage truncation: a checkpointed frame reads
-    //    back as UnknownPartitioning under AQE (measured, Spark 4.1),
-    //    so the labels frame cannot carry hash(id) across rounds —
-    //    and it is the cheap side (|V| rows of two longs vs |E|).
-    require(edgeLayoutKey == "a" || edgeLayoutKey == "b",
-      s"edgeLayoutKey must be \"a\" (broadcast regime) or \"b\" " +
-        s"(non-broadcast regime), got $edgeLayoutKey")
+    // the undirected edge frame is PRE-PARTITIONED once on hash(a) and
+    // persisted, so all `iters` rounds reuse one layout. While the
+    // labels broadcast (up to ~10⁸ nodes) each round's join streams
+    // the persisted edges and the fused label_mode aggregation reuses
+    // hash(a) — a round runs with ZERO edge-sized exchanges (r19
+    // census; LlmSpec pins the SMJ-regime round at 3 exchanges).
     // r20 (optimization round): rogue edges whose b-endpoint is not a
     // node are dropped ONCE here — the per-round labels join used to
     // drop them implicitly (labels only ever covered nodes), and the
@@ -3558,14 +3535,14 @@ object Dedup {
     // per round; a no-op when edge endpoints ⊆ nodes (every caller in
     // this repo).
     // the dedup rides the layout exchange (r20): repartition FIRST,
-    // then distinct — hash(edgeLayoutKey) clusters every (a, b) group
-    // into one partition, so the dedup aggregate reuses the layout
-    // instead of paying its own (a, b) exchange; the setup shuffles the
-    // raw symmetric rows once instead of distinct-then-repartition
-    // twice. Same rows, same cached layout.
+    // then distinct — hash(a) clusters every (a, b) group into one
+    // partition, so the dedup aggregate reuses the layout instead of
+    // paying its own (a, b) exchange; the setup shuffles the raw
+    // symmetric rows once instead of distinct-then-repartition twice.
+    // Same rows, same cached layout.
     val und = undirectedRaw(edges)
       .join(nodes.select(col("id").as("b")), Seq("b"), "left_semi")
-      .repartition(col(edgeLayoutKey))
+      .repartition(col("a"))
       .distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     und.count()
@@ -3577,18 +3554,6 @@ object Dedup {
     // it bought nothing and cost one exchange + one materialization
     // per call.
     var labels = nodes.select(col("id"), col("id").as("label"))
-    // `checkpointEvery` exists because VERDICT r15 task 8 asked
-    // whether halving the per-round materialization would halve the
-    // toy-scale wall time (19% of the r15 headline, adjudicated as
-    // job-launch overhead). MEASURED (GraphProbe, sf0.1, min-of-3):
-    // cadence=1 1.94 s, cadence=2 3.18 s — fusing two rounds per
-    // materialized job is ~1.6× SLOWER, so the launch-overhead
-    // hypothesis is rejected and the default stays 1. The exchanges
-    // per round (the real cost) are identical either way; what fusing
-    // adds is a deeper AQE stage DAG per job (4 exchanges re-planned
-    // stage-by-stage) plus a doubled unrolled plan to analyze, which
-    // costs more than one job launch saves. The question is closed in
-    // PLANS.md r16; the knob stays for the record.
     // r20 (optimization round, guide §2.4 — remove per-iteration work):
     // rounds propagate the WINNERS frame directly instead of the full
     // coalesced label table. Every label the NEXT round's join reads is
@@ -3602,20 +3567,20 @@ object Dedup {
     // frame shrinks to the degree ≥ 1 nodes. Identical labels out
     // (oracle-pinned; LlmSpec/GraphsSpec unchanged): lpaRound — the
     // probe-facing one-full-round shape — is winners + the same attach.
+    // Every round truncates: fusing two rounds per materialized job
+    // measured ~1.6× SLOWER (PLANS.md r16).
     for (i <- 1 to iters) {
       labels = lpaWinners(und, labels)
-      if (i != iters && i % checkpointEvery == 0)
-        labels = graft.IterCkpt.truncate(labels, i)
+      if (i != iters) labels = graft.IterCkpt.truncate(labels)
     }
     // final attach: isolated nodes coalesce to self, ONCE. The last
     // round's truncation moves onto the attached frame, so the call
-    // still materializes exactly `iters / checkpointEvery` frames, the
-    // returned frame stays a bare checkpoint scan (the durability
-    // contract GraphsSpec pins: under the reliable policy the caller
-    // holds a recoverable artifact, not a lazy re-derivation), and the
-    // checkpointed volume of the final round is unchanged from r19
-    // (node-sized, attached).
-    val out = graft.IterCkpt.truncate(attachIsolated(nodes, labels), iters)
+    // materializes exactly `iters` frames, the returned frame stays a
+    // bare checkpoint scan (the durability contract GraphsSpec pins:
+    // under the reliable policy the caller holds a recoverable
+    // artifact, not a lazy re-derivation), and the checkpointed volume
+    // of the final round is unchanged from r19 (node-sized, attached).
+    val out = graft.IterCkpt.truncate(attachIsolated(nodes, labels))
     und.unpersist()
     out
   }
@@ -3640,9 +3605,9 @@ object Dedup {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     nodesP.count()
     var labels = graft.IterCkpt.truncate(
-      nodesP.select(col("id"), col("id").as("label")), 0)
+      nodesP.select(col("id"), col("id").as("label")))
     val rows = (1 to iters).map { k =>
-      val next = graft.IterCkpt.truncate(lpaRound(und, nodesP, labels), k)
+      val next = graft.IterCkpt.truncate(lpaRound(und, nodesP, labels))
       val changed = next.as("n")
         .join(labels.as("o"), col("n.id") === col("o.id"))
         .filter(col("n.label") =!= col("o.label"))

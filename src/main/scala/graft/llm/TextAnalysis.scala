@@ -1,7 +1,6 @@
 package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
@@ -438,38 +437,17 @@ object TextAnalysis {
     * oracle replays it bit for bit.
     *
     * Scale shape: bigrams leave the scan as 60-bit keys from the
-    * native generator (no gram strings shuffle). Two REGIMES, chosen
-    * by `freqLayout` (the `edgeLayoutKey` convention — an explicit
-    * parameter, not a silent threshold):
-    *
-    *  - `"join"` (default, the declared query's plan): corpus
-    *    frequencies are one keyed aggregate joined back on the 8-byte
-    *    hash, then the per-doc rollup. Wins while the distinct-bigram
-    *    frequency frame BROADCASTS (bounded vocabulary) — the gram
-    *    rows then cross the wire once (the rollup exchange) plus one
-    *    narrow partial-agg exchange.
-    *  - `"window"` (the non-broadcast regime): the corpus frequency is
-    *    a count window OVER the gram_h partition — the freq aggregate,
-    *    its exchange, and the join disappear; the gram rows pay one
-    *    gram_h exchange + sort instead of the join's two shuffled
-    *    sides when the freq frame is too wide to broadcast (true
-    *    open-vocabulary corpora at 100 TB). Same rows bit-for-bit:
-    *    count over the hash partition IS the joined frequency.
-    *
-    * Both regimes' exchange shapes are pinned by PlanAudit
-    * ("familiarity(core)" / "familiarity(core,window)") and dumped by
-    * the r21 plan evidence. */
-  def familiarity(docs: DataFrame, freqLayout: String = "join"): DataFrame = {
-    require(freqLayout == "join" || freqLayout == "window",
-      s"familiarity: freqLayout must be \"join\" (broadcast regime) or " +
-        s"\"window\" (non-broadcast regime), got $freqLayout")
-    if (freqLayout == "window") return familiarityPlan(docs, freqLayout)
+    * native generator (no gram strings shuffle); corpus frequencies
+    * are one keyed aggregate joined back on the 8-byte hash, then the
+    * per-doc rollup. While the distinct-bigram frequency frame
+    * BROADCASTS (bounded vocabulary) the gram rows cross the wire once
+    * (the rollup exchange) plus one narrow partial-agg exchange. The
+    * exchange shape is pinned by PlanAudit ("familiarity(core)") on
+    * the shared [[familiarityPlan]]. */
+  def familiarity(docs: DataFrame): DataFrame = {
     val grams = gramKeyRows(docs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = familiarityTail(
-      grams.join(grams.groupBy(col("gram_h"))
-        .agg(count(lit(1)).cast("long").as("c")), "gram_h"))
-      .localCheckpoint()
+    val out = familiarityTail(grams).localCheckpoint()
     grams.unpersist()
     out
   }
@@ -481,10 +459,13 @@ object TextAnalysis {
         graft.functions.ngram_hashes(col("text"), 2, 15).as(Seq("pos", "gram_h")))
       .select(col("doc_id"), col("gram_h"))
 
-  /** Per-doc rollup over (doc_id, gram_h, c) rows — shared by both
-    * regimes so they can never drift. */
-  private def familiarityTail(withFreq: DataFrame): DataFrame =
-    withFreq
+  /** Corpus gram frequencies joined back onto `grams`, rolled up per
+    * doc — shared by the public API and [[familiarityPlan]] so the two
+    * can never drift. */
+  private def familiarityTail(grams: DataFrame): DataFrame =
+    grams
+      .join(grams.groupBy(col("gram_h")).agg(count(lit(1)).cast("long").as("c")),
+        "gram_h")
       .groupBy(col("doc_id"))
       .agg(
         count(lit(1)).cast("long").as("n_bigrams"),
@@ -496,22 +477,9 @@ object TextAnalysis {
 
   /** Un-persisted, un-checkpointed familiarity plan for PlanAudit /
     * PlanDump — the SHARED variant (the sourceOverlapPlan discipline:
-    * audited evidence can never drift from the shipped shape). The
-    * "window" regime needs no persist at all (the gram frame is
-    * consumed once), so the public API routes it here directly. */
-  private[graft] def familiarityPlan(
-      docs: DataFrame, freqLayout: String = "join"): DataFrame = {
-    val grams = gramKeyRows(docs)
-    val withFreq =
-      if (freqLayout == "window")
-        grams.withColumn("c",
-          count(lit(1)).over(Window.partitionBy(col("gram_h"))).cast("long"))
-      else
-        grams.join(
-          grams.groupBy(col("gram_h")).agg(count(lit(1)).cast("long").as("c")),
-          "gram_h")
-    familiarityTail(withFreq)
-  }
+    * audited evidence can never drift from the shipped shape). */
+  private[graft] def familiarityPlan(docs: DataFrame): DataFrame =
+    familiarityTail(gramKeyRows(docs))
 
   /** Token-distribution drift per source: total-variation distance
     * between each source's token distribution and the whole corpus —

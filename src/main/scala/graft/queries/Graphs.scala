@@ -27,8 +27,7 @@ object Graphs {
     * reached at its true distance and anti-joined out of later
     * rounds). Unreached nodes are absent — reachability IS the
     * result. Deterministic: hop labels don't depend on tie order. */
-  def bfsHops(edges: DataFrame, seeds: DataFrame, maxIter: Int = 20,
-      roundProbe: Option[(Int, Long) => Unit] = None): DataFrame = {
+  def bfsHops(edges: DataFrame, seeds: DataFrame, maxIter: Int = 20): DataFrame = {
     require(maxIter >= 1, "bfsHops: maxIter must be >= 1")
     // pre-partitioned on the frontier-join key (r19, the LPA one-layout
     // discipline): every round's frontier⋈adjacency reuses hash(a), so
@@ -42,7 +41,7 @@ object Graphs {
       .distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     und.count() // materialize once; every round reuses the shuffle-free cache
-    var dist = IterCkpt.truncate(seeds.select(col("id"), lit(0L).as("hop")).distinct(), 0)
+    var dist = IterCkpt.truncate(seeds.select(col("id"), lit(0L).as("hop")).distinct())
     var frontier = dist
     var iter = 0
     var grew = true
@@ -53,15 +52,10 @@ object Graphs {
         .distinct()
         .join(dist, Seq("id"), "left_anti")
         .select(col("id"), lit(iter.toLong).as("hop"))
-      val nextT = IterCkpt.truncate(next, iter)
-      // production path: cheap non-emptiness test; GraphProbe passes a
-      // roundProbe to record the full frontier size instead
-      grew = roundProbe match {
-        case Some(f) => val n = nextT.count(); f(iter, n); n > 0
-        case None => nextT.limit(1).count() > 0
-      }
+      val nextT = IterCkpt.truncate(next)
+      grew = nextT.limit(1).count() > 0
       if (grew) {
-        dist = IterCkpt.truncate(dist.unionByName(nextT), iter)
+        dist = IterCkpt.truncate(dist.unionByName(nextT))
         frontier = nextT
       }
     }
@@ -84,8 +78,7 @@ object Graphs {
     * lineage checkpoint-truncated. Deterministic: min cost is unique.
     */
   def ssspBounded(edges: DataFrame, seeds: DataFrame, weight: (Column, Column) => Column,
-      maxCost: Long, maxIter: Int = 64,
-      roundProbe: Option[(Int, Long) => Unit] = None): DataFrame = {
+      maxCost: Long, maxIter: Int = 64): DataFrame = {
     require(maxCost >= 0, "ssspBounded: maxCost must be >= 0")
     require(maxIter >= 1, "ssspBounded: maxIter must be >= 1")
     val und = edges.select(col("a"), col("b"))
@@ -95,7 +88,7 @@ object Graphs {
       .withColumn("w", weight(col("a"), col("b")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     und.count()
-    var dist = IterCkpt.truncate(seeds.select(col("id"), lit(0L).as("d")).distinct(), 0)
+    var dist = IterCkpt.truncate(seeds.select(col("id"), lit(0L).as("d")).distinct())
     var frontier = dist
     var iter = 0
     var improved = true
@@ -108,15 +101,12 @@ object Graphs {
         .join(dist.withColumnRenamed("d", "d0"), Seq("id"), "left_outer")
         .filter(col("d0").isNull || col("d") < col("d0"))
         .select(col("id"), col("d"))
-      val nextT = IterCkpt.truncate(next, iter)
-      improved = roundProbe match {
-        case Some(f) => val n = nextT.count(); f(iter, n); n > 0
-        case None => nextT.limit(1).count() > 0
-      }
+      val nextT = IterCkpt.truncate(next)
+      improved = nextT.limit(1).count() > 0
       if (improved) {
         dist = IterCkpt.truncate(dist.withColumnRenamed("d", "dOld")
           .join(nextT.withColumnRenamed("d", "dNew"), Seq("id"), "full_outer")
-          .select(col("id"), least(col("dOld"), col("dNew")).as("d")), iter)
+          .select(col("id"), least(col("dOld"), col("dNew")).as("d")))
         frontier = nextT
       }
     }
@@ -383,12 +373,12 @@ object Graphs {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     und.count()
     def inducedDegrees(nodes: DataFrame): DataFrame = kCoreRound(und, nodes)
-    var nodes = IterCkpt.truncate(und.select(col("a").as("id")).distinct(), 0)
+    var nodes = IterCkpt.truncate(und.select(col("a").as("id")).distinct())
     for (i <- 1 to iters)
       nodes = IterCkpt.truncate(inducedDegrees(nodes).filter(col("c") >= k)
-        .select(col("id")), i)
+        .select(col("id")))
     val out = IterCkpt.truncate(inducedDegrees(nodes)
-      .select(col("id"), col("c").cast("long").as("degree")), 0)
+      .select(col("id"), col("c").cast("long").as("degree")))
     und.unpersist()
     out
   }
@@ -403,7 +393,7 @@ object Graphs {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     und.count()
     def inducedDegrees(nodes: DataFrame): DataFrame = kCoreRound(und, nodes)
-    var nodes = IterCkpt.truncate(und.select(col("a").as("id")).distinct(), 0)
+    var nodes = IterCkpt.truncate(und.select(col("a").as("id")).distinct())
     def level(i: Int, n: DataFrame): DataFrame =
       n.agg(count(lit(1)).cast("long").as("n_nodes"))
         .select(lit(i.toLong).as("iter"), col("n_nodes"))
@@ -411,11 +401,11 @@ object Graphs {
     levels += level(0, nodes)
     for (i <- 1 to iters) {
       nodes = IterCkpt.truncate(inducedDegrees(nodes).filter(col("c") >= k)
-        .select(col("id")), i)
+        .select(col("id")))
       levels += level(i, nodes)
     }
     val out = IterCkpt.truncate(levels.result().reduce(_ unionByName _)
-      .orderBy(col("iter")), 0)
+      .orderBy(col("iter")))
     und.unpersist()
     out
   }
@@ -435,20 +425,20 @@ object Graphs {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     und.count()
     def inducedDegrees(nodes: DataFrame): DataFrame = kCoreRound(und, nodes)
-    var nodes = IterCkpt.truncate(und.select(col("a").as("id")).distinct(), 0)
+    var nodes = IterCkpt.truncate(und.select(col("a").as("id")).distinct())
     var prev = nodes.count()
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
       iter += 1
       nodes = IterCkpt.truncate(inducedDegrees(nodes).filter(col("c") >= k)
-        .select(col("id")), iter)
+        .select(col("id")))
       val cur = nodes.count()
       converged = cur == prev
       prev = cur
     }
     val out = IterCkpt.truncate(inducedDegrees(nodes)
-      .select(col("id"), col("c").cast("long").as("degree")), 0)
+      .select(col("id"), col("c").cast("long").as("degree")))
     und.unpersist()
     out
   }

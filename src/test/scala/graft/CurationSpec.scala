@@ -345,6 +345,22 @@ class CurationSpec extends SparkSpec {
     }
   }
 
+  test("exactDedupCorpus on a repeated doc_id keeps every row of a surviving id") {
+    // Documents contract: doc_id is unique. Pin what the survivor
+    // aggregate + doc_id semi-join does when the contract breaks:
+    // doc 1 appears with two texts; "beta" is also carried by doc 0,
+    // which wins that hash, but doc 1 survives through "alpha" — so
+    // BOTH doc-1 rows are kept, the duplicate "beta" copy included.
+    import spark.implicits._
+    val docs = Seq(
+      (1L, "en", "s", "alpha"), (1L, "en", "s", "beta"),
+      (0L, "en", "s", "beta"), (2L, "en", "s", "alpha"), (3L, "en", "s", "gamma"))
+      .toDF("doc_id", "lang", "source", "text")
+    val got = Curation.exactDedupCorpus(docs).as[(Long, String, String, String)]
+      .collect().map(r => (r._1, r._4)).sorted.toSeq
+    assert(got === Seq(0L -> "beta", 1L -> "alpha", 1L -> "beta", 3L -> "gamma"))
+  }
+
   test("source overlap: exact Jaccard on planted vocabularies; sketch tracks it") {
     import spark.implicits._
     // A: w1..w10; B: w1..w5 + x1..x5 (J = 5/15 = 1/3); C: disjoint;

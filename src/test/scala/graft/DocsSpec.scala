@@ -36,6 +36,20 @@ class DocsSpec extends AnyFunSuite {
     }
   }
 
+  test("every graft main README.md names in backticks exists") {
+    // a deleted probe or dump must leave the docs with it
+    val mainRe = """`(\w+(?:Probe|Dump)|Verify|Bench|PlanAudit)`""".r
+    val named = mainRe.findAllMatchIn(read("README.md")).map(_.group(1)).toSeq.distinct
+    assert(named.contains("Verify") && named.exists(_.endsWith("Probe")),
+      s"the README scan found no harness mains — the pattern is measuring nothing: $named")
+    val missing = named.filterNot { n =>
+      scala.util.Try(Class.forName(s"graft.$n$$").getMethod("main", classOf[Array[String]]))
+        .isSuccess
+    }
+    assert(missing.isEmpty,
+      s"README.md names graft mains that do not exist: ${missing.mkString(", ")}")
+  }
+
   test("declared query names are unique and every headline query exists") {
     val names = SparkEntry.all.map(_.name)
     assert(names.distinct.size === names.size,

@@ -43,8 +43,8 @@ class GraphsSpec extends SparkSpec {
     // VERDICT r18 task 4: executor loss during a long localCheckpoint
     // loop fails the job (unreliable blocks + severed lineage); with
     // graft.iter.checkpointDir set the iterative tier writes a
-    // RELIABLE checkpoint every k-th round and persists in between —
-    // recomputable from the last checkpoint, plan bounded at k rounds.
+    // RELIABLE checkpoint every round — recoverable from its files,
+    // plan bounded at one round.
     val ckptDir = tempDir("graft_iter_ckpt")
     val chain = edges((1L to 12L).sliding(2).map(p => p(0) -> p(1)).toSeq: _*)
     val lpaFix = graft.llm.Dedup.lpaFixture(
@@ -62,8 +62,7 @@ class GraphsSpec extends SparkSpec {
     spark.conf.set(graft.IterCkpt.ConfKey, ckptDir)
     try {
       val lpaReliable = graft.llm.Dedup.labelPropagation(lpaFix._1, lpaFix._2, iters = 5)
-      // the 5th round hits the every-5 cadence: the returned frame IS
-      // a reliable checkpoint scan — its plan is one leaf, not 5
+      // the returned frame IS a reliable checkpoint scan — its plan is one leaf, not 5
       // unrolled join+agg rounds, and its RDD chain names the
       // ReliableCheckpointRDD (the recoverable artifact)
       assert(lpaReliable.queryExecution.optimizedPlan.collectLeaves().size === 1,
@@ -103,48 +102,48 @@ class GraphsSpec extends SparkSpec {
     } finally spark.conf.unset(graft.IterCkpt.ConfKey)
   }
 
-  test("IterCkpt everyK > 1: in-between rounds are UNRELIABLE — a lost block kills them, the k-th round survives (r20)") {
-    // VERDICT r19 task 3: the documented (k−1)/k unrecoverable window
-    // was prose — this constructs it. Under everyK = 3, rounds 1–2
-    // hold only executor-local checkpoint blocks with SEVERED lineage;
-    // round 3 is a reliable file checkpoint. Simulate executor loss by
-    // dropping every persisted block: the in-between frame must FAIL
-    // (nothing to recompute from), the reliable frame must re-read its
-    // files and answer.
-    val ckptDir = tempDir("graft_iter_ckpt_k")
+  test("IterCkpt one policy: with the reliable dir a round survives total block loss; without it the loss fails loudly") {
+    // Executor loss, simulated by dropping every persisted block. With
+    // graft.iter.checkpointDir set, every round is a reliable file
+    // checkpoint and re-reads its files — LPA's FINAL frame included.
+    // Unset, a round is a local checkpoint with severed lineage:
+    // nothing to recompute from, so the read must FAIL with a
+    // checkpoint error — never answer with partial data.
+    def step(df: org.apache.spark.sql.DataFrame) =
+      df.withColumn("v", col("v") + 1)
+    val base = spark.range(0, 1000).select(col("id"), col("id").as("v"))
+    def dropAllBlocks(): Unit =
+      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+    val lpaFix = graft.llm.Dedup.lpaFixture(
+      Seq(1L, 2L).toDF("doc_id").select(col("doc_id")))
+    val lpaLocal = graft.llm.Dedup.labelPropagation(lpaFix._1, lpaFix._2, iters = 5)
+      .as[(Long, Long)].collect().toMap
+    val ckptDir = tempDir("graft_iter_ckpt_loss")
     spark.conf.set(graft.IterCkpt.ConfKey, ckptDir)
     try {
-      def step(df: org.apache.spark.sql.DataFrame) =
-        df.withColumn("v", col("v") + 1)
-      val base = spark.range(0, 1000).select(col("id"), col("id").as("v"))
-      val r1 = graft.IterCkpt.truncate(step(base), 1, everyK = 3)
-      val r2 = graft.IterCkpt.truncate(step(r1), 2, everyK = 3)
-      val r3 = graft.IterCkpt.truncate(step(r2), 3, everyK = 3)
-      assert(r3.count() === 1000L)
-      assert(r2.rdd.toDebugString.contains("LocalCheckpointRDD"),
-        "an in-between round must be a LOCAL checkpoint:\n" + r2.rdd.toDebugString)
-      assert(!r2.rdd.toDebugString.contains("ReliableCheckpointRDD"))
-      assert(r3.rdd.toDebugString.contains("ReliableCheckpointRDD"),
-        "the k-th round must be a RELIABLE checkpoint:\n" + r3.rdd.toDebugString)
-      // executor loss, simulated: every persisted block dropped
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      val ex = intercept[org.apache.spark.SparkException](r2.count())
-      assert(ex.getMessage.toLowerCase.contains("checkpoint"),
-        s"the in-between round must die on block loss (severed lineage): $ex")
-      assert(r3.count() === 1000L,
-        "the reliable round must survive total block loss (reads its files)")
-      // ...and the session-conf cadence reaches the tier's 2-arg calls
-      spark.conf.set(graft.IterCkpt.EveryKConfKey, "3")
-      try {
-        val s1 = graft.IterCkpt.truncate(step(base), 1)
-        val s3 = graft.IterCkpt.truncate(step(step(s1)), 3)
-        assert(s1.rdd.toDebugString.contains("LocalCheckpointRDD") &&
-          !s1.rdd.toDebugString.contains("ReliableCheckpointRDD"),
-          "conf cadence: round 1 of 3 must be local")
-        assert(s3.rdd.toDebugString.contains("ReliableCheckpointRDD"),
-          "conf cadence: round 3 of 3 must be reliable")
-      } finally spark.conf.unset(graft.IterCkpt.EveryKConfKey)
+      val r1 = graft.IterCkpt.truncate(step(base))
+      val r2 = graft.IterCkpt.truncate(step(r1))
+      val lpa = graft.llm.Dedup.labelPropagation(lpaFix._1, lpaFix._2, iters = 5)
+      for ((name, df) <- Seq("round 1" -> r1, "round 2" -> r2, "LPA final" -> lpa))
+        assert(df.rdd.toDebugString.contains("ReliableCheckpointRDD") &&
+          !df.rdd.toDebugString.contains("LocalCheckpointRDD"),
+          s"$name must be a RELIABLE checkpoint:\n" + df.rdd.toDebugString)
+      dropAllBlocks()
+      assert(r1.count() === 1000L && r2.count() === 1000L,
+        "a reliable round must survive total block loss (reads its files)")
+      assert(r2.agg(sum(col("v") - col("id"))).head().getLong(0) === 2000L)
+      assert(lpa.as[(Long, Long)].collect().toMap === lpaLocal,
+        "LPA's final frame must survive total block loss under the reliable dir")
     } finally spark.conf.unset(graft.IterCkpt.ConfKey)
+    val l1 = graft.IterCkpt.truncate(step(base))
+    assert(l1.count() === 1000L)
+    assert(l1.rdd.toDebugString.contains("LocalCheckpointRDD") &&
+      !l1.rdd.toDebugString.contains("ReliableCheckpointRDD"),
+      "without the dir a round must be a LOCAL checkpoint:\n" + l1.rdd.toDebugString)
+    dropAllBlocks()
+    val ex = intercept[org.apache.spark.SparkException](l1.count())
+    assert(ex.getMessage.toLowerCase.contains("checkpoint"),
+      s"a local round must die on block loss with a checkpoint error: $ex")
   }
 
   private def runSssp(e: org.apache.spark.sql.DataFrame,
@@ -226,7 +225,7 @@ class GraphsSpec extends SparkSpec {
     // aggregate reuses the edge layout's hash(a) — was probed only in
     // the broadcast regime. This census pins BOTH regimes on the SHARED
     // round derivation (Graphs.kCoreEdges / kCoreRound — the same code
-    // the three forms execute), the LpaLayoutProbe discipline:
+    // the three forms execute), the LlmSpec LPA census discipline:
     //  - broadcast regime (survivor frame fits): ZERO shuffle exchanges
     //    per round — both membership joins broadcast the node side and
     //    the degree aggregate rides hash(a);
@@ -243,7 +242,7 @@ class GraphsSpec extends SparkSpec {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     und.count()
     try {
-      val nodes = IterCkpt.truncate(und.select(col("a").as("id")).distinct(), 0)
+      val nodes = IterCkpt.truncate(und.select(col("a").as("id")).distinct())
       val (bSh, bBc) = PlanAudit.exchangeCounts(Graphs.kCoreRound(und, nodes))
       assert(bSh === 0,
         s"broadcast-regime round must ride the hash(a) layout: $bSh shuffles ($bBc broadcasts)")

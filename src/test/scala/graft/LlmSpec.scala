@@ -2323,64 +2323,48 @@ class LlmSpec extends SparkSpec {
     assert(cc.size === 1)
   }
 
-  test("LPA non-broadcast regime: the b-keyed layout drops the per-round edge re-key (2 vs 3 exchanges) (r20)") {
-    // VERDICT r19 task 2: the labelPropagation scaladoc's "flip the
-    // edge pre-partition key to b beyond ~10⁸ nodes" claim was prose —
-    // this pins it as a plan census. Force the SMJ regime (labels
-    // never broadcast) and measure one un-checkpointed round under
-    // both layouts:
-    //  - edge layout hash(b): the EDGE side of the join is
-    //    exchange-free — the round pays the edge-sized label_mode
-    //    re-key to hash(a) (LPA's irreducible communication) plus the
-    //    node-sized labels re-key to b (irreducible under per-round
-    //    lineage truncation: a checkpointed frame reads back as
-    //    UnknownPartitioning under AQE — measured, Spark 4.1): 2;
-    //  - edge layout hash(a) (the broadcast-regime default): the SMJ
-    //    additionally re-keys the EDGES by b every round → 3, one a
-    //    full extra edge pass — and strictly more shuffled bytes.
+  test("LPA SMJ regime: one round over the hash(a) edge layout pays 0 broadcasts and 3 exchanges (r20)") {
+    // VERDICT r19 task 2: the labelPropagation layout claim as a plan
+    // census. Force the SMJ regime (labels never broadcast) and measure
+    // one un-checkpointed round over the hash(a) edge layout the loop
+    // persists: the SMJ re-keys the EDGES by b, the node-sized labels
+    // are re-keyed by b (irreducible under per-round lineage
+    // truncation: a checkpointed frame reads back as
+    // UnknownPartitioning under AQE — measured, Spark 4.1), and the
+    // edge-sized label_mode aggregate re-keys to hash(a) (LPA's
+    // irreducible communication): 3.
     import org.apache.spark.storage.StorageLevel
     val docs = Tables.documents(spark, sf("sf0.001")).select(col("doc_id"))
     val (nodes, edges) = Dedup.lpaFixture(docs)
+    // reference labels under the default (broadcast) regime
+    val fullBc = Dedup.labelPropagation(nodes, edges, iters = 5)
+      .orderBy(col("id")).collect().toSeq
     val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      def roundUnder(key: String): ((Int, Int), Long, Seq[org.apache.spark.sql.Row]) = {
-        val und = Dedup.undirectedEdges(edges).repartition(col(key))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        und.count()
-        val nodesP = nodes.select(col("id")).repartition(col("id"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        nodesP.count()
-        val labels0 = nodesP.select(col("id"), col("id").as("label")).localCheckpoint()
-        val round = Dedup.lpaRound(und, nodesP, labels0)
-        val counts = PlanAudit.exchangeCounts(round)
-        val (bytes, _, _) = PlanAudit.shuffleStats(round)
-        val out = round.orderBy(col("id")).collect().toSeq
-        und.unpersist(); nodesP.unpersist()
-        (counts, bytes, out)
-      }
-      val ((shB, bcB), bytesB, outB) = roundUnder("b")
-      val ((shA, bcA), bytesA, outA) = roundUnder("a")
-      assert(bcB === 0 && bcA === 0,
-        s"SMJ regime must hold — no broadcast exchanges (b: $bcB, a: $bcA)")
-      assert(shB === 2,
-        s"b-keyed layout must pay exactly TWO exchanges per round " +
-          s"(edge-sized agg re-key + node-sized labels re-key), got $shB")
-      assert(shA === 3,
-        s"a-keyed layout in the SMJ regime pays THREE exchanges " +
-          s"(edge re-key by b + labels re-key + agg re-key by a), got $shA")
-      assert(bytesB < bytesA,
-        s"the flip must shuffle strictly fewer bytes: b=$bytesB vs a=$bytesA")
-      assert(outA === outB, "round semantics must not depend on the layout key")
-      // the end-to-end knob: the full loop under the b layout answers
-      // identically to the default (the oracle-pinned dynamics)
-      val full = Dedup.labelPropagation(nodes, edges, iters = 5, edgeLayoutKey = "b")
-        .orderBy(col("id")).collect().toSeq
-      val fullA = Dedup.labelPropagation(nodes, edges, iters = 5)
-        .orderBy(col("id")).collect().toSeq
-      assert(full === fullA, "edgeLayoutKey must be plan-only — identical labels")
-      intercept[IllegalArgumentException](
-        Dedup.labelPropagation(nodes, edges, iters = 1, edgeLayoutKey = "id"))
+      val und = Dedup.undirectedEdges(edges).repartition(col("a"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      und.count()
+      val nodesP = nodes.select(col("id")).repartition(col("id"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      nodesP.count()
+      val labels0 = nodesP.select(col("id"), col("id").as("label")).localCheckpoint()
+      val round = Dedup.lpaRound(und, nodesP, labels0)
+      val (sh, bc) = PlanAudit.exchangeCounts(round)
+      val out = round.orderBy(col("id")).collect().toSeq
+      und.unpersist(); nodesP.unpersist()
+      assert(bc === 0, s"SMJ regime must hold — no broadcast exchanges, got $bc")
+      assert(sh === 3,
+        s"the hash(a) layout in the SMJ regime pays THREE exchanges per round " +
+          s"(edge re-key by b + labels re-key + agg re-key by a), got $sh")
+      // end to end: the loop's first round is the probed round, and
+      // the 5-round labels do not depend on the join regime
+      assert(Dedup.labelPropagation(nodes, edges, iters = 1)
+        .orderBy(col("id")).collect().toSeq === out,
+        "labelPropagation(iters = 1) must equal the probed round")
+      assert(Dedup.labelPropagation(nodes, edges, iters = 5)
+        .orderBy(col("id")).collect().toSeq === fullBc,
+        "labels must not depend on the join regime")
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
   }
 

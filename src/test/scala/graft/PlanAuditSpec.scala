@@ -551,8 +551,20 @@ class PlanAuditSpec extends SparkSpec {
 
     val offenders = scala.collection.mutable.ArrayBuffer.empty[String]
     val seenUnbounded = scala.collection.mutable.Set.empty[String]
-    for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
-      val sites = PlanAudit.unpartitionedWindows(fn(spark, gateDir))
+    // an eager localCheckpoint inside a query's construction truncates
+    // the final plan, hiding any window upstream of it — so the census
+    // also walks the un-checkpointed plan variants of the checkpointing
+    // queries (the pre-checkpoint core gates above included)
+    val docs = Tables.documents(spark, gateDir)
+    val planVariants: Seq[(String, () => DataFrame)] = Seq(
+      "plan:familiarityPlan" -> (() => llm.TextAnalysis.familiarityPlan(docs)),
+      "plan:spanRowsPlan" -> (() => llm.Dedup.spanRowsPlan(docs)),
+      "plan:sourceOverlapPlan" -> (() => llm.Curation.sourceOverlapPlan(docs))) ++
+      coreVolumeGates.map { case (name, mk, _, _) => name -> mk }
+    val walked = SparkEntry.queries.toSeq.sortBy(_._1)
+      .map { case (name, fn) => name -> (() => fn(spark, gateDir)) } ++ planVariants
+    for ((name, mk) <- walked) {
+      val sites = PlanAudit.unpartitionedWindows(mk())
       for (s <- sites if !s.boundedInput) {
         seenUnbounded += name
         if (!allow.contains(name)) offenders += s"$name: $s"
