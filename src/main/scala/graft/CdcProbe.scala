@@ -41,38 +41,38 @@ object CdcProbe {
 
     val docs0 = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
     for (k <- (1 +: scales).distinct) {
-      val docs = docs0.withColumn("_r", explode(sequence(lit(0), lit(k - 1))))
-        .select((col("doc_id") + col("_r") * 1000000L).as("doc_id"), col("text"))
-        .localCheckpoint() // probe the op, not the replica explode
+      // probe the op, not the replica explode
+      val docs = Materialize(docs0.withColumn("_r", explode(sequence(lit(0), lit(k - 1))))
+        .select((col("doc_id") + col("_r") * 1000000L).as("doc_id"), col("text")))
       val nDocs = docs.count()
       val base = docs
         .select(col("doc_id"), col("text"), split(col("text"), " ").as("toks"))
         .withColumn("len", size(col("toks")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // the two work drivers: rolling-hash cut rows and chunk rows
-      val cuts = base
-        .select(col("doc_id"), col("len"),
-          graft.functions.ngram_hashes(col("text"), 4, 15).as(Seq("pos", "gram_h")))
-        .filter(pmod(col("gram_h"), lit(16)) === 0 && col("pos") + 4 < col("len"))
-        .count()
-      val out = llm.Dedup.contentChunksComposedFrom(base, 4, 16)
-      val chunkRows = out.count()
-      val maxShare = out.agg(max(col("n_docs_sharing"))).head().getLong(0)
-      val t = timeMin(llm.Dedup.contentChunksComposedFrom(base, 4, 16))
-      // native generator head-to-head (un-checkpointed core, same shape
-      // as the declared query's pipeline)
-      val tNative = timeMin {
-        val rows = docs.select(col("doc_id"),
-          graft.functions.cdc_chunks(col("text"), 4, 16)
-            .as(Seq("chunk_idx", "start_pos", "n_tokens", "chunk_fp")))
-        val sharing = rows.groupBy(col("chunk_fp"))
-          .agg(countDistinct(col("doc_id")).as("n_docs_sharing"))
-        rows.join(sharing, Seq("chunk_fp"))
+      Materialize.using(base) {
+        // the two work drivers: rolling-hash cut rows and chunk rows
+        val cuts = base
+          .select(col("doc_id"), col("len"),
+            graft.functions.ngram_hashes(col("text"), 4, 15).as(Seq("pos", "gram_h")))
+          .filter(pmod(col("gram_h"), lit(16)) === 0 && col("pos") + 4 < col("len"))
+          .count()
+        val out = llm.Dedup.contentChunksComposedFrom(base, 4, 16)
+        val chunkRows = out.count()
+        val maxShare = out.agg(max(col("n_docs_sharing"))).head().getLong(0)
+        val t = timeMin(llm.Dedup.contentChunksComposedFrom(base, 4, 16))
+        // native generator head-to-head (un-checkpointed core, same shape
+        // as the declared query's pipeline)
+        val tNative = timeMin {
+          val rows = docs.select(col("doc_id"),
+            graft.functions.cdc_chunks(col("text"), 4, 16)
+              .as(Seq("chunk_idx", "start_pos", "n_tokens", "chunk_fp")))
+          val sharing = rows.groupBy(col("chunk_fp"))
+            .agg(countDistinct(col("doc_id")).as("n_docs_sharing"))
+          rows.join(sharing, Seq("chunk_fp"))
+        }
+        println(f"CDCPROBE k=$k%-3d docs=$nDocs%-7d cutRows=$cuts%-8d " +
+          f"chunkRows=$chunkRows%-8d maxShare=$maxShare%-4d " +
+          f"composed=$t%.3fs native=$tNative%.3fs speedup=${t / tNative}%.2fx")
       }
-      println(f"CDCPROBE k=$k%-3d docs=$nDocs%-7d cutRows=$cuts%-8d " +
-        f"chunkRows=$chunkRows%-8d maxShare=$maxShare%-4d " +
-        f"composed=$t%.3fs native=$tNative%.3fs speedup=${t / tNative}%.2fx")
-      base.unpersist()
     }
     spark.stop()
   }

@@ -41,13 +41,12 @@ object EventProbe {
     val base = Tables.events(spark, sfDir)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
     for (k <- Seq(1, m)) {
-      val ev = base.withColumn("_r", explode(sequence(lit(0), lit(k - 1))))
+      val ev = Materialize(base.withColumn("_r", explode(sequence(lit(0), lit(k - 1))))
         .select(
           (col("event_id") + col("_r") * 1000000000000L).as("event_id"),
           col("ts"),
           (col("user_id") + col("_r") * 1000000000L).as("user_id"),
-          col("event_type"), col("value"))
-        .localCheckpoint() // materialize: probe the ops, not the replica explode
+          col("event_type"), col("value"))) // materialize: probe the ops, not the replica explode
       val nEv = ev.count()
 
       // rolling actives: work = the ×7 contribute explode of the

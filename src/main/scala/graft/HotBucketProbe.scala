@@ -75,35 +75,35 @@ object HotBucketProbe {
     val corpus = Tables.documents(spark, fixtureDir)
       .select(col("doc_id"), col("text"))
       .unionByName(cluster.toDF("doc_id", "text"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = corpus.count()
+    Materialize.using(corpus) {
+      val n = corpus.count()
 
-    println(f"${"geometry"}%12s ${"bucket_pair_work"}%17s ${"distinct_cands"}%15s ${"p_collide(J=.67)"}%17s")
-    val k = 12
-    for ((b, r) <- Seq((12, 1), (6, 2), (4, 3), (2, 6), (1, 12))) {
-      require(b * r == k, "constant hash budget")
-      val banded = corpus.select(col("doc_id"),
-        posexplode(graft.functions.minhash_band_hashes(
-          col("text"), 1, "mh:",
-          (0 until k).map(i => Dedup.mhA("mh", i)),
-          (0 until k).map(i => Dedup.mhB("mh", i)),
-          Dedup.MinHashPrime, r)).as(Seq("band_idx", "band_hash")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val work = banded.groupBy(col("band_idx"), col("band_hash"))
-        .agg(count(lit(1)).as("n"))
-        .agg(coalesce(sum(expr("n * (n - 1) DIV 2")), lit(0L)).cast("long"))
-        .head().getLong(0)
-      val cands = banded.as("a").join(banded.as("b"),
-          col("a.band_idx") === col("b.band_idx") &&
-            col("a.band_hash") === col("b.band_hash") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id"), col("b.doc_id")).distinct().count()
-      val pc = 1.0 - math.pow(1.0 - math.pow(0.67, r), b)
-      println(f"${s"${b}x$r"}%12s $work%17d $cands%15d $pc%17.4f")
-      banded.unpersist()
+      println(f"${"geometry"}%12s ${"bucket_pair_work"}%17s ${"distinct_cands"}%15s ${"p_collide(J=.67)"}%17s")
+      val k = 12
+      for ((b, r) <- Seq((12, 1), (6, 2), (4, 3), (2, 6), (1, 12))) {
+        require(b * r == k, "constant hash budget")
+        val banded = corpus.select(col("doc_id"),
+          posexplode(graft.functions.minhash_band_hashes(
+            col("text"), 1, "mh:",
+            (0 until k).map(i => Dedup.mhA("mh", i)),
+            (0 until k).map(i => Dedup.mhB("mh", i)),
+            Dedup.MinHashPrime, r)).as(Seq("band_idx", "band_hash")))
+        Materialize.using(banded) {
+          val work = banded.groupBy(col("band_idx"), col("band_hash"))
+            .agg(count(lit(1)).as("n"))
+            .agg(coalesce(sum(expr("n * (n - 1) DIV 2")), lit(0L)).cast("long"))
+            .head().getLong(0)
+          val cands = banded.as("a").join(banded.as("b"),
+              col("a.band_idx") === col("b.band_idx") &&
+                col("a.band_hash") === col("b.band_hash") &&
+                col("a.doc_id") < col("b.doc_id"))
+            .select(col("a.doc_id"), col("b.doc_id")).distinct().count()
+          val pc = 1.0 - math.pow(1.0 - math.pow(0.67, r), b)
+          println(f"${s"${b}x$r"}%12s $work%17d $cands%15d $pc%17.4f")
+        }
+      }
+      println(s"corpus rows (fixture + cluster): $n")
     }
-    println(s"corpus rows (fixture + cluster): $n")
-    corpus.unpersist()
     Bench.deleteRecursively(fixtureDir)
     spark.stop()
   }

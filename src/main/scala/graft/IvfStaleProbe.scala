@@ -63,21 +63,21 @@ object IvfStaleProbe {
 
     // ── stationary axis: same distribution, growing appended share ──
     val emb = Tables.embeddings(spark, sfDir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = emb.count()
-    val probes = (0 until ProbesPer).map(i => i.toLong * (n / ProbesPer))
-    for (s <- Seq(0.0, 0.25, 0.5, 0.75, 0.9)) {
-      val cut = math.max(64L, ((1 - s) * n).toLong) // ≥ nClusters·4 to fit
-      val path = java.nio.file.Files.createTempDirectory("graft_stale_s").toString
-      try {
-        Similarity.buildIvfIndex(emb.filter(col("vec_id") < cut), path, nClusters = 16)
-        if (s > 0) Similarity.appendIvfIndex(emb.filter(col("vec_id") >= cut), spark, path)
-        val r = recallAt(emb, path, probes)
-        println(f"STALE[stationary] n=$n%-7d appended_frac=$s%4.2f " +
-          f"nProbe=$nProbe recall@$K=$r%5.3f")
-      } finally Bench.deleteRecursively(path)
+    Materialize.using(emb) {
+      val n = emb.count()
+      val probes = (0 until ProbesPer).map(i => i.toLong * (n / ProbesPer))
+      for (s <- Seq(0.0, 0.25, 0.5, 0.75, 0.9)) {
+        val cut = math.max(64L, ((1 - s) * n).toLong) // ≥ nClusters·4 to fit
+        val path = java.nio.file.Files.createTempDirectory("graft_stale_s").toString
+        try {
+          Similarity.buildIvfIndex(emb.filter(col("vec_id") < cut), path, nClusters = 16)
+          if (s > 0) Similarity.appendIvfIndex(emb.filter(col("vec_id") >= cut), spark, path)
+          val r = recallAt(emb, path, probes)
+          println(f"STALE[stationary] n=$n%-7d appended_frac=$s%4.2f " +
+            f"nProbe=$nProbe recall@$K=$r%5.3f")
+        } finally Bench.deleteRecursively(path)
+      }
     }
-    emb.unpersist()
 
     // ── drift axis: new topics arrive after the fit ──────────────────
     // seeded planted-topic fixture (driver-generated — dev harness, not
@@ -111,10 +111,9 @@ object IvfStaleProbe {
         nApp, 1000000L, 2)
       val baseDf = base.toDF("vec_id", "embedding", "label")
       val allDf = (base ++ app).toDF("vec_id", "embedding", "label")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val pathA = java.nio.file.Files.createTempDirectory("graft_stale_da").toString
       val pathR = java.nio.file.Files.createTempDirectory("graft_stale_dr").toString
-      try {
+      try Materialize.using(allDf) {
         Similarity.buildIvfIndex(baseDf, pathA, nClusters = 16)
         Similarity.appendIvfIndex(app.toDF("vec_id", "embedding", "label"), spark, pathA)
         Similarity.buildIvfIndex(allDf, pathR, nClusters = 16) // the refit
@@ -131,7 +130,6 @@ object IvfStaleProbe {
           f"new-topic: stale=$staleNew%5.3f refit=$refitNew%5.3f " +
           f"gap=${refitNew - staleNew}%6.3f")
       } finally {
-        allDf.unpersist()
         Bench.deleteRecursively(pathA)
         Bench.deleteRecursively(pathR)
       }

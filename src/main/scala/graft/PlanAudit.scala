@@ -268,7 +268,7 @@ object PlanAudit {
     * classified by [[boundedOutput]] over its input subtree. Walks the
     * PRE-EXECUTION physical plan — window shape is AQE-invariant — so
     * a census over every declared query runs no jobs. Checkpoint
-    * caveat (the exchangeCounts limitation): a localCheckpoint hides
+    * caveat (the exchangeCounts limitation): a checkpoint hides
     * its upstream plan, so checkpoint-backed inputs read as UNBOUNDED
     * here (fail-closed) and pre-checkpoint cores are audited piecewise
     * in [[main]]. */
@@ -410,7 +410,7 @@ object PlanAudit {
     audit("tokenBanded(fused)", llm.Dedup.tokenBanded(docs))
     audit("ngramBanded(fused)", llm.Dedup.ngramBanded(docs))
     // NOTE: nearDupPairsByCosine / annJoin / ngramJaccardPairs /
-    // decontaminate localCheckpoint their results (storage hygiene), so
+    // decontaminate materialize their results (storage hygiene), so
     // auditing the RETURNED frame shows a checkpoint scan; the numbers
     // that matter are the pre-checkpoint pipelines audited piecewise
     // above/below plus the verify join (2 shuffles keyed id + 1 dedup
@@ -520,7 +520,7 @@ object PlanAudit {
     // broadcast idf + TakeOrdered
     audit("keywordSearch", llm.TextAnalysis.keywordSearch(
       docs, Seq("spark", "window", "query"), 20))
-    // (labelPropagation localCheckpoints per round — audited rounds
+    // (labelPropagation checkpoints per round — audited rounds
     // would show checkpoint scans; per-round shape is join + 2 aggs)
     // basket pairs: distinct + order-keyed self-join + pair agg +
     // broadcast marginals + TakeOrdered
@@ -567,14 +567,12 @@ object PlanAudit {
     // (one hour agg, grid self-join broadcast), rolling median /
     // autocorr / gini / kfold / topn / stratified (each one keyed
     // window or agg exchange + bounded tails)
-    audit("windowedFunnel(core)", {
-      // un-checkpointed core (the public API checkpoints) — measures
-      // the real chained-join pipeline, not a checkpoint scan
-      val (core, _) = queries.EventAnalytics.windowedFunnelPlan(
-        Tables.events(spark, sfDir),
-        Seq("signup", "view", "click", "purchase"), 72L * 3600 * 1000000)
-      core
-    })
+    // un-checkpointed core (the public API checkpoints) — measures
+    // the real chained-join pipeline, not a checkpoint scan
+    val funnelSteps = Seq("signup", "view", "click", "purchase")
+    val funnelEv = queries.EventAnalytics.funnelEvents(Tables.events(spark, sfDir), funnelSteps)
+    Materialize.using(funnelEv)(audit("windowedFunnel(core)",
+      queries.EventAnalytics.windowedFunnelPlan(funnelEv, funnelSteps, 72L * 3600 * 1000000)))
     audit("seasonalDeviation", SparkEntry.queries("events_seasonal_deviation")(spark, sfDir))
     audit("rollingMedian", SparkEntry.queries("events_rolling_median")(spark, sfDir))
     audit("autocorrLag1", SparkEntry.queries("events_autocorr_lag1")(spark, sfDir))

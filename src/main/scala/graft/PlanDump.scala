@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
 object PlanDump {
 
   /** Un-checkpointed CORE plan variants for the queries whose public
-    * API persists/localCheckpoints mid-pipeline (the dumped query plan
+    * API materializes mid-pipeline (the dumped query plan
     * then shows only the post-checkpoint tail — the PlanAuditSpec
     * "core:" discipline). Dumped as `<query>_core_<tag>.txt` whenever
     * the query is requested. Each is the SHARED *Plan variant, so the
@@ -30,7 +30,7 @@ object PlanDump {
       spark: SparkSession, sfDir: String,
       fixtureDocs: () => DataFrame): Map[String, () => DataFrame] = Map(
     "dedup_simhash_pairs" -> (() => llm.Dedup.simhashPairsPlan(fixtureDocs())),
-    "dedup_minhash_pairs" -> (() => llm.Dedup.nearDupPairsPlan(fixtureDocs())),
+    "dedup_minhash_pairs" -> (() => llm.Dedup.nearDupPairs(fixtureDocs())),
     "corpus_source_overlap" -> (() =>
       llm.Curation.sourceOverlapPlan(Tables.documents(spark, sfDir))),
     "corpus_training_ready" -> (() =>

@@ -145,15 +145,14 @@ object ScaleProbe {
         val nTri = nDocs
         val cliq = spark.range(nTri).toDF("id")
           .select(col("id"), (col("id") - col("id") % 5).as("g"))
-        val triEdges = cliq.as("x").join(cliq.as("y"), "g")
+        val triEdges = Materialize(cliq.as("x").join(cliq.as("y"), "g")
           .filter(col("x.id") < col("y.id"))
           .select((col("x.id") + 1).as("a"), (col("y.id") + 1).as("b"))
           .unionByName(spark.range(nTri).toDF("b")
-            .select(lit(0L).as("a"), (col("b") + 1).as("b")))
-          .localCheckpoint()
-        val undT = triEdges
+            .select(lit(0L).as("a"), (col("b") + 1).as("b"))))
+        val undT = Materialize(triEdges
           .unionByName(triEdges.select(col("b").as("a"), col("a").as("b")))
-          .filter(col("a") =!= col("b")).distinct().localCheckpoint()
+          .filter(col("a") =!= col("b")).distinct())
         val degT = undT.groupBy(col("a").as("id")).agg(count(lit(1)).as("d"))
         val naiveWedges = degT
           .agg(coalesce(sum(expr("d * (d - 1) DIV 2")), lit(0L)).cast("long"))

@@ -84,70 +84,70 @@ object ServeProbe {
 
     def sweep(tag: String, dir: String, batches: Seq[Long]): Unit = {
       val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val n = docs.count()
-      val tbl = s"serve_probe_${tag}_${java.util.UUID.randomUUID().toString.take(8)}"
-      val path = java.nio.file.Files.createTempDirectory(s"graft_serve_$tag").toString
-      val tb0 = System.nanoTime()
-      Dedup.buildBandIndex(docs, spark, tbl, s"$path/$tbl")
-      val build = (System.nanoTime() - tb0) / 1e9
-      println(f"SERVE[$tag] corpus=$n%-8d build=$build%7.2f s")
-      try {
-        val runBatches = batches.filter(_ <= n)
-        // the two SMALLEST batch points time sub-second jobs where
-        // min-of-2 carried visible rep noise (r15 note 5) — they get
-        // reps=4; the larger points keep the caller's rep count
-        val smallRows = runBatches.sorted.take(2).toSet
-        for (b <- runBatches) {
-          val delta = deltaOf(docs, n, b)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val bActual = delta.count()
-          val r = if (smallRows.contains(b)) math.max(reps, 4) else reps
-          // candidate density: band-agreeing (delta, corpus) pairs per
-          // delta doc — the verify work neither form can remove
-          val cands = Dedup.tokenBanded(delta)
-            .join(spark.table(s"${tbl}_bands"), Seq("band_idx", "band_hash"))
-            .select(col("doc_id"), col("corpus_id")).distinct().count()
-          val direct = timeMin(() => Dedup.incrementalNearDedup(docs, delta), r)
-          val served = timeMin(() => Dedup.probeBandIndex(delta, spark, tbl), r)
-          val speedup = direct / served
-          val amort =
-            if (direct > served) f"${build / (direct - served)}%6.1f" else "   inf"
-          println(f"SERVE[$tag] batch=$bActual%-7d ratio=${bActual.toDouble / n}%7.4f " +
-            f"cands/doc=${cands.toDouble / math.max(1, bActual)}%7.2f " +
-            f"direct=$direct%7.3f served=$served%7.3f speedup=$speedup%5.2f " +
-            f"amortize=$amort batches reps=$r")
-          // maintenance economics PER BATCH POINT (r15 one-off made a
-          // standing sweep column, VERDICT r15 task 6): what the gate
-          // pays per arriving batch of THIS size — build (corpus-sized
-          // base build on a scratch pair), append (delta-bounded), and
-          // the rebuild alternative (corpus ∪ delta). Timed once each,
-          // cold — these are write jobs, not repeatable consumers —
-          // on a scratch table so the probe table above stays clean.
-          val tblM = s"${tbl}_m"
-          val tm0 = System.nanoTime()
-          Dedup.buildBandIndex(docs, spark, tblM, s"$path/${tblM}_$bActual")
-          val tBuild = (System.nanoTime() - tm0) / 1e9
-          val ta0 = System.nanoTime()
-          Dedup.appendBandIndex(delta, spark, tblM)
-          val tAppend = (System.nanoTime() - ta0) / 1e9
-          val tblR = s"${tbl}_rb"
-          val tr0 = System.nanoTime()
-          Dedup.buildBandIndex(docs.unionByName(delta), spark, tblR,
-            s"$path/${tblR}_$bActual")
-          val tRebuild = (System.nanoTime() - tr0) / 1e9
-          println(f"SERVE[$tag] maint batch=$bActual%-7d build=$tBuild%7.3f s " +
-            f"append=$tAppend%7.3f s rebuild=$tRebuild%7.3f s " +
-            f"ratio=${tRebuild / tAppend}%5.2f")
-          for (t <- Seq(s"${tblM}_bands", s"${tblM}_toks", s"${tblR}_bands", s"${tblR}_toks"))
-            spark.sql(s"DROP TABLE IF EXISTS $t")
-          delta.unpersist()
+      Materialize.using(docs) {
+        val n = docs.count()
+        val tbl = s"serve_probe_${tag}_${java.util.UUID.randomUUID().toString.take(8)}"
+        val path = java.nio.file.Files.createTempDirectory(s"graft_serve_$tag").toString
+        val tb0 = System.nanoTime()
+        Dedup.buildBandIndex(docs, spark, tbl, s"$path/$tbl")
+        val build = (System.nanoTime() - tb0) / 1e9
+        println(f"SERVE[$tag] corpus=$n%-8d build=$build%7.2f s")
+        try {
+          val runBatches = batches.filter(_ <= n)
+          // the two SMALLEST batch points time sub-second jobs where
+          // min-of-2 carried visible rep noise (r15 note 5) — they get
+          // reps=4; the larger points keep the caller's rep count
+          val smallRows = runBatches.sorted.take(2).toSet
+          for (b <- runBatches) {
+            val delta = deltaOf(docs, n, b)
+            Materialize.using(delta) {
+              val bActual = delta.count()
+              val r = if (smallRows.contains(b)) math.max(reps, 4) else reps
+              // candidate density: band-agreeing (delta, corpus) pairs per
+              // delta doc — the verify work neither form can remove
+              val cands = Dedup.tokenBanded(delta)
+                .join(spark.table(s"${tbl}_bands"), Seq("band_idx", "band_hash"))
+                .select(col("doc_id"), col("corpus_id")).distinct().count()
+              val direct = timeMin(() => Dedup.incrementalNearDedup(docs, delta), r)
+              val served = timeMin(() => Dedup.probeBandIndex(delta, spark, tbl), r)
+              val speedup = direct / served
+              val amort =
+                if (direct > served) f"${build / (direct - served)}%6.1f" else "   inf"
+              println(f"SERVE[$tag] batch=$bActual%-7d ratio=${bActual.toDouble / n}%7.4f " +
+                f"cands/doc=${cands.toDouble / math.max(1, bActual)}%7.2f " +
+                f"direct=$direct%7.3f served=$served%7.3f speedup=$speedup%5.2f " +
+                f"amortize=$amort batches reps=$r")
+              // maintenance economics PER BATCH POINT (r15 one-off made a
+              // standing sweep column, VERDICT r15 task 6): what the gate
+              // pays per arriving batch of THIS size — build (corpus-sized
+              // base build on a scratch pair), append (delta-bounded), and
+              // the rebuild alternative (corpus ∪ delta). Timed once each,
+              // cold — these are write jobs, not repeatable consumers —
+              // on a scratch table so the probe table above stays clean.
+              val tblM = s"${tbl}_m"
+              val tm0 = System.nanoTime()
+              Dedup.buildBandIndex(docs, spark, tblM, s"$path/${tblM}_$bActual")
+              val tBuild = (System.nanoTime() - tm0) / 1e9
+              val ta0 = System.nanoTime()
+              Dedup.appendBandIndex(delta, spark, tblM)
+              val tAppend = (System.nanoTime() - ta0) / 1e9
+              val tblR = s"${tbl}_rb"
+              val tr0 = System.nanoTime()
+              Dedup.buildBandIndex(docs.unionByName(delta), spark, tblR,
+                s"$path/${tblR}_$bActual")
+              val tRebuild = (System.nanoTime() - tr0) / 1e9
+              println(f"SERVE[$tag] maint batch=$bActual%-7d build=$tBuild%7.3f s " +
+                f"append=$tAppend%7.3f s rebuild=$tRebuild%7.3f s " +
+                f"ratio=${tRebuild / tAppend}%5.2f")
+              for (t <- Seq(s"${tblM}_bands", s"${tblM}_toks", s"${tblR}_bands", s"${tblR}_toks"))
+                spark.sql(s"DROP TABLE IF EXISTS $t")
+            }
+          }
+        } finally {
+          spark.sql(s"DROP TABLE IF EXISTS ${tbl}_bands")
+          spark.sql(s"DROP TABLE IF EXISTS ${tbl}_toks")
+          Bench.deleteRecursively(path)
         }
-      } finally {
-        spark.sql(s"DROP TABLE IF EXISTS ${tbl}_bands")
-        spark.sql(s"DROP TABLE IF EXISTS ${tbl}_toks")
-        Bench.deleteRecursively(path)
-        docs.unpersist()
       }
     }
 

@@ -28,9 +28,7 @@ object SimJoinProbe {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val docs = Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("text")).persist()
-    docs.count()
+    val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
 
     def dupReplicas(k: Int): DataFrame =
       (0 until k).map(r => docs.select((col("doc_id") + lit(r * 1000000L)).as("doc_id"),
@@ -45,18 +43,19 @@ object SimJoinProbe {
 
     def run(tag: String, df: DataFrame): Unit = {
       val g = graft.llm.Dedup.bigramSets(df)
-        .withColumn("sz", size(col("grams")).cast("long")).persist()
-      val cooc = g.select(col("doc_id"), explode(col("grams")).as("gram"))
-        .groupBy(col("gram")).agg(count(lit(1)).as("df"))
-        .agg(sum(col("df") * col("df"))).head().getLong(0)
-      val walls = (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        val n = graft.llm.Dedup.jaccardExactJoinPlan(g).count()
-        (n, (System.nanoTime() - t0) / 1e9)
+        .withColumn("sz", size(col("grams")).cast("long"))
+      Materialize.using(g) {
+        val cooc = g.select(col("doc_id"), explode(col("grams")).as("gram"))
+          .groupBy(col("gram")).agg(count(lit(1)).as("df"))
+          .agg(sum(col("df") * col("df"))).head().getLong(0)
+        val walls = (1 to 3).map { _ =>
+          val t0 = System.nanoTime()
+          val n = graft.llm.Dedup.jaccardExactJoinPlan(g).count()
+          (n, (System.nanoTime() - t0) / 1e9)
+        }
+        println(f"PROBE $tag pairs=${walls.head._1} sumdf2=$cooc " +
+          f"wall=${walls.map(_._2).min}%.2f")
       }
-      g.unpersist()
-      println(f"PROBE $tag pairs=${walls.head._1} sumdf2=$cooc " +
-        f"wall=${walls.map(_._2).min}%.2f")
     }
 
     for (k <- Seq(1, 2, 3)) run(s"dup k=$k", dupReplicas(k))

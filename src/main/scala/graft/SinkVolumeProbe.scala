@@ -58,7 +58,7 @@ object SinkVolumeProbe {
       val seeds = Similarity.pinnedSeeds(spark, s"$path/ivf")
       val assignedStatic = spark.table(Similarity.ivfPinnedTable(s"$path/ivf"))
         .select(col("vec_id").as("corpus_id"), col("cluster"))
-      val evG = Curation.evalGrams(docs, col("doc_id") % 7 === 0).localCheckpoint()
+      val evG = Materialize(Curation.evalGrams(docs, col("doc_id") % 7 === 0))
 
       def run(variant: String): (Long, Double) = {
         val hits = StreamingAlerts.refreshHitStream(

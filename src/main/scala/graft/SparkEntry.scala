@@ -120,7 +120,7 @@ object SparkEntry {
     "search_rrf_fusion",
     // Round 14 (VERDICT r13 task 6): the 5-round synchronous label
     // propagation — the repo's only fixed-iteration-loop dataflow
-    // (per-round join + argmax agg + coalesce, localCheckpoint per
+    // (per-round join + argmax agg + coalesce, checkpoint per
     // iteration) joins the headline so the iterative-graph shape is
     // under the per-round drift/sr gates like every other tier.
     "graph_label_prop",

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Q, Tables}
+import graft.{Materialize, Q, Tables}
 
 /** Corpus-curation operators beyond per-doc scoring (builder-prompt
   * "training-data pipeline" tier; complements `TextAnalysis` /
@@ -395,19 +395,11 @@ object Curation {
     // Grams are hashed to 60-bit keys INSIDE the generator itself:
     // everything downstream (distinct, semi/anti joins, the probe join)
     // shuffles 8-byte longs, never the n-gram strings. They feed BOTH
-    // the eval-gram set and the train side — persist, or each reference
-    // re-runs the generator over the corpus (the same stage-reuse
-    // discipline as Dedup.nearDupPairs); the result is materialized
-    // eagerly below so the cache can be dropped before returning
-    // (a long-lived session would otherwise leak it per invocation).
+    // the eval-gram set and the train side — cached, or each reference
+    // re-runs the generator over the corpus.
     val grams = gramHashRows(docs, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // eager materialization (flagged docs only — a bounded aggregate),
-    // then drop the gram cache: no storage outlives the call
-    val out = contaminatedFrom(grams, docs.filter(evalPred).select(col("doc_id")))
-      .localCheckpoint()
-    grams.unpersist()
-    out
+    Materialize.using(grams)(
+      contaminatedFrom(grams, docs.filter(evalPred).select(col("doc_id"))))
   }
 
   /** The contamination aggregate shared by [[decontaminate]] and the
@@ -484,39 +476,35 @@ object Curation {
   def decontaminateBloom(
       docs: DataFrame, evalPred: Column, n: Int = 8, fpp: Double = 0.01): DataFrame = {
     val grams = gramHashRows(docs, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val evalIds = docs.filter(evalPred).select(col("doc_id"))
     val ev = grams.join(evalIds, Seq("doc_id"), "left_semi").select(col("gram_h")).distinct()
     val tr = grams.join(evalIds, Seq("doc_id"), "left_anti").distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val evCount = math.max(ev.count(), 1L)
-    // Distributed sketch build: Spark's own bloom aggregate (partial
-    // filters merged by the engine) replaces `stat.bloomFilter`'s RDD
-    // treeAggregate, and the probe compiles to the codegen'd
-    // `might_contain` expression instead of a closure UDF that walled
-    // off whole-stage codegen at the filter node (VERDICT r8 #6). The
-    // one collected row is the ~1.2 MB serialized filter — the same
-    // bounded driver artifact as before, now shipped as a plan
-    // literal. Bit count is the standard optimum −n·ln(p)/ln²2;
-    // Spark clamps past its runtime-bloom caps, where the degraded
-    // fpp only widens the pre-filter (the exact join still decides).
-    val numBits = math.ceil(
-      -evCount * math.log(fpp) / (math.log(2) * math.log(2))).toLong
-    val bloomBytes = ev
-      .agg(graft.functions.bloom_filter_agg(col("gram_h"), evCount, numBits).as("bf"))
-      .head.getAs[Array[Byte]](0)
-    val perDoc = tr.groupBy(col("doc_id")).agg(count(lit(1)).cast("long").as("n_grams"))
-    val contam = tr.filter(graft.functions.might_contain(bloomBytes, col("gram_h")))
-      .join(ev.withColumn("hit", lit(1)), Seq("gram_h"), "left")
-      .groupBy(col("doc_id"))
-      .agg(sum(coalesce(col("hit"), lit(0))).cast("long").as("n_contam"))
-      .filter(col("n_contam") > 0)
-    val out = contam.join(perDoc, "doc_id")
-      .select(col("doc_id"), col("n_grams"), col("n_contam"))
-      .localCheckpoint()
-    tr.unpersist()
-    grams.unpersist()
-    out
+    Materialize.using(grams, tr) {
+      val evCount = math.max(ev.count(), 1L)
+      // Distributed sketch build: Spark's own bloom aggregate (partial
+      // filters merged by the engine) replaces `stat.bloomFilter`'s RDD
+      // treeAggregate, and the probe compiles to the codegen'd
+      // `might_contain` expression instead of a closure UDF that walled
+      // off whole-stage codegen at the filter node (VERDICT r8 #6). The
+      // one collected row is the ~1.2 MB serialized filter — the same
+      // bounded driver artifact as before, now shipped as a plan
+      // literal. Bit count is the standard optimum −n·ln(p)/ln²2;
+      // Spark clamps past its runtime-bloom caps, where the degraded
+      // fpp only widens the pre-filter (the exact join still decides).
+      val numBits = math.ceil(
+        -evCount * math.log(fpp) / (math.log(2) * math.log(2))).toLong
+      val bloomBytes = ev
+        .agg(graft.functions.bloom_filter_agg(col("gram_h"), evCount, numBits).as("bf"))
+        .head.getAs[Array[Byte]](0)
+      val perDoc = tr.groupBy(col("doc_id")).agg(count(lit(1)).cast("long").as("n_grams"))
+      val contam = tr.filter(graft.functions.might_contain(bloomBytes, col("gram_h")))
+        .join(ev.withColumn("hit", lit(1)), Seq("gram_h"), "left")
+        .groupBy(col("doc_id"))
+        .agg(sum(coalesce(col("hit"), lit(0))).cast("long").as("n_contam"))
+        .filter(col("n_contam") > 0)
+      contam.join(perDoc, "doc_id")
+        .select(col("doc_id"), col("n_grams"), col("n_contam"))
+    }
   }
 
   /** Honesty audit for the bloom pre-filter tier (the
@@ -534,34 +522,32 @@ object Curation {
   def bloomFprAudit(
       docs: DataFrame, evalPred: Column, n: Int = 8, fpp: Double = 0.01): DataFrame = {
     val grams = gramHashRows(docs, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val evalIds = docs.filter(evalPred).select(col("doc_id"))
-    val ev = grams.join(evalIds, Seq("doc_id"), "left_semi")
-      .select(col("gram_h")).distinct()
-    val p = grams.join(evalIds, Seq("doc_id"), "left_anti")
-      .select(col("gram_h")).distinct()
-    val evCount = math.max(ev.count(), 1L)
-    val numBits = math.ceil(
-      -evCount * math.log(fpp) / (math.log(2) * math.log(2))).toLong
-    val bloomBytes = ev
-      .agg(graft.functions.bloom_filter_agg(col("gram_h"), evCount, numBits).as("bf"))
-      .head.getAs[Array[Byte]](0)
-    val out = p
-      .withColumn("hit",
-        graft.functions.might_contain(bloomBytes, col("gram_h")).cast("long"))
-      .join(ev.withColumn("t", lit(1L)), Seq("gram_h"), "left")
-      .select(col("hit"), coalesce(col("t"), lit(0L)).as("t"))
-      .agg(
-        count(lit(1)).cast("long").as("n_probes"),
-        sum(col("hit")).cast("long").as("n_bloom_hits"),
-        sum(col("t")).cast("long").as("n_true"),
-        sum(col("hit") * (lit(1L) - col("t"))).cast("long").as("n_false_pos"),
-        sum((lit(1L) - col("hit")) * col("t")).cast("long").as("n_missed"))
-      .withColumn("fpr_micro",
-        expr("(n_false_pos * 1000000) div greatest(n_probes - n_true, 1)"))
-      .localCheckpoint()
-    grams.unpersist()
-    out
+    Materialize.using(grams) {
+      val evalIds = docs.filter(evalPred).select(col("doc_id"))
+      val ev = grams.join(evalIds, Seq("doc_id"), "left_semi")
+        .select(col("gram_h")).distinct()
+      val p = grams.join(evalIds, Seq("doc_id"), "left_anti")
+        .select(col("gram_h")).distinct()
+      val evCount = math.max(ev.count(), 1L)
+      val numBits = math.ceil(
+        -evCount * math.log(fpp) / (math.log(2) * math.log(2))).toLong
+      val bloomBytes = ev
+        .agg(graft.functions.bloom_filter_agg(col("gram_h"), evCount, numBits).as("bf"))
+        .head.getAs[Array[Byte]](0)
+      p
+        .withColumn("hit",
+          graft.functions.might_contain(bloomBytes, col("gram_h")).cast("long"))
+        .join(ev.withColumn("t", lit(1L)), Seq("gram_h"), "left")
+        .select(col("hit"), coalesce(col("t"), lit(0L)).as("t"))
+        .agg(
+          count(lit(1)).cast("long").as("n_probes"),
+          sum(col("hit")).cast("long").as("n_bloom_hits"),
+          sum(col("t")).cast("long").as("n_true"),
+          sum(col("hit") * (lit(1L) - col("t"))).cast("long").as("n_false_pos"),
+          sum((lit(1L) - col("hit")) * col("t")).cast("long").as("n_missed"))
+        .withColumn("fpr_micro",
+          expr("(n_false_pos * 1000000) div greatest(n_probes - n_true, 1)"))
+    }
   }
 
   /** [[bloomFprAudit]]'s ORACLE-REPLAYABLE twin (r19, VERDICT r18
@@ -585,53 +571,49 @@ object Curation {
   def bloomFprPinned(
       docs: DataFrame, evalPred: Column, n: Int = 8, k: Int = 3): DataFrame = {
     val grams = gramHashRows(docs, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val evalIds = docs.filter(evalPred).select(col("doc_id"))
     val ev = grams.join(evalIds, Seq("doc_id"), "left_semi")
       .select(col("gram_h")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val p = grams.join(evalIds, Seq("doc_id"), "left_anti")
-      .select(col("gram_h")).distinct()
-    // integer sizing rule — exact in both engines (the float m =
-    // −E·ln p/ln²2 rule of the production audit would hinge on libm
-    // ULPs); the count is a bounded scalar (the evCount the byte-array
-    // audit already collects)
-    val numBits = math.max(ev.count(), 1L) * 10L
-    def pos(i: Int, g: Column): Column =
-      (conv(substring(md5(concat(lit(s"bfp$i:"), g.cast("string"))), 1, 12), 16, 10)
-        .cast("long") % numBits).as(s"b$i")
-    def posArr(g: Column): Column = array((1 to k).map(pos(_, g)): _*)
-    val bits = ev.select(explode(posArr(col("gram_h"))).as("bit")).distinct()
-    // broadcast only under the documented eval-slice bound (r20,
-    // ADVICE r19): the bits side holds ≤ numBits = 10·|eval grams|
-    // distinct longs, and nothing upstream enforces that evalPred is
-    // narrow — a broad slice would force a multi-hundred-MB driver
-    // broadcast. Reuse the count already paid for numBits as the
-    // gate: past [[MaxBroadcastBloomBits]] the hint is DROPPED and
-    // the planner shuffles the join — the audit stays correct, it
-    // just pays an exchange instead of risking the driver.
-    val bitsSide = bits.withColumn("set1", lit(1L))
-    val bitsJoin =
-      if (numBits <= MaxBroadcastBloomBits) broadcast(bitsSide) else bitsSide
-    val hit = p.select(col("gram_h"), explode(posArr(col("gram_h"))).as("bit"))
-      .join(bitsJoin, Seq("bit"), "left")
-      .groupBy(col("gram_h"))
-      .agg(min(coalesce(col("set1"), lit(0L))).as("hit"))
-    val out = hit
-      .join(ev.withColumn("t", lit(1L)), Seq("gram_h"), "left")
-      .select(col("hit"), coalesce(col("t"), lit(0L)).as("t"))
-      .agg(
-        count(lit(1)).cast("long").as("n_probes"),
-        sum(col("hit")).cast("long").as("n_bloom_hits"),
-        sum(col("t")).cast("long").as("n_true"),
-        sum(col("hit") * (lit(1L) - col("t"))).cast("long").as("n_false_pos"),
-        sum((lit(1L) - col("hit")) * col("t")).cast("long").as("n_missed"))
-      .withColumn("fpr_micro",
-        expr("(n_false_pos * 1000000) div greatest(n_probes - n_true, 1)"))
-      .localCheckpoint()
-    ev.unpersist()
-    grams.unpersist()
-    out
+    Materialize.using(grams, ev) {
+      val p = grams.join(evalIds, Seq("doc_id"), "left_anti")
+        .select(col("gram_h")).distinct()
+      // integer sizing rule — exact in both engines (the float m =
+      // −E·ln p/ln²2 rule of the production audit would hinge on libm
+      // ULPs); the count is a bounded scalar (the evCount the byte-array
+      // audit already collects)
+      val numBits = math.max(ev.count(), 1L) * 10L
+      def pos(i: Int, g: Column): Column =
+        (conv(substring(md5(concat(lit(s"bfp$i:"), g.cast("string"))), 1, 12), 16, 10)
+          .cast("long") % numBits).as(s"b$i")
+      def posArr(g: Column): Column = array((1 to k).map(pos(_, g)): _*)
+      val bits = ev.select(explode(posArr(col("gram_h"))).as("bit")).distinct()
+      // broadcast only under the documented eval-slice bound (r20,
+      // ADVICE r19): the bits side holds ≤ numBits = 10·|eval grams|
+      // distinct longs, and nothing upstream enforces that evalPred is
+      // narrow — a broad slice would force a multi-hundred-MB driver
+      // broadcast. Reuse the count already paid for numBits as the
+      // gate: past [[MaxBroadcastBloomBits]] the hint is DROPPED and
+      // the planner shuffles the join — the audit stays correct, it
+      // just pays an exchange instead of risking the driver.
+      val bitsSide = bits.withColumn("set1", lit(1L))
+      val bitsJoin =
+        if (numBits <= MaxBroadcastBloomBits) broadcast(bitsSide) else bitsSide
+      val hit = p.select(col("gram_h"), explode(posArr(col("gram_h"))).as("bit"))
+        .join(bitsJoin, Seq("bit"), "left")
+        .groupBy(col("gram_h"))
+        .agg(min(coalesce(col("set1"), lit(0L))).as("hit"))
+      hit
+        .join(ev.withColumn("t", lit(1L)), Seq("gram_h"), "left")
+        .select(col("hit"), coalesce(col("t"), lit(0L)).as("t"))
+        .agg(
+          count(lit(1)).cast("long").as("n_probes"),
+          sum(col("hit")).cast("long").as("n_bloom_hits"),
+          sum(col("t")).cast("long").as("n_true"),
+          sum(col("hit") * (lit(1L) - col("t"))).cast("long").as("n_false_pos"),
+          sum((lit(1L) - col("hit")) * col("t")).cast("long").as("n_missed"))
+        .withColumn("fpr_micro",
+          expr("(n_false_pos * 1000000) div greatest(n_probes - n_true, 1)"))
+    }
   }
 
   /** DuckDB replay of [[bloomFprPinned]] — gram CTEs shared with
@@ -814,18 +796,14 @@ object Curation {
       docs: DataFrame, evalPred: Column, minTokens: Int,
       rates: Seq[(String, Int)], defaultRate: Int, budget: Int): DataFrame = {
     // the dedup survivors feed decontamination AND the kept-side
-    // filters — persist so the groupBy+semi join runs once
+    // filters — cached so the groupBy+semi join runs once; the packed
+    // listing is one narrow row per kept doc (no text column), far
+    // smaller than the text-bearing corpus cache it lets us drop
     val corpus = exactDedupCorpus(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val contam = decontaminate(corpus, evalPred).select(col("doc_id"))
-    val out = trainingReadyFrom(
-      corpus, contam, evalPred, minTokens, rates, defaultRate, budget)
-      // eager: the packed listing is one narrow row per kept doc (no
-      // text column) — far smaller than the text-bearing corpus cache
-      // it lets us drop; without this the session leaks the cache
-      .localCheckpoint()
-    corpus.unpersist()
-    out
+    Materialize.using(corpus) {
+      val contam = decontaminate(corpus, evalPred).select(col("doc_id"))
+      trainingReadyFrom(corpus, contam, evalPred, minTokens, rates, defaultRate, budget)
+    }
   }
 
   /** The capstone's exact-dedup stage: first doc_id per content hash
@@ -868,8 +846,8 @@ object Curation {
   /** Un-persisted, un-checkpointed capstone PLAN (VERDICT r13 task 1):
     * the exact-dedup semi-join, decontamination, length gate, mixing
     * and packing stages in one probe-readable lineage — what the
-    * public API shields behind its persisted corpus and two
-    * localCheckpoints. Exchange volumes match the public form; only
+    * public API shields behind its cached corpus and two
+    * checkpoints. Exchange volumes match the public form; only
     * map-side re-derivation differs. */
   private[graft] def trainingReadyPlan(
       docs: DataFrame, evalPred: Column, minTokens: Int,
@@ -907,26 +885,24 @@ object Curation {
       docs: DataFrame, evalPred: Column, minTokens: Int,
       rates: Seq[(String, Int)], defaultRate: Int): DataFrame = {
     val corpus = exactDedupCorpus(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val contam = decontaminate(corpus, evalPred).select(col("doc_id"))
-    val train = corpus.filter(!evalPred)
-    val decon = train.join(contam, Seq("doc_id"), "left_anti")
-    val minlen = decon
-      .withColumn("n_tokens", size(split(col("text"), " ")).cast("long"))
-      .filter(col("n_tokens") >= minTokens)
-    val mixed = stratifiedSample(minlen, rates, defaultRate)
-    def stage(i: Int, name: String, df: DataFrame) =
-      df.agg(count(lit(1)).cast("long").as("n"))
-        .select(lit(i).cast("int").as("stage_idx"), lit(name).as("stage"), col("n"))
-    val out = stage(0, "raw", docs)
-      .unionByName(stage(1, "exact_dedup", corpus))
-      .unionByName(stage(2, "train_slice", train))
-      .unionByName(stage(3, "decontam", decon))
-      .unionByName(stage(4, "min_tokens", minlen))
-      .unionByName(stage(5, "mixed", mixed))
-      .localCheckpoint()
-    corpus.unpersist()
-    out
+    Materialize.using(corpus) {
+      val contam = decontaminate(corpus, evalPred).select(col("doc_id"))
+      val train = corpus.filter(!evalPred)
+      val decon = train.join(contam, Seq("doc_id"), "left_anti")
+      val minlen = decon
+        .withColumn("n_tokens", size(split(col("text"), " ")).cast("long"))
+        .filter(col("n_tokens") >= minTokens)
+      val mixed = stratifiedSample(minlen, rates, defaultRate)
+      def stage(i: Int, name: String, df: DataFrame) =
+        df.agg(count(lit(1)).cast("long").as("n"))
+          .select(lit(i).cast("int").as("stage_idx"), lit(name).as("stage"), col("n"))
+      stage(0, "raw", docs)
+        .unionByName(stage(1, "exact_dedup", corpus))
+        .unionByName(stage(2, "train_slice", train))
+        .unionByName(stage(3, "decontam", decon))
+        .unionByName(stage(4, "min_tokens", minlen))
+        .unionByName(stage(5, "mixed", mixed))
+    }
   }
 
   /** Default mixing rates (per-mille) used by the declared queries. */
@@ -979,10 +955,7 @@ object Curation {
     * intersection are omitted (inner-join semantics, both engines). */
   def sourceOverlap(docs: DataFrame): DataFrame = {
     val perTok = perTokenSources(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = sourceOverlapFrom(perTok).localCheckpoint()
-    perTok.unpersist()
-    out
+    Materialize.using(perTok)(sourceOverlapFrom(perTok))
   }
 
   /** Un-persisted, un-checkpointed overlap PLAN (the decontaminatePlan
@@ -1300,9 +1273,9 @@ object Curation {
       verdicts: DataFrame, deltaDocs: DataFrame, deltaEmb: DataFrame,
       spark: SparkSession, hashTable: String, bandTable: String,
       ivfPath: String): Long = {
-    val admitted = verdicts.filter(col("verdict") === "train" ||
+    val admitted = Materialize(verdicts.filter(col("verdict") === "train" ||
         (col("verdict") === "exact_dup" && col("dup_of") === col("doc_id")))
-      .select(col("doc_id")).localCheckpoint()
+      .select(col("doc_id")))
     val docsAdm = deltaDocs.join(admitted, Seq("doc_id"), "left_semi")
     val labelCol =
       if (deltaEmb.columns.contains("label")) col("label").cast("int")
@@ -2375,8 +2348,8 @@ object Curation {
       // times the planted fixture instead, see Bench.fixtureQueries)
       incrementalRefresh(
         docs, emb,
-        refreshDeltaDocs(docs).localCheckpoint(),
-        refreshDeltaEmb(emb).localCheckpoint(),
+        Materialize(refreshDeltaDocs(docs)),
+        Materialize(refreshDeltaEmb(emb)),
         evalPred = col("doc_id") % 7 === 0)
     },
 
@@ -2398,8 +2371,8 @@ object Curation {
       val emb = Tables.embeddings(s, dir)
       incrementalRefresh(
           docs, emb,
-          refreshDeltaDocs(docs).localCheckpoint(),
-          refreshDeltaEmb(emb).localCheckpoint(),
+          Materialize(refreshDeltaDocs(docs)),
+          Materialize(refreshDeltaEmb(emb)),
           evalPred = col("doc_id") % 7 === 0)
         .groupBy(col("verdict"))
         .agg(

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Q, Tables}
+import graft.{Materialize, Q, Tables}
 
 /** Deduplication for large-scale corpus curation over `documents`
   * (SURVEY §7.3 M4 north-star; VERDICT r1 LLM-pipeline tier 1).
@@ -187,43 +187,23 @@ object Dedup {
 
   /** Banded-LSH near-dup pairs, verified with exact Jaccard.
     *
-    * `toks` is referenced three times (signatures + both verify joins)
-    * and `bands` twice (the self-join) — without persistence each
-    * reference re-scans and re-tokenizes the corpus, so one call would
-    * pay the dominant narrow-projection cost 4×. Both frames are small
-    * relative to the corpus (token arrays / 4 hash rows per doc). */
+    * `toks` is read by both verify joins and `bands` by both sides of
+    * the self-join. Neither is cached: the second `toks` read is a
+    * ReusedExchange, and the second `bands` read re-runs only the
+    * map-only signature generator (final plan at sf0.01) — a cache
+    * here outlived the call in the session CacheManager. */
   // NOTE (round-4 measurement): a fused native Generator for
   // signatures→banding (one token pass, à la WinnowGenerator) was
   // prototyped and REJECTED — parity held but no speedup (20.7 s vs
-  // 19.2 s at sf0.1): `toks` is persisted below, so projection
-  // collapsing never re-runs the tokenizer here, the md5 calls
+  // 19.2 s at sf0.1, measured while `toks` was persisted, so projection
+  // collapsing never re-ran the tokenizer), the md5 calls
   // dominate both forms equally, and the query's real cost is the
   // degenerate-corpus verify join. The winnow fusion won because its
   // composed form paid an exchange + sort + distinct; this one
   // wouldn't have.
   def nearDupPairs(docs: DataFrame, threshold: Double = JaccardThreshold): DataFrame = {
     val toks = tokenized(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val bands = tokenBanded(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    nearDupPairsFrom(toks, bands, threshold)
-  }
-
-  /** The un-persisted minhash pair PLAN — same candidate + verify
-    * pipeline built from raw (re-derivable, map-only) `toks`/`bands`
-    * frames, so `PlanAudit.shuffleStats` can read the band self-join
-    * and verify-join exchange volumes the public API's persisted
-    * frames hide behind InMemoryRelation (VERDICT r13 task 1: the
-    * heaviest 100 TB stages were the ones the r13 volume gates could
-    * not see). Exchange volumes are identical to the public form —
-    * persistence only dedups the MAP-SIDE token/signature derivation,
-    * never what crosses the wire. */
-  private[graft] def nearDupPairsPlan(
-      docs: DataFrame, threshold: Double = JaccardThreshold): DataFrame =
-    nearDupPairsFrom(tokenized(docs), tokenBanded(docs), threshold)
-
-  private def nearDupPairsFrom(
-      toks: DataFrame, bands: DataFrame, threshold: Double): DataFrame = {
     val cand = bands.as("a")
       .join(bands.as("b"),
         col("a.band_idx") === col("b.band_idx") &&
@@ -289,49 +269,47 @@ object Dedup {
   def minhashRecall(
       docs: DataFrame, probePred: Column, maxDf: Int = -1): DataFrame = {
     val toks = tokenized(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val effMaxDf =
-      if (maxDf > 0) maxDf
-      else math.max(1000L, math.ceil(0.95 * toks.count()).toLong)
-        .min(Int.MaxValue.toLong).toInt
-    val tru = minhashTruthCandidates(toks, probePred, effMaxDf)
-      .join(toks.select(col("doc_id").as("pid"), col("toks").as("ta")), "pid")
-      .join(toks.select(col("doc_id").as("cid"), col("toks").as("tb")), "cid")
-      .filter(
-        size(array_intersect(col("ta"), col("tb"))).cast("long") * 19 >=
-          (size(col("ta")).cast("long") + size(col("tb")).cast("long")) * 9)
-      .select(col("pid"), col("cid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bands = tokenBanded(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cand = bands.filter(probePred).as("p")
-      .join(bands.as("c"),
-        col("p.band_idx") === col("c.band_idx") &&
-          col("p.band_hash") === col("c.band_hash") &&
-          col("p.doc_id") =!= col("c.doc_id"))
-      .select(col("p.doc_id").as("pid"), col("c.doc_id").as("cid"))
-      .distinct()
-    val fnd = tru.join(cand, Seq("pid", "cid"), "left_semi")
-      .groupBy(col("pid")).agg(count(lit(1)).as("n_found"))
-    val nc = cand.groupBy(col("pid")).agg(count(lit(1)).as("n_cand"))
-    val nt = tru.groupBy(col("pid")).agg(count(lit(1)).as("n_true"))
-    val out = nt.join(fnd, Seq("pid"), "left_outer")
-      .join(nc, Seq("pid"), "left_outer")
-      .select(
-        col("pid").as("probe_id"),
-        col("n_true"),
-        coalesce(col("n_cand"), lit(0L)).as("n_cand"),
-        coalesce(col("n_found"), lit(0L)).as("n_found"),
-        (round(coalesce(col("n_found"), lit(0L)) * lit(1.0) / col("n_true"), 6) + lit(0.0))
-          .as("recall"),
-        // empty candidate set => vacuous precision 1 (nothing wasted)
-        when(coalesce(col("n_cand"), lit(0L)) === 0, lit(1.0))
-          .otherwise(round(coalesce(col("n_found"), lit(0L)) * lit(1.0) / col("n_cand"), 6)
-            + lit(0.0))
-          .as("cand_precision"))
-      .localCheckpoint()
-    toks.unpersist(); tru.unpersist(); bands.unpersist()
-    out
+    Materialize.using(toks) {
+      val effMaxDf =
+        if (maxDf > 0) maxDf
+        else math.max(1000L, math.ceil(0.95 * toks.count()).toLong)
+          .min(Int.MaxValue.toLong).toInt
+      val tru = minhashTruthCandidates(toks, probePred, effMaxDf)
+        .join(toks.select(col("doc_id").as("pid"), col("toks").as("ta")), "pid")
+        .join(toks.select(col("doc_id").as("cid"), col("toks").as("tb")), "cid")
+        .filter(
+          size(array_intersect(col("ta"), col("tb"))).cast("long") * 19 >=
+            (size(col("ta")).cast("long") + size(col("tb")).cast("long")) * 9)
+        .select(col("pid"), col("cid"))
+      val bands = tokenBanded(docs)
+      Materialize.using(tru, bands) {
+        val cand = bands.filter(probePred).as("p")
+          .join(bands.as("c"),
+            col("p.band_idx") === col("c.band_idx") &&
+              col("p.band_hash") === col("c.band_hash") &&
+              col("p.doc_id") =!= col("c.doc_id"))
+          .select(col("p.doc_id").as("pid"), col("c.doc_id").as("cid"))
+          .distinct()
+        val fnd = tru.join(cand, Seq("pid", "cid"), "left_semi")
+          .groupBy(col("pid")).agg(count(lit(1)).as("n_found"))
+        val nc = cand.groupBy(col("pid")).agg(count(lit(1)).as("n_cand"))
+        val nt = tru.groupBy(col("pid")).agg(count(lit(1)).as("n_true"))
+        nt.join(fnd, Seq("pid"), "left_outer")
+          .join(nc, Seq("pid"), "left_outer")
+          .select(
+            col("pid").as("probe_id"),
+            col("n_true"),
+            coalesce(col("n_cand"), lit(0L)).as("n_cand"),
+            coalesce(col("n_found"), lit(0L)).as("n_found"),
+            (round(coalesce(col("n_found"), lit(0L)) * lit(1.0) / col("n_true"), 6) + lit(0.0))
+              .as("recall"),
+            // empty candidate set => vacuous precision 1 (nothing wasted)
+            when(coalesce(col("n_cand"), lit(0L)) === 0, lit(1.0))
+              .otherwise(round(coalesce(col("n_found"), lit(0L)) * lit(1.0) / col("n_cand"), 6)
+                + lit(0.0))
+              .as("cand_precision"))
+      }
+    }
   }
 
   /** 16-bit SimHash: bit k set iff the majority of token hashes have
@@ -483,23 +461,23 @@ object Dedup {
     require(maxHamming <= MaxHamming,
       s"block-permuted banding is lossless only for hamming <= $MaxHamming")
     val sh = simhashed64(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val banded = simhashBanded(sh)
-    occupancyBound.foreach { bound =>
-      Similarity.warnHotBuckets("simhashPairs",
-        banded.groupBy(col("band_idx"), col("band_bits"))
-          .agg(count(lit(1)).as("n_docs")).filter(col("n_docs") > bound),
-        Seq("band_idx", "band_bits"), bound)
+    Materialize.using(sh) {
+      val banded = simhashBanded(sh)
+      occupancyBound.foreach { bound =>
+        Similarity.warnHotBuckets("simhashPairs",
+          banded.groupBy(col("band_idx"), col("band_bits"))
+            .agg(count(lit(1)).as("n_docs")).filter(col("n_docs") > bound),
+          Seq("band_idx", "band_bits"), bound)
+      }
+      simhashPairsFrom(sh, banded, maxHamming)
     }
-    val out = simhashPairsFrom(sh, banded, maxHamming).localCheckpoint()
-    sh.unpersist()
-    out
   }
 
   /** Un-persisted, un-checkpointed simhash pair PLAN (VERDICT r13
     * task 1) — the band self-join + hamming verify pipeline with the
     * map-only signature derivation rebuilt on each side, so its
-    * exchange volumes are probe-readable; see [[nearDupPairsPlan]]. */
+    * exchange volumes are probe-readable (as [[nearDupPairs]]'s are:
+    * it caches nothing). */
   private[graft] def simhashPairsPlan(
       docs: DataFrame, maxHamming: Int = MaxHamming): DataFrame = {
     val sh = simhashed64(docs)
@@ -517,7 +495,7 @@ object Dedup {
     // by the two hashes, but they are functionally determined by the
     // ids, so the candidate cardinality — and every emitted pair — is
     // unchanged (same oracle; PlanAuditSpec's shuffle-record gate
-    // strictly drops). Contrast nearDupPairsFrom, where the verify
+    // strictly drops). Contrast nearDupPairs, where the verify
     // needs full token ARRAYS and the join-back is the right trade.
     val cand = banded.as("a")
       .join(banded.as("b"),
@@ -1437,8 +1415,7 @@ object Dedup {
     * corpus-sized exchanges are never re-paid (VERDICT r14 task 1). */
   def appendBandIndex(delta: DataFrame, spark: SparkSession, table: String): Unit = {
     val newDocs = appendBandIndexNew(delta, spark, table)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Materialize.using(newDocs) {
       bucketedAppend(
         tokenBanded(newDocs)
           .select(col("doc_id").as("corpus_id"), col("band_idx"), col("band_hash")),
@@ -1446,7 +1423,7 @@ object Dedup {
       bucketedAppend(
         tokenized(newDocs).select(col("doc_id").as("corpus_id"), col("toks").as("ct")),
         spark, s"${table}_toks")
-    } finally { newDocs.unpersist(); () }
+    }
   }
 
   /** The declared incremental-near delta fixture (shared by the batch
@@ -1748,10 +1725,9 @@ object Dedup {
     // the corpus. The window pipeline this replaced lives on as
     // [[contentChunksComposed]] — LlmSpec pins the two row-identical
     // and the declared oracle (unchanged) re-proves it at driver time.
-    val rows = docs.select(col("doc_id"),
+    val rows = Materialize(docs.select(col("doc_id"),
         graft.functions.cdc_chunks(col("text"), w, divisor)
-          .as(Seq("chunk_idx", "start_pos", "n_tokens", "chunk_fp")))
-      .localCheckpoint()
+          .as(Seq("chunk_idx", "start_pos", "n_tokens", "chunk_fp"))))
     val sharing = rows.groupBy(col("chunk_fp"))
       .agg(countDistinct(col("doc_id")).as("n_docs_sharing"))
     rows.join(sharing, Seq("chunk_fp"))
@@ -1768,15 +1744,12 @@ object Dedup {
     val base = docs
       .select(col("doc_id"), col("text"), split(col("text"), " ").as("toks"))
       .withColumn("len", size(col("toks")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val res = contentChunksComposedFrom(base, w, divisor).localCheckpoint()
-    base.unpersist()
-    res
+    Materialize.using(base)(contentChunksComposedFrom(base, w, divisor))
   }
 
   /** The composed CDC pipeline over an already-projected (doc_id,
-    * text, toks, len) frame, WITHOUT persist/checkpoint — PlanAudit
-    * inspects this (the spanRowsPlan convention). */
+    * text, toks, len) frame, WITHOUT caching or materialization —
+    * PlanAudit inspects this (the spanRowsPlan convention). */
   private[graft] def contentChunksComposedFrom(
       base: DataFrame, w: Int, divisor: Int): DataFrame = {
     val g = base.select(col("doc_id"), col("len"),
@@ -1855,17 +1828,15 @@ object Dedup {
     islandSpans(hits, n)
   }
 
-  /** The span pipeline WITHOUT persist/checkpoint — PlanAudit inspects
-    * this frame (the public API's localCheckpoint hides the plan). */
+  /** The span pipeline WITHOUT caching or materialization — PlanAudit
+    * inspects this frame (the public API materializes it through
+    * [[graft.Materialize]], which hides the plan). */
   private[graft] def spanRowsPlan(docs: DataFrame, n: Int = 8): DataFrame =
     spansFromGrams(gramPosRows(docs, n), n)
 
   def duplicatedSpanRows(docs: DataFrame, n: Int = 8): DataFrame = {
     val grams = gramPosRows(docs, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val spans = spansFromGrams(grams, n).localCheckpoint()
-    grams.unpersist()
-    spans
+    Materialize.using(grams)(spansFromGrams(grams, n))
   }
 
   /** Keep-one-copy substring dedup — the ACTING form of
@@ -1891,17 +1862,16 @@ object Dedup {
     * all-pairs. */
   def substringStrip(docs: DataFrame, n: Int = 8): DataFrame = {
     val grams = gramPosRows(docs, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val owners = grams.groupBy(col("gram_h"))
-      .agg(min(col("doc_id")).as("owner"), max(col("doc_id")).as("mx"))
-      .filter(col("owner") =!= col("mx"))
-      .select(col("gram_h"), col("owner"))
-    val hits = grams.join(owners, "gram_h")
-      .filter(col("doc_id") =!= col("owner"))
-      .select(col("doc_id"), col("pos"))
-    val out = Curation.removeSpans(docs, islandSpans(hits, n)).localCheckpoint()
-    grams.unpersist()
-    out
+    Materialize.using(grams) {
+      val owners = grams.groupBy(col("gram_h"))
+        .agg(min(col("doc_id")).as("owner"), max(col("doc_id")).as("mx"))
+        .filter(col("owner") =!= col("mx"))
+        .select(col("gram_h"), col("owner"))
+      val hits = grams.join(owners, "gram_h")
+        .filter(col("doc_id") =!= col("owner"))
+        .select(col("doc_id"), col("pos"))
+      Curation.removeSpans(docs, islandSpans(hits, n))
+    }
   }
 
   /** Incremental substring probe — the span tier of the delta-vs-corpus
@@ -2203,15 +2173,10 @@ object Dedup {
     * themselves are UNCHANGED — only their input relation differs —
     * so the result is row-for-row identical to `tierAgreement`
     * (DedupSpec pins equality, and pins that the tier signature
-    * stages read the cache, not parquet). The result is eagerly
-    * localCheckpoint'ed so the cached corpus can be released before
-    * returning. */
+    * stages read the cache, not parquet). */
   def tierAgreementShared(docs: DataFrame, minTiers: Int = 2): DataFrame = {
     val corpus = docs.select(col("doc_id"), col("text"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = tierAgreement(corpus, minTiers).localCheckpoint()
-    corpus.unpersist()
-    out
+    Materialize.using(corpus)(tierAgreement(corpus, minTiers))
   }
 
   /** Oracle for the CDC chunk surface — shared verbatim by the batch
@@ -2690,8 +2655,8 @@ object Dedup {
       val tbl = "hash_idx_" + java.util.UUID.randomUUID().toString.replace("-", "")
       val path = java.nio.file.Files.createTempDirectory("graft_hash_idx").toString
       buildHashIndex(docs, s, tbl, s"$path/$tbl")
-      try probeHashIndex(incrementalExactDelta(docs), s, tbl)
-        .orderBy(col("doc_id")).localCheckpoint()
+      try Materialize(probeHashIndex(incrementalExactDelta(docs), s, tbl)
+        .orderBy(col("doc_id")))
       finally {
         s.sql(s"DROP TABLE IF EXISTS $tbl")
         graft.Bench.deleteRecursively(path)
@@ -2713,8 +2678,8 @@ object Dedup {
       val path = java.nio.file.Files.createTempDirectory("graft_hash_app").toString
       buildHashIndex(docs.filter(col("doc_id") < 200), s, tbl, s"$path/$tbl")
       appendHashIndex(docs.filter(col("doc_id") >= 200), s, tbl)
-      try probeHashIndex(incrementalExactDelta(docs), s, tbl)
-        .orderBy(col("doc_id")).localCheckpoint()
+      try Materialize(probeHashIndex(incrementalExactDelta(docs), s, tbl)
+        .orderBy(col("doc_id")))
       finally {
         s.sql(s"DROP TABLE IF EXISTS $tbl")
         graft.Bench.deleteRecursively(path)
@@ -2748,8 +2713,8 @@ object Dedup {
       val tbl = "band_idx_" + java.util.UUID.randomUUID().toString.replace("-", "")
       val path = java.nio.file.Files.createTempDirectory("graft_band_idx").toString
       buildBandIndex(docs, s, tbl, s"$path/$tbl")
-      try probeBandIndex(incrementalNearDelta(docs), s, tbl)
-        .orderBy(col("doc_id")).localCheckpoint()
+      try Materialize(probeBandIndex(incrementalNearDelta(docs), s, tbl)
+        .orderBy(col("doc_id")))
       finally {
         s.sql(s"DROP TABLE IF EXISTS ${tbl}_bands")
         s.sql(s"DROP TABLE IF EXISTS ${tbl}_toks")
@@ -2770,8 +2735,8 @@ object Dedup {
       val path = java.nio.file.Files.createTempDirectory("graft_band_app").toString
       buildBandIndex(docs.filter(col("doc_id") < 200), s, tbl, s"$path/$tbl")
       appendBandIndex(docs.filter(col("doc_id") >= 200), s, tbl)
-      try probeBandIndex(incrementalNearDelta(docs), s, tbl)
-        .orderBy(col("doc_id")).localCheckpoint()
+      try Materialize(probeBandIndex(incrementalNearDelta(docs), s, tbl)
+        .orderBy(col("doc_id")))
       finally {
         s.sql(s"DROP TABLE IF EXISTS ${tbl}_bands")
         s.sql(s"DROP TABLE IF EXISTS ${tbl}_toks")
@@ -2802,7 +2767,7 @@ object Dedup {
       val tbl = "gram_idx_" + java.util.UUID.randomUUID().toString.replace("-", "")
       val path = java.nio.file.Files.createTempDirectory("graft_gram_idx").toString
       buildGramIndex(docs, s, tbl, s"$path/$tbl")
-      try probeGramIndex(delta, s, tbl).orderBy(col("doc_id")).localCheckpoint()
+      try Materialize(probeGramIndex(delta, s, tbl).orderBy(col("doc_id")))
       finally {
         s.sql(s"DROP TABLE IF EXISTS $tbl")
         graft.Bench.deleteRecursively(path)
@@ -2821,7 +2786,7 @@ object Dedup {
       val path = java.nio.file.Files.createTempDirectory("graft_gram_app").toString
       buildGramIndex(docs.filter(col("doc_id") < 200), s, tbl, s"$path/$tbl")
       appendGramIndex(docs.filter(col("doc_id") >= 200), s, tbl)
-      try probeGramIndex(delta, s, tbl).orderBy(col("doc_id")).localCheckpoint()
+      try Materialize(probeGramIndex(delta, s, tbl).orderBy(col("doc_id")))
       finally {
         s.sql(s"DROP TABLE IF EXISTS $tbl")
         graft.Bench.deleteRecursively(path)
@@ -2895,9 +2860,9 @@ object Dedup {
         .unionByName(docs
           .select((col("doc_id") + 4000000L).as("a"), (col("doc_id") + 5000000L).as("b")))
       appendGroupLabels(dNodes, dEdges, s, tbl)
-      try s.table(tbl).filter(col("id") >= 3000000L)
+      try Materialize(s.table(tbl).filter(col("id") >= 3000000L)
         .select(col("id").as("doc_id"), col("label"))
-        .orderBy(col("doc_id")).localCheckpoint()
+        .orderBy(col("doc_id")))
       finally {
         s.sql(s"DROP TABLE IF EXISTS $tbl")
         graft.Bench.deleteRecursively(path)
@@ -3009,9 +2974,9 @@ object Dedup {
       val allDocs = nodes.select(col("id").as("doc_id"))
         .unionByName(docs.select((col("doc_id") + 3000000L).as("doc_id")))
         .unionByName(docs.select((col("doc_id") + 4000000L).as("doc_id")))
-      try graft.llm.Curation.groupAwareSplitServed(allDocs, s, tbl)
+      try Materialize(graft.llm.Curation.groupAwareSplitServed(allDocs, s, tbl)
         .select(col("doc_id"), col("group_id"), col("split"))
-        .orderBy(col("doc_id")).localCheckpoint()
+        .orderBy(col("doc_id")))
       finally {
         s.sql(s"DROP TABLE IF EXISTS $tbl")
         graft.Bench.deleteRecursively(path)
@@ -3208,7 +3173,7 @@ object Dedup {
     * (For adversarial diameters use `connectedComponentsStar` below:
     * the alternating large-star/small-star variant, O(log n) rounds
     * behind the same API.) Lineage is
-    * truncated per iteration via localCheckpoint so the plan doesn't
+    * truncated per iteration ([[graft.Materialize]]) so the plan doesn't
     * grow with the iteration count. Deterministic: the min label is
     * order-independent.
     */
@@ -3218,39 +3183,38 @@ object Dedup {
       .unionByName(edges.select(col("b").as("a"), col("a").as("b")))
       .repartition(col("a")) // one-layout rule: every round joins on a (r19)
       .distinct() // dedup rides the layout exchange (r20)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var labels = graft.IterCkpt.truncate(
-      nodes.select(col("id"), col("id").as("label")))
-    var iter = 0
-    var changed = 1L
-    while (changed > 0 && iter < maxIter) {
-      val nbrMin = und.join(labels, und("a") === labels("id"))
-        .groupBy(und("b").as("nid"))
-        .agg(min(col("label")).as("nbr_label"))
-      val next = graft.IterCkpt.truncate(
-        labels.join(nbrMin, labels("id") === nbrMin("nid"), "left")
-          .select(labels("id"),
-            least(col("label"), coalesce(col("nbr_label"), col("label"))).as("label")))
-      changed = next.as("n")
-        .join(labels.as("o"), col("n.id") === col("o.id"))
-        .filter(col("n.label") =!= col("o.label"))
-        .count()
-      labels = next
-      iter += 1
+    Materialize.using(und) {
+      var labels = Materialize(nodes.select(col("id"), col("id").as("label")))
+      var iter = 0
+      var changed = 1L
+      while (changed > 0 && iter < maxIter) {
+        val nbrMin = und.join(labels, und("a") === labels("id"))
+          .groupBy(und("b").as("nid"))
+          .agg(min(col("label")).as("nbr_label"))
+        val next = Materialize(
+          labels.join(nbrMin, labels("id") === nbrMin("nid"), "left")
+            .select(labels("id"),
+              least(col("label"), coalesce(col("nbr_label"), col("label"))).as("label")))
+        changed = next.as("n")
+          .join(labels.as("o"), col("n.id") === col("o.id"))
+          .filter(col("n.label") =!= col("o.label"))
+          .count()
+        labels = next
+        iter += 1
+      }
+      // r18 (caught by the new split/label edge tests): exiting on the
+      // iteration cap with changes still flowing used to RETURN the
+      // half-converged labels — silently split groups, which in
+      // groupAwareSplit re-introduces the very leakage it exists to
+      // prevent. A wrong answer is never an acceptable cap behavior;
+      // callers with adversarial diameters use the star form.
+      if (changed > 0)
+        throw new IllegalStateException(
+          s"connectedComponents did not converge in $maxIter iterations — a " +
+            "component's diameter exceeds the cap; use connectedComponentsStar " +
+            "(O(log n) rounds) or raise maxIter")
+      labels
     }
-    und.unpersist()
-    // r18 (caught by the new split/label edge tests): exiting on the
-    // iteration cap with changes still flowing used to RETURN the
-    // half-converged labels — silently split groups, which in
-    // groupAwareSplit re-introduces the very leakage it exists to
-    // prevent. A wrong answer is never an acceptable cap behavior;
-    // callers with adversarial diameters use the star form.
-    if (changed > 0)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter iterations — a " +
-          "component's diameter exceeds the cap; use connectedComponentsStar " +
-          "(O(log n) rounds) or raise maxIter")
-    labels
   }
 
   // ── dup-group LABELS as a standing serving artifact (r17) ─────────
@@ -3300,7 +3264,7 @@ object Dedup {
       deltaNodes: DataFrame, deltaEdges: DataFrame, spark: SparkSession,
       table: String): Long = {
     val corpus = spark.table(table)
-    val dIds = deltaNodes.select(col("id")).distinct().localCheckpoint()
+    val dIds = Materialize(deltaNodes.select(col("id")).distinct())
     val e = deltaEdges.select(col("a"), col("b"))
     // delta-internal subgraph: both endpoints in the delta
     val eIn = e
@@ -3375,7 +3339,7 @@ object Dedup {
     * ROUND(·,6) absorbs it, the repo's derived-float convention).
     * Each iteration is ONE shuffle (contributions keyed by the
     * destination node) plus the degree/rank hash joins; lineage is
-    * truncated per iteration via localCheckpoint exactly like
+    * truncated per iteration ([[graft.Materialize]]) exactly like
     * `connectedComponents`. The node count is the only driver scalar
     * (bounded boundary, same class as the ML class counts). Returns
     * (id, rank_norm) with rank_norm = rank · N (mean 1.0 — the
@@ -3391,42 +3355,39 @@ object Dedup {
     // pageRank keeps self-loops out implicitly like before: a
     // self-loop contributes to its own rank exactly as it did (the
     // r19 distinct had no a≠b filter here), so rows are identical.
-    // persisted across the setup only: the deg side of the undDeg join
-    // would otherwise re-derive the union+repartition inside the one
-    // materializing job (released right after undDeg.count())
+    // cached with undDeg: the deg side of the undDeg join would
+    // otherwise re-derive the union+repartition inside the one
+    // materializing job (undDeg.count())
     val und = edges.select(col("a"), col("b"))
       .unionByName(edges.select(col("b").as("a"), col("a").as("b")))
       .repartition(col("a"))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val deg = und.groupBy(col("a")).agg(count(lit(1)).as("deg"))
-    // persist the DEGREE-ANNOTATED edge frame, pre-partitioned on the
+    // cache the DEGREE-ANNOTATED edge frame, pre-partitioned on the
     // join key (r19, the LPA one-layout discipline): the old code
     // persisted only `und` and left undDeg lazy, so every iteration
     // re-ran the degree aggregate AND the deg join from the cache —
     // per-round work that never changes. One layout, built once, all
     // `iters` rounds stream it.
     val undDeg = und.join(deg, "a")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    undDeg.count()
-    und.unpersist()
     val ids = nodes.select(col("id"))
-    val n = ids.count().toDouble
-    var ranks = graft.IterCkpt.truncate(
-      ids.select(col("id"), (lit(1.0) / n).as("rank")))
-    for (i <- 1 to iters) {
-      val contrib = undDeg
-        .join(ranks.withColumnRenamed("id", "a"), "a")
-        .select(col("b").as("id"), (col("rank") / col("deg")).as("c"))
-        .groupBy(col("id")).agg(sum(col("c")).as("in_rank"))
-      ranks = ids
-        .join(contrib, Seq("id"), "left")
-        .select(col("id"),
-          (lit((1 - damping) / n) + lit(damping) * coalesce(col("in_rank"), lit(0.0)))
-            .as("rank"))
-      ranks = graft.IterCkpt.truncate(ranks)
+    val (ranks, n) = Materialize.using(und, undDeg) {
+      undDeg.count()
+      val n = ids.count().toDouble
+      var ranks = Materialize(ids.select(col("id"), (lit(1.0) / n).as("rank")))
+      for (i <- 1 to iters) {
+        val contrib = undDeg
+          .join(ranks.withColumnRenamed("id", "a"), "a")
+          .select(col("b").as("id"), (col("rank") / col("deg")).as("c"))
+          .groupBy(col("id")).agg(sum(col("c")).as("in_rank"))
+        ranks = Materialize(ids
+          .join(contrib, Seq("id"), "left")
+          .select(col("id"),
+            (lit((1 - damping) / n) + lit(damping) * coalesce(col("in_rank"), lit(0.0)))
+              .as("rank")))
+      }
+      (ranks, n)
     }
-    undDeg.unpersist()
     ranks.select(col("id"), (round(col("rank") * n, 6) + lit(0.0)).as("rank_norm"))
   }
 
@@ -3446,7 +3407,7 @@ object Dedup {
     *    neighbors (and itself) at m — stars collapse onto the min.
     * Fixed point: each component is one star centered at its global
     * min; labels read off the star edges. Lineage is truncated per
-    * alternation (localCheckpoint), convergence is edge-set equality.
+    * alternation ([[graft.Materialize]]), convergence is edge-set equality.
     */
   def connectedComponentsStar(
       nodes: DataFrame, edges: DataFrame, maxIter: Int = 50): DataFrame =
@@ -3456,7 +3417,7 @@ object Dedup {
     * DedupSpec can pin the O(log n) convergence on a long chain). */
   def ccStarWithRounds(
       nodes: DataFrame, edges: DataFrame, maxIter: Int = 50): (DataFrame, Int) = {
-    var e = graft.IterCkpt.truncate(edges.select(col("a"), col("b"))
+    var e = Materialize(edges.select(col("a"), col("b"))
       .filter(col("a") =!= col("b")).distinct())
     var iter = 0
     var changed = 1L
@@ -3481,7 +3442,7 @@ object Dedup {
         .select(col("b").as("a"), col("m").as("b"))
         .unionByName(mins2.select(col("a"), col("m").as("b")))
         .distinct()
-      val nextT = graft.IterCkpt.truncate(next)
+      val nextT = Materialize(next)
       changed = nextT.except(e).count() + e.except(nextT).count()
       e = nextT
       iter += 1
@@ -3544,45 +3505,44 @@ object Dedup {
       .join(nodes.select(col("id").as("b")), Seq("b"), "left_semi")
       .repartition(col("a"))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    und.count()
-    // r20: the r19 node-frame layout (repartition(id) + persist +
-    // count) is gone — it existed for the PER-ROUND coalesce join,
-    // which the winners-only loop no longer runs. The node table is
-    // now read twice total (the self-label seed and the one final
-    // attach), both map-only consumers of the raw frame; pre-keying
-    // it bought nothing and cost one exchange + one materialization
-    // per call.
-    var labels = nodes.select(col("id"), col("id").as("label"))
-    // r20 (optimization round, guide §2.4 — remove per-iteration work):
-    // rounds propagate the WINNERS frame directly instead of the full
-    // coalesced label table. Every label the NEXT round's join reads is
-    // keyed by an edge endpoint b, and every endpoint has degree ≥ 1 in
-    // the symmetric `und` (its reverse row makes it an `a`), so it is
-    // in the winners of every round — the per-round coalesce-to-self
-    // join against the node table only ever filled labels no round
-    // reads (isolated nodes keep their self-label forever). The node
-    // attach therefore runs ONCE after the last round; each round
-    // materializes one join + one fused aggregate, and the checkpointed
-    // frame shrinks to the degree ≥ 1 nodes. Identical labels out
-    // (oracle-pinned; LlmSpec/GraphsSpec unchanged): lpaRound — the
-    // probe-facing one-full-round shape — is winners + the same attach.
-    // Every round truncates: fusing two rounds per materialized job
-    // measured ~1.6× SLOWER (PLANS.md r16).
-    for (i <- 1 to iters) {
-      labels = lpaWinners(und, labels)
-      if (i != iters) labels = graft.IterCkpt.truncate(labels)
+    Materialize.using(und) {
+      und.count()
+      // r20: the r19 node-frame layout (repartition(id) + cache +
+      // count) is gone — it existed for the PER-ROUND coalesce join,
+      // which the winners-only loop no longer runs. The node table is
+      // now read twice total (the self-label seed and the one final
+      // attach), both map-only consumers of the raw frame; pre-keying
+      // it bought nothing and cost one exchange + one materialization
+      // per call.
+      var labels = nodes.select(col("id"), col("id").as("label"))
+      // r20 (optimization round, guide §2.4 — remove per-iteration work):
+      // rounds propagate the WINNERS frame directly instead of the full
+      // coalesced label table. Every label the NEXT round's join reads is
+      // keyed by an edge endpoint b, and every endpoint has degree ≥ 1 in
+      // the symmetric `und` (its reverse row makes it an `a`), so it is
+      // in the winners of every round — the per-round coalesce-to-self
+      // join against the node table only ever filled labels no round
+      // reads (isolated nodes keep their self-label forever). The node
+      // attach therefore runs ONCE after the last round; each round
+      // materializes one join + one fused aggregate, and the checkpointed
+      // frame shrinks to the degree ≥ 1 nodes. Identical labels out
+      // (oracle-pinned; LlmSpec/GraphsSpec unchanged): lpaRound — the
+      // probe-facing one-full-round shape — is winners + the same attach.
+      // Every round truncates: fusing two rounds per materialized job
+      // measured ~1.6× SLOWER (PLANS.md r16).
+      for (i <- 1 to iters) {
+        labels = lpaWinners(und, labels)
+        if (i != iters) labels = Materialize(labels)
+      }
+      // final attach: isolated nodes coalesce to self, ONCE. The last
+      // round's truncation moves onto the attached frame, so the call
+      // materializes exactly `iters` frames, the returned frame stays a
+      // bare checkpoint scan (the durability contract GraphsSpec pins:
+      // under the reliable policy the caller holds a recoverable
+      // artifact, not a lazy re-derivation), and the checkpointed volume
+      // of the final round is unchanged from r19 (node-sized, attached).
+      attachIsolated(nodes, labels)
     }
-    // final attach: isolated nodes coalesce to self, ONCE. The last
-    // round's truncation moves onto the attached frame, so the call
-    // materializes exactly `iters` frames, the returned frame stays a
-    // bare checkpoint scan (the durability contract GraphsSpec pins:
-    // under the reliable policy the caller holds a recoverable
-    // artifact, not a lazy re-derivation), and the checkpointed volume
-    // of the final round is unchanged from r19 (node-sized, attached).
-    val out = graft.IterCkpt.truncate(attachIsolated(nodes, labels))
-    und.unpersist()
-    out
   }
 
   /** Per-round changed-label counts of [[labelPropagation]] — the
@@ -3599,24 +3559,21 @@ object Dedup {
     // same one-layout discipline as labelPropagation (r19); dedup on
     // the layout exchange (r20)
     val und = undirectedRaw(edges).repartition(col("a")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    und.count()
     val nodesP = nodes.select(col("id")).repartition(col("id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    nodesP.count()
-    var labels = graft.IterCkpt.truncate(
-      nodesP.select(col("id"), col("id").as("label")))
-    val rows = (1 to iters).map { k =>
-      val next = graft.IterCkpt.truncate(lpaRound(und, nodesP, labels))
-      val changed = next.as("n")
-        .join(labels.as("o"), col("n.id") === col("o.id"))
-        .filter(col("n.label") =!= col("o.label"))
-        .count()
-      labels = next
-      (k.toLong, changed)
+    val rows = Materialize.using(und, nodesP) {
+      und.count()
+      nodesP.count()
+      var labels = Materialize(nodesP.select(col("id"), col("id").as("label")))
+      (1 to iters).map { k =>
+        val next = Materialize(lpaRound(und, nodesP, labels))
+        val changed = next.as("n")
+          .join(labels.as("o"), col("n.id") === col("o.id"))
+          .filter(col("n.label") =!= col("o.label"))
+          .count()
+        labels = next
+        (k.toLong, changed)
+      }
     }
-    und.unpersist()
-    nodesP.unpersist()
     rows.toDF("round", "changed").orderBy(col("round"))
   }
 
@@ -3764,17 +3721,15 @@ object Dedup {
     // both keeps each computed ONCE — un-materialized, the three
     // consumers of `oriented` re-run the whole dedup + degree + join
     // lineage (an 18-shuffle plan measured at sf0.01; 5 after).
-    val und = edges.select(col("a"), col("b"))
+    val und = Materialize(edges.select(col("a"), col("b"))
       .unionByName(edges.select(col("b").as("a"), col("a").as("b")))
-      .filter(col("a") =!= col("b")).distinct().localCheckpoint()
-    val deg = und.groupBy(col("a").as("id")).agg(count(lit(1)).as("d"))
-      .localCheckpoint()
-    val oriented = und
+      .filter(col("a") =!= col("b")).distinct())
+    val deg = Materialize(und.groupBy(col("a").as("id")).agg(count(lit(1)).as("d")))
+    val oriented = Materialize(und
       .join(deg.select(col("id").as("a"), col("d").as("da")), "a")
       .join(deg.select(col("id").as("b"), col("d").as("db")), "b")
       .filter(col("da") < col("db") || (col("da") === col("db") && col("a") < col("b")))
-      .select(col("a"), col("b"), col("db"))
-      .localCheckpoint()
+      .select(col("a"), col("b"), col("db")))
     // wedges at the low corner, the two spokes ordered in the SAME
     // (degree, id) total order so the closing edge — if present — is
     // oriented v→w and one semi-join decides closure
@@ -3904,23 +3859,21 @@ object Dedup {
   def jaccardPrefixJoin(docs: DataFrame): DataFrame = {
     val g = bigramSets(docs)
       .withColumn("sz", size(col("grams")).cast("long"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = prefixCandidates(g)
-      .join(g.select(col("doc_id").as("id_a"), col("grams").as("ga"), col("sz").as("sa")),
-        "id_a")
-      .join(g.select(col("doc_id").as("id_b"), col("grams").as("gb"), col("sz").as("sb")),
-        "id_b")
-      .withColumn("inter", size(array_intersect(col("ga"), col("gb"))).cast("long"))
-      .withColumn("uni", col("sa") + col("sb") - col("inter"))
-      .filter(col("inter") * 5 >= col("uni") * 2)
-      .select(col("id_a"), col("id_b"),
-        col("inter").as("n_shared"),
-        (expr("(2 * 1000000 * inter + uni) div (2 * uni)").cast("double") /
-          lit(1000000.0)).as("jaccard"))
-      .orderBy(col("id_a"), col("id_b"))
-      .localCheckpoint()
-    g.unpersist()
-    out
+    Materialize.using(g) {
+      prefixCandidates(g)
+        .join(g.select(col("doc_id").as("id_a"), col("grams").as("ga"), col("sz").as("sa")),
+          "id_a")
+        .join(g.select(col("doc_id").as("id_b"), col("grams").as("gb"), col("sz").as("sb")),
+          "id_b")
+        .withColumn("inter", size(array_intersect(col("ga"), col("gb"))).cast("long"))
+        .withColumn("uni", col("sa") + col("sb") - col("inter"))
+        .filter(col("inter") * 5 >= col("uni") * 2)
+        .select(col("id_a"), col("id_b"),
+          col("inter").as("n_shared"),
+          (expr("(2 * 1000000 * inter + uni) div (2 * uni)").cast("double") /
+            lit(1000000.0)).as("jaccard"))
+        .orderBy(col("id_a"), col("id_b"))
+    }
   }
 
   /** The prefix-lemma candidate stage of [[jaccardPrefixJoin]],
@@ -3968,16 +3921,13 @@ object Dedup {
     */
   def jaccardExactJoin(docs: DataFrame): DataFrame = {
     val g = bigramSets(docs).withColumn("sz", size(col("grams")).cast("long"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = jaccardExactJoinPlan(g).localCheckpoint()
-    g.unpersist()
-    out
+    Materialize.using(g)(jaccardExactJoinPlan(g))
   }
 
   /** The un-checkpointed core of [[jaccardExactJoin]] — the
-    * spanRowsPlan convention: the public API localCheckpoints (and
-    * releases the persisted gram scan), so PlanAudit reads THIS to
-    * see the real exchanges. Input: (doc_id, grams, sz). */
+    * spanRowsPlan convention: the public API materializes it through
+    * [[graft.Materialize]] (and releases the cached gram scan), so
+    * PlanAudit reads THIS to see the real exchanges. Input: (doc_id, grams, sz). */
   private[graft] def jaccardExactJoinPlan(g: DataFrame): DataFrame = {
     val tok = g.select(col("doc_id"), explode(col("grams")).as("gram"))
     val sz = g.select(col("doc_id"), col("sz"))
@@ -4000,21 +3950,16 @@ object Dedup {
 
   def ngramJaccardPairs(docs: DataFrame, threshold: Double): DataFrame = {
     val g = bigramSets(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // persisted: the candidate self-join reads it twice, and with the
+    // cached: the candidate self-join reads bands twice, and with the
     // fused map-only derivation there is no agg exchange left for
     // Spark to reuse across the two sides
     val bands = ngramBanded(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = ngramJaccardPairsFrom(g, bands, threshold).localCheckpoint()
-    g.unpersist()
-    bands.unpersist()
-    out
+    Materialize.using(g, bands)(ngramJaccardPairsFrom(g, bands, threshold))
   }
 
   /** Un-persisted, un-checkpointed bigram-Jaccard pair PLAN (VERDICT
-    * r13 task 1) — probe-readable exchange volumes; see
-    * [[nearDupPairsPlan]]. */
+    * r13 task 1) — probe-readable exchange volumes, as
+    * [[simhashPairsPlan]]'s. */
   private[graft] def ngramJaccardPairsPlan(
       docs: DataFrame, threshold: Double): DataFrame =
     ngramJaccardPairsFrom(bigramSets(docs), ngramBanded(docs), threshold)

@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Q, Tables}
+import graft.{Materialize, Q, Tables}
 
 /** Multimodal column plumbing (builder-prompt component): media as an
   * opaque `binary` payload column + typed metadata, with
@@ -97,10 +97,10 @@ object Multimodal {
       s"aggregate(sequence(0, 15), cast(0 as bigint), (acc, j) -> " +
         s"acc + if(element_at(bt, 16 * $k + j + 1) > element_at(bt, 16 * $k + j + 2), " +
         s"shiftleft(cast(1 as bigint), j), cast(0 as bigint)))"
-    val fp = docs
+    // feeds the band explode AND both verify sides
+    val fp = Materialize(docs
       .withColumn("bt", expr(bt))
-      .select((col("doc_id") +: (0 until 4).map(k => expr(band(k)).as(s"b$k"))): _*)
-      .localCheckpoint() // feeds the band explode AND both verify sides
+      .select((col("doc_id") +: (0 until 4).map(k => expr(band(k)).as(s"b$k"))): _*))
     val bands = fp.select(col("doc_id"),
       explode(map_from_arrays(
         expr("array(0, 1, 2, 3)"), expr("array(b0, b1, b2, b3)")))

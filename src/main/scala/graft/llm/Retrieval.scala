@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Q, Tables}
+import graft.{Materialize, Q, Tables}
 
 /** Retrieval composition tier (round 12): rank FUSION across the
   * lexical and semantic retrievers, result DIVERSIFICATION, and
@@ -242,9 +242,9 @@ object Retrieval {
   def topicTerms(docs: DataFrame, emb: DataFrame, k: Int): DataFrame = {
     val topics = emb.select(col("vec_id").as("doc_id"),
       (Similarity.srpBucket(col("embedding").cast("array<double>")) % 16).as("topic"))
-    val toks = docs.join(topics, "doc_id")
-      .select(col("doc_id"), col("topic"), explode(split(col("text"), " ")).as("token"))
-      .localCheckpoint() // feeds both tf and df — one explode, not two
+    // feeds both tf and df — one explode, not two
+    val toks = Materialize(docs.join(topics, "doc_id")
+      .select(col("doc_id"), col("topic"), explode(split(col("text"), " ")).as("token")))
     val tf = toks.groupBy(col("topic"), col("token"))
       .agg(count(lit(1)).cast("long").as("tf_topic"))
     val df_ = toks.select(col("doc_id"), col("token")).distinct()

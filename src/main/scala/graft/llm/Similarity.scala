@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Q, Tables}
+import graft.{Materialize, Q, Tables}
 
 /** Embedding similarity search over `embeddings` (64-dim float
   * vectors; SURVEY §7.3 M4, VERDICT r1 LLM-pipeline tier 2).
@@ -560,7 +560,7 @@ object Similarity {
     * sibling of [[refitIvfIndexPinned]] (the staleness loop's action
     * for real Lloyd centroids): read the assigned rows (vec_id,
     * label, v — one pass over the index, never a corpus rescan),
-    * localCheckpoint them out of the directory being rewritten, and
+    * checkpoint them out of the directory being rewritten, and
     * run [[buildIvfIndex]] over them — fresh centroids fitted to the
     * drifted union, the IvfStaleProbe refit branch as callable code.
     * Not oracle-expressible (KMeans), like the build; probe-sanity
@@ -571,9 +571,8 @@ object Similarity {
     * re-runs from the last committed index state, exactly like an
     * interrupted build). */
   def refitIvfIndex(spark: SparkSession, path: String, nClusters: Int = 16): Unit = {
-    val rows = Tables.parquet(spark, s"$path/assigned")
-      .select(col("vec_id"), col("label"), col("v").as("embedding"))
-      .localCheckpoint()
+    val rows = Materialize(Tables.parquet(spark, s"$path/assigned")
+      .select(col("vec_id"), col("label"), col("v").as("embedding")))
     buildIvfIndex(rows, path, nClusters)
   }
 
@@ -927,8 +926,7 @@ object Similarity {
     * relation holds the old location). */
   def refitIvfIndexPinned(spark: SparkSession, path: String, nCells: Int = 16): Unit = {
     val t = ivfPinnedTable(path)
-    val rows = spark.table(t)
-      .select(col("vec_id"), col("label"), col("v")).localCheckpoint()
+    val rows = Materialize(spark.table(t).select(col("vec_id"), col("label"), col("v")))
     val seeds = rows
       .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
       .limit(nCells)
@@ -1642,34 +1640,35 @@ object Similarity {
       .select(col("vec_id"), col("label"),
         when(col("nrm") === 0, col("v0"))
           .otherwise(transform(col("v0"), x => x / col("nrm"))).as("u"))
-      .cache() // read by m+1 fits, m encodes, and the final write
-    val coarse = new KMeans().setK(nClusters).setSeed(42L)
-      .setFeaturesCol("fv").setPredictionCol("cluster")
-      .fit(base.withColumn("fv", array_to_vector(col("u"))))
-    var enc = coarse.transform(base.withColumn("fv", array_to_vector(col("u")))).drop("fv")
-    val books = Seq.newBuilder[(Int, Int, Seq[Double])]
-    for (s <- 0 until m) {
-      val sv = array_to_vector(slice(col("u"), s * subDim + 1, subDim))
-      val model = new KMeans().setK(k).setSeed(43L + s)
-        .setFeaturesCol("sv").setPredictionCol(s"code_$s")
-        .fit(base.select(col("u")).withColumn("sv", sv))
-      enc = model.transform(enc.withColumn("sv", sv)).drop("sv")
-      books ++= model.clusterCenters.zipWithIndex.map {
-        case (cvec, ci) => (s, ci, cvec.toArray.toSeq)
+    // cached: read by m+1 fits, m encodes, and the final write
+    Materialize.using(base) {
+      val coarse = new KMeans().setK(nClusters).setSeed(42L)
+        .setFeaturesCol("fv").setPredictionCol("cluster")
+        .fit(base.withColumn("fv", array_to_vector(col("u"))))
+      var enc = coarse.transform(base.withColumn("fv", array_to_vector(col("u")))).drop("fv")
+      val books = Seq.newBuilder[(Int, Int, Seq[Double])]
+      for (s <- 0 until m) {
+        val sv = array_to_vector(slice(col("u"), s * subDim + 1, subDim))
+        val model = new KMeans().setK(k).setSeed(43L + s)
+          .setFeaturesCol("sv").setPredictionCol(s"code_$s")
+          .fit(base.select(col("u")).withColumn("sv", sv))
+        enc = model.transform(enc.withColumn("sv", sv)).drop("sv")
+        books ++= model.clusterCenters.zipWithIndex.map {
+          case (cvec, ci) => (s, ci, cvec.toArray.toSeq)
+        }
       }
+      enc.select(col("vec_id"), col("label"), col("u"),
+          array((0 until m).map(s => col(s"code_$s")): _*).as("codes"),
+          col("cluster"))
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .partitionBy("cluster").parquet(s"$path/assigned")
+      books.result().toDF("sub", "code", "centroid")
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$path/codebooks")
+      coarse.clusterCenters.zipWithIndex
+        .map { case (c, i) => (i, c.toArray) }
+        .toSeq.toDF("cluster", "centroid")
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$path/centroids")
     }
-    enc.select(col("vec_id"), col("label"), col("u"),
-        array((0 until m).map(s => col(s"code_$s")): _*).as("codes"),
-        col("cluster"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("cluster").parquet(s"$path/assigned")
-    books.result().toDF("sub", "code", "centroid")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$path/codebooks")
-    coarse.clusterCenters.zipWithIndex
-      .map { case (c, i) => (i, c.toArray) }
-      .toSeq.toDF("cluster", "centroid")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$path/centroids")
-    base.unpersist()
   }
 
   /** SemDeDup-style semantic dedup (Abbas et al. 2023, arXiv:
@@ -1809,7 +1808,6 @@ object Similarity {
       .select(col("label"), posexplode(col("embedding")).as(Seq("p", "x")))
       .select(col("label"), (col("p") + 1).as("dim"),
         floor(col("x").cast("double") * 1000000 + lit(0.5)).cast("long").as("q"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val ls = cells.groupBy(col("label"), col("dim"))
       .agg(sum(col("q")).cast("decimal(18,0)").as("s"))
     val gs = cells.groupBy(col("dim"))
@@ -1855,7 +1853,8 @@ object Similarity {
     val e = emb.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val probes = e.filter(col("vec_id") < nProbes)
       .select(col("vec_id").as("probe_id"), col("v").as("pv"))
-    val ranked = e.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
+    // the full-dim lane is read back as the reference set
+    val ranked = Materialize(e.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
       .withColumn("d", explode(array(dims.map(lit): _*)))
       .withColumn("cos_sim",
         round(cosine(slice(col("v"), lit(1), col("d")),
@@ -1865,8 +1864,7 @@ object Similarity {
           .partitionBy(col("d"), col("probe_id"))
           .orderBy(col("cos_sim").desc, col("vec_id"))).cast("long"))
       .filter(col("rnk") <= k)
-      .select(col("d"), col("probe_id"), col("vec_id"), col("rnk"))
-      .localCheckpoint() // the full-dim lane is read back as the reference set
+      .select(col("d"), col("probe_id"), col("vec_id"), col("rnk")))
     val full = ranked.filter(col("d") === fullDim)
       .select(col("probe_id").as("fp"), col("vec_id").as("fv"), lit(1L).as("hit"))
     ranked
@@ -1902,20 +1900,19 @@ object Similarity {
         s"acc + if(element_at(v, 16 * $kk + j + 1) > cast(0 as double), " +
         s"shiftleft(cast(1 as bigint), j), cast(0 as bigint)))"
     val e = emb.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val words = e.select((col("vec_id") +: col("v") +:
-      (0 until 4).map(kk => expr(word(kk)).as(s"w$kk"))): _*)
-      .localCheckpoint() // one scan builds words for probes AND corpus
+    // one scan builds words for probes AND corpus
+    val words = Materialize(e.select((col("vec_id") +: col("v") +:
+      (0 until 4).map(kk => expr(word(kk)).as(s"w$kk"))): _*))
     val probes = words.filter(col("vec_id") < nProbes)
       .select((col("vec_id").as("probe_id") +: col("v").as("pv") +:
         (0 until 4).map(kk => col(s"w$kk").as(s"p$kk"))): _*)
     val wRank = org.apache.spark.sql.expressions.Window
-    val cand = words.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
+    val cand = Materialize(words.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
       .withColumn("hamming", expr(
         "bit_count(w0 ^ p0) + bit_count(w1 ^ p1) + bit_count(w2 ^ p2) + bit_count(w3 ^ p3)")
         .cast("long"))
       .withColumn("cos_sim",
-        round(cosine(col("v"), col("pv")), 6) + lit(0.0))
-      .localCheckpoint() // both rankings read the same pass
+        round(cosine(col("v"), col("pv")), 6) + lit(0.0))) // both rankings read the same pass
     val bq = cand.withColumn("rnk", row_number().over(
         wRank.partitionBy(col("probe_id"))
           .orderBy(col("hamming"), col("vec_id"))).cast("long"))
@@ -2141,7 +2138,7 @@ object Similarity {
       val path = ivfTmp(s"appp_${java.util.UUID.randomUUID().toString.take(8)}")
       buildIvfIndexPinned(emb.filter(col("vec_id") < 200), path)
       appendIvfIndexPinned(emb.filter(col("vec_id") >= 200), s, path)
-      try ivfSearchPinned(s, path, probeId = 0L, k = 20, nProbe = 4).localCheckpoint()
+      try Materialize(ivfSearchPinned(s, path, probeId = 0L, k = 20, nProbe = 4))
       finally dropIvfIndexPinned(s, path)
     },
 
@@ -2160,7 +2157,7 @@ object Similarity {
       buildIvfIndexPinned(emb.filter(col("vec_id") < 200), path)
       appendIvfIndexPinned(emb.filter(col("vec_id") >= 200), s, path)
       refitIvfIndexPinned(s, path)
-      try ivfSearchPinned(s, path, probeId = 0L, k = 20, nProbe = 4).localCheckpoint()
+      try Materialize(ivfSearchPinned(s, path, probeId = 0L, k = 20, nProbe = 4))
       finally dropIvfIndexPinned(s, path)
     },
 
@@ -2177,7 +2174,7 @@ object Similarity {
       val path = ivfTmp(s"kapp_${java.util.UUID.randomUUID().toString.take(8)}")
       buildIvfIndex(emb.filter(col("vec_id") < 200), path)
       appendIvfIndex(emb.filter(col("vec_id") >= 200), s, path)
-      try ivfSearch(s, path, probeId = 0L, k = 20).localCheckpoint()
+      try Materialize(ivfSearch(s, path, probeId = 0L, k = 20))
       finally graft.Bench.deleteRecursively(path)
     },
 
@@ -2272,8 +2269,8 @@ object Similarity {
       val tbl = "srp_idx_" + java.util.UUID.randomUUID().toString.replace("-", "")
       val path = java.nio.file.Files.createTempDirectory("graft_srp_idx").toString
       buildSrpIndex(emb, s, tbl, s"$path/$tbl")
-      try probeSrpIndex(emb.filter(col("vec_id") < 8), s, tbl, k = 3)
-        .orderBy(col("probe_id"), col("rank")).localCheckpoint()
+      try Materialize(probeSrpIndex(emb.filter(col("vec_id") < 8), s, tbl, k = 3)
+        .orderBy(col("probe_id"), col("rank")))
       finally {
         s.sql(s"DROP TABLE IF EXISTS ${tbl}_bands")
         s.sql(s"DROP TABLE IF EXISTS ${tbl}_vecs")
@@ -2294,8 +2291,8 @@ object Similarity {
       val path = java.nio.file.Files.createTempDirectory("graft_srp_app").toString
       buildSrpIndex(emb.filter(col("vec_id") < 200), s, tbl, s"$path/$tbl")
       appendSrpIndex(emb.filter(col("vec_id") >= 200), s, tbl)
-      try probeSrpIndex(emb.filter(col("vec_id") < 8), s, tbl, k = 3)
-        .orderBy(col("probe_id"), col("rank")).localCheckpoint()
+      try Materialize(probeSrpIndex(emb.filter(col("vec_id") < 8), s, tbl, k = 3)
+        .orderBy(col("probe_id"), col("rank")))
       finally {
         s.sql(s"DROP TABLE IF EXISTS ${tbl}_bands")
         s.sql(s"DROP TABLE IF EXISTS ${tbl}_vecs")
@@ -2542,7 +2539,7 @@ object Similarity {
       val path = ivfTmp(s"pqapp_${java.util.UUID.randomUUID().toString.take(8)}")
       buildPqIndex(emb.filter(col("vec_id") < 200), path)
       appendPqIndex(emb.filter(col("vec_id") >= 200), s, path)
-      try pqSearch(s, path, probeId = 0L, kResults = 20, nProbe = 0).localCheckpoint()
+      try Materialize(pqSearch(s, path, probeId = 0L, kResults = 20, nProbe = 0))
       finally graft.Bench.deleteRecursively(path)
     },
 
@@ -2817,10 +2814,7 @@ object Similarity {
         Seq("band_idx", "band_sig"), bound)
     }
     val vecs = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = annJoinFrom(vecs, probes, k, expandProbes).localCheckpoint()
-    vecs.unpersist()
-    out
+    Materialize.using(vecs)(annJoinFrom(vecs, probes, k, expandProbes))
   }
 
   /** Un-persisted, un-checkpointed banded-ANN join PLAN (VERDICT r13
@@ -2875,13 +2869,12 @@ object Similarity {
   def appendSrpIndex(delta: DataFrame, spark: SparkSession, table: String): Unit = {
     val newVecs = delta.join(
         spark.table(s"${table}_vecs").select(col("vec_id")), Seq("vec_id"), "left_anti")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Materialize.using(newVecs) {
       Dedup.bucketedAppend(srpBanded(newVecs), spark, s"${table}_bands")
       Dedup.bucketedAppend(
         newVecs.select(col("vec_id"), asDouble(col("embedding")).as("v")),
         spark, s"${table}_vecs")
-    } finally { newVecs.unpersist(); () }
+    }
   }
 
   /** Probe a persisted [[buildSrpIndex]] pair: identical semantics to
@@ -2998,16 +2991,14 @@ object Similarity {
     * you raise r as n grows and add bands to hold recall). */
   def nearDupPairsByCosine(emb: DataFrame, threshold: Double): DataFrame = {
     val vecs = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = srpBandedCandidates(vecs.select(col("vec_id"), col("v").as("embedding")))
-      .join(vecs.select(col("vec_id").as("id_a"), col("v").as("va")), "id_a")
-      .join(vecs.select(col("vec_id").as("id_b"), col("v").as("vb")), "id_b")
-      .withColumn("cos_sim", round(cosine(col("va"), col("vb")), 6) + lit(0.0))
-      .filter(col("cos_sim") >= threshold)
-      .select(col("id_a"), col("id_b"), col("cos_sim"))
-      .orderBy(col("id_a"), col("id_b"))
-      .localCheckpoint()
-    vecs.unpersist()
-    out
+    Materialize.using(vecs) {
+      srpBandedCandidates(vecs.select(col("vec_id"), col("v").as("embedding")))
+        .join(vecs.select(col("vec_id").as("id_a"), col("v").as("va")), "id_a")
+        .join(vecs.select(col("vec_id").as("id_b"), col("v").as("vb")), "id_b")
+        .withColumn("cos_sim", round(cosine(col("va"), col("vb")), 6) + lit(0.0))
+        .filter(col("cos_sim") >= threshold)
+        .select(col("id_a"), col("id_b"), col("cos_sim"))
+        .orderBy(col("id_a"), col("id_b"))
+    }
   }
 }

@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Q, Tables}
+import graft.{Materialize, Q, Tables}
 
 /** Text analysis for corpus curation over `documents` (VERDICT r1
   * LLM-pipeline tier; builder-prompt "text analysis" component):
@@ -92,20 +92,18 @@ object TextAnalysis {
     * aggregate + one candidate-filtered aggregate. */
   def frequentTokens(docs: DataFrame, k: Int): DataFrame = {
     val tok = docs.select(explode(split(col("text"), " ")).as("t"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val row = tok.agg(
-      graft.functions.misra_gries(col("t"), k).as("cand"),
-      count(lit(1)).as("n")).head()
-    val candidates = row.getSeq[String](0)
-    val n = row.getLong(1)
-    val out = tok.filter(col("t").isin(candidates: _*))
-      .groupBy(col("t").as("token"))
-      .agg(count(lit(1)).cast("long").as("freq"))
-      .filter(col("freq") * k > n)
-      .orderBy(col("freq").desc, col("token"))
-      .localCheckpoint()
-    tok.unpersist()
-    out
+    Materialize.using(tok) {
+      val row = tok.agg(
+        graft.functions.misra_gries(col("t"), k).as("cand"),
+        count(lit(1)).as("n")).head()
+      val candidates = row.getSeq[String](0)
+      val n = row.getLong(1)
+      tok.filter(col("t").isin(candidates: _*))
+        .groupBy(col("t").as("token"))
+        .agg(count(lit(1)).cast("long").as("freq"))
+        .filter(col("freq") * k > n)
+        .orderBy(col("freq").desc, col("token"))
+    }
   }
 
   /** Zipf rank-frequency slope over the top-`topK` tokens — the
@@ -176,21 +174,19 @@ object TextAnalysis {
     * oracle-checked. */
   def frequentTokensBySource(docs: DataFrame, k: Int): DataFrame = {
     val tok = docs.select(col("source"), explode(split(col("text"), " ")).as("t"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sk = tok.groupBy(col("source"))
-      .agg(graft.functions.misra_gries(col("t"), k).as("cand"),
-        count(lit(1)).as("n"))
-    val candRows = sk.select(col("source"), explode(col("cand")).as("t"))
-    val out = tok.join(candRows, Seq("source", "t"), "left_semi")
-      .groupBy(col("source"), col("t"))
-      .agg(count(lit(1)).cast("long").as("freq"))
-      .join(sk.select(col("source"), col("n")), "source")
-      .filter(col("freq") * k > col("n"))
-      .select(col("source"), col("t").as("token"), col("freq"))
-      .orderBy(col("source"), col("freq").desc, col("token"))
-      .localCheckpoint()
-    tok.unpersist()
-    out
+    Materialize.using(tok) {
+      val sk = tok.groupBy(col("source"))
+        .agg(graft.functions.misra_gries(col("t"), k).as("cand"),
+          count(lit(1)).as("n"))
+      val candRows = sk.select(col("source"), explode(col("cand")).as("t"))
+      tok.join(candRows, Seq("source", "t"), "left_semi")
+        .groupBy(col("source"), col("t"))
+        .agg(count(lit(1)).cast("long").as("freq"))
+        .join(sk.select(col("source"), col("n")), "source")
+        .filter(col("freq") * k > col("n"))
+        .select(col("source"), col("t").as("token"), col("freq"))
+        .orderBy(col("source"), col("freq").desc, col("token"))
+    }
   }
 
   /** Canonical text cleaning — Unicode NFC composition (the native
@@ -288,12 +284,11 @@ object TextAnalysis {
     // so the corpus explode+filter+agg runs once (it's the only
     // data-sized stage; everything downstream is |query|-bounded or
     // per-matching-doc)
-    val tf = docs
+    val tf = Materialize(docs
       .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
       .filter(col("term").isin(terms: _*))
       .groupBy(col("doc_id"), col("term"))
-      .agg(count(lit(1)).cast("long").as("tf"))
-      .localCheckpoint()
+      .agg(count(lit(1)).cast("long").as("tf")))
     val idf = tf.groupBy(col("term")).agg(count(lit(1)).cast("long").as("df"))
       .crossJoin(broadcast(docs.select(count(lit(1)).as("n_docs"))))
       .select(col("term"), expr("(n_docs * 1000000L) div df").as("idf"))
@@ -333,11 +328,10 @@ object TextAnalysis {
     // filter, before any explode), so the checkpointed rows are narrow —
     // two longs plus a |query|-bounded array — and the corpus text is
     // read and split exactly once. totals/tf/idf values are unchanged.
-    val perDoc = docs
+    val perDoc = Materialize(docs
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
       .select(col("doc_id"), size(col("toks")).cast("long").as("dl"),
-        filter(col("toks"), t => t.isin(terms: _*)).as("mt"))
-      .localCheckpoint()
+        filter(col("toks"), t => t.isin(terms: _*)).as("mt")))
     val totals = perDoc
       .agg(count(lit(1)).cast("long").as("n_docs"),
         sum(col("dl")).cast("long").as("n_tokens"))
@@ -446,10 +440,7 @@ object TextAnalysis {
     * the shared [[familiarityPlan]]. */
   def familiarity(docs: DataFrame): DataFrame = {
     val grams = gramKeyRows(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = familiarityTail(grams).localCheckpoint()
-    grams.unpersist()
-    out
+    Materialize.using(grams)(familiarityTail(grams))
   }
 
   /** (doc_id, gram_h) bigram key rows — the familiarity scan. */
@@ -498,7 +489,6 @@ object TextAnalysis {
     * disjoint vocabulary. */
   def sourceDrift(docs: DataFrame): DataFrame = {
     val tok = docs.select(col("source"), explode(toks).as("t"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val sc = tok.groupBy(col("source"), col("t")).agg(count(lit(1)).as("o"))
     val g = tok.groupBy(col("t")).agg(count(lit(1)).as("g"))
     val ns = sc.groupBy(col("source")).agg(sum(col("o")).cast("long").as("n_s"))
@@ -557,24 +547,20 @@ object TextAnalysis {
       .select(col("doc_id"), graft.functions.ngrams(col("text"), 2).as(Seq("pos", "e")))
       .select(col("doc_id"), col("e"))
     // ONE data-sized aggregate: per-doc bigram multiplicities,
-    // PERSISTED because the model folds FROM it (c2 = Σ_doc m,
+    // CACHED because the model folds FROM it (c2 = Σ_doc m,
     // c1 = Σ_prefix c2) and a differently-pruned second consumer
     // would silently re-scan and re-shuffle the corpus otherwise —
     // the analytics_top_supplier lesson. c1 pre-joins onto c2 while
     // both are vocabulary-bounded, so the scoring join below is the
-    // only data-sized join; the doc-rollup result localCheckpoints
-    // and the persisted frame is released.
+    // only data-sized join.
     val db = bg.groupBy(col("doc_id"), col("e")).agg(count(lit(1)).as("m"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = bigramLmScoreFrom(docs, db).localCheckpoint()
-    db.unpersist()
-    out
+    Materialize.using(db)(bigramLmScoreFrom(docs, db))
   }
 
   /** The scoring pipeline over a prepared (doc_id, e, m) bigram frame
-    * — the un-checkpointed core the public API persists/checkpoints
-    * around (spanRowsPlan convention; PlanAudit reads this with a
-    * cold db to count the real exchanges). */
+    * — the un-checkpointed core the public API materializes through
+    * [[graft.Materialize]] (spanRowsPlan convention; PlanAudit reads
+    * this with a cold db to count the real exchanges). */
   private[graft] def bigramLmScoreFrom(docs: DataFrame, db: DataFrame): DataFrame = {
     val c2 = db.groupBy(col("e")).agg(sum(col("m")).as("c2"))
     val c1 = c2.groupBy(substring_index(col("e"), " ", 1).as("p"))
@@ -616,10 +602,9 @@ object TextAnalysis {
   def tokenEntropy(docs: DataFrame): DataFrame = {
     def ln12(c: Column): Column =
       round(log(c.cast("double")), 12).cast("decimal(20,12)")
-    val st = docs
+    val st = Materialize(docs
       .select(col("source"), explode(split(col("text"), " ")).as("token"))
-      .groupBy(col("source"), col("token")).agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+      .groupBy(col("source"), col("token")).agg(count(lit(1)).as("c")))
     val per = st.groupBy(col("source")).agg(
       sum(col("c")).as("n"), count(lit(1)).as("v"),
       sum(col("c") * ln12(col("c"))).as("s"))
@@ -1294,7 +1279,7 @@ object TextAnalysis {
     * one adjacent-pair aggregate + one deterministic argmax
     * (weight desc, pair asc) over the DISTINCT-WORD frame —
     * vocabulary-sized, not corpus-sized — and the symbol arrays are
-    * localCheckpoint'ed per iteration so the plan never grows. The
+    * checkpointed per iteration so the plan never grows. The
     * merge table is a bounded driver artifact (nMerges pairs, the
     * IVF-centroid class). Merges apply greedily left-to-right
     * (fold semantics, matching the published tokenizer); no
@@ -1314,11 +1299,10 @@ object TextAnalysis {
     * BPE tier's oracle surface beyond the rows-only encode stats. */
   def bpeMergeTable(
       docs: DataFrame, nMerges: Int = 8): Seq[(Int, String, String, Long)] = {
-    var words = docs.select(explode(split(col("text"), " ")).as("t"))
+    var words = Materialize(docs.select(explode(split(col("text"), " ")).as("t"))
       .filter(length(col("t")) > 0)
       .groupBy(col("t")).agg(count(lit(1)).as("freq"))
-      .select(col("freq"), split(col("t"), "").as("syms"))
-      .localCheckpoint()
+      .select(col("freq"), split(col("t"), "").as("syms")))
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     var exhausted = false
     for (k <- 1 to nMerges if !exhausted) {
@@ -1330,9 +1314,8 @@ object TextAnalysis {
       else {
         val (a, b) = (top(0).getString(0), top(0).getString(1))
         merges += ((k, a, b, top(0).getLong(2)))
-        words = words
-          .select(col("freq"), applyMerge(col("syms"), a, b).as("syms"))
-          .localCheckpoint()
+        words = Materialize(words
+          .select(col("freq"), applyMerge(col("syms"), a, b).as("syms")))
       }
     }
     merges.toSeq

@@ -11,7 +11,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Q, Tables}
+import graft.{Materialize, Q, Tables}
 import graft.pipeline.{Telemetry, TrainingData}
 
 /** ML capability layer (reference scripts 04–06, SURVEY §2.11):
@@ -315,19 +315,19 @@ object FailureModel {
     // invariants (recall ≥ target on the tuning split, TP+FN = positives).
     Q.noOracle("ml_e2e_metrics") { (s, dir) =>
       import s.implicits._
-      val f = feat(s, dir).cache()
-      try {
+      val f = feat(s, dir)
+      val row = Materialize.using(f) {
         val trainDf = TrainingData.downsampled(TrainingData.train(f), ratio = 100.0)
         val model = train(trainDf)
-        val scoredValid = score(model, TrainingData.valid(f)).cache()
-        val tau = selectThreshold(scoredValid)
-        val auc = prAuc(scoredValid)
+        val scoredValid = score(model, TrainingData.valid(f))
+        val (tau, auc) = Materialize.using(scoredValid)(
+          (selectThreshold(scoredValid), prAuc(scoredValid)))
         val c = Telemetry.confusion(
           withAlert(score(model, TrainingData.test(f)), tau)).head()
-        Seq((auc, tau, c.getAs[Long]("tp"), c.getAs[Long]("fp"), c.getAs[Long]("fn"),
-          c.getAs[Double]("precision"), c.getAs[Double]("recall")))
-          .toDF("pr_auc", "threshold", "tp", "fp", "fn", "precision", "recall")
-      } finally f.unpersist()
+        (auc, tau, c.getAs[Long]("tp"), c.getAs[Long]("fp"), c.getAs[Long]("fn"),
+          c.getAs[Double]("precision"), c.getAs[Double]("recall"))
+      }
+      Seq(row).toDF("pr_auc", "threshold", "tp", "fp", "fn", "precision", "recall")
     },
 
     // ml_e2e_metrics's ARITHMETIC, pinned (r20, VERDICT r19 task 5 —
@@ -353,7 +353,7 @@ object FailureModel {
       def scored(df: DataFrame) = linearScore(df)
         .select(col("event_id"), col("failure_next"),
           col("failure_probability").as("score"))
-      val sv = scored(TrainingData.valid(f)).localCheckpoint()
+      val sv = Materialize(scored(TrainingData.valid(f)))
       val wS = Window.orderBy(col("score").desc)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val idx = least(floor(col("n") * TargetRecall).cast("long"), col("n") - 1)
@@ -390,17 +390,17 @@ object FailureModel {
     // pins halt-before-maxIter on planted noise and the PR-AUC band.
     Q.noOracle("ml_e2e_early_stop") { (s, dir) =>
       import s.implicits._
-      val f = feat(s, dir).cache()
-      try {
+      val f = feat(s, dir)
+      val maxIter = 30
+      val row = Materialize.using(f) {
         val trainDf = TrainingData.downsampled(TrainingData.train(f), ratio = 100.0)
-        val maxIter = 30
         val model = trainWithEarlyStop(trainDf, TrainingData.valid(f), maxIter = maxIter)
-        val scoredValid = score(model, TrainingData.valid(f)).cache()
-        val tau = selectThreshold(scoredValid)
-        val auc = prAuc(scoredValid)
-        Seq((model.getNumTrees.toLong, maxIter.toLong, auc, tau))
-          .toDF("trees_used", "trees_budget", "pr_auc", "threshold")
-      } finally f.unpersist()
+        val scoredValid = score(model, TrainingData.valid(f))
+        val (tau, auc) = Materialize.using(scoredValid)(
+          (selectThreshold(scoredValid), prAuc(scoredValid)))
+        (model.getNumTrees.toLong, maxIter.toLong, auc, tau)
+      }
+      Seq(row).toDF("trees_used", "trees_budget", "pr_auc", "threshold")
     },
 
     // M5 completed: PER-ROW explanations (the reference's per-alert
@@ -410,17 +410,16 @@ object FailureModel {
     // not SQL-expressible → no oracle; MLSpec pins the exact-
     // decomposition invariant (bias + Σ contributions = margin, 1e-6).
     Q.noOracle("ml_contributions") { (s, dir) =>
-      val f = feat(s, dir).cache()
-      try {
-        val trainDf = TrainingData.downsampled(TrainingData.train(f), ratio = 100.0)
-        val model = train(trainDf, maxIter = 10)
-        val scored = scoreWithFeatures(model, TrainingData.valid(f))
-          .orderBy(col("failure_probability").desc, col("event_id")).limit(20)
-        TreeContributions.explain(scored, model, FeatureCols)
-          .select(col("event_id"), col("failure_probability"), col("margin"),
-            col("feature"), col("contribution"))
-          .orderBy(col("event_id"), col("feature"))
-      } finally f.unpersist()
+      val f = feat(s, dir)
+      // cached for training only: the returned frame re-reads `f` lazily
+      val model = Materialize.using(f)(
+        train(TrainingData.downsampled(TrainingData.train(f), ratio = 100.0), maxIter = 10))
+      val scored = scoreWithFeatures(model, TrainingData.valid(f))
+        .orderBy(col("failure_probability").desc, col("event_id")).limit(20)
+      TreeContributions.explain(scored, model, FeatureCols)
+        .select(col("event_id"), col("failure_probability"), col("margin"),
+          col("feature"), col("contribution"))
+        .orderBy(col("event_id"), col("feature"))
     },
   )
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Q, Tables}
+import graft.{Materialize, Q, Tables}
 
 /** Per-entity time-series pipeline — the reference's semantic core
   * (forward-looking label + rolling features + threshold alerting),
@@ -133,13 +133,12 @@ object Telemetry {
     // the bin frame feeds the cum window, the i-grid, AND the output
     // join — checkpoint it so the (possibly expensive) upstream that
     // PRODUCED the bins runs once, not three times
-    val bb = bins.localCheckpoint()
+    val bb = Materialize(bins)
     val wCum = Window.orderBy(col("bucket"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val c = bb
+    val c = Materialize(bb
       .withColumn("cp", sum(col("n_pos")).over(wCum))
-      .withColumn("cn", sum(col("n")).over(wCum))
-      .localCheckpoint() // B rows; feeds both sides of the interval grid
+      .withColumn("cn", sum(col("n")).over(wCum))) // B rows; feeds both sides of the interval grid
     val jSide = c.select(col("bucket").as("j"),
       (col("cp") - col("n_pos")).as("pj"), (col("cn") - col("n")).as("nj"))
     val kSide = c.select(col("bucket").as("k"),

@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Q, Tables}
+import graft.{Materialize, Q, Tables}
 
 /** Training-data preparation (reference script 04): chronological split
   * → class separation → negative downsampling → recombination
@@ -372,9 +372,8 @@ object TrainingData {
     // rollup, AND the output join — checkpoint the |segs|·|folds| rows
     // so the data-sized aggregate (and its upstream fact join) runs
     // once, not once per consumer
-    val sf = r.groupBy(col("seg"), col("fold"))
-      .agg(count(lit(1)).as("n"), sum(col("y")).as("pos"))
-      .localCheckpoint()
+    val sf = Materialize(r.groupBy(col("seg"), col("fold"))
+      .agg(count(lit(1)).as("n"), sum(col("y")).as("pos")))
     val st = sf.groupBy(col("seg").as("seg2"))
       .agg(sum(col("n")).as("tn"), sum(col("pos")).as("tpos"))
     val g = sf.agg(sum(col("n")).as("gn"), sum(col("pos")).as("gpos"))
@@ -420,11 +419,11 @@ object TrainingData {
     val gpred = tr.agg(
       expr("sum(cents) div count(1)").as("gpred"),
       count(lit(1)).as("n_train"))
-    val scored = rows.filter(col("split") =!= "train")
+    // one fact pass feeds the cal histogram AND the test compare
+    val scored = Materialize(rows.filter(col("split") =!= "train")
       .join(broadcast(preds), Seq("grp"), "left_outer")
       .crossJoin(broadcast(gpred))
-      .withColumn("score", abs(col("cents") - coalesce(col("pred"), col("gpred"))))
-      .localCheckpoint() // one fact pass feeds the cal histogram AND the test compare
+      .withColumn("score", abs(col("cents") - coalesce(col("pred"), col("gpred")))))
     val wCum = org.apache.spark.sql.expressions.Window
       .orderBy(col("score"))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Q, Tables}
+import graft.{Materialize, Q, Tables}
 
 /** Data-integrity auditing: ORDER-INDEPENDENT table fingerprints.
   *
@@ -271,9 +271,8 @@ object Audit {
     * by QI over m rows. */
   def tCloseness(df: DataFrame, qi: Seq[String], ord: String): DataFrame = {
     val qiCols = qi.map(col)
-    val cells = df.groupBy((qi :+ ord).map(col): _*)
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint() // feeds groups, domain, AND the grid join
+    val cells = Materialize(df.groupBy((qi :+ ord).map(col): _*)
+      .agg(count(lit(1)).as("c"))) // feeds groups, domain, AND the grid join
     val grps = cells.groupBy(qiCols: _*).agg(sum(col("c")).cast("long").as("n_g"))
     val dom = cells.groupBy(col(ord)).agg(sum(col("c")).cast("long").as("cj"))
     val tot = dom.agg(sum(col("cj")).cast("long").as("n_all"),
@@ -458,7 +457,7 @@ object Audit {
     // FOURTEEN moments in ONE corpus pass), and every remaining op is
     // double arithmetic in pinned association order; sqrt is IEEE
     // correctly-rounded (unlike ln/exp) so it is hash-safe. The
-    // 1-row moment frame is localCheckpointed, so the 6 pair rows are
+    // 1-row moment frame is checkpointed, so the 6 pair rows are
     // projections of one cached row — the corpus is scanned ONCE.
     Q("audit_corr_matrix", {
       val cols = Seq("l_discount", "l_extendedprice", "l_quantity", "l_tax")
@@ -568,14 +567,13 @@ object Audit {
         |       CAST(SUM(CAST(term AS DECIMAL(30,6))) OVER () AS DOUBLE) AS chi2
         |FROM t
         |ORDER BY seg, status""".stripMargin) { (s, dir) =>
-      val cell = Tables.orders(s, dir)
+      val cell = Materialize(Tables.orders(s, dir)
         .select(col("o_custkey"), col("o_orderstatus").as("status"))
         .join(Tables.customer(s, dir)
             .select(col("c_custkey"), col("c_mktsegment").as("seg")),
           col("o_custkey") === col("c_custkey"))
         .groupBy(col("seg"), col("status"))
-        .agg(count(lit(1)).as("o"))
-        .localCheckpoint()
+        .agg(count(lit(1)).as("o")))
       val rt = cell.groupBy(col("seg").as("seg2")).agg(sum(col("o")).as("rr"))
       val ct = cell.groupBy(col("status").as("status2")).agg(sum(col("o")).as("cc"))
       val nn = cell.agg(sum(col("o")).as("n"))
@@ -876,7 +874,6 @@ object Audit {
           .select((col("o_orderkey") + 100000000L).as("o_orderkey"), col("o_totalprice")))
       val merged = scd2Merge(history, delta, "o_orderkey", Seq("o_totalprice"),
         to_date(lit("2024-06-01")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       Seq("2024-03-01", "2024-07-01").map { d =>
         scd2AsOf(merged, to_date(lit(d)))
           .select(to_date(lit(d)).as("snap_date"),
@@ -1990,7 +1987,7 @@ object Audit {
       cs.map(c => dsum6(col(c), s"s_$c")) ++
       cs.map(c => dsum6(col(c) * col(c), s"ss_$c")) ++
       prs.map { case (x, y) => dsum6(col(x) * col(y), s"c_${x}_$y") }
-    val m = df.agg(count(lit(1)).as("n"), aggs: _*).localCheckpoint()
+    val m = Materialize(df.agg(count(lit(1)).as("n"), aggs: _*))
     val nD = col("n").cast("double")
     prs.map { case (x, y) =>
       // zero-variance guard: a constant column makes the denominator

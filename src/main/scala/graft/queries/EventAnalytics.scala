@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Q, Tables}
+import graft.{Materialize, Q, Tables}
 
 /** Behavioral event analytics over the `events` stream table
   * (round 9): cohort retention and step funnels — the two classic
@@ -85,34 +85,31 @@ object EventAnalytics {
     * steps-bounded stack. */
   def windowedFunnel(
       events: DataFrame, steps: Seq[String], windowUs: Long): DataFrame = {
-    val (out, ev) = windowedFunnelPlan(events, steps, windowUs)
-    // steps-row result: checkpoint it so the persisted scan can be
-    // released before returning (storage hygiene). Blocking unpersist:
-    // the async form raced the checkpoint job's block reads
-    // (BlockNotFoundException, caught by EdgeCaseSpec).
-    val materialized = out.localCheckpoint()
-    ev.unpersist(blocking = true)
-    materialized
+    val ev = funnelEvents(events, steps)
+    Materialize.using(ev)(windowedFunnelPlan(ev, steps, windowUs))
   }
 
-  /** Un-checkpointed core of [[windowedFunnel]] plus its persisted
-    * event frame — split out so PlanAudit can inspect the REAL
-    * pipeline (the public API's localCheckpoint would otherwise hide
-    * it behind a checkpoint scan — the `spanRowsPlan` convention). */
-  private[graft] def windowedFunnelPlan(
-      events: DataFrame, steps: Seq[String], windowUs: Long): (DataFrame, DataFrame) = {
-    require(steps.size >= 2, "windowedFunnel: need at least two steps")
-    require(windowUs > 0, "windowedFunnel: windowUs must be positive")
-    // ONE user-keyed shuffle for the event side, paid up front and
-    // persisted: every per-step filter preserves the hash
-    // partitioning, so the k−1 step joins and min-combines all reuse
-    // it instead of re-exchanging the (big) event side per step — the
-    // chain side is the only thing that moves after this.
-    val ev = events
+  /** The funnel's event side: ONE user-keyed shuffle paid up front and
+    * cached for [[windowedFunnelPlan]] — every per-step filter
+    * preserves the hash partitioning, so the k−1 step joins and
+    * min-combines all reuse it instead of re-exchanging the (big)
+    * event side per step; the chain side is the only thing that moves
+    * after this. */
+  private[graft] def funnelEvents(events: DataFrame, steps: Seq[String]): DataFrame =
+    events
       .filter(col("event_type").isin(steps: _*))
       .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("tus"))
       .repartition(col("user_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+
+  /** Un-checkpointed core of [[windowedFunnel]] over its cached
+    * [[funnelEvents]] frame — split out so PlanAudit can inspect the
+    * REAL pipeline (the public API materializes it through
+    * [[graft.Materialize]], which would hide it behind a checkpoint
+    * scan — the `spanRowsPlan` convention). */
+  private[graft] def windowedFunnelPlan(
+      ev: DataFrame, steps: Seq[String], windowUs: Long): DataFrame = {
+    require(steps.size >= 2, "windowedFunnel: need at least two steps")
+    require(windowUs > 0, "windowedFunnel: windowUs must be positive")
     var chain = ev.filter(col("event_type") === steps.head)
       .groupBy(col("user_id")).agg(min(col("tus")).as("t0"))
       .withColumn("deadline", col("t0") + windowUs)
@@ -133,14 +130,13 @@ object EventAnalytics {
     val stacked = steps.indices.map(i => s"'${i + 1}:${steps(i)}', `n$i`").mkString(", ")
     // base = 0 (no step-0 user at all) → −1 sentinel: ANSI mode makes
     // the bare division THROW on the empty corpus (EdgeCaseSpec)
-    val out = wide.select(expr(s"stack(${steps.size}, $stacked) AS (step, n_users)"),
+    wide.select(expr(s"stack(${steps.size}, $stacked) AS (step, n_users)"),
         col("n0").as("base"))
       .withColumn("conversion",
         when(col("base") > 0,
           round(col("n_users") * lit(1.0) / col("base"), 6) + lit(0.0))
           .otherwise(lit(-1.0)))
       .drop("base")
-    (out, ev)
   }
 
   /** First-order Markov transition matrix over per-user event
@@ -232,11 +228,10 @@ object EventAnalytics {
     require(maxDays >= 0, s"survivalCurve: maxDays must be >= 0, got $maxDays")
     // spans feeds the contribute explode AND the totals scalar —
     // checkpoint so the per-user aggregate runs once
-    val spans = events
+    val spans = Materialize(events
       .select(col("user_id"), to_date(col("ts")).as("day"))
       .groupBy(col("user_id"))
-      .agg(datediff(max(col("day")), min(col("day"))).as("span"))
-      .localCheckpoint()
+      .agg(datediff(max(col("day")), min(col("day"))).as("span")))
     spans
       .select(explode(sequence(lit(0), least(col("span"), lit(maxDays)))).as("k"))
       .groupBy(col("k"))
@@ -289,8 +284,7 @@ object EventAnalytics {
   def cooccurrence(events: DataFrame): DataFrame = {
     // ut feeds both self-join sides and the size aggregate — checkpoint
     // so the distinct runs once, not three times
-    val ut = events.select(col("user_id"), col("event_type").as("t")).distinct()
-      .localCheckpoint()
+    val ut = Materialize(events.select(col("user_id"), col("event_type").as("t")).distinct())
     val pairs = ut.as("a").join(ut.as("b"), "user_id")
       .filter(col("a.t") < col("b.t"))
       .groupBy(col("a.t").as("type_a"), col("b.t").as("type_b"))

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.{IterCkpt, Q, Tables}
+import graft.{Materialize, Q, Tables}
 
 /** Iterative graph traversal (round 10): multi-source BFS hop
   * distances — the reachability/how-far primitive under impact
@@ -13,11 +13,11 @@ import graft.{IterCkpt, Q, Tables}
   * touches only what it reaches).
   *
   * Pregel-style execution: each round is one join of the current
-  * frontier against the (pre-shuffled, persisted) adjacency plus an
+  * frontier against the (pre-shuffled, cached) adjacency plus an
   * anti-join against the visited set — per-round cost tracks the
   * FRONTIER size, not the graph; rounds = eccentricity of the seed
   * set, with a hard `maxIter` bound. Lineage is truncated per round
-  * (localCheckpoint) so the plan never grows with iterations — the
+  * ([[graft.Materialize]]) so the plan never grows with iterations — the
   * same discipline as `Dedup.connectedComponents`.
   */
 object Graphs {
@@ -39,28 +39,28 @@ object Graphs {
       // pays ONE exchange where distinct-then-repartition paid two
       .repartition(col("a"))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    und.count() // materialize once; every round reuses the shuffle-free cache
-    var dist = IterCkpt.truncate(seeds.select(col("id"), lit(0L).as("hop")).distinct())
-    var frontier = dist
-    var iter = 0
-    var grew = true
-    while (grew && iter < maxIter) {
-      iter += 1
-      val next = und.join(frontier, und("a") === frontier("id"))
-        .select(und("b").as("id"))
-        .distinct()
-        .join(dist, Seq("id"), "left_anti")
-        .select(col("id"), lit(iter.toLong).as("hop"))
-      val nextT = IterCkpt.truncate(next)
-      grew = nextT.limit(1).count() > 0
-      if (grew) {
-        dist = IterCkpt.truncate(dist.unionByName(nextT))
-        frontier = nextT
+    Materialize.using(und) {
+      und.count() // materialize once; every round reuses the shuffle-free cache
+      var dist = Materialize(seeds.select(col("id"), lit(0L).as("hop")).distinct())
+      var frontier = dist
+      var iter = 0
+      var grew = true
+      while (grew && iter < maxIter) {
+        iter += 1
+        val next = und.join(frontier, und("a") === frontier("id"))
+          .select(und("b").as("id"))
+          .distinct()
+          .join(dist, Seq("id"), "left_anti")
+          .select(col("id"), lit(iter.toLong).as("hop"))
+        val nextT = Materialize(next)
+        grew = nextT.limit(1).count() > 0
+        if (grew) {
+          dist = Materialize(dist.unionByName(nextT))
+          frontier = nextT
+        }
       }
+      dist
     }
-    und.unpersist()
-    dist
   }
 
   /** Cost-bounded single-source shortest paths (weighted BFS
@@ -86,32 +86,32 @@ object Graphs {
       .repartition(col("a")) // same one-layout rule as bfsHops (r19)
       .distinct() // dedup rides the layout exchange (r20, see bfsHops)
       .withColumn("w", weight(col("a"), col("b")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    und.count()
-    var dist = IterCkpt.truncate(seeds.select(col("id"), lit(0L).as("d")).distinct())
-    var frontier = dist
-    var iter = 0
-    var improved = true
-    while (improved && iter < maxIter) {
-      iter += 1
-      val cand = und.join(frontier, und("a") === frontier("id"))
-        .select(und("b").as("id"), (frontier("d") + und("w")).as("d"))
-        .groupBy(col("id")).agg(min(col("d")).as("d"))
-      val next = cand
-        .join(dist.withColumnRenamed("d", "d0"), Seq("id"), "left_outer")
-        .filter(col("d0").isNull || col("d") < col("d0"))
-        .select(col("id"), col("d"))
-      val nextT = IterCkpt.truncate(next)
-      improved = nextT.limit(1).count() > 0
-      if (improved) {
-        dist = IterCkpt.truncate(dist.withColumnRenamed("d", "dOld")
-          .join(nextT.withColumnRenamed("d", "dNew"), Seq("id"), "full_outer")
-          .select(col("id"), least(col("dOld"), col("dNew")).as("d")))
-        frontier = nextT
+    Materialize.using(und) {
+      und.count()
+      var dist = Materialize(seeds.select(col("id"), lit(0L).as("d")).distinct())
+      var frontier = dist
+      var iter = 0
+      var improved = true
+      while (improved && iter < maxIter) {
+        iter += 1
+        val cand = und.join(frontier, und("a") === frontier("id"))
+          .select(und("b").as("id"), (frontier("d") + und("w")).as("d"))
+          .groupBy(col("id")).agg(min(col("d")).as("d"))
+        val next = cand
+          .join(dist.withColumnRenamed("d", "d0"), Seq("id"), "left_outer")
+          .filter(col("d0").isNull || col("d") < col("d0"))
+          .select(col("id"), col("d"))
+        val nextT = Materialize(next)
+        improved = nextT.limit(1).count() > 0
+        if (improved) {
+          dist = Materialize(dist.withColumnRenamed("d", "dOld")
+            .join(nextT.withColumnRenamed("d", "dNew"), Seq("id"), "full_outer")
+            .select(col("id"), least(col("dOld"), col("dNew")).as("d")))
+          frontier = nextT
+        }
       }
-    }
-    und.unpersist()
-    dist.filter(col("d") <= maxCost)
+      dist
+    }.filter(col("d") <= maxCost)
   }
 
   /** The deterministic dup-graph fixture shared with
@@ -323,10 +323,9 @@ object Graphs {
     // the symmetric-distinct edge list feeds the degree frame, BOTH
     // wedge sides, and the final anti-join — checkpoint it so the
     // union+distinct exchange is paid once, not re-derived per consumer
-    val und = edges.select(col("a"), col("b"))
+    val und = Materialize(edges.select(col("a"), col("b"))
       .unionByName(edges.select(col("b").as("a"), col("a").as("b")))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     val deg = und.groupBy(col("a").as("z"))
       .agg(count(lit(1)).as("d"))
       .filter(col("d") <= maxDeg)
@@ -370,17 +369,15 @@ object Graphs {
     * surviving induced subgraph after `iters` rounds. */
   def kCore(edges: DataFrame, k: Int, iters: Int): DataFrame = {
     val und = kCoreEdges(edges)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    und.count()
-    def inducedDegrees(nodes: DataFrame): DataFrame = kCoreRound(und, nodes)
-    var nodes = IterCkpt.truncate(und.select(col("a").as("id")).distinct())
-    for (i <- 1 to iters)
-      nodes = IterCkpt.truncate(inducedDegrees(nodes).filter(col("c") >= k)
-        .select(col("id")))
-    val out = IterCkpt.truncate(inducedDegrees(nodes)
-      .select(col("id"), col("c").cast("long").as("degree")))
-    und.unpersist()
-    out
+    Materialize.using(und) {
+      und.count()
+      def inducedDegrees(nodes: DataFrame): DataFrame = kCoreRound(und, nodes)
+      var nodes = Materialize(und.select(col("a").as("id")).distinct())
+      for (i <- 1 to iters)
+        nodes = Materialize(inducedDegrees(nodes).filter(col("c") >= k)
+          .select(col("id")))
+      inducedDegrees(nodes).select(col("id"), col("c").cast("long").as("degree"))
+    }
   }
 
   /** Survivor-count trace of the fixed-iteration peel — see the
@@ -390,24 +387,22 @@ object Graphs {
     * count-job per level on top of the peel itself. */
   def kCoreTrace(edges: DataFrame, k: Int, iters: Int): DataFrame = {
     val und = kCoreEdges(edges)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    und.count()
-    def inducedDegrees(nodes: DataFrame): DataFrame = kCoreRound(und, nodes)
-    var nodes = IterCkpt.truncate(und.select(col("a").as("id")).distinct())
-    def level(i: Int, n: DataFrame): DataFrame =
-      n.agg(count(lit(1)).cast("long").as("n_nodes"))
-        .select(lit(i.toLong).as("iter"), col("n_nodes"))
-    val levels = Seq.newBuilder[DataFrame]
-    levels += level(0, nodes)
-    for (i <- 1 to iters) {
-      nodes = IterCkpt.truncate(inducedDegrees(nodes).filter(col("c") >= k)
-        .select(col("id")))
-      levels += level(i, nodes)
+    Materialize.using(und) {
+      und.count()
+      def inducedDegrees(nodes: DataFrame): DataFrame = kCoreRound(und, nodes)
+      var nodes = Materialize(und.select(col("a").as("id")).distinct())
+      def level(i: Int, n: DataFrame): DataFrame =
+        n.agg(count(lit(1)).cast("long").as("n_nodes"))
+          .select(lit(i.toLong).as("iter"), col("n_nodes"))
+      val levels = Seq.newBuilder[DataFrame]
+      levels += level(0, nodes)
+      for (i <- 1 to iters) {
+        nodes = Materialize(inducedDegrees(nodes).filter(col("c") >= k)
+          .select(col("id")))
+        levels += level(i, nodes)
+      }
+      levels.result().reduce(_ unionByName _).orderBy(col("iter"))
     }
-    val out = IterCkpt.truncate(levels.result().reduce(_ unionByName _)
-      .orderBy(col("iter")))
-    und.unpersist()
-    out
   }
 
   /** Converge-to-fixpoint peeling (ADVICE r9): the library form for
@@ -422,24 +417,22 @@ object Graphs {
     * chain the fixed count would truncate. */
   def kCoreConverged(edges: DataFrame, k: Int, maxIter: Int = 50): DataFrame = {
     val und = kCoreEdges(edges)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    und.count()
-    def inducedDegrees(nodes: DataFrame): DataFrame = kCoreRound(und, nodes)
-    var nodes = IterCkpt.truncate(und.select(col("a").as("id")).distinct())
-    var prev = nodes.count()
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      iter += 1
-      nodes = IterCkpt.truncate(inducedDegrees(nodes).filter(col("c") >= k)
-        .select(col("id")))
-      val cur = nodes.count()
-      converged = cur == prev
-      prev = cur
+    Materialize.using(und) {
+      und.count()
+      def inducedDegrees(nodes: DataFrame): DataFrame = kCoreRound(und, nodes)
+      var nodes = Materialize(und.select(col("a").as("id")).distinct())
+      var prev = nodes.count()
+      var iter = 0
+      var converged = false
+      while (!converged && iter < maxIter) {
+        iter += 1
+        nodes = Materialize(inducedDegrees(nodes).filter(col("c") >= k)
+          .select(col("id")))
+        val cur = nodes.count()
+        converged = cur == prev
+        prev = cur
+      }
+      inducedDegrees(nodes).select(col("id"), col("c").cast("long").as("degree"))
     }
-    val out = IterCkpt.truncate(inducedDegrees(nodes)
-      .select(col("id"), col("c").cast("long").as("degree")))
-    und.unpersist()
-    out
   }
 }

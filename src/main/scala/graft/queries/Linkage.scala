@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.{Q, Tables}
+import graft.{Materialize, Q, Tables}
 
 /** Record linkage: fuzzy entity matching by multi-pass blocking +
   * bounded edit-distance verification.
@@ -89,9 +89,8 @@ object Linkage {
     * chains), and the golden fold is one keyed aggregate. */
   def entityResolution(left: DataFrame, right: DataFrame, maxDist: Int): DataFrame = {
     val links = fuzzyLink(left, right, maxDist)
-    val nodes = left.select(col("orig_id").as("id"), col("name"))
-      .unionByName(right.select(col("typo_id").as("id"), col("name")))
-      .localCheckpoint()
+    val nodes = Materialize(left.select(col("orig_id").as("id"), col("name"))
+      .unionByName(right.select(col("typo_id").as("id"), col("name"))))
     val labels = graft.llm.Dedup.connectedComponentsStar(
       nodes.select(col("id")),
       links.select(col("orig_id").as("a"), col("typo_id").as("b")))
@@ -298,14 +297,12 @@ object Linkage {
           blk.as("cblk"))
       val jwOk = (round(graft.functions.jaro_winkler(col("pn"), col("cn")), 6) +
         lit(0.0)) >= 0.88
-      val truth = al.crossJoin(broadcast(pr))
+      val truth = Materialize(al.crossJoin(broadcast(pr))
         .filter(col("cand_key") =!= col("probe_key") && jwOk)
-        .select(col("probe_key"), col("cand_key"))
-        .localCheckpoint()
-      val blocked = al.join(broadcast(pr), col("cblk") === col("blk"))
+        .select(col("probe_key"), col("cand_key")))
+      val blocked = Materialize(al.join(broadcast(pr), col("cblk") === col("blk"))
         .filter(col("cand_key") =!= col("probe_key") && jwOk)
-        .select(col("probe_key"), col("cand_key"))
-        .localCheckpoint()
+        .select(col("probe_key"), col("cand_key")))
       val missed = truth.join(blocked, Seq("probe_key", "cand_key"), "left_anti")
       val nP = pr.count()
       val nT = truth.count()

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Q, Tables}
+import graft.{Materialize, Q, Tables}
 
 /** Relational operator surface over the star schema (SURVEY.md §2.4/2.5/
   * 2.7/2.8 + engine-surface join family). The reference itself contains
@@ -77,8 +77,8 @@ object Relational {
     * full (n_both desc, part_a, part_b) tiebreak — deterministic at
     * the k boundary. */
   def basketPairs(lineitem: DataFrame, topK: Int): DataFrame = {
-    val op = lineitem.select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-      .distinct().localCheckpoint()
+    val op = Materialize(lineitem.select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
+      .distinct())
     val sizes = op.groupBy(col("p")).agg(count(lit(1)).cast("long").as("n"))
     val pairs = op.as("x").join(op.as("y"), "o")
       .filter(col("x.p") < col("y.p"))
@@ -1792,7 +1792,7 @@ object Relational {
     // for scale: the fact scan aggregates by suppkey (one shuffle),
     // the max is a 1-row broadcast, the WINNERS (ties only) are a
     // broadcast into the supplier dim — the dim side never shuffles.
-    // The per-supplier frame is localCheckpointed: without it the
+    // The per-supplier frame is checkpointed: without it the
     // max branch and the winners branch plan SEPARATE fact scans
     // (column pruning drops n_items from the max branch, so the
     // aggregate subplans differ and exchange reuse never fires —
@@ -1816,15 +1816,14 @@ object Relational {
         |JOIN supplier s ON s.s_suppkey = r.l_suppkey
         |WHERE r.rev_dec = (SELECT mx FROM m)
         |ORDER BY s.s_suppkey""".stripMargin) { (s, dir) =>
-      val rev = Tables.lineitem(s, dir)
+      val rev = Materialize(Tables.lineitem(s, dir)
         .filter(col("l_shipdate").cast("date") >= lit("1995-01-01") &&
           col("l_shipdate").cast("date") < lit("1995-04-01"))
         .select(col("l_suppkey"),
           (col("l_extendedprice") * (lit(1) - col("l_discount"))).as("rev"))
         .groupBy(col("l_suppkey"))
         .agg(sum(col("rev").cast("decimal(30,6)")).as("rev_dec"),
-          count(lit(1)).as("n_items"))
-        .localCheckpoint()
+          count(lit(1)).as("n_items")))
       val mx = rev.agg(max(col("rev_dec")).as("mx"))
       val winners = rev.crossJoin(broadcast(mx))
         .filter(col("rev_dec") === col("mx"))
@@ -1847,7 +1846,7 @@ object Relational {
     // PER-GROUP and ties keep EVERY achieving supplier, as Q2
     // requires. The per-(part,supplier) cost is MIN(l_extendedprice)
     // — an exact input double, no arithmetic. Plan: pair aggregate
-    // localCheckpointed (it feeds the per-part min AND the winners
+    // checkpointed (it feeds the per-part min AND the winners
     // join — the Q15 differently-pruned-consumers lesson applied
     // preemptively), per-part min partkey-keyed, winners join on
     // (partkey, exact cost equality), dims broadcast, TakeOrdered
@@ -1870,10 +1869,9 @@ object Relational {
         |FROM j
         |ORDER BY cost DESC, p_partkey, s_name
         |LIMIT 100""".stripMargin) { (s, dir) =>
-      val pp = Tables.lineitem(s, dir)
+      val pp = Materialize(Tables.lineitem(s, dir)
         .groupBy(col("l_partkey"), col("l_suppkey"))
-        .agg(min(col("l_extendedprice")).as("cost"))
-        .localCheckpoint()
+        .agg(min(col("l_extendedprice")).as("cost")))
       val mn = pp.groupBy(col("l_partkey").as("mpk"))
         .agg(min(col("cost")).as("mincost"))
       val w = pp.join(mn,
@@ -1975,13 +1973,12 @@ object Relational {
         |ORDER BY share DESC, s.s_suppkey""".stripMargin) { (s, dir) =>
       val promoParts = Tables.part(s, dir)
         .filter(col("p_type") === "PROMO").select(col("p_partkey"))
-      val pq = Tables.lineitem(s, dir)
+      val pq = Materialize(Tables.lineitem(s, dir)
         .select(col("l_suppkey"), col("l_partkey"), col("l_quantity"))
         .join(broadcast(promoParts), col("l_partkey") === col("p_partkey"))
         .groupBy(col("l_suppkey"))
         .agg(sum(col("l_quantity").cast("decimal(30,6)")).as("qty"),
-          count(lit(1)).as("n_items"))
-        .localCheckpoint()
+          count(lit(1)).as("n_items")))
       val tot = pq.agg(sum(col("qty")).as("total"), count(lit(1)).as("n"))
       pq.crossJoin(broadcast(tot))
         .filter(col("qty") * 10 * col("n") > col("total") * 11)
@@ -2193,14 +2190,13 @@ object Relational {
         |ORDER BY s.s_suppkey""".stripMargin) { (s, dir) =>
       val coldParts = broadcast(Tables.part(s, dir)
         .filter(col("p_name").like("cold%")).select(col("p_partkey")))
-      val pq = Tables.lineitem(s, dir)
+      val pq = Materialize(Tables.lineitem(s, dir)
         .select(col("l_partkey"), col("l_suppkey"), col("l_quantity"))
         .join(coldParts, col("l_partkey") === col("p_partkey"), "left_semi")
         .groupBy(col("l_partkey"), col("l_suppkey"))
-        .agg(sum(col("l_quantity").cast("decimal(20,6)")).as("sq"))
+        .agg(sum(col("l_quantity").cast("decimal(20,6)")).as("sq")))
         // pq feeds the per-part rollup AND the threshold join —
         // checkpoint so the fact scan + pair aggregate run once
-        .localCheckpoint()
       val pt = pq.groupBy(col("l_partkey").as("pk"))
         .agg(sum(col("sq")).as("tq"), count(lit(1)).as("ns"))
       val dom = pq.join(pt, col("l_partkey") === col("pk"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Q, Tables}
+import graft.{Materialize, Q, Tables}
 
 /** Mergeable summary sketches (round 10) — the 100 TB aggregation
   * story made driver-checkable. `agg_approx_distinct` already covers
@@ -99,28 +99,30 @@ object Sketches {
 
   def kmvDistinct(df: DataFrame, grpCol: String, keyCol: String): DataFrame = {
     val byH = Window.partitionBy(col("grp")).orderBy(col("h"))
+    // cached: the per-group estimates and the merged row both read the
+    // sketch, and the two reads plan differently (no exchange reuse)
     val sketch = kmvSketch(df, grpCol, keyCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Lossless merge: bottom-k of the union of the per-group sketches.
-    val merged = sketch.select(lit("*ALL*").as("grp"), col("h")).distinct()
-      .withColumn("rn", row_number().over(byH))
-      .filter(col("rn") <= KmvK)
-      .select(col("grp"), col("h"))
-    val est = sketch.unionByName(merged)
-      .groupBy(col("grp"))
-      .agg(count(lit(1)).as("cnt"), max(col("h")).as("hk"))
-      .withColumn("kmv_est",
-        when(col("cnt") < KmvK, col("cnt").cast("double"))
-          .otherwise(round(
-            lit((KmvK - 1).toDouble) * lit(Two48) / col("hk").cast("double"), 6) + lit(0.0)))
-      .select(col("grp"), col("kmv_est"))
-    val exact = df.select(col(grpCol).as("grp"), col(keyCol).as("k")).distinct()
-      .groupBy(col("grp")).agg(count(lit(1)).as("n_exact"))
-      .unionByName(df.select(col(keyCol).as("k")).distinct()
-        .agg(count(lit(1)).as("n_exact"))
-        .select(lit("*ALL*").as("grp"), col("n_exact")))
-    val out = est.join(exact, Seq("grp")).orderBy(col("grp"))
-    out
+    Materialize.using(sketch) {
+      // Lossless merge: bottom-k of the union of the per-group sketches.
+      val merged = sketch.select(lit("*ALL*").as("grp"), col("h")).distinct()
+        .withColumn("rn", row_number().over(byH))
+        .filter(col("rn") <= KmvK)
+        .select(col("grp"), col("h"))
+      val est = sketch.unionByName(merged)
+        .groupBy(col("grp"))
+        .agg(count(lit(1)).as("cnt"), max(col("h")).as("hk"))
+        .withColumn("kmv_est",
+          when(col("cnt") < KmvK, col("cnt").cast("double"))
+            .otherwise(round(
+              lit((KmvK - 1).toDouble) * lit(Two48) / col("hk").cast("double"), 6) + lit(0.0)))
+        .select(col("grp"), col("kmv_est"))
+      val exact = df.select(col(grpCol).as("grp"), col(keyCol).as("k")).distinct()
+        .groupBy(col("grp")).agg(count(lit(1)).as("n_exact"))
+        .unionByName(df.select(col(keyCol).as("k")).distinct()
+          .agg(count(lit(1)).as("n_exact"))
+          .select(lit("*ALL*").as("grp"), col("n_exact")))
+      est.join(exact, Seq("grp")).orderBy(col("grp"))
+    }
   }
 
   private val cmsRows = array((0 until CmsD).map(lit): _*)
@@ -162,7 +164,6 @@ object Sketches {
       .select(col("tok"), col("n_exact"), md5(col("tok")).as("m"), explode(cmsRows).as("r"))
       .withColumn("b",
         pmod(conv(expr("substring(m, 1 + 8*r, 8)"), 16, 10).cast("long"), lit(CmsW)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val counters = cells.groupBy(col("r"), col("b")).agg(sum(col("n_exact")).as("c"))
     val out = cells.join(broadcast(counters), Seq("r", "b"))
       .groupBy(col("tok"), col("n_exact"))
@@ -191,7 +192,6 @@ object Sketches {
     * domain (3 flags here), the regime the exact side is for. */
   def kmvSetOps(df: DataFrame, grpCol: String, keyCol: String): DataFrame = {
     val sk = kmvSketch(df, grpCol, keyCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val groups = sk.select(col("grp")).distinct()
     val pairs = groups.select(col("grp").as("g1"))
       .join(groups.select(col("grp").as("g2")), col("g1") < col("g2"))
@@ -232,23 +232,26 @@ object Sketches {
           .otherwise(round(
             (col("ca") - col("c")).cast("double") * lit(Two48)
               / col("theta").cast("double"), 6) + lit(0.0)))
+    // cached: the per-group sizes and the key self-join both read the
+    // distinct (group, key) frame, and the two reads plan differently
     val dk = df.select(col(grpCol).as("g"), col(keyCol).as("k")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val ng = dk.groupBy(col("g")).agg(count(lit(1)).as("n"))
-    val ni = dk.select(col("g").as("g1"), col("k"))
-      .join(dk.select(col("g").as("g2"), col("k")), Seq("k"))
-      .filter(col("g1") < col("g2"))
-      .groupBy(col("g1"), col("g2")).agg(count(lit(1)).as("n_intersect"))
-    est
-      .join(ng.select(col("g").as("g1"), col("n").as("n1")), Seq("g1"))
-      .join(ng.select(col("g").as("g2"), col("n").as("n2")), Seq("g2"))
-      .join(ni, Seq("g1", "g2"), "left_outer")
-      .na.fill(0L, Seq("n_intersect"))
-      .withColumn("n_union", (col("n1") + col("n2") - col("n_intersect")).cast("long"))
-      .select(col("g1"), col("g2"), col("est_union"), col("est_intersect"),
-        col("est_anb"), col("n_union"), col("n_intersect").cast("long").as("n_intersect"),
-        (col("n1") - col("n_intersect")).cast("long").as("n_anb"))
-      .orderBy(col("g1"), col("g2"))
+    Materialize.using(dk) {
+      val ng = dk.groupBy(col("g")).agg(count(lit(1)).as("n"))
+      val ni = dk.select(col("g").as("g1"), col("k"))
+        .join(dk.select(col("g").as("g2"), col("k")), Seq("k"))
+        .filter(col("g1") < col("g2"))
+        .groupBy(col("g1"), col("g2")).agg(count(lit(1)).as("n_intersect"))
+      est
+        .join(ng.select(col("g").as("g1"), col("n").as("n1")), Seq("g1"))
+        .join(ng.select(col("g").as("g2"), col("n").as("n2")), Seq("g2"))
+        .join(ni, Seq("g1", "g2"), "left_outer")
+        .na.fill(0L, Seq("n_intersect"))
+        .withColumn("n_union", (col("n1") + col("n2") - col("n_intersect")).cast("long"))
+        .select(col("g1"), col("g2"), col("est_union"), col("est_intersect"),
+          col("est_anb"), col("n_union"), col("n_intersect").cast("long").as("n_intersect"),
+          (col("n1") - col("n_intersect")).cast("long").as("n_anb"))
+        .orderBy(col("g1"), col("g2"))
+    }
   }
 
   val defs: Seq[Q] = Seq(
@@ -435,27 +438,26 @@ object Sketches {
             pmod(conv(expr("substring(m, 1 + 8*r, 8)"), 16, 10).cast("long"),
               lit(CmsW)).as("b"))
           .groupBy(col("r"), col("b")).agg(count(lit(1)).as("c"))
-      val va = side("view").persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val pb = side("purchase").persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val est = counters(va).as("a")
-        .join(counters(pb).as("b"), Seq("r", "b"))
-        .groupBy(col("r")).agg(sum(col("a.c") * col("b.c")).cast("long").as("dot"))
-        .agg(min(col("dot")).as("est_join_size"))
-        .withColumn("k", lit(1))
-      val exact = va.groupBy(col("tok")).agg(count(lit(1)).as("na"))
-        .join(pb.groupBy(col("tok")).agg(count(lit(1)).as("nb")), "tok")
-        .agg(coalesce(sum(col("na") * col("nb")), lit(0L)).cast("long")
-          .as("exact_join_size"))
-        .withColumn("k", lit(1))
-      val sizes = va.agg(count(lit(1)).as("n_views")).withColumn("k", lit(1))
-        .join(pb.agg(count(lit(1)).as("n_purchases")).withColumn("k", lit(1)), "k")
-      val out = sizes
-        .join(est, "k").join(exact, "k")
-        .select(col("n_views"), col("n_purchases"),
-          col("est_join_size"), col("exact_join_size"))
-        .localCheckpoint()
-      va.unpersist(); pb.unpersist()
-      out
+      val va = side("view")
+      val pb = side("purchase")
+      Materialize.using(va, pb) {
+        val est = counters(va).as("a")
+          .join(counters(pb).as("b"), Seq("r", "b"))
+          .groupBy(col("r")).agg(sum(col("a.c") * col("b.c")).cast("long").as("dot"))
+          .agg(min(col("dot")).as("est_join_size"))
+          .withColumn("k", lit(1))
+        val exact = va.groupBy(col("tok")).agg(count(lit(1)).as("na"))
+          .join(pb.groupBy(col("tok")).agg(count(lit(1)).as("nb")), "tok")
+          .agg(coalesce(sum(col("na") * col("nb")), lit(0L)).cast("long")
+            .as("exact_join_size"))
+          .withColumn("k", lit(1))
+        val sizes = va.agg(count(lit(1)).as("n_views")).withColumn("k", lit(1))
+          .join(pb.agg(count(lit(1)).as("n_purchases")).withColumn("k", lit(1)), "k")
+        sizes
+          .join(est, "k").join(exact, "k")
+          .select(col("n_views"), col("n_purchases"),
+            col("est_join_size"), col("exact_join_size"))
+      }
     },
 
     // Quantiles completes the sketch triad (KMV = distinct, CMS =
@@ -743,21 +745,24 @@ object Sketches {
   }
 
   def hllDistinct(df: DataFrame, grpCol: String, keyCol: String): DataFrame = {
+    // cached: the per-group and the merged registers both read it, and
+    // the two reads plan differently (no exchange reuse)
     val regs = hllRowRegisters(df, grpCol, keyCol)
       .groupBy(col("grp"), col("j"))
       .agg(max(col("rho")).as("m_j"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val merged = regs.groupBy(col("j")).agg(max(col("m_j")).as("m_j"))
-      .select(lit("*ALL*").as("grp"), col("j"), col("m_j"))
-    val allRegs = regs.select(col("grp").cast("string").as("grp"), col("j"), col("m_j"))
-      .unionByName(merged)
-    val exact = df.groupBy(col(grpCol).cast("string").as("grp"))
-      .agg(countDistinct(col(keyCol)).cast("long").as("n_exact"))
-      .unionByName(df.agg(countDistinct(col(keyCol)).cast("long").as("n_exact"))
-        .select(lit("*ALL*").as("grp"), col("n_exact")))
-    hllEstimate(allRegs)
-      .join(exact, "grp")
-      .select(col("grp"), col("hll_est"), col("n_zero_regs"), col("n_exact"))
-      .orderBy(col("grp"))
+    Materialize.using(regs) {
+      val merged = regs.groupBy(col("j")).agg(max(col("m_j")).as("m_j"))
+        .select(lit("*ALL*").as("grp"), col("j"), col("m_j"))
+      val allRegs = regs.select(col("grp").cast("string").as("grp"), col("j"), col("m_j"))
+        .unionByName(merged)
+      val exact = df.groupBy(col(grpCol).cast("string").as("grp"))
+        .agg(countDistinct(col(keyCol)).cast("long").as("n_exact"))
+        .unionByName(df.agg(countDistinct(col(keyCol)).cast("long").as("n_exact"))
+          .select(lit("*ALL*").as("grp"), col("n_exact")))
+      hllEstimate(allRegs)
+        .join(exact, "grp")
+        .select(col("grp"), col("hll_est"), col("n_zero_regs"), col("n_exact"))
+        .orderBy(col("grp"))
+    }
   }
 }

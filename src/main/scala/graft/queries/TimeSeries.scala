@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Q, Tables}
+import graft.{Materialize, Q, Tables}
 import graft.operators.Sessionize
 
 /** Irregular-time-series operators over the `events` table (round 10):
@@ -381,12 +381,11 @@ object TimeSeries {
   def theilSenSlope(events: DataFrame): DataFrame = {
     // the daily frame feeds both sides of the pair join — checkpoint
     // so the events scan and aggregate run once, not twice
-    val daily = events
+    val daily = Materialize(events
       .groupBy(col("user_id"), to_date(col("ts")).as("day"))
       .agg(expr(
         """(2 * SUM(CAST(CAST(value AS DECIMAL(20,6)) * 1000000 AS BIGINT))
-          | + COUNT(*)) div (2 * COUNT(*))""".stripMargin).as("m_us"))
-      .localCheckpoint()
+          | + COUNT(*)) div (2 * COUNT(*))""".stripMargin).as("m_us")))
     val nDays = daily.groupBy(col("user_id").as("u3"))
       .agg(count(lit(1)).as("n_days"))
     val b = daily.select(col("user_id").as("u2"), col("day").as("d2"),
@@ -427,12 +426,11 @@ object TimeSeries {
     * (user, value) tie aggregate — nothing data-sized after the day
     * rollup. */
   def mannKendall(events: DataFrame): DataFrame = {
-    val daily = events
+    val daily = Materialize(events
       .groupBy(col("user_id"), to_date(col("ts")).as("day"))
       .agg(expr(
         """(2 * SUM(CAST(CAST(value AS DECIMAL(20,6)) * 1000000 AS BIGINT))
-          | + COUNT(*)) div (2 * COUNT(*))""".stripMargin).as("m_us"))
-      .localCheckpoint()
+          | + COUNT(*)) div (2 * COUNT(*))""".stripMargin).as("m_us")))
     val b = daily.select(col("user_id").as("u2"), col("day").as("d2"),
       col("m_us").as("m2"))
     val sPairs = daily

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.Materialize
 import graft.llm.{Curation, Dedup}
 
 /** The serving-index maintenance lifecycle's STREAMING orchestration —
@@ -257,14 +258,14 @@ object GateOps {
       onVerdicts: (DataFrame, Long) => Unit): StreamingQuery =
     batches.writeStream.foreachBatch {
       (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val bb = b.localCheckpoint()
+        val bb = Materialize(b)
         val bd = bb.select(col("doc_id"), col("text"))
         val embCols = col("doc_id").as("vec_id") +: col("v") +:
           (if (bb.columns.contains("label")) Seq(col("label")) else Nil)
         val be = bb.filter(col("v").isNotNull).select(embCols: _*)
-        val verdicts = Curation.incrementalRefreshServed(
+        val verdicts = Materialize(Curation.incrementalRefreshServed(
           bd, be.select(col("vec_id"), col("v")), spark,
-          hashTable, bandTable, ivfPath, evGrams).localCheckpoint()
+          hashTable, bandTable, ivfPath, evGrams))
         onVerdicts(verdicts, id)
         Curation.admitRefreshBatch(
           verdicts, bd, be, spark, hashTable, bandTable, ivfPath)

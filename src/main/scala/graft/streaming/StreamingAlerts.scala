@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
-import graft.{Q, Tables}
+import graft.{Materialize, Q, Tables}
 import graft.llm.{Curation, Dedup, Similarity}
 import graft.pipeline.Telemetry
 import graft.queries.Sketches
@@ -545,12 +545,12 @@ object StreamingAlerts {
         .writeStream.format("memory").queryName(name)
         .outputMode("complete").trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
-      // localCheckpoint: hllEstimate self-joins its input (grid fill),
+      // materialized: hllEstimate self-joins its input (grid fill),
       // and joining a memory-sink VIEW against itself resolves both
       // sides to the SAME attribute ids → analyzer INTERNAL_ERROR
       // (conflicting references); checkpointing the ≤ days·m register
       // table gives the join fresh ids. Bounded by construction.
-      Sketches.hllEstimate(s.table(name).localCheckpoint())
+      Sketches.hllEstimate(Materialize(s.table(name)))
         .select(col("grp").as("day"), col("hll_est"), col("n_zero_regs"))
         .orderBy(col("day"))
     },
@@ -738,14 +738,14 @@ object StreamingAlerts {
     // key-disjoint delta slices compose to the whole-delta merge
     // (each delta key arrives exactly once), so the final snapshot is
     // identical to the batch query — certified by the SAME oracle.
-    // The snapshot localCheckpoints per batch: bounded lineage no
+    // The snapshot checkpoints per batch: bounded lineage no
     // matter how many batches arrive (the role a table format's
     // commit plays in a real sink).
     Q("streaming_merge_upsert", graft.queries.Audit.mergeUpsertOracleSql) { (s, dir) =>
       val base = Tables.orders(s, dir)
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
         .withColumn("merge_action", lit("kept"))
-      @volatile var snapshot = base.localCheckpoint()
+      @volatile var snapshot = Materialize(base)
       val ord = ordersStream(s, dir)
       val delta = ord.filter(col("o_orderkey") % 10 === 3)
         .select(col("o_orderkey"), col("o_custkey"),
@@ -756,9 +756,8 @@ object StreamingAlerts {
             col("o_totalprice"), lit("inserted").as("merge_action")))
       val q = delta.writeStream
         .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-          snapshot = graft.queries.Audit
-            .mergeUpsert(snapshot, batch.localCheckpoint(), "o_orderkey")
-            .localCheckpoint()
+          snapshot = Materialize(graft.queries.Audit
+            .mergeUpsert(snapshot, Materialize(batch), "o_orderkey"))
           ()
         }
         .trigger(Trigger.AvailableNow()).start()
@@ -787,7 +786,7 @@ object StreamingAlerts {
           .writeStream.format("memory").queryName(name)
           .outputMode("append").trigger(Trigger.AvailableNow()).start()
         q.awaitTermination()
-        Similarity.verifyAndRank(s.table(name).localCheckpoint(), emb, k = 3)
+        Similarity.verifyAndRank(Materialize(s.table(name)), emb, k = 3)
           .orderBy(col("probe_id"), col("rank"))
       } finally {
         s.sql(s"DROP TABLE IF EXISTS ${tbl}_bands")
@@ -835,10 +834,10 @@ object StreamingAlerts {
           .option("checkpointLocation", s"$path/ckpt")
           .outputMode("append").trigger(Trigger.AvailableNow()).start()
         q.awaitTermination()
-        Dedup.nearDupVerdictFrom(
-            Tables.parquet(s, s"$path/sink").localCheckpoint(),
+        Materialize(Dedup.nearDupVerdictFrom(
+            Materialize(Tables.parquet(s, s"$path/sink")),
             docs, Dedup.incrementalNearDelta(docs))
-          .orderBy(col("doc_id")).localCheckpoint()
+          .orderBy(col("doc_id")))
       } finally {
         s.sql(s"DROP TABLE IF EXISTS ${tbl}_bands")
         s.sql(s"DROP TABLE IF EXISTS ${tbl}_toks")
@@ -882,10 +881,9 @@ object StreamingAlerts {
           .option("checkpointLocation", s"$path/probe_ckpt")
           .outputMode("append").trigger(Trigger.AvailableNow()).start()
         q.awaitTermination()
-        Similarity.semVerdictFrom(
-            Tables.parquet(s, s"$path/probe_sink").localCheckpoint(),
-            emb, Similarity.semDeDupDelta(emb))
-          .localCheckpoint()
+        Materialize(Similarity.semVerdictFrom(
+            Materialize(Tables.parquet(s, s"$path/probe_sink")),
+            emb, Similarity.semDeDupDelta(emb)))
       } finally Similarity.dropIvfIndexPinned(s, path)
     },
 
@@ -949,7 +947,7 @@ object StreamingAlerts {
           .option("checkpointLocation", s"$path/hit_ckpt")
           .outputMode("append").trigger(Trigger.AvailableNow()).start()
         q.awaitTermination()
-        val hits = Tables.parquet(s, s"$path/hit_sink").localCheckpoint()
+        val hits = Materialize(Tables.parquet(s, s"$path/hit_sink"))
         val delta = Curation.refreshDeltaDocs(docs)
         val ex = hits.filter(col("tier") === "x")
           .select(col("delta_id").as("doc_id"), col("cand_id")).distinct()
@@ -964,8 +962,7 @@ object StreamingAlerts {
           emb, Curation.refreshDeltaEmb(emb))
         val contamIds = hits.filter(col("tier") === "c")
           .select(col("delta_id").as("doc_id")).distinct()
-        Curation.refreshCascade(delta, ex, nr, se, contamIds, minTokens = 5)
-          .localCheckpoint()
+        Materialize(Curation.refreshCascade(delta, ex, nr, se, contamIds, minTokens = 5))
       } finally {
         s.sql(s"DROP TABLE IF EXISTS $hashTbl")
         s.sql(s"DROP TABLE IF EXISTS ${bandTbl}_bands")
@@ -991,7 +988,7 @@ object StreamingAlerts {
           .writeStream.format("memory").queryName(name)
           .outputMode("append").trigger(Trigger.AvailableNow()).start()
         q.awaitTermination()
-        val peaks = s.table(name).localCheckpoint()
+        val peaks = Materialize(s.table(name))
           .select(col("user_id"), timestamp_micros(col("ts")).as("ts"), col("value"))
         peaks
           .withColumn("mx", max(col("value")).over(
@@ -1024,10 +1021,10 @@ object StreamingAlerts {
         .writeStream.format("memory").queryName(name)
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
-      // localCheckpoint: the memory-sink view is not re-instantiable
+      // materialized: the memory-sink view is not re-instantiable
       // under a self-join (MemoryPlan leaf — conflicting attr ids);
       // the checkpointed RDD leaf is
-      val rows = s.table(name).localCheckpoint()
+      val rows = Materialize(s.table(name))
       val sharing = rows.groupBy(col("chunk_fp"))
         .agg(countDistinct(col("doc_id")).as("n_docs_sharing"))
       rows.join(sharing, Seq("chunk_fp"))

@@ -39,7 +39,7 @@ class GraphsSpec extends SparkSpec {
     assert(got === Map(1L -> 0L, 2L -> 1L, 3L -> 2L))
   }
 
-  test("IterCkpt: reliable-checkpoint mode produces identical results with a truncated, recoverable plan (r19)") {
+  test("Materialize: reliable-checkpoint mode produces identical results with a truncated, recoverable plan (r19)") {
     // VERDICT r18 task 4: executor loss during a long localCheckpoint
     // loop fails the job (unreliable blocks + severed lineage); with
     // graft.iter.checkpointDir set the iterative tier writes a
@@ -59,7 +59,7 @@ class GraphsSpec extends SparkSpec {
       chain.select(col("a").as("id")).unionByName(chain.select(col("b").as("id")))
         .distinct(), chain)
       .as[(Long, Long)].collect().toMap
-    spark.conf.set(graft.IterCkpt.ConfKey, ckptDir)
+    spark.conf.set(graft.Materialize.ConfKey, ckptDir)
     try {
       val lpaReliable = graft.llm.Dedup.labelPropagation(lpaFix._1, lpaFix._2, iters = 5)
       // the returned frame IS a reliable checkpoint scan — its plan is one leaf, not 5
@@ -90,7 +90,7 @@ class GraphsSpec extends SparkSpec {
         "reliable mode must write checkpoint files")
       // re-pin stability (review r20): setCheckpointDir mints a fresh
       // UUID subdir each push, and it stores the FS-QUALIFIED subdir
-      // path — a bare-path prefix compare in IterCkpt's re-verify read
+      // path — a bare-path prefix compare in the policy's re-verify read
       // as "foreign dir" every round and re-pushed per reliable
       // checkpoint. All four loops above share this conf value, so
       // exactly ONE minted subdir proves the pin held.
@@ -99,10 +99,10 @@ class GraphsSpec extends SparkSpec {
       assert(minted === 1,
         s"setCheckpointDir minted $minted UUID subdirs across the reliable " +
           "rounds — the qualified-path re-pin is re-pushing every round")
-    } finally spark.conf.unset(graft.IterCkpt.ConfKey)
+    } finally spark.conf.unset(graft.Materialize.ConfKey)
   }
 
-  test("IterCkpt one policy: with the reliable dir a round survives total block loss; without it the loss fails loudly") {
+  test("Materialize one policy: with the reliable dir a round survives total block loss; without it the loss fails loudly") {
     // Executor loss, simulated by dropping every persisted block. With
     // graft.iter.checkpointDir set, every round is a reliable file
     // checkpoint and re-reads its files — LPA's FINAL frame included.
@@ -118,13 +118,23 @@ class GraphsSpec extends SparkSpec {
       Seq(1L, 2L).toDF("doc_id").select(col("doc_id")))
     val lpaLocal = graft.llm.Dedup.labelPropagation(lpaFix._1, lpaFix._2, iters = 5)
       .as[(Long, Long)].collect().toMap
+    // a non-iterative operator takes the same policy: jaccardExactJoin
+    // caches its gram scan and materializes its pair frame
+    val docs = Seq((1L, "a b c d e f"), (2L, "a b c d e g"), (3L, "x y z w v u"),
+      (4L, "a b c d x y")).toDF("doc_id", "text")
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("id_a"), col("id_b"), col("n_shared")).as[(Long, Long, Long)].collect().toSeq
+    val jaccardLocal = pairs(graft.llm.Dedup.jaccardExactJoin(docs))
+    assert(jaccardLocal.nonEmpty)
     val ckptDir = tempDir("graft_iter_ckpt_loss")
-    spark.conf.set(graft.IterCkpt.ConfKey, ckptDir)
+    spark.conf.set(graft.Materialize.ConfKey, ckptDir)
     try {
-      val r1 = graft.IterCkpt.truncate(step(base))
-      val r2 = graft.IterCkpt.truncate(step(r1))
+      val r1 = graft.Materialize(step(base))
+      val r2 = graft.Materialize(step(r1))
       val lpa = graft.llm.Dedup.labelPropagation(lpaFix._1, lpaFix._2, iters = 5)
-      for ((name, df) <- Seq("round 1" -> r1, "round 2" -> r2, "LPA final" -> lpa))
+      val jaccard = graft.llm.Dedup.jaccardExactJoin(docs)
+      for ((name, df) <- Seq("round 1" -> r1, "round 2" -> r2, "LPA final" -> lpa,
+          "jaccardExactJoin" -> jaccard))
         assert(df.rdd.toDebugString.contains("ReliableCheckpointRDD") &&
           !df.rdd.toDebugString.contains("LocalCheckpointRDD"),
           s"$name must be a RELIABLE checkpoint:\n" + df.rdd.toDebugString)
@@ -134,16 +144,24 @@ class GraphsSpec extends SparkSpec {
       assert(r2.agg(sum(col("v") - col("id"))).head().getLong(0) === 2000L)
       assert(lpa.as[(Long, Long)].collect().toMap === lpaLocal,
         "LPA's final frame must survive total block loss under the reliable dir")
-    } finally spark.conf.unset(graft.IterCkpt.ConfKey)
-    val l1 = graft.IterCkpt.truncate(step(base))
+      assert(pairs(jaccard) === jaccardLocal,
+        "jaccardExactJoin must survive total block loss under the reliable dir")
+    } finally spark.conf.unset(graft.Materialize.ConfKey)
+    val l1 = graft.Materialize(step(base))
     assert(l1.count() === 1000L)
     assert(l1.rdd.toDebugString.contains("LocalCheckpointRDD") &&
       !l1.rdd.toDebugString.contains("ReliableCheckpointRDD"),
       "without the dir a round must be a LOCAL checkpoint:\n" + l1.rdd.toDebugString)
+    val jl = graft.llm.Dedup.jaccardExactJoin(docs)
+    assert(jl.rdd.toDebugString.contains("LocalCheckpointRDD"),
+      "without the dir jaccardExactJoin must be a LOCAL checkpoint:\n" + jl.rdd.toDebugString)
     dropAllBlocks()
     val ex = intercept[org.apache.spark.SparkException](l1.count())
     assert(ex.getMessage.toLowerCase.contains("checkpoint"),
       s"a local round must die on block loss with a checkpoint error: $ex")
+    val exJ = intercept[org.apache.spark.SparkException](jl.count())
+    assert(exJ.getMessage.toLowerCase.contains("checkpoint"),
+      s"a local jaccardExactJoin must die on block loss with a checkpoint error: $exJ")
   }
 
   private def runSssp(e: org.apache.spark.sql.DataFrame,
@@ -239,10 +257,9 @@ class GraphsSpec extends SparkSpec {
     val fixEdges = graft.llm.Dedup.lpaFixture(
       Tables.documents(spark, sf("sf0.001")).select(col("doc_id")))._2
     val und = Graphs.kCoreEdges(fixEdges)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    und.count()
-    try {
-      val nodes = IterCkpt.truncate(und.select(col("a").as("id")).distinct())
+    Materialize.using(und) {
+      und.count()
+      val nodes = Materialize(und.select(col("a").as("id")).distinct())
       val (bSh, bBc) = PlanAudit.exchangeCounts(Graphs.kCoreRound(und, nodes))
       assert(bSh === 0,
         s"broadcast-regime round must ride the hash(a) layout: $bSh shuffles ($bBc broadcasts)")
@@ -258,6 +275,6 @@ class GraphsSpec extends SparkSpec {
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
         spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
       }
-    } finally und.unpersist()
+    }
   }
 }

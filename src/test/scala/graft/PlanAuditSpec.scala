@@ -152,16 +152,16 @@ class PlanAuditSpec extends SparkSpec {
   // are already co-partitioned on user_id, so the shuffle count — the
   // axis the 8→1 fix was about — still holds at 1.
   test("windowedFunnel core: shuffles <= 1 and exchanges <= 11") {
-    val (core, ev) = queries.EventAnalytics.windowedFunnelPlan(
-      Tables.events(spark, sfDir),
-      Seq("signup", "view", "click", "purchase"), 72L * 3600 * 1000000)
-    try {
+    val steps = Seq("signup", "view", "click", "purchase")
+    val ev = queries.EventAnalytics.funnelEvents(Tables.events(spark, sfDir), steps)
+    Materialize.using(ev) {
+      val core = queries.EventAnalytics.windowedFunnelPlan(ev, steps, 72L * 3600 * 1000000)
       val (gotSh, gotBc) = PlanAudit.exchangeCounts(core)
       assert(gotSh <= 1,
         s"funnel core shuffle count regressed: $gotSh > 1 (broadcasts $gotBc)")
       assert(gotSh + gotBc <= 11,
         s"funnel core total exchanges regressed: $gotSh+$gotBc > 11")
-    } finally ev.unpersist(blocking = true)
+    }
   }
 
   // r13: shuffle VOLUME gates (PlanAudit.shuffleStats) — counts bound
@@ -223,7 +223,7 @@ class PlanAuditSpec extends SparkSpec {
 
   private val coreVolumeGates: Seq[(String, () => DataFrame, Long, Long)] = Seq(
     ("core:dedup_minhash_pairs",
-      () => llm.Dedup.nearDupPairsPlan(fixtureDocs), 3500L, 500000L),
+      () => llm.Dedup.nearDupPairs(fixtureDocs), 3500L, 500000L),
     ("core:dedup_ngram_jaccard",
       () => llm.Dedup.ngramJaccardPairsPlan(fixtureDocs, 0.3), 4800L, 1100000L),
     ("core:dedup_simhash_pairs",
