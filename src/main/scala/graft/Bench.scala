@@ -59,7 +59,7 @@ object Bench {
     * and their +10M dup twins both stay inside one span). */
   val ReplicaSpan = 100000000L
 
-  /** `lshFixture` at `m`× scale (ScaleProbe, VERDICT r7 task 3):
+  /** `lshFixture` at `m`× scale (VERDICT r7 task 3; `CoreScaleProbe`'s corpus):
     * replica k shifts every doc_id by k·`ReplicaSpan` BEFORE salting,
     * so each replica is internally an exact copy of the 1× fixture
     * (same dup rate, same length/source mix) while sharing no
@@ -151,9 +151,10 @@ object Bench {
     out
   }
 
-  /** The hot-user re-key shared by `skewFixture` and `SkewProbe` (one
-    * definition so the bench's published `skew` block and PLANS.md's
-    * crossover table can never measure different fixtures): every 5th
+  /** The hot-user re-key shared by `skewFixture` and
+    * [[skewAmplifiedFixture]] (one definition so the bench's published
+    * `skew` blocks and PLANS.md's crossover table can never measure
+    * different fixtures): every 5th
     * event_id → user −1 (outside the id space), ~`SkewHotFrac` of rows. */
   def hotKeyed(events: DataFrame): DataFrame =
     events.withColumn("user_id",
@@ -168,11 +169,11 @@ object Bench {
     * 1 day), event_ids by k·10⁹): total = base + (m−1)·hot, so the
     * plain window plan's critical path converges to the single hot
     * partition while per-(user, week) chunk sizes stay constant —
-    * the regime `ChunkedWindow` exists for (SkewProbe's crossover
-    * table; at the raw 20% fixture the hot partition is below the
-    * crossover and the chunked rewrite's extra exchanges dominate).
-    * Shared by Bench's published `skew.amp` block and SkewProbe so
-    * both measure the same fixture recipe. */
+    * the regime `ChunkedWindow` exists for (the crossover table in
+    * PLANS.md "Round-13: measurement gaps closed"; at the raw 20%
+    * fixture the hot partition is below the crossover and the chunked
+    * rewrite's extra exchanges dominate). Bench's published `skew.amp`
+    * block times this recipe; the crossover table was measured on it. */
   def skewAmplifiedFixture(spark: SparkSession, sfDir: String, m: Int): String = {
     val out = java.nio.file.Files.createTempDirectory(s"graft_bench_skew_x$m").toString
     val base = hotKeyed(Tables.events(spark, sfDir))
@@ -201,10 +202,10 @@ object Bench {
   }
 
   /** Forces every window frame of a `Telemetry.features`-shaped frame
-    * to execute (shared by the skew probes): a bare `.count()` lets
-    * ColumnPruning DROP the Window operators — no downstream reference
-    * to any window output — and times a bare scan (SkewProbe measured
-    * a flat ~0.19 s from 100k to 10M rows before this). One output per
+    * to execute: a bare `.count()` lets ColumnPruning DROP the Window
+    * operators — no downstream reference to any window output — and
+    * times a bare scan (the r13 skew crossover measured a flat ~0.19 s
+    * from 100k to 10M rows before this). One output per
     * distinct frame, same consumer for every variant. */
   def forceFeatures(df: DataFrame): Unit = {
     df.agg(sum(col("value_mean_7") + col("value_std_7") + col("value_max_7") +
@@ -985,7 +986,7 @@ object Bench {
     // window's crossover (its hot partition fits one task, so the
     // published speedup reads < 1); hot×SkewAmpM puts the published
     // pair in the regime the mitigation exists for, so BENCH_r{N}
-    // demonstrates both sides of the crossover (SkewProbe's table)
+    // demonstrates both sides of the crossover (PLANS.md's r13 table)
     val SkewAmpM = 30
     val skewAmp: Option[(Double, Double)] = {
       var dir: Option[String] = None

@@ -10,7 +10,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * probe re-times the fixture-compatible headline queries at a data
   * size where COMPUTE dominates (the `lshFixtureScaled` corpus at
   * `m`×, default 10× sf0.1 ≈ an sf1-class corpus — the same derived
-  * fixture ScaleProbe's linearity claims use, embeddings riding along)
+  * fixture PLANS.md's LSH linearity tables use, embeddings riding along)
   * under `local[c]` sessions for each requested core count, in ONE
   * JVM (sequential sessions; per-query warm-up rep inside each session
   * so codegen/C2 compile outside every timed window, then min-of-k).

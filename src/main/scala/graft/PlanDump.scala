@@ -61,80 +61,6 @@ object PlanDump {
         .distinct()
     }))
 
-  /** r19-shape replicas of the cores CHANGED by the r20 optimization
-    * round, reconstructed inline for before/after plan evidence (the
-    * old code is not runnable from this build, so the retired shape is
-    * replicated verbatim from the r19 tree and dumped as
-    * `<query>_core_before.txt` by the same run that dumps the shipped
-    * core as `_core_after.txt`). */
-  private def legacyCores(
-      spark: SparkSession, sfDir: String,
-      fixtureDocs: () => DataFrame): Map[String, () => DataFrame] = Map(
-    // r19 simhashPairsFrom: band self-join on key-only banded rows,
-    // then TWO signature join-backs for the hamming verify
-    "dedup_simhash_pairs" -> (() => {
-      val docs = fixtureDocs()
-      val sh = llm.Dedup.simhashed64(docs)
-      val banded = llm.Dedup.simhashBanded(sh)
-        .select(col("doc_id"), col("band_idx"), col("band_bits"))
-      val cand = banded.as("a")
-        .join(banded.as("b"),
-          col("a.band_idx") === col("b.band_idx") &&
-            col("a.band_bits") === col("b.band_bits") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-        .distinct()
-      cand
-        .join(sh.select(col("doc_id").as("id_a"), col("simhash").as("ha")), "id_a")
-        .join(sh.select(col("doc_id").as("id_b"), col("simhash").as("hb")), "id_b")
-        .withColumn("hamming",
-          bit_count(col("ha").bitwiseXOR(col("hb"))).cast("long"))
-        .filter(col("hamming") <= llm.Dedup.MaxHamming)
-        .select(col("id_a"), col("id_b"), col("hamming"))
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-    // r19 sourceOverlap core: (source, tok_h) distinct, token-keyed
-    // SELF-JOIN, pair-keyed count (the shape PlanAudit.main audited)
-    "corpus_source_overlap" -> (() => {
-      val docs = Tables.documents(spark, sfDir)
-      val tok = docs
-        .select(col("source"), explode(split(col("text"), " ")).as("t"))
-        .select(col("source"),
-          conv(substring(md5(col("t")), 1, 15), 16, 10).cast("long").as("tok_h"))
-        .distinct()
-      val sizes = tok.groupBy(col("source")).agg(count(lit(1)).as("v"))
-      val pairs = tok.as("a")
-        .join(tok.as("b"),
-          col("a.tok_h") === col("b.tok_h") && col("a.source") < col("b.source"))
-        .groupBy(col("a.source").as("src_a"), col("b.source").as("src_b"))
-        .agg(count(lit(1)).cast("long").as("n_shared"))
-      pairs
-        .join(sizes.select(col("source").as("src_a"), col("v").as("va")), "src_a")
-        .join(sizes.select(col("source").as("src_b"), col("v").as("vb")), "src_b")
-        .select(col("src_a"), col("src_b"), col("n_shared"),
-          (round(col("n_shared") / (col("va") + col("vb") - col("n_shared")), 6)
-            + lit(0.0)).as("jaccard"))
-    }),
-    // r19 per-round unit: winners + the PER-ROUND coalesce join
-    // against the node table — exactly lpaRound, which r20 kept as the
-    // probe-facing one-full-round shape while the loop now iterates
-    // the winners alone and attaches once at the end
-    "graph_label_prop" -> (() => {
-      val (nodes, edges) = llm.Dedup.lpaFixture(
-        Tables.documents(spark, sfDir).select(col("doc_id")))
-      llm.Dedup.lpaRound(llm.Dedup.undirectedEdges(edges), nodes,
-        nodes.select(col("id"), col("id").as("label")))
-    }),
-    // r19 edge-layout setup: distinct THEN repartition — two exchanges
-    "graph_bfs_hops" -> (() => {
-      val (_, edges) = llm.Dedup.lpaFixture(
-        Tables.documents(spark, sfDir).select(col("doc_id")))
-      edges.select(col("a"), col("b"))
-        .unionByName(edges.select(col("b").as("a"), col("a").as("b")))
-        .distinct()
-        .repartition(col("a"))
-    }))
-
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: PlanDump <outDir> <tag> [query ...]")
     val outDir = Paths.get(args(0))
@@ -190,22 +116,15 @@ object PlanDump {
 
     val coreMap = cores(spark, sfDir,
       () => Tables.documents(spark, fixtureDir.getOrElse(sfDir)))
-    val legacyMap = legacyCores(spark, sfDir,
-      () => Tables.documents(spark, fixtureDir.getOrElse(sfDir)))
     names.foreach { name =>
       byName.get(name) match {
         case None => System.err.println(s"[plandump] unknown query: $name")
         case Some(q) =>
           dump(s"${name}_$tag", s"$name @ $tag",
             () => q.run(spark, dirFor(name)))
-          // checkpoint-hidden pipelines: dump the un-checkpointed core
-          // too, plus (when producing "after" evidence) the replicated
-          // r19 shape as the before-core
+          // checkpoint-hidden pipelines: dump the un-checkpointed core too
           coreMap.get(name).foreach(mk =>
             dump(s"${name}_core_$tag", s"$name core @ $tag", mk))
-          if (tag != "before")
-            legacyMap.get(name).foreach(mk =>
-              dump(s"${name}_core_before", s"$name core @ r19 shape", mk))
       }
     }
     fixtureDir.foreach(Bench.deleteRecursively)

@@ -27,7 +27,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * the cut digest streams over the token bytes, each chunk's digest
   * streams over the same slices, and chunk rows leave the scan
   * directly — zero shuffles before the sharing aggregate, one pass
-  * over the text. PlanAudit times the head-to-head.
+  * over the text. The head-to-head timings are in PLANS.md
+  * "Round-10 session 2: the native CDC generator".
   *
   * Semantics (matching both existing forms): null input → no rows;
   * any non-null text yields ≥ 1 chunk (split("", -1) = [""], one

@@ -959,8 +959,8 @@ object Curation {
   }
 
   /** Un-persisted, un-checkpointed overlap PLAN (the decontaminatePlan
-    * convention): shared by the PlanAudit probe so the audited shape
-    * can never drift from the shipped one. */
+    * convention): shared by PlanAuditSpec and PlanDump so the audited
+    * shape can never drift from the shipped one. */
   private[graft] def sourceOverlapPlan(docs: DataFrame): DataFrame =
     sourceOverlapFrom(perTokenSources(docs))
 

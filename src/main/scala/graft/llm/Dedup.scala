@@ -1738,47 +1738,41 @@ object Dedup {
 
   /** The composed (gram-explode + position-window + span-collapse +
     * text-join) CDC pipeline — the pre-generator form, kept as the
-    * verification baseline for [[CdcChunkGenerator]] and the PlanAudit
-    * head-to-head (the boilerplateChunks convention). */
+    * verification baseline for [[CdcChunkGenerator]] (the
+    * boilerplateChunks convention). */
   def contentChunksComposed(docs: DataFrame, w: Int = 4, divisor: Int = 16): DataFrame = {
     val base = docs
       .select(col("doc_id"), col("text"), split(col("text"), " ").as("toks"))
       .withColumn("len", size(col("toks")))
-    Materialize.using(base)(contentChunksComposedFrom(base, w, divisor))
-  }
-
-  /** The composed CDC pipeline over an already-projected (doc_id,
-    * text, toks, len) frame, WITHOUT caching or materialization —
-    * PlanAudit inspects this (the spanRowsPlan convention). */
-  private[graft] def contentChunksComposedFrom(
-      base: DataFrame, w: Int, divisor: Int): DataFrame = {
-    val g = base.select(col("doc_id"), col("len"),
-      graft.functions.ngram_hashes(col("text"), w, 15).as(Seq("pos", "gram_h")))
-    val cuts = g
-      .filter(pmod(col("gram_h"), lit(divisor)) === 0 && col("pos") + w < col("len"))
-      .select(col("doc_id"), (col("pos") + w).as("s"))
-    val starts = cuts.unionByName(
-      base.filter(col("len") > 0).select(col("doc_id"), lit(0).as("s")))
-    val byDoc = Window.partitionBy(col("doc_id")).orderBy(col("s"))
-    val spans = starts.join(base.select(col("doc_id"), col("len")), Seq("doc_id"))
-      .withColumn("e", coalesce(lead(col("s"), 1).over(byDoc), col("len")))
-      .groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(struct(col("s"), col("e")))).as("spans"))
-    val out = base.join(spans, Seq("doc_id"))
-      .select(col("doc_id"), col("toks"),
-        posexplode(col("spans")).as(Seq("chunk_idx", "sp")))
-      .select(col("doc_id"), col("chunk_idx"),
-        col("sp.s").as("start_pos"),
-        (col("sp.e") - col("sp.s")).as("n_tokens"),
-        conv(substring(md5(
-          array_join(slice(col("toks"), col("sp.s") + 1, col("sp.e") - col("sp.s")), " ")),
-          1, 15), 16, 10).cast("long").as("chunk_fp"))
-    val sharing = out.groupBy(col("chunk_fp"))
-      .agg(countDistinct(col("doc_id")).as("n_docs_sharing"))
-    out.join(sharing, Seq("chunk_fp"))
-      .select(col("doc_id"), col("chunk_idx"), col("start_pos"),
-        col("n_tokens"), col("chunk_fp"), col("n_docs_sharing"))
-      .orderBy(col("doc_id"), col("chunk_idx"))
+    Materialize.using(base) {
+      val g = base.select(col("doc_id"), col("len"),
+        graft.functions.ngram_hashes(col("text"), w, 15).as(Seq("pos", "gram_h")))
+      val cuts = g
+        .filter(pmod(col("gram_h"), lit(divisor)) === 0 && col("pos") + w < col("len"))
+        .select(col("doc_id"), (col("pos") + w).as("s"))
+      val starts = cuts.unionByName(
+        base.filter(col("len") > 0).select(col("doc_id"), lit(0).as("s")))
+      val byDoc = Window.partitionBy(col("doc_id")).orderBy(col("s"))
+      val spans = starts.join(base.select(col("doc_id"), col("len")), Seq("doc_id"))
+        .withColumn("e", coalesce(lead(col("s"), 1).over(byDoc), col("len")))
+        .groupBy(col("doc_id"))
+        .agg(sort_array(collect_list(struct(col("s"), col("e")))).as("spans"))
+      val out = base.join(spans, Seq("doc_id"))
+        .select(col("doc_id"), col("toks"),
+          posexplode(col("spans")).as(Seq("chunk_idx", "sp")))
+        .select(col("doc_id"), col("chunk_idx"),
+          col("sp.s").as("start_pos"),
+          (col("sp.e") - col("sp.s")).as("n_tokens"),
+          conv(substring(md5(
+            array_join(slice(col("toks"), col("sp.s") + 1, col("sp.e") - col("sp.s")), " ")),
+            1, 15), 16, 10).cast("long").as("chunk_fp"))
+      val sharing = out.groupBy(col("chunk_fp"))
+        .agg(countDistinct(col("doc_id")).as("n_docs_sharing"))
+      out.join(sharing, Seq("chunk_fp"))
+        .select(col("doc_id"), col("chunk_idx"), col("start_pos"),
+          col("n_tokens"), col("chunk_fp"), col("n_docs_sharing"))
+        .orderBy(col("doc_id"), col("chunk_idx"))
+    }
   }
 
   /** Row-LOCAL CDC chunker: the same cut rule as [[contentChunks]]
@@ -1828,9 +1822,9 @@ object Dedup {
     islandSpans(hits, n)
   }
 
-  /** The span pipeline WITHOUT caching or materialization — PlanAudit
-    * inspects this frame (the public API materializes it through
-    * [[graft.Materialize]], which hides the plan). */
+  /** The span pipeline WITHOUT caching or materialization —
+    * PlanAuditSpec inspects this frame (the public API materializes it
+    * through [[graft.Materialize]], which hides the plan). */
   private[graft] def spanRowsPlan(docs: DataFrame, n: Int = 8): DataFrame =
     spansFromGrams(gramPosRows(docs, n), n)
 
@@ -3921,31 +3915,25 @@ object Dedup {
     */
   def jaccardExactJoin(docs: DataFrame): DataFrame = {
     val g = bigramSets(docs).withColumn("sz", size(col("grams")).cast("long"))
-    Materialize.using(g)(jaccardExactJoinPlan(g))
-  }
-
-  /** The un-checkpointed core of [[jaccardExactJoin]] — the
-    * spanRowsPlan convention: the public API materializes it through
-    * [[graft.Materialize]] (and releases the cached gram scan), so
-    * PlanAudit reads THIS to see the real exchanges. Input: (doc_id, grams, sz). */
-  private[graft] def jaccardExactJoinPlan(g: DataFrame): DataFrame = {
-    val tok = g.select(col("doc_id"), explode(col("grams")).as("gram"))
-    val sz = g.select(col("doc_id"), col("sz"))
-    val inter = tok.as("a")
-      .join(tok.as("b"),
-        col("a.gram") === col("b.gram") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .agg(count(lit(1)).as("inter"))
-    inter
-      .join(sz.select(col("doc_id").as("id_a"), col("sz").as("sa")), "id_a")
-      .join(sz.select(col("doc_id").as("id_b"), col("sz").as("sb")), "id_b")
-      .withColumn("uni", col("sa") + col("sb") - col("inter"))
-      .filter(col("inter") * 5 >= col("uni") * 2)
-      .select(col("id_a"), col("id_b"),
-        col("inter").as("n_shared"),
-        (expr("(2 * 1000000 * inter + uni) div (2 * uni)").cast("double") /
-          lit(1000000.0)).as("jaccard"))
-      .orderBy(col("id_a"), col("id_b"))
+    Materialize.using(g) {
+      val tok = g.select(col("doc_id"), explode(col("grams")).as("gram"))
+      val sz = g.select(col("doc_id"), col("sz"))
+      val inter = tok.as("a")
+        .join(tok.as("b"),
+          col("a.gram") === col("b.gram") && col("a.doc_id") < col("b.doc_id"))
+        .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
+        .agg(count(lit(1)).as("inter"))
+      inter
+        .join(sz.select(col("doc_id").as("id_a"), col("sz").as("sa")), "id_a")
+        .join(sz.select(col("doc_id").as("id_b"), col("sz").as("sb")), "id_b")
+        .withColumn("uni", col("sa") + col("sb") - col("inter"))
+        .filter(col("inter") * 5 >= col("uni") * 2)
+        .select(col("id_a"), col("id_b"),
+          col("inter").as("n_shared"),
+          (expr("(2 * 1000000 * inter + uni) div (2 * uni)").cast("double") /
+            lit(1000000.0)).as("jaccard"))
+        .orderBy(col("id_a"), col("id_b"))
+    }
   }
 
   def ngramJaccardPairs(docs: DataFrame, threshold: Double): DataFrame = {

@@ -546,8 +546,11 @@ object Similarity {
     * serve (LlmSpec pins it; the oracle-green pinned twin is
     * `embed_ivf_topk_append_pinned`). What append does NOT do is adapt
     * the centroids to drift — the staleness/refit-cadence measurements
-    * live in PLANS.md (IvfStaleProbe). Idempotent under at-least-once
-    * redelivery via [[dropAlreadyIndexed]] (assumes never-reused
+    * live in PLANS.md ("Round-16: the k-means serving tiers get their
+    * append path + the staleness price"); `embed_ivf_staleness_audit`
+    * and `embed_ivf_staleness_planted` re-check the signal each round.
+    * Idempotent under at-least-once redelivery via
+    * [[dropAlreadyIndexed]] (assumes never-reused
     * vec_ids, the ingest convention all append tiers share). */
   def appendIvfIndex(delta: DataFrame, spark: SparkSession, path: String): Unit = {
     ivfAppendCount.incrementAndGet()
@@ -562,7 +565,8 @@ object Similarity {
     * label, v — one pass over the index, never a corpus rescan),
     * checkpoint them out of the directory being rewritten, and
     * run [[buildIvfIndex]] over them — fresh centroids fitted to the
-    * drifted union, the IvfStaleProbe refit branch as callable code.
+    * drifted union, the refit branch of the r16 staleness curve as
+    * callable code.
     * Not oracle-expressible (KMeans), like the build; probe-sanity
     * and shape are spec-pinned. The overwrite is the build's own
     * (non-atomic directory rewrite) — quiesce probes around it, and a
@@ -615,7 +619,8 @@ object Similarity {
     * under the cluster partitions. Codebooks are STATISTICS, not
     * indexes (buildPqIndex's own scale note): freezing them is the
     * design, and recall drift under distribution shift is the
-    * IvfStaleProbe refit-cadence question, not a correctness one. */
+    * refit-cadence question `embed_ivf_staleness_planted` answers,
+    * not a correctness one. */
   def appendPqIndex(delta: DataFrame, spark: SparkSession, path: String): Unit = {
     ivfAppendCount.incrementAndGet()
     val books = Tables.parquet(spark, s"$path/codebooks").collect()
@@ -1001,8 +1006,8 @@ object Similarity {
   }
 
   /** The refit-cadence SIGNAL as a declared query (r16, PLANS's own
-    * r17 note 1 pulled forward): IvfStaleProbe measured that frozen-
-    * centroid appends cost recall ONLY on arrivals the centroids never
+    * r17 note 1 pulled forward): the r16 staleness curve showed that
+    * frozen-centroid appends cost recall ONLY on arrivals the centroids never
     * saw — so the operational rule is "watch recall over RECENT
     * ARRIVALS and refit when it sags". This runs that audit on the
     * pinned (md5-seeded, SQL-replayable) tier: for a fixed sample of
@@ -1031,9 +1036,10 @@ object Similarity {
     * task 6): the raw testdata embeddings are near-orthogonal — no
     * cluster structure — so [[ivfStalenessAudit]] over them shows both
     * branches bouncing with NO gap; as a standing refit trigger it
-    * demonstrated nothing. This fixture plants the IvfStaleProbe
-    * drift regime integer-derived so it hash-pins cross-engine. Per
-    * member (m = vec_id div 16, the within-topic counter):
+    * demonstrated nothing. This fixture plants the r16 staleness
+    * curve's drift regime integer-derived so it hash-pins
+    * cross-engine. Per member (m = vec_id div 16, the within-topic
+    * counter):
     *  - 1.0 at topic = vec_id % 16 (topics 0–7 BASE, 8–15 APPENDED);
     *  - 0.3 at a COARSE dim in 0..7 varying with m — the only mass a
     *    BASE seed's unit topic-dim can see on an appended member, so
@@ -1046,7 +1052,7 @@ object Similarity {
     *    coarse-driven. Under a refit the new topic's own seeds
     *    dominate (cos ≈ 0.75 ≫ 0.41) and the topic collapses into
     *    its cells. Measured gap (DuckDB, all 3 SFs): stale 0.37–0.59
-    *    vs refit 0.85–0.90 — the IvfStaleProbe drift curve, now
+    *    vs refit 0.85–0.90 — the r16 drift curve, now
     *    driver-checked. */
   private[graft] def plantedDriftEmb(emb: DataFrame): DataFrame =
     emb.select(col("vec_id"))
@@ -2601,7 +2607,7 @@ object Similarity {
     // search under the STALE quantizer (seeds frozen to the base
     // slice — the appended index's exact state) and under a REFIT
     // (seeds from the full corpus), both vs the exact top-3. The
-    // IvfStaleProbe curve showed staleness costs recall only on
+    // r16 staleness curve showed staleness costs recall only on
     // arrivals the quantizer never saw; this is that measurement
     // running under the oracle every round — the number the
     // refit-or-not decision reads.
@@ -2616,7 +2622,7 @@ object Similarity {
     // The staleness audit with a VISIBLE signal (VERDICT r16 task 6):
     // the raw near-orthogonal testdata gave the audit above no
     // stale-vs-refit gap to demonstrate (both branches bounce
-    // 0.33–1.0), so this declares the IvfStaleProbe drift regime as
+    // 0.33–1.0), so this declares the r16 curve's drift regime as
     // an integer-derived planted-topic fixture (topic one-hot + a
     // deterministic 0.3 perturbation dim — see plantedDriftEmb) whose
     // probes are all appended NEW-TOPIC members: the stale quantizer

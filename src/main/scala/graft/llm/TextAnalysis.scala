@@ -435,9 +435,9 @@ object TextAnalysis {
     * are one keyed aggregate joined back on the 8-byte hash, then the
     * per-doc rollup. While the distinct-bigram frequency frame
     * BROADCASTS (bounded vocabulary) the gram rows cross the wire once
-    * (the rollup exchange) plus one narrow partial-agg exchange. The
-    * exchange shape is pinned by PlanAudit ("familiarity(core)") on
-    * the shared [[familiarityPlan]]. */
+    * (the rollup exchange) plus one narrow partial-agg exchange.
+    * PlanAuditSpec's window census reads the shared
+    * [[familiarityPlan]]. */
   def familiarity(docs: DataFrame): DataFrame = {
     val grams = gramKeyRows(docs)
     Materialize.using(grams)(familiarityTail(grams))
@@ -466,9 +466,9 @@ object TextAnalysis {
         (round(col("freq_sum") * lit(1.0) / col("n_bigrams"), 6) + lit(0.0))
           .as("familiarity"))
 
-  /** Un-persisted, un-checkpointed familiarity plan for PlanAudit /
-    * PlanDump — the SHARED variant (the sourceOverlapPlan discipline:
-    * audited evidence can never drift from the shipped shape). */
+  /** Un-persisted, un-checkpointed familiarity plan for PlanAuditSpec
+    * — the SHARED variant (the sourceOverlapPlan discipline: audited
+    * evidence can never drift from the shipped shape). */
   private[graft] def familiarityPlan(docs: DataFrame): DataFrame =
     familiarityTail(gramKeyRows(docs))
 
@@ -554,34 +554,28 @@ object TextAnalysis {
     // both are vocabulary-bounded, so the scoring join below is the
     // only data-sized join.
     val db = bg.groupBy(col("doc_id"), col("e")).agg(count(lit(1)).as("m"))
-    Materialize.using(db)(bigramLmScoreFrom(docs, db))
-  }
-
-  /** The scoring pipeline over a prepared (doc_id, e, m) bigram frame
-    * — the un-checkpointed core the public API materializes through
-    * [[graft.Materialize]] (spanRowsPlan convention; PlanAudit reads
-    * this with a cold db to count the real exchanges). */
-  private[graft] def bigramLmScoreFrom(docs: DataFrame, db: DataFrame): DataFrame = {
-    val c2 = db.groupBy(col("e")).agg(sum(col("m")).as("c2"))
-    val c1 = c2.groupBy(substring_index(col("e"), " ", 1).as("p"))
-      .agg(sum(col("c2")).as("c1"))
-    val model = c2.withColumn("p", substring_index(col("e"), " ", 1))
-      .join(c1, "p")
-      .select(col("e"), col("c2"), col("c1"))
-    val v = docs.select(explode(split(col("text"), " ")).as("t"))
-      .agg(countDistinct(col("t")).as("v"))
-    db.join(model, "e")
-      .crossJoin(broadcast(v))
-      .withColumn("term",
-        round(log(col("c2") + 1) - log(col("c1") + col("v")), 12)
-          .cast("decimal(28,12)") * col("m").cast("decimal(8,0)"))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("m")).cast("long").as("n_bigrams"),
-        sum(col("term")).as("s"))
-      .select(col("doc_id"), col("n_bigrams"),
-        (round(col("s").cast("double") / col("n_bigrams"), 6) + lit(0.0))
-          .as("avg_logprob"))
-      .orderBy(col("doc_id"))
+    Materialize.using(db) {
+      val c2 = db.groupBy(col("e")).agg(sum(col("m")).as("c2"))
+      val c1 = c2.groupBy(substring_index(col("e"), " ", 1).as("p"))
+        .agg(sum(col("c2")).as("c1"))
+      val model = c2.withColumn("p", substring_index(col("e"), " ", 1))
+        .join(c1, "p")
+        .select(col("e"), col("c2"), col("c1"))
+      val v = docs.select(explode(split(col("text"), " ")).as("t"))
+        .agg(countDistinct(col("t")).as("v"))
+      db.join(model, "e")
+        .crossJoin(broadcast(v))
+        .withColumn("term",
+          round(log(col("c2") + 1) - log(col("c1") + col("v")), 12)
+            .cast("decimal(28,12)") * col("m").cast("decimal(8,0)"))
+        .groupBy(col("doc_id"))
+        .agg(sum(col("m")).cast("long").as("n_bigrams"),
+          sum(col("term")).as("s"))
+        .select(col("doc_id"), col("n_bigrams"),
+          (round(col("s").cast("double") / col("n_bigrams"), 6) + lit(0.0))
+            .as("avg_logprob"))
+        .orderBy(col("doc_id"))
+    }
   }
 
   /** Shannon token entropy per source + the '*ALL*' corpus row — the

@@ -102,7 +102,7 @@ object EventAnalytics {
       .repartition(col("user_id"))
 
   /** Un-checkpointed core of [[windowedFunnel]] over its cached
-    * [[funnelEvents]] frame — split out so PlanAudit can inspect the
+    * [[funnelEvents]] frame — split out so PlanAuditSpec can inspect the
     * REAL pipeline (the public API materializes it through
     * [[graft.Materialize]], which would hide it behind a checkpoint
     * scan — the `spanRowsPlan` convention). */

@@ -925,9 +925,10 @@ object StreamingAlerts {
           .select(col("vec_id").as("corpus_id"), col("cluster"))
         val evG = Curation.evalGrams(docs, col("doc_id") % 7 === 0)
         // stateful in-stream dedup CHOSEN BY MEASUREMENT (VERDICT r16
-        // task 3, SinkVolumeProbe): the n tier emits one row per
-        // agreeing band and the c tier one per matching gram, so the
-        // pre-distinct hit stream sank 10.1M rows in ~48 s at sf0.1
+        // task 3; PLANS.md "Round 17", sink-volume table): the n tier
+        // emits one row per agreeing band and the c tier one per
+        // matching gram, so the pre-distinct hit stream sank 10.1M
+        // rows in ~48 s at sf0.1
         // (the 233 s Verify class) vs 5.4M rows in ~13 s with
         // dropDuplicates — the state store absorbs the duplicate keys
         // for a 3.6× wall win, and the verdict is identical by
@@ -1085,11 +1086,10 @@ object StreamingAlerts {
     * x (content hash) ∪ n (minhash bands) ∪ c (eval 8-grams) ∪ s
     * (pinned cell) — over the declared delta fixture, unioned into
     * one tier-tagged hit stream. Every branch is a stream-static
-    * join, so only the arriving batch crosses the wire. Extracted
-    * from the `streaming_refresh_probe` declaration so
-    * [[graft.SinkVolumeProbe]] can measure the sink-volume trade
-    * (pre-distinct hits vs stateful dropDuplicates) on the EXACT
-    * production stream, not a reconstruction (VERDICT r16 task 3).
+    * join, so only the arriving batch crosses the wire. The r16
+    * sink-volume trade (pre-distinct hits vs stateful dropDuplicates,
+    * VERDICT r16 task 3) was measured on this exact production
+    * stream; the numbers are in PLANS.md "Round 17".
     * NOTE: the hit stream is sunk PRE-distinct by default — the
     * batch-side verdicts re-distinct anyway, so a consumer may
     * insert `dropDuplicates(delta_id, tier, cand_id)` (or, on an

@@ -28,8 +28,9 @@ object GraftBridge {
   /** Per-reduce-partition COMPRESSED map-output bytes of one finalized
     * shuffle stage — the exact per-partition numbers AQE's skew-join
     * detector thresholds on (`MapOutputStatistics` is private[spark],
-    * so the unwrap lives here; SaltProbe's compressed-vs-decompressed
-    * blind-spot readout is the consumer). */
+    * so the unwrap lives here; `graft.PlanAudit.skewAdvice` reads it,
+    * and the compressed-vs-decompressed blind factor it corrects for
+    * is in PLANS.md "Round-15: the AQE blind factor"). */
   def mapOutputBytes(
       stage: execution.adaptive.ShuffleQueryStageExec): Option[Array[Long]] =
     stage.mapStats.map(_.bytesByPartitionId)

@@ -50,6 +50,28 @@ class DocsSpec extends AnyFunSuite {
       s"README.md names graft mains that do not exist: ${missing.mkString(", ")}")
   }
 
+  test("README.md names every graft main in src/main, and no other") {
+    // the reverse of the check above: a main the README does not name
+    // is a harness nobody is told to run
+    val mainRe = """`(\w+(?:Probe|Dump)|Verify|Bench|PlanAudit)`""".r
+    val named = mainRe.findAllMatchIn(read("README.md")).map(_.group(1)).toSet
+    val objectRe = """(?m)^object\s+(\w+)""".r // top-level objects only
+    val mains = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        val src = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+        val at = src.indexOf("def main(args: Array[String])")
+        if (!src.startsWith("package graft\n") || at < 0) None
+        else objectRe.findAllMatchIn(src.take(at)).toSeq.lastOption.map(_.group(1))
+      }.toSet
+    assert(mains.contains("Verify") && mains.contains("Bench"),
+      s"the source scan missed the driver mains — it is measuring nothing: $mains")
+    assert(mains === named,
+      s"graft mains README.md does not name: ${(mains -- named).mkString(", ")}; " +
+        s"README names that are not mains: ${(named -- mains).mkString(", ")}")
+  }
+
   test("declared query names are unique and every headline query exists") {
     val names = SparkEntry.all.map(_.name)
     assert(names.distinct.size === names.size,
