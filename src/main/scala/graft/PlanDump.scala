@@ -46,19 +46,16 @@ object PlanDump {
     "graph_label_prop" -> (() => {
       val (nodes, edges) = llm.Dedup.lpaFixture(
         Tables.documents(spark, sfDir).select(col("doc_id")))
-      llm.Dedup.lpaWinners(llm.Dedup.undirectedEdges(edges),
+      llm.Dedup.lpaWinners(llm.Dedup.lpaLayout(nodes, edges),
         nodes.select(col("id"), col("id").as("label")))
     }),
-    // the iterative tier's shared edge-layout setup (bfs/sssp/kcore/
-    // cc/lpa/pagerank): r20 folds the symmetric-edge dedup onto the
-    // layout exchange — repartition(a) THEN distinct, one exchange
+    // the iterative tier's one edge layout (bfs/sssp/kcore/cc/lpa/
+    // pagerank), `Dedup.undirected`: repartition(a) THEN distinct, one
+    // exchange (r20)
     "graph_bfs_hops" -> (() => {
       val (_, edges) = llm.Dedup.lpaFixture(
         Tables.documents(spark, sfDir).select(col("doc_id")))
-      edges.select(col("a"), col("b"))
-        .unionByName(edges.select(col("b").as("a"), col("a").as("b")))
-        .repartition(col("a"))
-        .distinct()
+      llm.Dedup.undirected(edges)
     }))
 
   def main(args: Array[String]): Unit = {

@@ -161,9 +161,10 @@ object Curation {
     * split [[hashSplit]] would give it: the two rules differ only
     * where leakage was possible. Stability inherits from both parts:
     * a doc's split changes only if its group's min-id member changes.
-    * Scale: the CC iterations dominate (delta-free corpus pass per
-    * iteration, the `dedup_cluster_canonical` shape); the split
-    * itself is one map-side hash. */
+    * Scale: the CC alternations dominate (a pass over the pair graph
+    * per large-star/small-star alternation, O(log n) of them — the
+    * `dedup_cluster_star` shape); the split itself is one map-side
+    * hash. */
   def groupAwareSplit(
       docs: DataFrame, pairs: DataFrame,
       trainPct: Int = 90, validPct: Int = 5): DataFrame = {

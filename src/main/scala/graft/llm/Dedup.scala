@@ -3173,10 +3173,7 @@ object Dedup {
     */
   def connectedComponents(
       nodes: DataFrame, edges: DataFrame, maxIter: Int = 20): DataFrame = {
-    val und = edges.select(col("a"), col("b"))
-      .unionByName(edges.select(col("b").as("a"), col("a").as("b")))
-      .repartition(col("a")) // one-layout rule: every round joins on a (r19)
-      .distinct() // dedup rides the layout exchange (r20)
+    val und = undirected(edges)
     Materialize.using(und) {
       var labels = Materialize(nodes.select(col("id"), col("id").as("label")))
       var iter = 0
@@ -3341,21 +3338,15 @@ object Dedup {
   def pageRank(
       nodes: DataFrame, edges: DataFrame,
       iters: Int = 5, damping: Double = 0.85): DataFrame = {
-    // ONE layout exchange for the whole setup (r20): repartition the
-    // raw symmetric rows by a FIRST — the dedup aggregate, the degree
-    // aggregate, AND the deg join all reuse hash(a) (each requires
-    // clustering by a or (a, b), which hash(a) satisfies), where the
-    // r19 shape paid distinct + degree + repartition exchanges. Note
-    // pageRank keeps self-loops out implicitly like before: a
-    // self-loop contributes to its own rank exactly as it did (the
-    // r19 distinct had no a≠b filter here), so rows are identical.
-    // cached with undDeg: the deg side of the undDeg join would
-    // otherwise re-derive the union+repartition inside the one
-    // materializing job (undDeg.count())
-    val und = edges.select(col("a"), col("b"))
-      .unionByName(edges.select(col("b").as("a"), col("a").as("b")))
-      .repartition(col("a"))
-      .distinct()
+    // ONE layout exchange for the whole setup (r20): the dedup
+    // aggregate, the degree aggregate, AND the deg join all reuse the
+    // layout's hash(a) (each requires clustering by a or (a, b), which
+    // hash(a) satisfies), where the r19 shape paid distinct + degree +
+    // repartition exchanges. Self-loops are kept: a self-loop
+    // contributes to its own rank. Cached with undDeg: the deg side of
+    // the undDeg join would otherwise re-derive the layout inside the
+    // one materializing job (undDeg.count())
+    val und = undirected(edges)
     val deg = und.groupBy(col("a")).agg(count(lit(1)).as("deg"))
     // cache the DEGREE-ANNOTATED edge frame, pre-partitioned on the
     // join key (r19, the LPA one-layout discipline): the old code
@@ -3437,7 +3428,10 @@ object Dedup {
         .unionByName(mins2.select(col("a"), col("m").as("b")))
         .distinct()
       val nextT = Materialize(next)
-      changed = nextT.except(e).count() + e.except(nextT).count()
+      // both frames are distinct sets, so their symmetric difference is
+      // the (a, b) groups of size 1 in their union: one job, one shuffle
+      changed = nextT.unionByName(e).groupBy(col("a"), col("b")).count()
+        .filter(col("count") === 1).count()
       e = nextT
       iter += 1
     }
@@ -3474,68 +3468,26 @@ object Dedup {
     * window sort), with lineage checkpoint-truncated per round. */
   def labelPropagation(
       nodes: DataFrame, edges: DataFrame, iters: Int = 5): DataFrame = {
-    // r19 (VERDICT r18 task 7, "pre-bucket the edge table by src"):
-    // the undirected edge frame is PRE-PARTITIONED once on hash(a) and
-    // persisted, so all `iters` rounds reuse one layout. While the
-    // labels broadcast (up to ~10⁸ nodes) each round's join streams
-    // the persisted edges and the fused label_mode aggregation reuses
-    // hash(a) — a round runs with ZERO edge-sized exchanges (r19
-    // census; LlmSpec pins the SMJ-regime round at 3 exchanges).
-    // r20 (optimization round): rogue edges whose b-endpoint is not a
-    // node are dropped ONCE here — the per-round labels join used to
-    // drop them implicitly (labels only ever covered nodes), and the
-    // winners-only rounds below need the guarantee explicitly so a
-    // non-node endpoint can never leak a label into round 2+. One
-    // setup-time semi-join (broadcast-class: the node-id side), never
-    // per round; a no-op when edge endpoints ⊆ nodes (every caller in
-    // this repo).
-    // the dedup rides the layout exchange (r20): repartition FIRST,
-    // then distinct — hash(a) clusters every (a, b) group into one
-    // partition, so the dedup aggregate reuses the layout instead of
-    // paying its own (a, b) exchange; the setup shuffles the raw
-    // symmetric rows once instead of distinct-then-repartition twice.
-    // Same rows, same cached layout.
-    val und = undirectedRaw(edges)
-      .join(nodes.select(col("id").as("b")), Seq("b"), "left_semi")
-      .repartition(col("a"))
-      .distinct()
+    // r19 (VERDICT r18 task 7, "pre-bucket the edge table by src"): the
+    // layout is hash(a)-partitioned once and persisted, so all `iters`
+    // rounds reuse it. While the labels broadcast (up to ~10⁸ nodes)
+    // each round's join streams the persisted edges and the fused
+    // label_mode aggregation reuses hash(a) — a round runs with ZERO
+    // edge-sized exchanges (r19 census; LlmSpec pins the SMJ-regime
+    // round at 3 exchanges).
+    val und = lpaLayout(nodes, edges)
     Materialize.using(und) {
       und.count()
-      // r20: the r19 node-frame layout (repartition(id) + cache +
-      // count) is gone — it existed for the PER-ROUND coalesce join,
-      // which the winners-only loop no longer runs. The node table is
-      // now read twice total (the self-label seed and the one final
-      // attach), both map-only consumers of the raw frame; pre-keying
-      // it bought nothing and cost one exchange + one materialization
-      // per call.
-      var labels = nodes.select(col("id"), col("id").as("label"))
-      // r20 (optimization round, guide §2.4 — remove per-iteration work):
-      // rounds propagate the WINNERS frame directly instead of the full
-      // coalesced label table. Every label the NEXT round's join reads is
-      // keyed by an edge endpoint b, and every endpoint has degree ≥ 1 in
-      // the symmetric `und` (its reverse row makes it an `a`), so it is
-      // in the winners of every round — the per-round coalesce-to-self
-      // join against the node table only ever filled labels no round
-      // reads (isolated nodes keep their self-label forever). The node
-      // attach therefore runs ONCE after the last round; each round
-      // materializes one join + one fused aggregate, and the checkpointed
-      // frame shrinks to the degree ≥ 1 nodes. Identical labels out
-      // (oracle-pinned; LlmSpec/GraphsSpec unchanged): lpaRound — the
-      // probe-facing one-full-round shape — is winners + the same attach.
+      // rounds 1..iters−1 come materialized from the round stream; the
+      // last round's truncation moves onto the attached frame (`using`
+      // materializes it), so the call materializes exactly `iters`
+      // frames and returns a bare checkpoint scan (the durability
+      // contract GraphsSpec pins: under the reliable policy the caller
+      // holds a recoverable artifact, not a lazy re-derivation).
       // Every round truncates: fusing two rounds per materialized job
       // measured ~1.6× SLOWER (PLANS.md r16).
-      for (i <- 1 to iters) {
-        labels = lpaWinners(und, labels)
-        if (i != iters) labels = Materialize(labels)
-      }
-      // final attach: isolated nodes coalesce to self, ONCE. The last
-      // round's truncation moves onto the attached frame, so the call
-      // materializes exactly `iters` frames, the returned frame stays a
-      // bare checkpoint scan (the durability contract GraphsSpec pins:
-      // under the reliable policy the caller holds a recoverable
-      // artifact, not a lazy re-derivation), and the checkpointed volume
-      // of the final round is unchanged from r19 (node-sized, attached).
-      attachIsolated(nodes, labels)
+      val before = lpaRounds(und, nodes).drop(iters - 1).next()
+      attachIsolated(nodes, if (iters == 0) before else lpaWinners(und, before))
     }
   }
 
@@ -3543,32 +3495,27 @@ object Dedup {
     * convergence trace (declared `graph_label_prop_trace`): round k's
     * row counts the nodes whose label differs from round k−1, so a
     * fixed-point run reads as a descending series hitting (and
-    * staying at) zero. The count per round is the SAME comparison
-    * `connectedComponents` already uses as its stopping test, here
-    * surfaced as data; driver state is `iters` rows. */
+    * staying at) zero. It reads the same round stream over the same
+    * layout as [[labelPropagation]]; each count is a lazy 1-row
+    * aggregate over two checkpointed rounds (the `kCoreTrace`
+    * pattern), all computed in the one job that materializes the
+    * result. Isolated nodes keep their self-label in every round, so
+    * comparing winners frames counts exactly the changed nodes.
+    * `nodes` holds distinct ids. */
   def labelPropagationTrace(
       nodes: DataFrame, edges: DataFrame, iters: Int = 5): DataFrame = {
-    val spark = nodes.sparkSession
-    import spark.implicits._
-    // same one-layout discipline as labelPropagation (r19); dedup on
-    // the layout exchange (r20)
-    val und = undirectedRaw(edges).repartition(col("a")).distinct()
-    val nodesP = nodes.select(col("id")).repartition(col("id"))
-    val rows = Materialize.using(und, nodesP) {
+    require(iters >= 1, "labelPropagationTrace: iters must be >= 1")
+    val und = lpaLayout(nodes, edges)
+    Materialize.using(und) {
       und.count()
-      nodesP.count()
-      var labels = Materialize(nodesP.select(col("id"), col("id").as("label")))
+      val rounds = lpaRounds(und, nodes).take(iters + 1).toIndexedSeq
       (1 to iters).map { k =>
-        val next = Materialize(lpaRound(und, nodesP, labels))
-        val changed = next.as("n")
-          .join(labels.as("o"), col("n.id") === col("o.id"))
-          .filter(col("n.label") =!= col("o.label"))
-          .count()
-        labels = next
-        (k.toLong, changed)
-      }
+        rounds(k).join(rounds(k - 1).withColumnRenamed("label", "old"), "id")
+          .filter(col("label") =!= col("old"))
+          .agg(count(lit(1)).as("changed"))
+          .select(lit(k.toLong).as("round"), col("changed"))
+      }.reduce(_ unionByName _).orderBy(col("round"))
     }
-    rows.toDF("round", "changed").orderBy(col("round"))
   }
 
   /** The shared unrolled-CTE oracle prefix for the LPA queries
@@ -3627,20 +3574,54 @@ object Dedup {
     (nodes, edges)
   }
 
-  private[graft] def undirectedEdges(edges: DataFrame): DataFrame =
-    undirectedRaw(edges).distinct()
-
-  /** The symmetric pre-distinct edge rows — split out (r20) so callers
-    * that immediately re-key can ride the dedup on their layout
-    * exchange (repartition(key).distinct(): hash(key) satisfies the
-    * dedup's clustering requirement, one exchange instead of two). */
-  private[graft] def undirectedRaw(edges: DataFrame): DataFrame =
+  /** The iterative tier's one symmetric edge layout: both directions of
+    * every (a, b) edge, hash-partitioned on a, deduplicated. The dedup
+    * rides the layout exchange (r20): hash(a) clusters every (a, b)
+    * group into one partition, so repartition-then-distinct pays ONE
+    * exchange where distinct-then-repartition paid two, and every
+    * consumer keyed on a — a frontier or label join, a degree
+    * aggregate — reuses hash(a) instead of shuffling again (r19).
+    * Self-loops are kept; callers that drop them filter `a =!= b` on
+    * their input. */
+  private[graft] def undirected(edges: DataFrame): DataFrame =
     edges.select(col("a"), col("b"))
       .unionByName(edges.select(col("b").as("a"), col("a").as("b")))
-      .filter(col("a") =!= col("b"))
+      .repartition(col("a"))
+      .distinct()
 
-  /** One synchronous LPA round: per-node most-frequent neighbor label
-    * with the (c desc, label asc) tiebreak, coalesce to self.
+  /** LPA's layout: [[undirected]] over the input edges that are not
+    * self-loops and whose two endpoints are both nodes. The winners-only
+    * rounds need the b side explicitly, or a non-node endpoint would
+    * carry its label into round 2+; dropping the a side too changes no
+    * label, since such a row only fed a winner the attach discards.
+    * Both semi-joins read the node ids (broadcast-class), once per
+    * call, never per round; a no-op when edge endpoints ⊆ nodes (every
+    * caller in this repo). */
+  private[graft] def lpaLayout(nodes: DataFrame, edges: DataFrame): DataFrame = {
+    val ids = nodes.select(col("id"))
+    undirected(edges.filter(col("a") =!= col("b"))
+      .join(ids.withColumnRenamed("id", "a"), Seq("a"), "left_semi")
+      .join(ids.withColumnRenamed("id", "b"), Seq("b"), "left_semi"))
+  }
+
+  /** LPA's one round loop, as a lazy stream over the layout `und`:
+    * element 0 is the self-labels, element k ≥ 1 the materialized
+    * winners of round k, computed from element k − 1. A round runs
+    * only when the caller advances to it, so [[labelPropagation]] and
+    * [[labelPropagationTrace]] read the same rounds and each pays for
+    * the ones it reads. */
+  private def lpaRounds(und: DataFrame, nodes: DataFrame): Iterator[DataFrame] =
+    Iterator.iterate(nodes.select(col("id"), col("id").as("label")))(labels =>
+      Materialize(lpaWinners(und, labels)))
+
+  /** One synchronous LPA round, winners only: per-node most-frequent
+    * neighbor label with the (c desc, label asc) tiebreak, for the
+    * degree ≥ 1 nodes, keyed `id`. Rounds propagate this frame, not
+    * the full label table (r20): every label the next round's join
+    * reads is keyed by an edge endpoint b, and b has degree ≥ 1 in the
+    * symmetric layout (its reverse row makes it an a), so it is in
+    * every round's winners; isolated nodes keep their self-label and
+    * are attached once ([[attachIsolated]]).
     *
     * r19 (VERDICT r18 task 7): the former two-step
     * `groupBy(a, label).count` → `groupBy(a).max_by` is FUSED into the
@@ -3652,17 +3633,6 @@ object Dedup {
     * their edge destinations (the join), joined rows to their source's
     * aggregation (the one exchange) — see LabelMode's scaladoc for the
     * hub-degree buffer bound this trades for. */
-  private[graft] def lpaRound(
-      und: DataFrame, nodes: DataFrame, labels: DataFrame): DataFrame =
-    attachIsolated(nodes, lpaWinners(und, labels))
-
-  /** The round's propagation core — winners only (degree ≥ 1 nodes),
-    * keyed `id`. [[labelPropagation]] iterates THIS frame (r20: the
-    * per-round coalesce join against the node table filled labels no
-    * round ever read — every join key b has degree ≥ 1, so b is always
-    * in the previous round's winners) and attaches isolated nodes
-    * once at the end; [[lpaRound]] remains the one-full-round shape
-    * the layout census probes. */
   private[graft] def lpaWinners(und: DataFrame, labels: DataFrame): DataFrame =
     und
       .join(labels.select(col("id").as("b"), col("label")), "b")
@@ -3684,10 +3654,9 @@ object Dedup {
     * exposes the per-ITERATION exchange volume, which is the number a
     * 100 TB capacity plan multiplies by the round count. */
   private[graft] def labelPropagationRoundPlan(
-      nodes: DataFrame, edges: DataFrame): DataFrame = {
-    val und = undirectedEdges(edges)
-    lpaRound(und, nodes, nodes.select(col("id"), col("id").as("label")))
-  }
+      nodes: DataFrame, edges: DataFrame): DataFrame =
+    attachIsolated(nodes, lpaWinners(lpaLayout(nodes, edges),
+      nodes.select(col("id"), col("id").as("label"))))
 
   /** Per-node triangle counts + local clustering coefficient over a
     * dup-pair graph — the structural signal that separates a genuine
@@ -3715,9 +3684,7 @@ object Dedup {
     // both keeps each computed ONCE — un-materialized, the three
     // consumers of `oriented` re-run the whole dedup + degree + join
     // lineage (an 18-shuffle plan measured at sf0.01; 5 after).
-    val und = Materialize(edges.select(col("a"), col("b"))
-      .unionByName(edges.select(col("b").as("a"), col("a").as("b")))
-      .filter(col("a") =!= col("b")).distinct())
+    val und = Materialize(undirected(edges.filter(col("a") =!= col("b"))))
     val deg = Materialize(und.groupBy(col("a").as("id")).agg(count(lit(1)).as("d")))
     val oriented = Materialize(und
       .join(deg.select(col("id").as("a"), col("d").as("da")), "a")

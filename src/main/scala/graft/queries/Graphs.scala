@@ -4,21 +4,23 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.{Materialize, Q, Tables}
+import graft.llm.Dedup.undirected
 
-/** Iterative graph traversal (round 10): multi-source BFS hop
-  * distances — the reachability/how-far primitive under impact
-  * analysis, blast-radius queries, and lineage tracing, complementing
-  * the existing component/PageRank/label-propagation tier (those
-  * converge on ALL nodes; BFS expands a frontier from a seed set and
-  * touches only what it reaches).
+/** Graph queries over an (a, b) edge frame, beside the component,
+  * PageRank, label-propagation and triangle operators in `Dedup`:
+  * multi-source BFS hop distances and cost-bounded shortest paths
+  * (the reachability/how-far primitives under impact analysis,
+  * blast-radius queries and lineage tracing — a frontier expands from
+  * a seed set and touches only what it reaches), k-core peeling, and
+  * common-neighbor link prediction.
   *
-  * Pregel-style execution: each round is one join of the current
-  * frontier against the (pre-shuffled, cached) adjacency plus an
-  * anti-join against the visited set — per-round cost tracks the
-  * FRONTIER size, not the graph; rounds = eccentricity of the seed
-  * set, with a hard `maxIter` bound. Lineage is truncated per round
-  * ([[graft.Materialize]]) so the plan never grows with iterations — the
-  * same discipline as `Dedup.connectedComponents`.
+  * Every iterative operator reads the one symmetric edge layout
+  * `Dedup.undirected` (hash(a)-partitioned, deduplicated), cached for
+  * the loop. Pregel-style execution: each round joins its frontier or
+  * survivor set against that layout, so per-round cost tracks the
+  * FRONTIER or SURVIVORS, not the graph, with a hard round bound.
+  * Lineage is truncated per round ([[graft.Materialize]]) so the plan
+  * never grows with iterations.
   */
 object Graphs {
 
@@ -29,16 +31,9 @@ object Graphs {
     * result. Deterministic: hop labels don't depend on tie order. */
   def bfsHops(edges: DataFrame, seeds: DataFrame, maxIter: Int = 20): DataFrame = {
     require(maxIter >= 1, "bfsHops: maxIter must be >= 1")
-    // pre-partitioned on the frontier-join key (r19, the LPA one-layout
-    // discipline): every round's frontier⋈adjacency reuses hash(a), so
+    // every round's frontier⋈adjacency reuses the layout's hash(a), so
     // in the big-frontier (SMJ) regime only the frontier side shuffles
-    val und = edges.select(col("a"), col("b"))
-      .unionByName(edges.select(col("b").as("a"), col("a").as("b")))
-      // dedup rides the layout exchange (r20): hash(a) clusters every
-      // (a, b) group into one partition, so repartition-then-distinct
-      // pays ONE exchange where distinct-then-repartition paid two
-      .repartition(col("a"))
-      .distinct()
+    val und = undirected(edges)
     Materialize.using(und) {
       und.count() // materialize once; every round reuses the shuffle-free cache
       var dist = Materialize(seeds.select(col("id"), lit(0L).as("hop")).distinct())
@@ -81,11 +76,7 @@ object Graphs {
       maxCost: Long, maxIter: Int = 64): DataFrame = {
     require(maxCost >= 0, "ssspBounded: maxCost must be >= 0")
     require(maxIter >= 1, "ssspBounded: maxIter must be >= 1")
-    val und = edges.select(col("a"), col("b"))
-      .unionByName(edges.select(col("b").as("a"), col("a").as("b")))
-      .repartition(col("a")) // same one-layout rule as bfsHops (r19)
-      .distinct() // dedup rides the layout exchange (r20, see bfsHops)
-      .withColumn("w", weight(col("a"), col("b")))
+    val und = undirected(edges).withColumn("w", weight(col("a"), col("b")))
     Materialize.using(und) {
       und.count()
       var dist = Materialize(seeds.select(col("id"), lit(0L).as("d")).distinct())
@@ -320,12 +311,10 @@ object Graphs {
     * enumeration with negligible score loss (document the cap when
     * reporting). ra_micro is Σ round(10⁶/deg(z)) — integer-exact. */
   def commonNeighbors(edges: DataFrame, maxDeg: Long, k: Int): DataFrame = {
-    // the symmetric-distinct edge list feeds the degree frame, BOTH
-    // wedge sides, and the final anti-join — checkpoint it so the
-    // union+distinct exchange is paid once, not re-derived per consumer
-    val und = Materialize(edges.select(col("a"), col("b"))
-      .unionByName(edges.select(col("b").as("a"), col("a").as("b")))
-      .distinct())
+    // the symmetric edge list feeds the degree frame, BOTH wedge sides,
+    // and the final anti-join — checkpoint it so the layout exchange is
+    // paid once, not re-derived per consumer
+    val und = Materialize(undirected(edges))
     val deg = und.groupBy(col("a").as("z"))
       .agg(count(lit(1)).as("d"))
       .filter(col("d") <= maxDeg)
@@ -343,96 +332,72 @@ object Graphs {
       .limit(k)
   }
 
-  /** The kCore family's shared symmetric-edge layout — one-layout rule
-    * (r20): hash(a) rides the dedup AND is reused by every round's
-    * groupBy(a) degree aggregate (the LPA discipline) — the per-round
-    * agg exchange disappears in the broadcast regime. Shared by the
-    * three kCore forms and the r21 SMJ-regime census (GraphsSpec) so
-    * the pinned exchange counts can never drift from the shipped
-    * shape. */
-  private[graft] def kCoreEdges(edges: DataFrame): DataFrame =
-    edges.select(col("a"), col("b"))
-      .unionByName(edges.select(col("b").as("a"), col("a").as("b")))
-      .repartition(col("a"))
-      .distinct()
-
   /** One peel round's induced-degree derivation over the persisted
     * layout: membership joins on both endpoints, then the degree
-    * aggregate riding hash(a). */
+    * aggregate riding the layout's hash(a) (r20: in the broadcast
+    * regime the per-round aggregate pays no exchange). */
   private[graft] def kCoreRound(und: DataFrame, nodes: DataFrame): DataFrame =
     und.join(nodes.select(col("id").as("_xa")), col("a") === col("_xa"))
       .join(nodes.select(col("id").as("_xb")), col("b") === col("_xb"))
       .groupBy(col("a").as("id")).agg(count(lit(1)).as("c"))
 
-  /** k-core by fixed-iteration peeling over an (a, b) edge frame —
-    * see the `graph_kcore` declaration. Returns (id, degree) of the
-    * surviving induced subgraph after `iters` rounds. */
-  def kCore(edges: DataFrame, k: Int, iters: Int): DataFrame = {
-    val und = kCoreEdges(edges)
+  /** The kCore family's one peel loop: `body` gets the cached layout of
+    * `edges` and the lazy stream of survivor levels — level 0 is every
+    * edge endpoint, level i the nodes of level i − 1 whose induced
+    * degree is ≥ k. Each level is materialized when the stream reaches
+    * it, so the three forms pay for exactly the levels they read. */
+  private def peel(edges: DataFrame, k: Int)(
+      body: (DataFrame, Iterator[DataFrame]) => DataFrame): DataFrame = {
+    val und = undirected(edges)
     Materialize.using(und) {
       und.count()
-      def inducedDegrees(nodes: DataFrame): DataFrame = kCoreRound(und, nodes)
-      var nodes = Materialize(und.select(col("a").as("id")).distinct())
-      for (i <- 1 to iters)
-        nodes = Materialize(inducedDegrees(nodes).filter(col("c") >= k)
-          .select(col("id")))
-      inducedDegrees(nodes).select(col("id"), col("c").cast("long").as("degree"))
+      body(und, Iterator.iterate(Materialize(und.select(col("a").as("id")).distinct()))(
+        nodes => Materialize(kCoreRound(und, nodes).filter(col("c") >= k).select(col("id")))))
     }
   }
 
+  private def degrees(und: DataFrame, nodes: DataFrame): DataFrame =
+    kCoreRound(und, nodes).select(col("id"), col("c").cast("long").as("degree"))
+
+  /** k-core by fixed-iteration peeling over an (a, b) edge frame —
+    * see the `graph_kcore` declaration. Returns (id, degree) of the
+    * surviving induced subgraph after `iters` rounds. */
+  def kCore(edges: DataFrame, k: Int, iters: Int): DataFrame =
+    peel(edges, k)((und, levels) => degrees(und, levels.drop(iters).next()))
+
   /** Survivor-count trace of the fixed-iteration peel — see the
     * `graph_kcore_trace` declaration. One (iter, n_nodes) row per
-    * level 0..`iters`; each level's count is a 1-row aggregate over
-    * the checkpointed survivor frame, so the trace costs one extra
-    * count-job per level on top of the peel itself. */
-  def kCoreTrace(edges: DataFrame, k: Int, iters: Int): DataFrame = {
-    val und = kCoreEdges(edges)
-    Materialize.using(und) {
-      und.count()
-      def inducedDegrees(nodes: DataFrame): DataFrame = kCoreRound(und, nodes)
-      var nodes = Materialize(und.select(col("a").as("id")).distinct())
-      def level(i: Int, n: DataFrame): DataFrame =
-        n.agg(count(lit(1)).cast("long").as("n_nodes"))
+    * level 0..`iters`; each level's count is a lazy 1-row aggregate
+    * over the checkpointed level, computed in the job that
+    * materializes the result. */
+  def kCoreTrace(edges: DataFrame, k: Int, iters: Int): DataFrame =
+    peel(edges, k) { (_, levels) =>
+      levels.take(iters + 1).zipWithIndex.map { case (nodes, i) =>
+        nodes.agg(count(lit(1)).cast("long").as("n_nodes"))
           .select(lit(i.toLong).as("iter"), col("n_nodes"))
-      val levels = Seq.newBuilder[DataFrame]
-      levels += level(0, nodes)
-      for (i <- 1 to iters) {
-        nodes = Materialize(inducedDegrees(nodes).filter(col("c") >= k)
-          .select(col("id")))
-        levels += level(i, nodes)
-      }
-      levels.result().reduce(_ unionByName _).orderBy(col("iter"))
+      }.reduce(_ unionByName _).orderBy(col("iter"))
     }
-  }
 
   /** Converge-to-fixpoint peeling (ADVICE r9): the library form for
     * UNKNOWN topologies, where a fixed round count could truncate the
     * peel (long induced chains need one round per two chain nodes).
-    * Loops until a round removes nothing — the no-op round is the
-    * fixpoint certificate the fixed form lacks — with a hard
-    * `maxIter` bound; per-round cost still tracks survivors, lineage
-    * checkpoint-cut. The declared `graph_kcore` keeps the fixed count
-    * because its ORACLE must unroll the same iterations; GraphsSpec
-    * pins this form equal to it on the fixture AND correct on a long
-    * chain the fixed count would truncate. */
-  def kCoreConverged(edges: DataFrame, k: Int, maxIter: Int = 50): DataFrame = {
-    val und = kCoreEdges(edges)
-    Materialize.using(und) {
-      und.count()
-      def inducedDegrees(nodes: DataFrame): DataFrame = kCoreRound(und, nodes)
-      var nodes = Materialize(und.select(col("a").as("id")).distinct())
-      var prev = nodes.count()
-      var iter = 0
-      var converged = false
-      while (!converged && iter < maxIter) {
-        iter += 1
-        nodes = Materialize(inducedDegrees(nodes).filter(col("c") >= k)
-          .select(col("id")))
-        val cur = nodes.count()
-        converged = cur == prev
-        prev = cur
-      }
-      inducedDegrees(nodes).select(col("id"), col("c").cast("long").as("degree"))
+    * Stops at the first level whose count equals the level before it —
+    * peeling only shrinks the node set, so an equal count is an equal
+    * set, the fixpoint certificate the fixed form lacks. Like both CC
+    * forms (r18) it fails loudly at its cap: `maxIter` rounds without a
+    * no-op round throw rather than return a half-peeled core. The
+    * declared `graph_kcore` keeps the fixed count because its ORACLE
+    * must unroll the same iterations; GraphsSpec pins this form equal
+    * to it on the fixture AND correct on a long chain the fixed count
+    * would truncate. */
+  def kCoreConverged(edges: DataFrame, k: Int, maxIter: Int = 50): DataFrame =
+    peel(edges, k) { (und, levels) =>
+      levels.map(nodes => (nodes, nodes.count())).sliding(2).take(maxIter)
+        .collectFirst { case Seq((_, before), (nodes, after)) if after == before =>
+          degrees(und, nodes)
+        }
+        .getOrElse(throw new IllegalStateException(
+          s"kCoreConverged did not converge in $maxIter rounds — a long " +
+            "induced chain peels one or two nodes a round; raise maxIter"))
     }
-  }
 }

@@ -84,9 +84,10 @@ object Linkage {
     * which IS the correct output, not a miss.
     *
     * Scale: links come from the blocked+verified join (never
-    * all-pairs), closure is the O(diameter)-round min-label
-    * propagation (entity clusters are shallow — typo stars, not
-    * chains), and the golden fold is one keyed aggregate. */
+    * all-pairs), closure is the large-star/small-star CC
+    * (`connectedComponentsStar`: O(log n) alternations, so a long
+    * chain of typo links converges instead of hitting a round cap),
+    * and the golden fold is one keyed aggregate. */
   def entityResolution(left: DataFrame, right: DataFrame, maxDist: Int): DataFrame = {
     val links = fuzzyLink(left, right, maxDist)
     val nodes = Materialize(left.select(col("orig_id").as("id"), col("name"))

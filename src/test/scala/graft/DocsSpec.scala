@@ -11,9 +11,20 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class DocsSpec extends AnyFunSuite {
 
+  // docs and code scans both resolve against the working directory (the
+  // checkout under test), so one tree's code is never checked against
+  // another tree's docs
   private def read(name: String): String =
-    new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"/root/repo/$name")), "UTF-8")
+    new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(name)), "UTF-8")
+
+  /** Every `src/main/scala` source file with its comments stripped. */
+  private def mainCode: Seq[(java.nio.file.Path, String)] =
+    java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => p -> new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+        .replaceAll("(?s)/\\*.*?\\*/", "").split("\n").map(_.replaceAll("//.*$", ""))
+        .mkString("\n"))
 
   test("COVERAGE.md totals line equals the declared-query registry") {
     val totalsRe =
@@ -158,24 +169,29 @@ class DocsSpec extends AnyFunSuite {
     // release-in-finally rule cover every site. No allowlist.
     val calls = Seq(".localCheckpoint(", ".checkpoint(", ".persist(", ".unpersist(",
       ".cache(", "StorageLevel")
-    def code(src: String): String =
-      src.replaceAll("(?s)/\\*.*?\\*/", "").split("\n").map(_.replaceAll("//.*$", ""))
-        .mkString("\n")
-    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
-      .toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
-      .filter(_.toString.endsWith(".scala"))
-    def hits(p: java.nio.file.Path): Seq[String] = {
-      val src = code(new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
-      calls.filter(src.contains)
-    }
-    val (policy, rest) = files.partition(_.getFileName.toString == "Materialize.scala")
-    assert(policy.size === 1 && hits(policy.head).size >= 4,
+    def hits(src: String): Seq[String] = calls.filter(src.contains)
+    val (policy, rest) = mainCode.partition(_._1.getFileName.toString == "Materialize.scala")
+    assert(policy.size === 1 && hits(policy.head._2).size >= 4,
       "the census found no materialization calls in Materialize.scala — the scan is measuring nothing")
     assert(rest.size > 50, s"the census scanned only ${rest.size} files")
-    val offenders = rest.map(p => p -> hits(p)).filter(_._2.nonEmpty)
+    val offenders = rest.map { case (p, src) => p -> hits(src) }.filter(_._2.nonEmpty)
     assert(offenders.isEmpty,
       "materialize through graft.Materialize, not per call site: " +
         offenders.map { case (p, h) => s"$p: ${h.mkString(", ")}" }.mkString("; "))
+  }
+
+  test("edge-layout census: only Dedup.undirected repartitions on a") {
+    // one symmetric edge layout for the iterative graph tier: a loop
+    // that re-derives it by hand can drift from the shape the censuses
+    // and plan dumps pin. No allowlist.
+    val layout = """.repartition(col("a"))"""
+    val defRe = """def\s+(\w+)""".r
+    val sites = mainCode.flatMap { case (p, src) =>
+      Iterator.iterate(src.indexOf(layout))(i => src.indexOf(layout, i + 1)).takeWhile(_ >= 0)
+        .map(at => s"${p.getFileName}:${defRe.findAllMatchIn(src.take(at)).toSeq.last.group(1)}")
+    }
+    assert(sites === Seq("Dedup.scala:undirected"),
+      s"build the edge layout with Dedup.undirected, not by hand: ${sites.mkString(", ")}")
   }
 
   test("every declared query name appears in COVERAGE.md's inventory") {

@@ -242,7 +242,7 @@ class GraphsSpec extends SparkSpec {
     // for the three kCore forms — the per-round groupBy(a) degree
     // aggregate reuses the edge layout's hash(a) — was probed only in
     // the broadcast regime. This census pins BOTH regimes on the SHARED
-    // round derivation (Graphs.kCoreEdges / kCoreRound — the same code
+    // round derivation (Dedup.undirected / Graphs.kCoreRound — the same code
     // the three forms execute), the LlmSpec LPA census discipline:
     //  - broadcast regime (survivor frame fits): ZERO shuffle exchanges
     //    per round — both membership joins broadcast the node side and
@@ -256,7 +256,7 @@ class GraphsSpec extends SparkSpec {
     //    exactly 2 edge-sized.
     val fixEdges = graft.llm.Dedup.lpaFixture(
       Tables.documents(spark, sf("sf0.001")).select(col("doc_id")))._2
-    val und = Graphs.kCoreEdges(fixEdges)
+    val und = graft.llm.Dedup.undirected(fixEdges)
     Materialize.using(und) {
       und.count()
       val nodes = Materialize(und.select(col("a").as("id")).distinct())

@@ -2342,14 +2342,14 @@ class LlmSpec extends SparkSpec {
     val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val und = Dedup.undirectedEdges(edges).repartition(col("a"))
+      val und = Dedup.lpaLayout(nodes, edges)
         .persist(StorageLevel.MEMORY_AND_DISK)
       und.count()
       val nodesP = nodes.select(col("id")).repartition(col("id"))
         .persist(StorageLevel.MEMORY_AND_DISK)
       nodesP.count()
       val labels0 = nodesP.select(col("id"), col("id").as("label")).localCheckpoint()
-      val round = Dedup.lpaRound(und, nodesP, labels0)
+      val round = Dedup.attachIsolated(nodesP, Dedup.lpaWinners(und, labels0))
       val (sh, bc) = PlanAudit.exchangeCounts(round)
       val out = round.orderBy(col("id")).collect().toSeq
       und.unpersist(); nodesP.unpersist()

@@ -525,6 +525,28 @@ class PropertySpec extends SparkSpec {
     })
   }
 
+  test("property: labelPropagationTrace round k counts the labels that labelPropagation changes from k−1 to k rounds") {
+    import graft.llm.Dedup
+    // nodes 0..n−1 carry the random edges (self-loops included); nodes
+    // n and n+1 are isolated, n with a self-loop
+    val graphGen: Gen[(Long, List[(Long, Long)])] = for {
+      n <- Gen.choose(2, 10)
+      nEdges <- Gen.choose(0, 18)
+      pairs <- Gen.listOfN(nEdges,
+        Gen.zip(Gen.choose(0L, n - 1L), Gen.choose(0L, n - 1L)))
+    } yield (n.toLong, pairs)
+    check(Prop.forAll(graphGen) { case (n, pairs) =>
+      val nodes = (0L to n + 1L).toDF("id")
+      val edges = ((n, n) :: pairs).toDF("a", "b")
+      val labels = (0 to 5).map(i => Dedup.labelPropagation(nodes, edges, iters = i)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+      val want = (1 to 5).map(k => labels(k).count { case (id, l) => labels(k - 1)(id) != l }.toLong)
+      val got = Dedup.labelPropagationTrace(nodes, edges, iters = 5).collect()
+        .sortBy(_.getLong(0)).map(_.getLong(1)).toSeq
+      Prop(got == want) :| s"trace=$got want=$want edges=$pairs"
+    })
+  }
+
   test("property: sorted-prefix Gini == brute-force mean-absolute-difference identity") {
     // G = Σ(2i−n−1)x_i / (n·Σx) over sorted x must equal the O(n²)
     // definition Σ_ij |x_i−x_j| / (2n·Σx) on random grouped data —

@@ -651,6 +651,17 @@ class RelationalSpec extends SparkSpec {
     assert(truncated.size > 3, "fixture chain too short to demonstrate truncation")
   }
 
+  test("kCoreConverged fails loudly at its cap instead of returning a half-peeled core") {
+    import spark.implicits._
+    import graft.queries.Graphs
+    // the 22-node chain-into-triangle above peels one node a round from
+    // its open end, so 5 rounds end mid-chain with no no-op round
+    val chain = ((1L to 20L).sliding(2).map(s => (s.head, s.last)).toSeq ++
+      Seq((20L, 21L), (21L, 22L), (22L, 20L))).toDF("a", "b")
+    val e = intercept[IllegalStateException](Graphs.kCoreConverged(chain, 2, maxIter = 5))
+    assert(e.getMessage.contains("in 5 rounds"), s"the error must name the cap: ${e.getMessage}")
+  }
+
   test("parquet scans prune columns (ReadSchema ⊂ table schema)") {
     val df = SparkEntry.queries("agg_pricing_summary")(spark, sf("sf0.001"))
     val scan = df.queryExecution.executedPlan.toString
