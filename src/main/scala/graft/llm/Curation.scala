@@ -1187,19 +1187,19 @@ object Curation {
     * maintains incrementally; this in-query form derives them inline so
     * the whole cascade (all four probes, both thresholds, every
     * tiebreak) replays under one DuckDB oracle. The eval-gram set is
-    * eval-slice-sized (broadcast class), and the verdict join tree is
-    * delta-keyed throughout — at 100 TB the wire cost is
-    * O(|delta| · tiers), never corpus-sized. */
+    * eval-slice-sized (broadcast class), and the cascade (one union of
+    * the tiers' hits, one groupBy) is delta-keyed throughout — at
+    * 100 TB the wire cost is O(|delta| · tiers), never corpus-sized. */
   def incrementalRefresh(
       docs: DataFrame, emb: DataFrame, deltaDocs: DataFrame,
       deltaEmb: DataFrame, evalPred: Column, minTokens: Int = 5,
       tau: Double = 0.99): DataFrame = {
-    val ex = Dedup.incrementalDedup(docs, deltaDocs)
-    val nr = Dedup.incrementalNearDedup(docs, deltaDocs)
-    val sm = Similarity.incrementalSemDedup(emb, deltaEmb, tau)
+    val ex = Dedup.hashProbe(Dedup.corpusHashIndex(docs), deltaDocs, "inner")
+    val nr = Dedup.incrementalNearHits(docs, deltaDocs)
+    val sm = Similarity.incrementalSemHits(emb, deltaEmb, tau)
     val contam = gramHashRows(deltaDocs, 8)
       .join(evalGrams(docs, evalPred), Seq("gram_h"), "left_semi")
-      .select(col("doc_id")).distinct()
+      .select(col("doc_id"))
     refreshCascade(deltaDocs, ex, nr, sm, contam, minTokens)
   }
 
@@ -1222,15 +1222,18 @@ object Curation {
     * dependence: `assigned` is bucketed by cluster and the corpus
     * vector rides THROUGH the cluster join into the verify, so no
     * corpus-sized side ever shuffles no matter how large the batch —
-    * a 100×-scale delta just shuffles itself into the buckets). Also
-    * pinned row-identical to the in-query [[incrementalRefresh]] over
-    * the same corpus. */
+    * a 100×-scale delta just shuffles itself into the buckets). Each
+    * tier hands [[refreshCascade]] its HITS only — no per-tier
+    * delta ⟕ hits verdict frame is built — and one union + groupBy
+    * keeps the first tier that fired. Pinned row-identical to the
+    * in-query [[incrementalRefresh]] over the same corpus (LlmSpec on
+    * the planted classes, PropertySpec on seeded random batches). */
   def incrementalRefreshServed(
       deltaDocs: DataFrame, deltaEmb: DataFrame, spark: SparkSession,
       hashTable: String, bandTable: String, ivfPath: String,
       evGrams: DataFrame, minTokens: Int = 5, tau: Double = 0.99): DataFrame = {
-    val ex = Dedup.probeHashIndex(deltaDocs, spark, hashTable)
-    val nr = Dedup.probeBandIndex(deltaDocs, spark, bandTable)
+    val ex = Dedup.hashProbe(spark.table(hashTable), deltaDocs, "inner")
+    val nr = Dedup.bandIndexHits(deltaDocs, spark, bandTable)
     val assigned = spark.table(Similarity.ivfPinnedTable(ivfPath))
     val seeds = Similarity.pinnedSeeds(spark, ivfPath)
     val pairs = deltaEmb
@@ -1239,10 +1242,10 @@ object Curation {
       .join(assigned.select(
         col("vec_id").as("corpus_id"), col("v").as("cv"), col("cluster")), "cluster")
       .select(col("delta_id"), col("dv"), col("corpus_id"), col("cv"))
-    val sm = Similarity.semVerdictTail(pairs, deltaEmb, tau)
+    val sm = Similarity.semHits(pairs, tau)
     val contam = gramHashRows(deltaDocs, 8)
       .join(evGrams, Seq("gram_h"), "left_semi")
-      .select(col("doc_id")).distinct()
+      .select(col("doc_id"))
     refreshCascade(deltaDocs, ex, nr, sm, contam, minTokens)
   }
 
@@ -1269,14 +1272,23 @@ object Curation {
     * at ingest). Returns the number of docs routed through admission
     * (train verdicts + self-heal replays; a fully-replayed batch
     * therefore returns its former train count while appending
-    * nothing). */
+    * nothing). The count is a metric observed while the admitted ids
+    * are materialized, so reading it launches no job. It is the named
+    * `observe` read back from the materializing query, not an
+    * `Observation` object: the first `Observation` creates the
+    * session's `ObservationManager`, which does not serialize, and
+    * every later task closure that captures the session (a trained
+    * `LogisticRegressionModel` carries it in its training summary) then
+    * fails with "Task not serializable". */
   def admitRefreshBatch(
       verdicts: DataFrame, deltaDocs: DataFrame, deltaEmb: DataFrame,
       spark: SparkSession, hashTable: String, bandTable: String,
       ivfPath: String): Long = {
-    val admitted = Materialize(verdicts.filter(col("verdict") === "train" ||
+    val routed = verdicts.filter(col("verdict") === "train" ||
         (col("verdict") === "exact_dup" && col("dup_of") === col("doc_id")))
-      .select(col("doc_id")))
+      .select(col("doc_id"))
+      .observe("graft_admitted", count(lit(1)).as("n"))
+    val admitted = Materialize(routed)
     val docsAdm = deltaDocs.join(admitted, Seq("doc_id"), "left_semi")
     val labelCol =
       if (deltaEmb.columns.contains("label")) col("label").cast("int")
@@ -1288,26 +1300,33 @@ object Curation {
         .join(admitted.withColumnRenamed("doc_id", "vec_id"), Seq("vec_id"), "left_semi")
         .select(col("vec_id"), labelCol.as("label"), col("v").as("embedding")),
       spark, ivfPath)
-    admitted.count()
+    routed.queryExecution.observedMetrics("graft_admitted").getLong(0)
   }
 
-  /** [[incrementalRefresh]]'s verdict CASCADE alone, over the three
-    * tiers' verdict frames (each the (id, status, dup_of) convention —
-    * rows may cover only the delta ids a tier SAW: absent rows read as
-    * that tier not firing, so the streaming gate can hand in frames
-    * assembled from sunk candidate hits) and the contaminated-id set.
-    * Shared verbatim by the batch query and the streaming probe so
-    * stream ≡ batch is the same code path from the tier frames down. */
+  /** [[incrementalRefresh]]'s verdict CASCADE alone, over each tier's
+    * HITS only — (delta_id, dup_of) frames for the exact, near and
+    * semantic tiers, and the contaminated ids (doc_id, duplicates
+    * allowed). A delta doc absent from a tier's hits is that tier not
+    * firing, so the streaming gate hands in hit frames assembled from
+    * sunk candidate hits. Every hit is tagged (rank, dup_of) by its
+    * cascade position, and the batch itself enters the same union as
+    * its lowest-ranked rows: stage 0 (rank 0), the token gate (5) and
+    * the default 'train' (6). One groupBy(doc_id) with
+    * min(struct(rank, dup_of)) then keeps the FIRST verdict that fires
+    * — no per-tier verdict frame and no join back to the batch (which
+    * cost a batch-sized exchange and a broadcast of the grouped hits
+    * per call). Groups without a batch row (a hit on an id the batch
+    * does not carry) are dropped. Shared verbatim by the in-query,
+    * served and streaming forms, so stream ≡ batch is the same code
+    * path from the hit frames down. */
   private[graft] def refreshCascade(
       deltaDocs: DataFrame, exact: DataFrame, near: DataFrame,
       sem: DataFrame, contamIds: DataFrame, minTokens: Int): DataFrame = {
-    val ex = exact.select(col("doc_id"),
-      col("status").as("ex_s"), col("dup_of").as("ex_d"))
-    val nr = near.select(col("doc_id"),
-      col("status").as("nr_s"), col("dup_of").as("nr_d"))
-    val sm = sem.select(col("vec_id").as("doc_id"),
-      col("status").as("sm_s"), col("dup_of").as("sm_d"))
-    val contam = contamIds.select(col("doc_id")).withColumn("contam", lit(1))
+    def hit(rank: Column, dupOf: Column, inBatch: Boolean) = Seq(
+      struct(rank.as("rank"), dupOf.cast("long").as("dup_of")).as("hit"),
+      lit(inBatch).as("in_batch"))
+    def tier(hits: DataFrame, rank: Int) =
+      hits.select(col("delta_id").as("doc_id") +: hit(lit(rank), col("dup_of"), false): _*)
     // stage 0 — BATCH-LOCAL exact dedup (VERDICT r16 task 5): two
     // copies arriving INSIDE one batch both probe the standing indexes
     // as new (neither is in any index yet), so without this stage both
@@ -1325,31 +1344,24 @@ object Curation {
     // more and cost ~0.9 s on the headline fixture).
     val byText = org.apache.spark.sql.expressions.Window
       .partitionBy(Dedup.contentKey(col("text"))) // 16-byte key (r21)
-    deltaDocs
+    val bMin = min(col("doc_id")).over(byText)
+    val batch = deltaDocs.select(col("doc_id") +: hit(
+      when(bMin < col("doc_id"), 0)
+        .when(size(split(col("text"), " ")) < minTokens, 5).otherwise(6),
+      when(bMin < col("doc_id"), bMin).otherwise(-1L), true): _*)
+    val verdicts = Seq("exact_dup", "exact_dup", "near_dup", "sem_dup",
+      "contaminated", "low_quality", "train")
+    batch
+      .unionByName(tier(exact, 1))
+      .unionByName(tier(near, 2))
+      .unionByName(tier(sem, 3))
+      .unionByName(contamIds.select(col("doc_id") +: hit(lit(4), lit(-1L), false): _*))
+      .groupBy(col("doc_id"))
+      .agg(min(col("hit")).as("hit"), max(col("in_batch")).as("in_batch"))
+      .filter(col("in_batch"))
       .select(col("doc_id"),
-        size(split(col("text"), " ")).cast("long").as("n_tokens"),
-        min(col("doc_id")).over(byText).as("b_min"))
-      .withColumn("b_keep",
-        when(col("b_min") < col("doc_id"), col("b_min")))
-      .drop("b_min")
-      .join(ex, Seq("doc_id"), "left")
-      .join(nr, Seq("doc_id"), "left")
-      .join(sm, Seq("doc_id"), "left")
-      .join(contam, Seq("doc_id"), "left")
-      .select(
-        col("doc_id"),
-        when(col("b_keep").isNotNull, "exact_dup")
-          .when(col("ex_s") === "dup", "exact_dup")
-          .when(col("nr_s") === "near_dup", "near_dup")
-          .when(col("sm_s") === "near_dup", "sem_dup")
-          .when(col("contam").isNotNull, "contaminated")
-          .when(col("n_tokens") < minTokens, "low_quality")
-          .otherwise("train").as("verdict"),
-        when(col("b_keep").isNotNull, col("b_keep"))
-          .when(col("ex_s") === "dup", col("ex_d"))
-          .when(col("nr_s") === "near_dup", col("nr_d"))
-          .when(col("sm_s") === "near_dup", col("sm_d"))
-          .otherwise(lit(-1L)).as("dup_of"))
+        element_at(typedLit(verdicts), col("hit.rank") + 1).as("verdict"),
+        col("hit.dup_of").as("dup_of"))
       .orderBy(col("doc_id"))
   }
 

@@ -1,6 +1,7 @@
 package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.functions._
 
 import graft.{Materialize, Q, Tables}
@@ -749,6 +750,11 @@ object Similarity {
     * build choice survives the whole lifecycle. */
   def ivfPinnedBuckets(nCells: Int): Int = math.max(1, nCells / 2)
 
+  /** The `assigned` table's layout: bucketed by cluster, sorted by
+    * (cluster, vec_id). */
+  private def assignedSpec(buckets: Int) =
+    BucketSpec(buckets, Seq("cluster"), Seq("cluster", "vec_id"))
+
   /** The harness-default pinned bucket count —
     * `ivfPinnedBuckets(16)` = 8 for the default 16-cell index (kept
     * as a val for the specs' file-count assertions). */
@@ -839,12 +845,8 @@ object Similarity {
       .limit(nCells)
       .select(col("vec_id").as("seed_id"), col("v").as("sv"))
     seeds.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$path/seeds")
-    pinnedAssign(e, seeds)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .bucketBy(nBuckets, "cluster").sortBy("cluster", "vec_id")
-      .option("path", s"$path/assigned").saveAsTable(ivfPinnedTable(path))
-    Dedup.writeSpecSidecar(spark, s"$path/assigned", nBuckets,
-      Seq("cluster"), Seq("cluster", "vec_id"), epoch = epoch)
+    Dedup.bucketedCreate(pinnedAssign(e, seeds), ivfPinnedTable(path),
+      s"$path/assigned", assignedSpec(nBuckets), epoch = epoch)
     // same writer-lease deferral as resolveCommittedCandidate's sweep
     // (review r20): an uncommitted refit candidate with a fresh lease
     // may be a LIVE writer mid-swap on another driver — deleting its
@@ -890,14 +892,19 @@ object Similarity {
     * land the rows in the bucketed table under its own spec
     * ([[Dedup.bucketedAppend]]) — the k-means [[appendIvfIndex]] with
     * every step SQL-expressible, which is what lets the driver
-    * hash-check probe-after-append cross-engine. Idempotent under
-    * at-least-once redelivery: the anti-join reads only the delta's
-    * target clusters (cluster `isin` → bucket pruning), mirroring the
-    * path family's [[dropAlreadyIndexed]]. */
+    * hash-check probe-after-append cross-engine. The assignment is the
+    * MAP-ONLY [[pinnedAssignExpr]] (LlmSpec pins it ≡ the aggregate
+    * [[pinnedAssign]]), materialized once: the target-cluster collect
+    * and the write read the same rows instead of each re-running a
+    * cross join + groupBy + join. Idempotent under at-least-once
+    * redelivery: the anti-join reads only the delta's target clusters
+    * (cluster `isin` → bucket pruning), mirroring the path family's
+    * [[dropAlreadyIndexed]]. */
   def appendIvfIndexPinned(delta: DataFrame, spark: SparkSession, path: String): Unit = {
-    val seeds = Tables.parquet(spark, s"$path/seeds")
-    val e = delta.select(col("vec_id"), col("label"), asDouble(col("embedding")).as("v"))
-    val assignedDelta = pinnedAssign(e, seeds)
+    val seeds = pinnedSeeds(spark, path)
+    val assignedDelta = Materialize(
+      delta.select(col("vec_id"), col("label"), asDouble(col("embedding")).as("v"))
+        .withColumn("cluster", pinnedAssignExpr(seeds, col("v"))))
     val targets = assignedDelta.select(col("cluster")).distinct()
       .collect().map(_.get(0))
     val existing = spark.table(ivfPinnedTable(path))
@@ -944,16 +951,12 @@ object Similarity {
     val nBuckets = meta.bucketSpec.map(_.numBuckets).getOrElse(IvfPinnedBuckets)
     val newPath =
       s"$path/assigned_refit_${java.util.UUID.randomUUID().toString.take(8)}"
-    pinnedAssign(rows, seeds)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .bucketBy(nBuckets, "cluster").sortBy("cluster", "vec_id")
-      .option("path", newPath).saveAsTable(s"${t}_compacting")
     // swap-commit protocol (r19): the candidate sidecar is mid-swap
     // (committed=false, predecessor epoch + 1) until the rename lands —
     // so a crash anywhere in this window rolls a catalog-loss boot back
     // to the still-committed predecessor, deterministically
-    Dedup.writeSpecSidecar(spark, newPath, nBuckets,
-      Seq("cluster"), Seq("cluster", "vec_id"),
+    Dedup.bucketedCreate(pinnedAssign(rows, seeds), s"${t}_compacting", newPath,
+      assignedSpec(nBuckets),
       epoch = Dedup.sidecarEpoch(spark, meta.location.toString) + 1L,
       committed = false)
     Dedup.fenceSwapCandidate(spark, newPath)
@@ -1266,42 +1269,46 @@ object Similarity {
   /** The verify + verdict TAIL of [[incrementalSemDedup]], over a raw
     * (delta_id, corpus_id) candidate frame that may carry duplicates
     * (a streaming generator's per-batch emissions) — the
-    * `nearDupVerdictFrom` convention on the embedding tier: distinct,
-    * exact rounded cosine ≥ tau, deterministic min-id corpus victor,
-    * every delta vector reported 'near_dup' or 'new'. */
+    * `nearDupVerdictFrom` convention on the embedding tier: every
+    * delta vector reported 'near_dup' or 'new' from [[semHitsFrom]]. */
   private[graft] def semVerdictFrom(
+      cand: DataFrame, emb: DataFrame, delta: DataFrame,
+      tau: Double = 0.99): DataFrame =
+    semVerdict(delta, semHitsFrom(cand, emb, delta, tau))
+
+  /** The verified HITS of a raw candidate frame: distinct pairs, both
+    * vectors fetched by id, then [[semHits]] — (delta_id, dup_of). */
+  private[graft] def semHitsFrom(
       cand: DataFrame, emb: DataFrame, delta: DataFrame,
       tau: Double = 0.99): DataFrame = {
     val e = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-    val pairs = cand.select(col("delta_id"), col("corpus_id")).distinct()
-      .join(delta.select(col("vec_id").as("delta_id"), col("v").as("dv")), "delta_id")
-      .join(e.select(col("vec_id").as("corpus_id"), col("v").as("cv")), "corpus_id")
-    semVerdictTail(pairs, delta, tau)
+    semHits(
+      cand.select(col("delta_id"), col("corpus_id")).distinct()
+        .join(delta.select(col("vec_id").as("delta_id"), col("v").as("dv")), "delta_id")
+        .join(e.select(col("vec_id").as("corpus_id"), col("v").as("cv")), "corpus_id"),
+      tau)
   }
 
-  /** [[semVerdictFrom]]'s verify-and-verdict TAIL over candidate
-    * pairs that already CARRY both vectors (delta_id, dv, corpus_id,
-    * cv): rounded-cosine ≥ tau verify, min-id victor, 'new'/'near_dup'
-    * status. Split out for the served gate (VERDICT r16 task 4),
-    * whose cluster join against the bucketed `assigned` table carries
-    * the corpus vector through — re-fetching it by corpus_id would
-    * shuffle the FULL assigned table on vec_id, the corpus-sized
-    * exchange the bucketing exists to avoid. Pair uniqueness is the
-    * caller's contract there (one cluster per vector ⇒ one pair per
-    * (delta, corpus) couple), matching the distinct() the generic
-    * path applies before the vector joins. */
-  private[graft] def semVerdictTail(
-      pairs: DataFrame, delta: DataFrame, tau: Double = 0.99): DataFrame = {
-    val dups = pairs
+  /** The semantic tier's HITS over candidate pairs that already CARRY
+    * both vectors (delta_id, dv, corpus_id, cv): rounded-cosine ≥ tau
+    * verify, min-id victor — (delta_id, dup_of). The served gate
+    * (VERDICT r16 task 4) calls it directly: its cluster join against
+    * the bucketed `assigned` table carries the corpus vector through —
+    * re-fetching it by corpus_id would shuffle the FULL assigned table
+    * on vec_id, the corpus-sized exchange the bucketing exists to
+    * avoid. Pair uniqueness is the caller's contract there (one
+    * cluster per vector ⇒ one pair per (delta, corpus) couple),
+    * matching the distinct() [[semHitsFrom]] applies before the vector
+    * joins. */
+  private[graft] def semHits(pairs: DataFrame, tau: Double = 0.99): DataFrame =
+    pairs
       .filter(round(cosine(col("dv"), col("cv")), 6) + lit(0.0) >= tau)
       .groupBy(col("delta_id")).agg(min(col("corpus_id")).as("dup_of"))
-    delta.select(col("vec_id"))
-      .join(dups.withColumnRenamed("delta_id", "vec_id"), Seq("vec_id"), "left")
-      .select(col("vec_id"),
-        when(col("dup_of").isNull, "new").otherwise("near_dup").as("status"),
-        coalesce(col("dup_of"), lit(-1L)).as("dup_of"))
+
+  /** The semantic tier's 'near_dup'/'new' verdict: delta ⟕ hits. */
+  private def semVerdict(delta: DataFrame, hits: DataFrame): DataFrame =
+    Dedup.verdictFrom(delta.select(col("vec_id")), hits, "near_dup")
       .orderBy(col("vec_id"))
-  }
 
   /** Incremental (delta-vs-corpus) SEMANTIC dedup — `incrementalDedup`
     * / `incrementalNearDedup`'s missing third tier: new EMBEDDINGS
@@ -1319,6 +1326,12 @@ object Similarity {
     * all replay in SQL. */
   def incrementalSemDedup(
       emb: DataFrame, delta: DataFrame, tau: Double = 0.99,
+      nCells: Int = 16): DataFrame =
+    semVerdict(delta, incrementalSemHits(emb, delta, tau, nCells))
+
+  /** [[incrementalSemDedup]]'s HITS alone: (delta_id, dup_of). */
+  private[graft] def incrementalSemHits(
+      emb: DataFrame, delta: DataFrame, tau: Double = 0.99,
       nCells: Int = 16): DataFrame = {
     val e = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
     val seeds = e
@@ -1330,7 +1343,7 @@ object Similarity {
       .join(pinnedAssign(e, seeds)
         .select(col("vec_id").as("corpus_id"), col("cluster")), "cluster")
       .select(col("delta_id"), col("corpus_id"))
-    semVerdictFrom(cand, emb, delta, tau)
+    semHitsFrom(cand, emb, delta, tau)
   }
 
   /** Shared oracle for `dedup_semantic_incremental` and
@@ -2845,18 +2858,11 @@ object Similarity {
   def buildSrpIndex(
       emb: DataFrame, spark: SparkSession, table: String, path: String,
       buckets: Int = 8): Unit = {
-    srpBanded(emb)
-      .write.mode("overwrite")
-      .bucketBy(buckets, "band_idx", "band_sig").sortBy("band_idx", "band_sig")
-      .option("path", s"$path/bands").saveAsTable(s"${table}_bands")
-    Dedup.writeSpecSidecar(spark, s"$path/bands", buckets,
-      Seq("band_idx", "band_sig"), Seq("band_idx", "band_sig"))
-    emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      .write.mode("overwrite")
-      .bucketBy(buckets, "vec_id").sortBy("vec_id")
-      .option("path", s"$path/vecs").saveAsTable(s"${table}_vecs")
-    Dedup.writeSpecSidecar(spark, s"$path/vecs", buckets,
-      Seq("vec_id"), Seq("vec_id"))
+    val bandKeys = Seq("band_idx", "band_sig")
+    Dedup.bucketedCreate(srpBanded(emb), s"${table}_bands", s"$path/bands",
+      BucketSpec(buckets, bandKeys, bandKeys))
+    Dedup.bucketedCreate(emb.select(col("vec_id"), asDouble(col("embedding")).as("v")),
+      s"${table}_vecs", s"$path/vecs", BucketSpec(buckets, Seq("vec_id"), Seq("vec_id")))
   }
 
   /** Incremental (append) maintenance for [[buildSrpIndex]]: SRP band
@@ -2870,7 +2876,8 @@ object Similarity {
     * and the probe's verify join would emit duplicate top-k rows
     * (unlike the near tier, whose min-victor aggregate absorbs
     * duplicates). Cost: one delta-bounded exchange (the index side
-    * reads co-located); derivations stay map-only and the build's two
+    * reads co-located) plus each bucketed write's delta-sized
+    * repartition; derivations stay map-only and the build's two
     * corpus-sized exchanges are never re-paid (VERDICT r14 task 1). */
   def appendSrpIndex(delta: DataFrame, spark: SparkSession, table: String): Unit = {
     val newVecs = delta.join(

@@ -192,14 +192,18 @@ object GateOps {
 
   /** The WHEN-TO-COMPACT rule as code (r17; the refit-cadence
     * discipline applied to the file-count axis): a bucketed serving
-    * table accumulates one file set per [[Dedup.bucketedAppend]], and
-    * while the probe PLAN never regresses (hash partitioning is a
-    * property of the spec), K appends are K+1 files of per-task open
-    * overhead and lost within-file sort locality. Returns true when
-    * any bucket holds more than `maxFilesPerBucket` files — the
+    * table gains at most one file per bucket per
+    * [[Dedup.bucketedAppend]] (the one bucketed writer repartitions on
+    * the bucket columns), and while the probe PLAN never regresses
+    * (hash partitioning is a property of the spec), K appends are up
+    * to K+1 files a bucket of per-task open overhead and lost
+    * within-file sort locality. Returns true when the table holds
+    * more than `maxFilesPerBucket` files a bucket on average — the
     * operator then runs [[compactUnderGate]] at the next quiet
-    * window. File counts come from the table's own location listing
-    * via the Hadoop FileSystem API (ADVICE r17: the old
+    * window. Under the default, a table whose build and appends fill
+    * every bucket trips on its 8th append (LlmSpec pins it). File
+    * counts come from the table's own location listing via the Hadoop
+    * FileSystem API (ADVICE r17: the old
     * `java.io.File` walk silently read 0 files for any hdfs:/s3a:
     * location — under-counting would suppress compaction forever;
     * the FS API is the object store's list-prefix at scale and

@@ -951,18 +951,17 @@ object StreamingAlerts {
         val hits = Materialize(Tables.parquet(s, s"$path/hit_sink"))
         val delta = Curation.refreshDeltaDocs(docs)
         val ex = hits.filter(col("tier") === "x")
-          .select(col("delta_id").as("doc_id"), col("cand_id")).distinct()
-          .select(col("doc_id"), lit("dup").as("status"), col("cand_id").as("dup_of"))
-        val nr = Dedup.nearDupVerdictFrom(
+          .select(col("delta_id"), col("cand_id").as("dup_of"))
+        val nr = Dedup.nearDupHitsFrom(
           hits.filter(col("tier") === "n")
             .select(col("delta_id"), col("cand_id").as("corpus_id")),
           docs, delta)
-        val se = Similarity.semVerdictFrom(
+        val se = Similarity.semHitsFrom(
           hits.filter(col("tier") === "s")
             .select(col("delta_id"), col("cand_id").as("corpus_id")),
           emb, Curation.refreshDeltaEmb(emb))
         val contamIds = hits.filter(col("tier") === "c")
-          .select(col("delta_id").as("doc_id")).distinct()
+          .select(col("delta_id").as("doc_id"))
         Materialize(Curation.refreshCascade(delta, ex, nr, se, contamIds, minTokens = 5))
       } finally {
         s.sql(s"DROP TABLE IF EXISTS $hashTbl")

@@ -194,6 +194,27 @@ class DocsSpec extends AnyFunSuite {
       s"build the edge layout with Dedup.undirected, not by hand: ${sites.mkString(", ")}")
   }
 
+  test("bucketed-write census: only Dedup.bucketedWriter calls bucketBy in the llm and streaming tiers") {
+    // one bucketed writer for the serving indexes: it repartitions on
+    // the bucket columns first, so every build, append, compaction and
+    // refit lands at most one file per bucket. A hand-written bucketBy
+    // skips that and lands one file per (task, bucket) pair. No
+    // allowlist.
+    val call = ".bucketBy("
+    val defRe = """def\s+(\w+)""".r
+    val scoped = mainCode.filter { case (p, _) =>
+      val s = p.toString.replace('\\', '/')
+      s.contains("/graft/llm/") || s.contains("/graft/streaming/")
+    }
+    assert(scoped.size > 5, s"the census scanned only ${scoped.size} files")
+    val sites = scoped.flatMap { case (p, src) =>
+      Iterator.iterate(src.indexOf(call))(i => src.indexOf(call, i + 1)).takeWhile(_ >= 0)
+        .map(at => s"${p.getFileName}:${defRe.findAllMatchIn(src.take(at)).toSeq.last.group(1)}")
+    }
+    assert(sites === Seq("Dedup.scala:bucketedWriter"),
+      s"write serving indexes through Dedup.bucketedWriter, not by hand: ${sites.mkString(", ")}")
+  }
+
   test("every declared query name appears in COVERAGE.md's inventory") {
     // VERDICT r7 task 5: the totals line is derived-checked above, but two
     // line-by-line rows were still skipped in r7 — names, not just counts,

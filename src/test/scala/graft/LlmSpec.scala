@@ -1687,7 +1687,7 @@ class LlmSpec extends SparkSpec {
       }
       assert(!streaming.GateOps.compactionDue(spark, tbl, maxFilesPerBucket = 1),
         "a fresh build must not demand compaction")
-      // sustained appends degrade the layout: one file set per append
+      // sustained appends degrade the layout: up to one file per bucket per append
       Dedup.appendGramIndex(s2, spark, tbl)
       Dedup.appendGramIndex(s3, spark, tbl)
       val degraded = dataFiles()
@@ -1732,8 +1732,10 @@ class LlmSpec extends SparkSpec {
     // partitioning, band/SRP via the idempotence anti-join against
     // the id-bucketed side table (r15) followed by a map-only
     // derivation. One delta-bounded exchange each; the index side
-    // always reads its bucket files co-located, and the bucketed
-    // write adds no exchange (rows route to bucket files per task).
+    // always reads its bucket files co-located. The bucketed writer's
+    // repartition on the bucket columns reuses the hash/gram exchange
+    // (the delta is repartitioned into the buckets up front) and adds
+    // one delta-sized exchange to the band/SRP writes.
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     val corpus = Tables.documents(spark, sf("sf0.001")).select(col("doc_id"), col("text"))
     val base = corpus.filter(col("doc_id") < 200)
@@ -2889,6 +2891,71 @@ class LlmSpec extends SparkSpec {
     }
   }
 
+  test("every bucketed append lands at most one file per bucket; the default policy trips on append 8") {
+    // The one bucketed writer repartitions on the table's bucket
+    // columns into numBuckets partitions before bucketBy, so an append
+    // adds at most one part file per bucket however many partitions its
+    // delta spans. Each build below fills all B buckets and each 50-row
+    // append fills them all again, so after k appends a table holds
+    // B·(1 + k) files and GateOps.compactionDue's default policy (more
+    // than 8 files a bucket) first trips on append 8. A write without
+    // the repartition lands one file per (task, bucket) pair: the band,
+    // token and SRP appends of a 4-partition delta added 20–32 files
+    // each and tripped the policy by append 3.
+    val corpus = Tables.documents(spark, sf("sf0.001")).select(col("doc_id"), col("text"))
+    val emb = Tables.embeddings(spark, sf("sf0.001"))
+    val uid = java.util.UUID.randomUUID().toString.replace("-", "")
+    val (hashT, bandT, gramT, srpT, labelT) =
+      (s"ofb_hash_$uid", s"ofb_band_$uid", s"ofb_gram_$uid", s"ofb_srp_$uid", s"ofb_lbl_$uid")
+    val path = tempDir("one_file_per_bucket")
+    val ivf = s"$path/ivf"
+    val noEdges = spark.range(0).select(col("id").as("a"), col("id").as("b"))
+    Dedup.buildHashIndex(corpus.filter(col("doc_id") < 100), spark, hashT, s"$path/$hashT")
+    Dedup.buildBandIndex(corpus.filter(col("doc_id") < 100), spark, bandT, s"$path/$bandT")
+    Dedup.buildGramIndex(corpus.filter(col("doc_id") < 100), spark, gramT, s"$path/$gramT")
+    Similarity.buildSrpIndex(emb.filter(col("vec_id") < 100), spark, srpT, s"$path/$srpT")
+    Similarity.buildIvfIndexPinned(emb.filter(col("vec_id") < 100), ivf)
+    Dedup.buildGroupLabels(corpus.filter(col("doc_id") < 100).select(col("doc_id").as("id")),
+      noEdges, spark, labelT, s"$path/$labelT")
+    val tables = Seq(hashT, s"${bandT}_bands", s"${bandT}_toks", gramT,
+      s"${srpT}_bands", s"${srpT}_vecs", Similarity.ivfPinnedTable(ivf), labelT)
+    def files(t: String): Int = {
+      val loc = new org.apache.hadoop.fs.Path(spark.sessionState.catalog
+        .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(t)).location)
+      loc.getFileSystem(spark.sessionState.newHadoopConf()).listStatus(loc)
+        .count(_.getPath.getName.startsWith("part-"))
+    }
+    def buckets(t: String): Int = Dedup.bucketSpecOf(spark, t).numBuckets
+    try {
+      for (t <- tables) assert(files(t) === buckets(t), s"the build of $t must fill every bucket once")
+      for (k <- 1 to 8) {
+        def slice(df: DataFrame, id: String) =
+          df.filter(col(id) >= 50 + 50 * k && col(id) < 100 + 50 * k).repartition(4)
+        val (d, e) = (slice(corpus, "doc_id"), slice(emb, "vec_id"))
+        assert(d.rdd.getNumPartitions === 4 && e.rdd.getNumPartitions === 4)
+        val before = tables.map(t => t -> files(t)).toMap
+        Dedup.appendHashIndex(d, spark, hashT)
+        Dedup.appendBandIndex(d, spark, bandT)
+        Dedup.appendGramIndex(d, spark, gramT)
+        Similarity.appendSrpIndex(e, spark, srpT)
+        Similarity.appendIvfIndexPinned(e, spark, ivf)
+        Dedup.appendGroupLabels(d.select(col("doc_id").as("id")), noEdges, spark, labelT)
+        for (t <- tables) {
+          val added = files(t) - before(t)
+          assert(added >= 1 && added <= buckets(t),
+            s"append $k added $added files to $t (${buckets(t)} buckets)")
+          assert(streaming.GateOps.compactionDue(spark, t) === (k == 8),
+            s"$t after append $k holds ${files(t)} files in ${buckets(t)} buckets: " +
+              "the default policy must trip on append 8 exactly")
+        }
+      }
+    } finally {
+      Seq(hashT, s"${bandT}_bands", s"${bandT}_toks", gramT, s"${srpT}_bands",
+        s"${srpT}_vecs", labelT).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      Similarity.dropIvfIndexPinned(spark, ivf)
+    }
+  }
+
   test("k-means refit from the index: fresh centroids, full corpus served, corpus never read (r17)") {
     val emb = Tables.embeddings(spark, sf("sf0.001"))
     val path = tempDir("ivf_krefit")
@@ -3096,7 +3163,7 @@ class LlmSpec extends SparkSpec {
     // delta; this pins that the CASCADE's composed plan preserves them:
     // with broadcast disabled, no shuffle exchange sits above a scan of
     // the hash / band / token / ASSIGNED bucketed tables (their
-    // co-location survives the four-way join tree). The pinned-IVF
+    // co-location survives the composed hit union and cascade). The pinned-IVF
     // `assigned` side was the last broadcast dependence (VERDICT r16
     // task 4: directory-partitioned, so a batch outgrowing the
     // broadcast threshold re-partitioned the corpus) — it is now

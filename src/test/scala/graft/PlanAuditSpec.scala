@@ -295,13 +295,16 @@ class PlanAuditSpec extends SparkSpec {
       info(f"served refresh shuffled $srec records / $sb bytes over " +
         f"$nDelta delta docs (${srec.toDouble / nDelta}%.1f recs/doc, " +
         f"${sb.toDouble / nDelta}%.0f B/doc)")
-      // measured ≈158 recs / ≈4.8 KB per DELTA DOC at sf0.01 (gram
-      // keys + band keys + verify pairs), ≈128 recs / 2.3 KB at sf0.1 —
-      // the delta-bounded property is per-doc wire cost staying flat
-      // while the delta grows, so the gate is a RATIO to the delta row
-      // count (ADVICE r16: absolute ceilings flake on fixture size /
-      // partition count / AQE changes without any plan regression).
-      // Headroom ~1.6× over measured; the raw-corpus pathology reads
+      // measured ≈52 recs / ≈1.4 KB per DELTA DOC at sf0.01 (gram
+      // keys + band keys + verify pairs + each tier's hits; ≈158 recs /
+      // 4.8 KB at sf0.01 and ≈128 / 2.3 KB at sf0.1 while every tier
+      // built a delta ⟕ hits verdict frame and the cascade joined all
+      // four) — the delta-bounded property is per-doc wire cost
+      // staying flat while the delta grows, so the gate is a RATIO to
+      // the delta row count (ADVICE r16: absolute ceilings flake on
+      // fixture size / partition count / AQE changes without any plan
+      // regression). The gate was set at ~1.6× the earlier measure
+      // (~4.8× the current one); the raw-corpus pathology reads
       // ~800 recs/doc at sf0.01 and ~3,000 at sf0.1 — far past it.
       assert(srec <= nDelta * 250L,
         f"served refresh shuffled ${srec.toDouble / nDelta}%.1f recs per delta doc")

@@ -31,13 +31,13 @@ class PropertySpec extends SparkSpec {
   private val propRuns: Int =
     sys.env.get("GRAFT_PROP_RUNS").map(_.toInt).getOrElse(8)
 
-  private def check(p: Prop): Unit = {
+  private def check(p: Prop, runs: Int = propRuns): Unit = {
     val res = SCTest.check(
       SCTest.Parameters.default
-        .withMinSuccessfulTests(propRuns)
+        .withMinSuccessfulTests(runs)
         .withWorkers(1)
         .withInitialSeed(org.scalacheck.rng.Seed(propSeed)), p)
-    assert(res.passed, s"seed=$propSeed runs=$propRuns: ${res.status.toString}")
+    assert(res.passed, s"seed=$propSeed runs=$runs: ${res.status.toString}")
   }
 
   /** A random multi-user timeline: (event_id, day, user, isError, value). */
@@ -318,6 +318,82 @@ class PropertySpec extends SparkSpec {
         .collect().map(_.getAs[Long]("doc_id")).toSet
       got == expected
     })
+  }
+
+  test("property: the served refresh cascade equals the in-query incrementalRefresh row for row") {
+    // Seeded random batches against one corpus: copies, exact-token
+    // revisions (a repeated last token keeps the token set), paraphrases
+    // carrying the source vector, eval leaks, stubs, intra-batch twins,
+    // novel docs and one doc with no embedding row. The served gate
+    // (persisted indexes, hit frames per tier) must give the in-query
+    // cascade's verdicts row for row; the classes seen across the runs
+    // must cover every verdict, so the equality is never vacuous.
+    import graft.llm.{Curation, Dedup, Similarity}
+    val dir = sf("sf0.001")
+    val corpus = Tables.documents(spark, dir).select(col("doc_id"), col("text")).localCheckpoint()
+    val emb = Tables.embeddings(spark, dir)
+    val texts = corpus.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    val vecs = emb.select(col("vec_id"), col("embedding").cast("array<double>")).collect()
+      .map(r => r.getLong(0) -> r.getSeq[Double](1).toIndexedSeq).toMap
+    val ids = texts.keys.toIndexedSeq.sorted
+    val evalIds = ids.filter(i => i % 7 == 0 && texts(i).split(" ").length >= 8)
+    val evalPred = col("doc_id") % 7 === 0
+    val uid = java.util.UUID.randomUUID().toString.replace("-", "")
+    val (hashT, bandT) = (s"prop_rfr_hash_$uid", s"prop_rfr_band_$uid")
+    val path = tempDir("prop_rfr")
+    Dedup.buildHashIndex(corpus, spark, hashT, s"$path/$hashT")
+    Dedup.buildBandIndex(corpus, spark, bandT, s"$path/$bandT")
+    Similarity.buildIvfIndexPinned(emb, s"$path/ivf")
+    val evG = Curation.evalGrams(corpus, evalPred).localCheckpoint()
+    val seen = scala.collection.mutable.Set.empty[String]
+    try {
+      check(Prop.forAll(Gen.choose(0L, Long.MaxValue)) { seed =>
+        val r = new scala.util.Random(seed)
+        def pick(from: IndexedSeq[Long] = ids) = from(r.nextInt(from.size))
+        def rot(v: IndexedSeq[Double]) = v.indices.map(i => v((i + 7) % v.size))
+        def words(n: Int) = Seq.fill(n)(s"z${r.nextInt(1000000)}").mkString(" ")
+        def some(max: Int) = 1 + r.nextInt(max)
+        val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Option[Seq[Double]])]
+        def add(t: String, v: Option[Seq[Double]]): Unit =
+          rows += ((1000000L + rows.size, t, v))
+        for (_ <- 1 to some(4)) { val s = pick(); add(texts(s), Some(vecs(s))) }
+        for (_ <- 1 to some(4)) {
+          val s = pick()
+          add(texts(s) + " " + texts(s).split(" ").last, Some(rot(vecs(s))))
+        }
+        for (_ <- 1 to some(4)) add("paraphrase " + words(8), Some(vecs(pick())))
+        for (_ <- 1 to some(3))
+          add(texts(pick(evalIds)).split(" ").take(8).mkString(" ") + " " + words(4),
+            Some(rot(vecs(pick()))))
+        for (_ <- 1 to some(3)) add(words(2), Some(rot(vecs(pick()))))
+        for (_ <- 1 to some(3)) {
+          val (t, v) = (words(7), Some(rot(vecs(pick()))))
+          add(t, v)
+          add(t, v)
+        }
+        for (_ <- 1 to some(4)) add(words(9), Some(rot(vecs(pick()))))
+        add(words(9), None)
+        val shuffled = r.shuffle(rows.toSeq)
+        val deltaDocs = shuffled.map(x => (x._1, x._2)).toDF("doc_id", "text").localCheckpoint()
+        val deltaEmb = shuffled.collect { case (id, _, Some(v)) => (id, v) }
+          .toDF("vec_id", "v").localCheckpoint()
+        def verdicts(df: DataFrame) =
+          df.collect().map(x => (x.getLong(0), x.getString(1), x.getLong(2))).toSeq
+        val served = verdicts(Curation.incrementalRefreshServed(
+          deltaDocs, deltaEmb, spark, hashT, bandT, s"$path/ivf", evG))
+        val inQuery = verdicts(Curation.incrementalRefresh(
+          corpus, emb, deltaDocs, deltaEmb, evalPred))
+        seen ++= served.map(_._2)
+        served.size == rows.size && served == inQuery
+      }, runs = math.max(20, propRuns))
+      assert(seen === Set("exact_dup", "near_dup", "sem_dup", "contaminated",
+        "low_quality", "train"), s"verdict classes seen: $seen")
+    } finally {
+      spark.sql(s"DROP TABLE IF EXISTS $hashT")
+      spark.sql(s"DROP TABLE IF EXISTS ${bandT}_bands")
+      spark.sql(s"DROP TABLE IF EXISTS ${bandT}_toks")
+      Similarity.dropIvfIndexPinned(spark, s"$path/ivf")
+    }
   }
 
   /** A random small undirected graph as an edge list over n nodes. */
