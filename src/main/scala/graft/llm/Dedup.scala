@@ -823,7 +823,7 @@ object Dedup {
     * (or its directory) does not exist; any other read or parse
     * failure THROWS (ADVICE r18): a flaky object-store read must not
     * masquerade as "no sidecar" — that would silently drop a swap
-    * candidate in [[graft.llm.Similarity.pinnedAssignedDir]] (picking
+    * candidate in [[resolveCommittedCandidate]] (picking
     * the other, possibly uncommitted, side) or surface in
     * [[reattachBucketedTable]] as the misleading "pre-r18 index:
     * rebuild" message. */
@@ -1064,8 +1064,8 @@ object Dedup {
       // could serve a half-refit — route through the candidate resolver
       if (!spec.committed) throw new IllegalStateException(
         s"the sidecar under $path is mid-swap (committed=false) — re-attach " +
-          "through resolveCommittedCandidate / GateOps.bootGate's candidate " +
-          "form so the newest COMMITTED swap side is served")
+          "through GateOps.bootGate's candidate resolution so the newest " +
+          "COMMITTED swap side is served")
       // ADVICE r18: quote identifiers and escape the path literal so a
       // column needing backticks or a quoted character in the location
       // cannot break (or redirect) the statement
@@ -1164,56 +1164,82 @@ object Dedup {
     *  - The superseded table's files at its old external location are
     *    deleted after a successful rename (repeated compactions used
     *    to leak the old paths' disk). */
-  def compactIndex(spark: SparkSession, table: String, newPath: String): Unit = {
-    val meta = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
-    compactWrite(spark, table, newPath)
+  def compactIndex(spark: SparkSession, table: String, newPath: String): Unit =
+    swapTable(spark, table, newPath, compactRows(spark, table), bucketSpecOf(spark, table))
+
+  /** THE swap of a bucketed serving table — compaction and both
+    * refits ([[refitGroupLabels]], `Similarity.refitIvfIndexPinned`)
+    * replace a table's content through it, and [[recoverCompact]]
+    * completes it from any state a crash leaves. Steps, in order:
+    *  1. [[swapWrite]]: `rows` become the uncommitted epoch + 1
+    *     candidate `<table>_compacting` at `newPath`;
+    *  2. fence the candidate ([[fenceSwapCandidate]]);
+    *  3. DROP the table and RENAME the candidate to its name;
+    *  4. commit the candidate's sidecar;
+    *  5. delete the predecessor's location.
+    * Commit order matters (r19): the sidecar flips BEFORE the
+    * predecessor is deleted, so at every instant at least one
+    * candidate is committed — a crash anywhere leaves either "old
+    * committed wins" (swap rolls back, no data lost) or "new committed
+    * wins, old is a deletable loser"; never ambiguity. */
+  private[graft] def swapTable(
+      spark: SparkSession, table: String, newPath: String,
+      rows: DataFrame, spec: BucketSpec): Unit = {
+    val predecessor = swapWrite(spark, table, newPath, rows, spec)
     fenceSwapCandidate(spark, newPath)
     spark.sql(s"DROP TABLE $table")
     spark.sql(s"ALTER TABLE ${table}_compacting RENAME TO $table")
-    // commit order matters (r19): flip the candidate sidecar BEFORE
-    // deleting the predecessor, so at every instant at least one
-    // candidate is committed — a crash anywhere leaves either "old
-    // committed wins" (swap rolls back, no data lost) or "new
-    // committed wins, old is a deletable loser"; never ambiguity
     commitSpecSidecar(spark, newPath)
-    deleteTableLocation(spark, meta.location)
+    deleteTableLocation(spark, predecessor)
   }
 
-  /** [[compactIndex]]'s WRITE step alone: commit the rewritten bucket
-    * files as `<table>_compacting` at `newPath`, touching nothing
-    * else. Exposed `private[graft]` so LlmSpec can CONSTRUCT the
-    * swap's crash states (committed-write-then-crash, dropped-then-
-    * crash) and prove [[recoverCompact]] completes each one. */
-  private[graft] def compactWrite(
-      spark: SparkSession, table: String, newPath: String): Unit = {
+  /** [[swapTable]]'s WRITE step alone: commit `rows` as
+    * `<table>_compacting` at `newPath` with a candidate sidecar —
+    * predecessor's epoch + 1, committed=false until the swap's rename
+    * lands ([[commitSpecSidecar]] flips it): the data is complete the
+    * moment this sidecar exists, but a boot must prefer the
+    * still-committed predecessor until the flip. Returns the
+    * predecessor's location. */
+  private def swapWrite(
+      spark: SparkSession, table: String, newPath: String,
+      rows: DataFrame, spec: BucketSpec): java.net.URI = {
+    val location = spark.sessionState.catalog
+      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table)).location
+    bucketedCreate(rows, s"${table}_compacting", newPath, spec,
+      epoch = sidecarEpoch(spark, location.toString) + 1L, committed = false)
+    location
+  }
+
+  /** A compaction's rows: the table's FILES read plainly, not the
+    * catalog table — the bucketed relation advertises
+    * HashPartitioning(cols, n), which lets Catalyst elide the writer's
+    * repartition as redundant while autoBucketedScan independently
+    * reads plain file splits; the write's tasks then hold arbitrary
+    * bucket mixes and emit (tasks × buckets) files instead of one per
+    * bucket (measured: 16 files for 8 buckets). A plain read carries
+    * no partitioning claim, so the repartition survives and aligns
+    * task ↔ bucket. The catalog already holds the schema: no
+    * footer-schema job. */
+  private def compactRows(spark: SparkSession, table: String): DataFrame = {
     val meta = spark.sessionState.catalog
       .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
-    // read the table's FILES plainly, not the catalog table: the
-    // bucketed relation advertises HashPartitioning(cols, n), which
-    // lets Catalyst elide the writer's repartition as redundant while
-    // autoBucketedScan independently reads plain file splits — the
-    // write's tasks then hold arbitrary bucket mixes and emit
-    // (tasks × buckets) files instead of one per bucket (measured:
-    // 16 files for 8 buckets). A plain read carries no partitioning
-    // claim, so the repartition survives and aligns task ↔ bucket.
-    // The catalog already holds the schema: no footer-schema job.
-    // Candidate sidecar: predecessor's epoch + 1, committed=false until
-    // the swap's rename lands ([[commitSpecSidecar]] flips it) — data
-    // is complete the moment this sidecar exists, but a boot must
-    // prefer the still-committed predecessor until the flip
-    bucketedCreate(
-      spark.read.schema(meta.schema).parquet(meta.location.toString),
-      s"${table}_compacting", newPath, bucketSpecOf(spark, table),
-      epoch = sidecarEpoch(spark, meta.location.toString) + 1L, committed = false)
+    spark.read.schema(meta.schema).parquet(meta.location.toString)
   }
+
+  /** [[compactIndex]]'s WRITE step alone, touching nothing else.
+    * Exposed `private[graft]` so the specs can CONSTRUCT the swap's
+    * crash states (committed-write-then-crash, dropped-then-crash) and
+    * prove [[recoverCompact]] completes each one. */
+  private[graft] def compactWrite(
+      spark: SparkSession, table: String, newPath: String): Unit =
+    swapWrite(spark, table, newPath, compactRows(spark, table), bucketSpecOf(spark, table))
 
   /** Best-effort delete of a superseded table location through the
     * Hadoop FileSystem API — file:/hdfs:/s3a: alike (review r18: the
     * old file-scheme-only guard left the superseded dir AND its spec
     * sidecar behind on object stores, so a committed refit would read
-    * as TWO sidecar-bearing candidates in [[graft.llm.Similarity
-    * .pinnedAssignedDir]] forever). A failed delete only leaks space —
+    * as TWO sidecar-bearing candidates in [[resolveCommittedCandidate]]
+    * forever). A failed delete only leaks space —
     * never fail the swap over cleanup. */
   private[graft] def deleteTableLocation(
       spark: SparkSession, location: java.net.URI): Unit =
@@ -1221,8 +1247,8 @@ object Dedup {
       val p = new org.apache.hadoop.fs.Path(location)
       val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
       // review r18 follow-up: best-effort must not be SILENT — a
-      // delete the role can't perform leaves the dual-candidate state
-      // pinnedAssignedDir refuses, and the operator needs to learn it
+      // delete the role can't perform leaves a dual-candidate state on
+      // disk, and the operator needs to learn it
       // at swap time, not at the next boot's misleading crash message
       if (fs.exists(p) && !fs.delete(p, true))
         System.err.println(
@@ -1236,7 +1262,7 @@ object Dedup {
             s"(${e.getClass.getSimpleName}: ${e.getMessage}) — remove it manually")
     }
 
-  /** Crash recovery for [[compactIndex]]'s non-atomic swap — the
+  /** Crash recovery for [[swapTable]]'s non-atomic swap — the
     * documented procedure as CODE (VERDICT r15 task 2: "a recovery
     * procedure that exists only in a comment is untested ops code").
     * Idempotent over every state the swap can crash in:
@@ -1275,7 +1301,7 @@ object Dedup {
           "reclaimed it (this swap's writer lease aged past " + SweepLeaseTtlConf +
           " before recovery ran). The swept data was never the committed truth; " +
           s"DROP the stale catalog entry and re-attach the committed candidate " +
-          "(GateOps.bootGateFromCandidates) or re-run compactIndex.")
+          "(GateOps.bootGate) or re-run compactIndex.")
     }
     (exists(table), exists(s"${table}_compacting")) match {
       case (false, true) =>
@@ -3349,24 +3375,14 @@ object Dedup {
 
   /** REFIT the label table: full CC over the caller-held graph (the
     * pair source is the standing band index, not a corpus rescan of
-    * text), swapped in via the compactIndex DROP→RENAME so
-    * [[recoverCompact]] heals a crash inside it. Run when
-    * [[appendGroupLabels]] reports pending merges — the CC analog of
-    * the IVF refit cadence. */
+    * text), swapped in via [[swapTable]] so [[recoverCompact]] heals a
+    * crash inside it. Run when [[appendGroupLabels]] reports pending
+    * merges — the CC analog of the IVF refit cadence. */
   def refitGroupLabels(
       nodes: DataFrame, edges: DataFrame, spark: SparkSession,
-      table: String, newPath: String, buckets: Int = 8): Unit = {
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-    bucketedCreate(connectedComponentsStar(nodes, edges), s"${table}_compacting",
-      newPath, BucketSpec(buckets, Seq("id"), Seq("id")),
-      epoch = sidecarEpoch(spark, meta.location.toString) + 1L, committed = false)
-    fenceSwapCandidate(spark, newPath)
-    spark.sql(s"DROP TABLE $table")
-    spark.sql(s"ALTER TABLE ${table}_compacting RENAME TO $table")
-    commitSpecSidecar(spark, newPath)
-    deleteTableLocation(spark, meta.location)
-  }
+      table: String, newPath: String, buckets: Int = 8): Unit =
+    swapTable(spark, table, newPath, connectedComponentsStar(nodes, edges),
+      BucketSpec(buckets, Seq("id"), Seq("id")))
 
   /** Fixed-iteration PageRank over the undirected dup-pair graph —
     * the centrality companion to the connected-components tier: inside

@@ -2,7 +2,7 @@ package graft.llm
 
 import org.apache.spark.ml.classification.{LogisticRegression, LogisticRegressionModel}
 import org.apache.spark.ml.feature.HashingTF
-import org.apache.spark.ml.functions.vector_to_array
+import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -20,7 +20,7 @@ import graft.{Q, Tables}
   * the classifier generalizes from a reference sample. All stages are
   * distributed: HashingTF is a map-only projection (fixed 2^15
   * feature space — no vocabulary fit, no driver state), LogisticRegression
-  * training is MLlib's distributed L-BFGS, scoring broadcasts the
+  * training is MLlib's distributed L-BFGS, scoring ships the
   * coefficient vector; the keep rule is a pure column expression on a
   * deterministic per-doc hash uniform (reproducible, unlike
   * rand()-based sampling).
@@ -58,12 +58,19 @@ object QualityModel {
       .fit(weighted)
   }
 
-  /** Score docs with P(reference-like) as `quality_score`. */
+  /** Score docs with P(reference-like) as `quality_score`: the binary
+    * logistic model's own arithmetic (margin m = features·w + b,
+    * P = 1 − 1/(1 + e^m)) over the coefficients alone, so the task
+    * closure carries w and b only. `model.transform` would ship the
+    * whole model, whose training summary holds the SparkSession — and
+    * once the session has an `Observation` its manager does not
+    * serialize, failing every scoring task (QualitySpec pins both the
+    * failure case and equality with `model.transform`). */
   def score(model: LogisticRegressionModel, docs: DataFrame): DataFrame = {
-    val p1 = element_at(vector_to_array(col("probability")), 2)
-    model.transform(featurize(docs))
-      .withColumn("quality_score", p1)
-      .drop("tokens", "features", "rawPrediction", "probability", "prediction")
+    val (w, b) = (model.coefficients, model.intercept)
+    val p1 = udf((f: Vector) => 1.0 - 1.0 / (1.0 + math.exp(f.dot(w) + b)))
+    featurize(docs).withColumn("quality_score", p1(col("features")))
+      .drop("tokens", "features")
   }
 
   /** GPT-3-style Pareto keep rule, deterministic: per-doc uniform

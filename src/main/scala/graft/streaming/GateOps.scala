@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.Materialize
-import graft.llm.{Curation, Dedup}
+import graft.llm.{Curation, Dedup, Similarity}
 
 /** The serving-index maintenance lifecycle's STREAMING orchestration —
   * the two operational rules the r16 pins established, as callable code
@@ -19,12 +19,15 @@ import graft.llm.{Curation, Dedup}
   *     [[compactUnderGate]]: quiesce → swap → restart, in that order,
   *     so no trigger can land inside the drop→rename window at all.
   *
-  *  2. Every gate start must be RECOVERABLE-BY-CONSTRUCTION: a crash
-  *     anywhere inside [[Dedup.compactIndex]]'s non-atomic swap leaves
-  *     the catalog in one of the states [[Dedup.recoverCompact]]
-  *     completes, so a boot sequence that recovers BEFORE resolving the
-  *     gate's plan ([[bootGate]]) can never start a gate against a
-  *     half-swapped index — the restart path IS the recovery path.
+  *  2. Every gate start must be RECOVERABLE-BY-CONSTRUCTION: every
+  *     index family (hash, band, gram, SRP, group-label, and the
+  *     k-means, PQ and pinned IVF `assigned` tables) is a bucketed
+  *     catalog table replaced through one non-atomic swap
+  *     (`Dedup.swapTable`: compaction and both refits). A crash
+  *     anywhere inside it, with or without catalog loss, leaves a
+  *     state the one boot ([[bootGate]]) completes BEFORE resolving the
+  *     gate's plan, so a gate can never start against a half-swapped
+  *     index — the restart path IS the recovery path.
   *
   * At scale these run on the ingest orchestrator (one driver owns the
   * gate and its indexes); nothing here touches executors beyond the
@@ -54,140 +57,76 @@ object GateOps {
     restart()
   }
 
-  /** Start (or restart) a gate whose stream-static side reads the given
-    * bucketed serving tables, completing any interrupted compaction
-    * swap FIRST: for each table, [[Dedup.recoverCompact]] finishes
-    * whatever half-swap a previous process died inside ("renamed" /
-    * "swapped"), or no-ops on a clean catalog — then, and only then,
-    * `start` resolves the gate's plan against the recovered tables.
-    * Returns the recovery action per table (for the operator's log)
-    * alongside the started query.
+  /** Start (or restart) a gate, healing every serving table it reads
+    * FIRST — the one boot for every index family. Each table is booted
+    * the same way:
+    *  - when the catalog knows neither the table nor its `_compacting`
+    *    sibling (a fresh catalog, or a crash inside a swap plus
+    *    catalog loss), the newest COMMITTED candidate location is
+    *    resolved by the sidecar commit-epoch protocol
+    *    ([[Dedup.resolveCommittedCandidate]]: mid-swap and superseded
+    *    candidates are deleted, except a mid-swap one whose writer
+    *    lease is still fresh — possibly a live refit on another driver,
+    *    reclaimed by a later boot once the lease ages past
+    *    `graft.index.sweepLeaseTtlMs`) and re-attached from its bucket-
+    *    spec sidecar ([[Dedup.reattachBucketedTable]]; the action reads
+    *    "attached+…");
+    *  - then [[Dedup.recoverCompact]] completes whatever half-swap a
+    *    previous process died inside ("renamed" / "swapped" /
+    *    "committed") or no-ops on a clean catalog ("noop").
+    * Only then does `start` resolve the gate's plan, so a gate can
+    * never start against a half-swapped or unattached index — the
+    * restart path IS the recovery path.
     *
-    * The (false, false) state — neither the table nor its
-    * `_compacting` sibling registered — still throws loudly here: the
-    * compacted write never committed and the probe tables are gone, so
-    * starting a gate would be serving an absent index; the caller
-    * re-runs the build, not the boot. */
-  def bootGate(spark: SparkSession, tables: Seq[String])(
-      start: () => StreamingQuery): (Map[String, String], StreamingQuery) = {
-    val actions = tables.map(t => t -> Dedup.recoverCompact(spark, t)).toMap
-    (actions, start())
-  }
-
-  /** [[bootGate]] covering BOTH index families a full refresh gate
-    * reads: the catalog-backed bucketed tables (hash/band/gram/SRP and,
-    * since the VERDICT r16 task 4 bucketing, the PINNED IVF `assigned`
-    * table — all via [[Dedup.recoverCompact]]) and the path-based
-    * cluster-partitioned IVF/PQ pairs
-    * ([[graft.llm.Similarity.recoverCompactIvf]], whose swap states
-    * live on the filesystem, not in the catalog). Each `ivfPath` is
-    * dispatched by what the catalog knows: if the path's derived
-    * pinned table (or its `_compacting` sibling) is registered, the
-    * swap states are catalog states and the bucketed-table recovery
-    * applies; otherwise the path belongs to the directory-partitioned
-    * family and the filesystem recovery runs. One boot call heals
-    * every standing artifact before the gate's plan resolves. */
+    * `tables` maps each bucketed serving table to every location its
+    * data may live at (the last build or compaction target plus any
+    * in-flight one). `roots` are index roots (k-means IVF, PQ or pinned
+    * IVF): a root's `assigned` table is
+    * [[graft.llm.Similarity.ivfPinnedTable]]`(root)`, its candidates
+    * are the caller's paths for that table plus the root's own
+    * `assigned`/`assigned_*` dirs, and its action is reported under
+    * the root. Where a root holds `seeds` (the pinned family), a refit
+    * crash can leave that cache stale relative to the recovered table:
+    * [[graft.llm.Similarity.recoverRefitSeeds]] heals it ("+seeds").
+    *
+    * Tables the catalog still knows skip filesystem arbitration
+    * entirely: their swap states are catalog states that
+    * [[Dedup.recoverCompact]] completes, and deleting a directory the
+    * catalog references would break that recovery. A table with no
+    * sidecar-bearing candidate fails loudly — nothing provably safe
+    * exists to serve, and the caller re-runs the build, not the boot. */
   def bootGate(
-      spark: SparkSession, tables: Seq[String], ivfPaths: Seq[String])(
+      spark: SparkSession, tables: Map[String, Seq[String]], roots: Seq[String] = Nil)(
       start: () => StreamingQuery): (Map[String, String], StreamingQuery) = {
-    val tableActions = tables.map(t => t -> Dedup.recoverCompact(spark, t))
-    val ivfActions = ivfPaths.map { p =>
-      val t = graft.llm.Similarity.ivfPinnedTable(p)
-      val known =
-        spark.catalog.tableExists(t) || spark.catalog.tableExists(s"${t}_compacting")
-      // FRESH-CATALOG healing (r18, VERDICT r17 task 3): when the
-      // catalog knows nothing but the filesystem holds a pinned
-      // index (sidecar-bearing assigned dir — the build OR the dir a
-      // refit swapped in), re-attach the bucketed table from path +
-      // sidecar before recovery. Without this, a pinned index on a
-      // fresh catalog would mis-dispatch to the directory-partitioned
-      // branch and the gate would resolve against an absent table.
-      val attached = !known && {
-        graft.llm.Similarity.pinnedAssignedDir(spark, p) match {
-          case Some(dir) => Dedup.reattachBucketedTable(spark, t, dir)
-          case None => false
-        }
-      }
-      if (known || attached) {
-        val action = Dedup.recoverCompact(spark, t)
-        // a refit crash can leave the seeds CACHE stale relative to
-        // the (recovered) table — heal it before the gate resolves
-        val seeds =
-          if (graft.llm.Similarity.recoverRefitSeeds(spark, p)) "+seeds" else ""
-        p -> ((if (attached) "attached+" else "") + action + seeds)
-      } else p -> graft.llm.Similarity.recoverCompactIvf(p)
+    val rootTables = roots.map(r => r -> Similarity.ivfPinnedTable(r))
+    val tableActions = (tables -- rootTables.map(_._2)).map { case (t, paths) =>
+      t -> bootTable(spark, t, paths)
     }
-    ((tableActions ++ ivfActions).toMap, start())
+    val rootActions = rootTables.map { case (root, t) =>
+      val action = bootTable(
+        spark, t, tables.getOrElse(t, Nil) ++ Similarity.assignedCandidates(spark, root))
+      val seeds = new org.apache.hadoop.fs.Path(root, "seeds")
+      val healed = seeds.getFileSystem(spark.sessionState.newHadoopConf()).exists(seeds) &&
+        Similarity.recoverRefitSeeds(spark, root)
+      root -> (if (healed) s"$action+seeds" else action)
+    }
+    (tableActions ++ rootActions, start())
   }
 
-  /** [[bootGate]] for a FRESH CATALOG (r18, VERDICT r17 task 3 — the
-    * last durable-metastore assumption dies): each catalog-backed
-    * serving table is named WITH its on-disk location, and any table
-    * the (possibly empty, in-memory) catalog does not know is
-    * re-attached from location + bucket-spec sidecar
-    * ([[Dedup.reattachBucketedTable]]) before the usual recovery runs
-    * — so a brand-new process on a brand-new metastore serves every
-    * index family from paths alone, exactly like the path-based IVF
-    * tier always did. Tables the catalog already knows pass straight
-    * through to recovery (the re-attach is a no-op); actions report
-    * "attached+" in front of the recovery verb so the operator's log
-    * shows which handles were healed from disk. The caller passes
-    * each table's CURRENT location (after a compaction that moved the
-    * data, that is the compaction's target path — the sidecar rides
-    * the data). */
-  def bootGate(
-      spark: SparkSession, tablePaths: Map[String, String], ivfPaths: Seq[String])(
-      start: () => StreamingQuery): (Map[String, String], StreamingQuery) = {
-    val attached = tablePaths.collect {
-      case (t, p) if Dedup.reattachBucketedTable(spark, t, p) => t
-    }.toSet
-    val (actions, q) = bootGate(spark, tablePaths.keys.toSeq, ivfPaths)(start)
-    (actions.map { case (k, v) =>
-      k -> (if (attached(k)) s"attached+$v" else v)
-    }, q)
-  }
-
-  /** [[bootGate]] for the LAST uncovered crash combination (r19,
-    * VERDICT r18 task 1): crash INSIDE a compaction/refit swap plus
-    * catalog loss. In that state a bucketed serving table's data can
-    * be at either of two locations — the committed predecessor or the
-    * swap's candidate target — and a fresh catalog knows neither, so
-    * the single-path [[bootGate]] form can't tell which to re-attach.
-    * Here the caller passes EVERY location the table may live at
-    * (typically the last build/compaction target plus the in-flight
-    * one) and [[graft.llm.Dedup.resolveCommittedCandidate]] arbitrates
-    * by the sidecar commit-epoch protocol: the newest COMMITTED
-    * candidate is attached, mid-swap (committed=false) and superseded
-    * candidates are DELETED — recovery is fully automatic for every
-    * crash × catalog-loss combination, with the pinned IVF family
-    * resolved the same way from its root listing (`ivfPaths`, via
-    * [[graft.llm.Similarity.pinnedAssignedDir]]). One deliberate
-    * deferral (r20, ADVICE r19): a mid-swap candidate whose writer
-    * lease is still fresh is left in place — it may be a LIVE refit on
-    * another driver, not a crash leftover — and is reclaimed by a
-    * later boot once the lease ages past `graft.index.sweepLeaseTtlMs`.
-    *
-    * Tables the catalog still knows (or whose `_compacting` sibling it
-    * knows) skip filesystem arbitration entirely: their swap states
-    * are catalog states that [[graft.llm.Dedup.recoverCompact]]
-    * completes, and deleting a directory the catalog references would
-    * break that recovery. A table with NO sidecar-bearing candidate
-    * fails loudly — nothing provably safe exists to serve. */
-  def bootGateFromCandidates(
-      spark: SparkSession, tableCandidates: Map[String, Seq[String]],
-      ivfPaths: Seq[String])(
-      start: () => StreamingQuery): (Map[String, String], StreamingQuery) = {
-    val resolved = tableCandidates.map { case (t, paths) =>
-      val known =
-        spark.catalog.tableExists(t) || spark.catalog.tableExists(s"${t}_compacting")
-      if (known) t -> paths.headOption.getOrElse("")
-      else t -> Dedup.resolveCommittedCandidate(spark, paths).getOrElse(
+  /** One table's boot step of [[bootGate]]: re-attach from the newest
+    * committed candidate when the catalog has lost the table, then
+    * complete any half-swap. */
+  private def bootTable(spark: SparkSession, t: String, candidates: Seq[String]): String = {
+    val known = spark.catalog.tableExists(t) || spark.catalog.tableExists(s"${t}_compacting")
+    val attached = !known && {
+      val dir = Dedup.resolveCommittedCandidate(spark, candidates).getOrElse(
         throw new IllegalStateException(
-          s"no sidecar-bearing candidate for $t among ${paths.mkString(", ")} — " +
+          s"no sidecar-bearing candidate for $t among ${candidates.mkString(", ")} — " +
             "nothing to re-attach (re-run the build, or backfillSpecSidecar on " +
             "a catalog that still knows the table)"))
+      Dedup.reattachBucketedTable(spark, t, dir)
     }
-    bootGate(spark, resolved, ivfPaths)(start)
+    (if (attached) "attached+" else "") + Dedup.recoverCompact(spark, t)
   }
 
   /** The WHEN-TO-COMPACT rule as code (r17; the refit-cadence

@@ -851,7 +851,7 @@ object StreamingAlerts {
     // (`pinnedAssignExpr`: the bounded seed set rides as array
     // literals, so the streaming plan needs no state store — the
     // aggregate assignment form would have planned one), and probes
-    // the STATIC persisted cluster-partitioned assignment
+    // the STATIC persisted cluster-bucketed assignment
     // (buildIvfIndexPinned — the artifact an at-scale gate maintains
     // and appendIvfIndexPinned keeps fresh) via a stream-static join
     // on the cell: only the arriving batch crosses the wire. The
@@ -895,7 +895,7 @@ object StreamingAlerts {
     //   'x' md5(text) against the PERSISTED content-hash index,
     //   'n' fused minhash bands against the PERSISTED band index,
     //   's' pinned-cell assignment (seeds as array literals — no state
-    //       store) against the PERSISTED cluster-partitioned assignment,
+    //       store) against the PERSISTED cluster-bucketed assignment,
     //   'c' fused 8-gram keys against the eval-gram set (eval-slice-
     //       sized: the broadcast-class static side).
     // Every branch is a stream-static join — only the arriving batch

@@ -194,25 +194,46 @@ class DocsSpec extends AnyFunSuite {
       s"build the edge layout with Dedup.undirected, not by hand: ${sites.mkString(", ")}")
   }
 
+  /** Each occurrence of `token` in the comment-stripped code of the
+    * llm and streaming tiers (the serving-index code), as
+    * `File.scala:enclosingMemberDef` (a def nested in a member counts
+    * as the member). */
+  private def indexTierSites(token: String): Seq[String] = {
+    val defRe = """(?m)^  (?:[\w\[\]]+\s+)*def\s+(\w+)""".r
+    val scoped = mainCode.filter { case (p, _) =>
+      val s = p.toString.replace('\\', '/')
+      s.contains("/graft/llm/") || s.contains("/graft/streaming/")
+    }
+    assert(scoped.size > 5, s"the census scanned only ${scoped.size} files")
+    scoped.flatMap { case (p, src) =>
+      Iterator.iterate(src.indexOf(token))(i => src.indexOf(token, i + 1)).takeWhile(_ >= 0)
+        .map(at => s"${p.getFileName}:${defRe.findAllMatchIn(src.take(at)).toSeq.last.group(1)}")
+    }
+  }
+
   test("bucketed-write census: only Dedup.bucketedWriter calls bucketBy in the llm and streaming tiers") {
     // one bucketed writer for the serving indexes: it repartitions on
     // the bucket columns first, so every build, append, compaction and
     // refit lands at most one file per bucket. A hand-written bucketBy
     // skips that and lands one file per (task, bucket) pair. No
     // allowlist.
-    val call = ".bucketBy("
-    val defRe = """def\s+(\w+)""".r
-    val scoped = mainCode.filter { case (p, _) =>
-      val s = p.toString.replace('\\', '/')
-      s.contains("/graft/llm/") || s.contains("/graft/streaming/")
-    }
-    assert(scoped.size > 5, s"the census scanned only ${scoped.size} files")
-    val sites = scoped.flatMap { case (p, src) =>
-      Iterator.iterate(src.indexOf(call))(i => src.indexOf(call, i + 1)).takeWhile(_ >= 0)
-        .map(at => s"${p.getFileName}:${defRe.findAllMatchIn(src.take(at)).toSeq.last.group(1)}")
-    }
+    val sites = indexTierSites(".bucketBy(")
     assert(sites === Seq("Dedup.scala:bucketedWriter"),
       s"write serving indexes through Dedup.bucketedWriter, not by hand: ${sites.mkString(", ")}")
+  }
+
+  test("index-swap census: only Dedup.swapTable and recoverCompact rename a table; no directory swap or cluster-partitioned write") {
+    // one storage and commit protocol for every serving index: each
+    // family is a bucketed catalog table, replaced through the one
+    // swap and completed by the one recovery. A hand-copied
+    // DROP→RENAME, a directory move or a cluster-partitioned write is
+    // a second protocol with crash states nothing recovers.
+    val renames = indexTierSites("RENAME TO").distinct.sorted
+    assert(renames === Seq("Dedup.scala:recoverCompact", "Dedup.scala:swapTable"),
+      s"swap serving tables through Dedup.swapTable, not by hand: ${renames.mkString(", ")}")
+    val other = indexTierSites("Files.move") ++ indexTierSites(""".partitionBy("cluster")""")
+    assert(other.isEmpty,
+      s"serving indexes are bucketed catalog tables, not directories: ${other.mkString(", ")}")
   }
 
   test("every declared query name appears in COVERAGE.md's inventory") {

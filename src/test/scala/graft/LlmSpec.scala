@@ -10,6 +10,21 @@ import graft.llm.{Dedup, Multimodal, Similarity}
 class LlmSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Every scan of the bucketed table `table` in `df`'s plan reads
+    * fewer buckets than the table has: the cluster `isin` filter
+    * reaches the file listing as bucket pruning, not a full-index scan
+    * with a post-filter. */
+  private def assertBucketPruned(df: DataFrame, table: String): Unit = {
+    val n = Dedup.bucketSpecOf(spark, table).numBuckets
+    val scans = collectPlan(df.queryExecution.executedPlan).collect {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec
+          if f.tableIdentifier.exists(_.table == table) => f
+    }
+    assert(scans.nonEmpty && scans.forall(_.optionalBucketSet.exists(_.cardinality() < n)),
+      s"expected every $table scan to read fewer than $n buckets " +
+        s"(${scans.map(_.optionalBucketSet)}):\n${df.queryExecution.executedPlan}")
+  }
+
   private def docs(rows: (Long, String)*): DataFrame =
     rows.toSeq.map { case (id, t) => (id, t, "en", "src", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -408,11 +423,15 @@ class LlmSpec extends SparkSpec {
         (1L to 5L).map(i => (i, base.map(_ + (rnd.nextGaussian() * 0.05).toFloat), 0)) ++:
         (10L until 200L).map(i => (i, vec(i.toInt), 1))
     val emb = rows.toDF("vec_id", "embedding", "label")
-    val approx = Similarity.ivfTopK(emb, 0L, 6, nClusters = 8, nProbe = 2)
-      .select("vec_id").as[Long].collect().toSet
-    val planted = (1L to 5L).toSet
-    val recall = (planted intersect approx).size.toDouble / planted.size
-    assert(recall >= 0.8, s"IVF recall $recall on planted neighbors (got=$approx)")
+    val path = tempDir("ivf_planted")
+    try {
+      Similarity.buildIvfIndex(emb, path, nClusters = 8)
+      val approx = Similarity.ivfSearch(spark, path, 0L, 6, nProbe = 2)
+        .select("vec_id").as[Long].collect().toSet
+      val planted = (1L to 5L).toSet
+      val recall = (planted intersect approx).size.toDouble / planted.size
+      assert(recall >= 0.8, s"IVF recall $recall on planted neighbors (got=$approx)")
+    } finally Similarity.dropIvfIndexPinned(spark, path)
   }
 
   test("IVF index builds once; the search path reads it (no fit) with partition pruning") {
@@ -427,12 +446,7 @@ class LlmSpec extends SparkSpec {
     val a = Similarity.ivfSearch(spark, path, probeId = 0L, k = 10)
     val b = Similarity.ivfSearch(spark, path, probeId = 0L, k = 10)
     assert(a.collect().toSeq === b.collect().toSeq)
-    // the cluster filter reaches the file listing: partition pruning,
-    // not a full-index scan with a post-filter
-    val scans = collectPlan(a.queryExecution.executedPlan)
-      .collect { case f: org.apache.spark.sql.execution.FileSourceScanExec => f }
-    assert(scans.exists(_.partitionFilters.nonEmpty),
-      s"no partition filter in:\n${a.queryExecution.executedPlan}")
+    assertBucketPruned(a, Similarity.ivfPinnedTable(path))
   }
 
   test("appendIvfIndex: frozen-centroid assignment law, idempotence, no refit (r16)") {
@@ -465,7 +479,7 @@ class LlmSpec extends SparkSpec {
         s"vec ${r.getLong(0)} assigned ${r.getInt(2)}, frozen argmin is $want")
     }
     // at-least-once redelivery: a re-appended batch adds nothing (the
-    // idempotence anti-join reads only the delta's target partitions)
+    // idempotence anti-join reads only the delta's target buckets)
     Similarity.appendIvfIndex(emb.filter(col("vec_id") >= 200), spark, path)
     assert(spark.read.parquet(s"$path/assigned").count() === emb.count(),
       "re-appending the same delta must be a no-op")
@@ -512,46 +526,47 @@ class LlmSpec extends SparkSpec {
     assert(res.count() === 5)
   }
 
-  test("compactIvfIndex folds appended file sets to one file per cluster, probe-identical, recoverable (r16)") {
-    // the k-means tier's compaction + crash recovery, mirroring the
-    // bucketed tiers' compactIndex/recoverCompact discipline
+  test("k-means IVF compaction rides compactIndex: one file per bucket, probe-identical, recoverable (r16)") {
+    // the k-means tier's compaction + crash recovery are the bucketed
+    // tiers' own compactIndex/recoverCompact: its `assigned` rows are a
+    // bucketed catalog table like every other serving index
     val path = tempDir("ivf_compact")
+    val tbl = Similarity.ivfPinnedTable(path)
     val emb = Tables.embeddings(spark, sf("sf0.001"))
     Similarity.buildIvfIndex(emb.filter(col("vec_id") < 150), path, nClusters = 8)
     Similarity.appendIvfIndex(
       emb.filter(col("vec_id") >= 150 && col("vec_id") < 300), spark, path)
     Similarity.appendIvfIndex(emb.filter(col("vec_id") >= 300), spark, path)
-    def files(): Map[String, Int] =
-      Option(new java.io.File(s"$path/assigned").listFiles()).toSeq.flatten
-        .filter(_.getName.startsWith("cluster="))
-        .map(d => d.getName ->
-          Option(d.listFiles()).toSeq.flatten.count(_.getName.startsWith("part-")))
-        .toMap
-    assert(files().values.exists(_ > 1),
-      s"fixture must accumulate >1 file set in some cluster: ${files()}")
-    val before = Similarity.ivfSearch(spark, path, probeId = 0L, k = 10).collect().toSeq
-    Similarity.compactIvfIndex(spark, path)
-    assert(files().values.forall(_ <= 1),
-      s"compaction must fold to one file per cluster: ${files()}")
-    assert(Similarity.ivfSearch(spark, path, probeId = 0L, k = 10).collect().toSeq
-      === before, "probe must be identical after compaction")
-    // crash state 1: compacted write committed, swap not started
-    spark.read.parquet(s"$path/assigned").repartition(col("cluster"))
-      .write.mode("overwrite").partitionBy("cluster").parquet(s"$path/assigned_compacting")
-    assert(Similarity.recoverCompactIvf(path) === "swapped")
-    assert(Similarity.ivfSearch(spark, path, probeId = 0L, k = 10).collect().toSeq
-      === before)
-    // crash state 2: between the two moves (assigned gone, _compacting present)
-    java.nio.file.Files.move(
-      java.nio.file.Paths.get(path, "assigned"),
-      java.nio.file.Paths.get(path, "assigned_compacting"))
-    assert(Similarity.recoverCompactIvf(path) === "renamed")
-    assert(Similarity.ivfSearch(spark, path, probeId = 0L, k = 10).collect().toSeq
-      === before)
-    // clean state: explicit no-op; nothing at all: loud error
-    assert(Similarity.recoverCompactIvf(path) === "noop")
-    intercept[IllegalStateException](
-      Similarity.recoverCompactIvf(tempDir("ivf_compact_empty")))
+    try {
+      val buckets = Dedup.bucketSpecOf(spark, tbl).numBuckets
+      def files(): Int = {
+        val loc = new java.io.File(spark.sessionState.catalog.getTableMetadata(
+          org.apache.spark.sql.catalyst.TableIdentifier(tbl)).location)
+        Option(loc.listFiles()).toSeq.flatten.count(_.getName.startsWith("part-"))
+      }
+      def probe() = Similarity.ivfSearch(spark, path, probeId = 0L, k = 10).collect().toSeq
+      assert(files() > buckets, s"fixture must accumulate appended file sets: ${files()}")
+      val before = probe()
+      Dedup.compactIndex(spark, tbl, s"$path/assigned_c1")
+      assert(files() <= buckets, s"compaction must fold to one file per bucket: ${files()}")
+      assert(probe() === before, "probe must be identical after compaction")
+      // crash state 1: compacted write committed, swap not started
+      Dedup.compactWrite(spark, tbl, s"$path/assigned_c2")
+      assert(Dedup.recoverCompact(spark, tbl) === "swapped")
+      assert(probe() === before)
+      // crash state 2: compacted write committed, DROP issued, RENAME never ran
+      Dedup.compactWrite(spark, tbl, s"$path/assigned_c3")
+      spark.sql(s"DROP TABLE $tbl")
+      assert(Dedup.recoverCompact(spark, tbl) === "renamed")
+      assert(probe() === before)
+      // clean state: explicit no-op; nothing registered: loud error
+      assert(Dedup.recoverCompact(spark, tbl) === "noop")
+      intercept[IllegalStateException](Dedup.recoverCompact(
+        spark, Similarity.ivfPinnedTable(tempDir("ivf_compact_empty"))))
+    } finally {
+      spark.sql(s"DROP TABLE IF EXISTS ${tbl}_compacting")
+      Similarity.dropIvfIndexPinned(spark, path)
+    }
   }
 
   test("incremental semantic dedup: expr==agg assignment, planted verdicts, cell blocking (r16)") {
@@ -605,8 +620,9 @@ class LlmSpec extends SparkSpec {
     val p1 = tempDir("ivf_pin_a")
     Similarity.buildIvfIndexPinned(emb.filter(col("vec_id") < 200), p1)
     Similarity.appendIvfIndexPinned(emb.filter(col("vec_id") >= 200), spark, p1)
-    val clean = Similarity.ivfSearchPinned(spark, p1, probeId = 0L, k = 20)
-      .collect().toSeq
+    val cleanSearch = Similarity.ivfSearchPinned(spark, p1, probeId = 0L, k = 20)
+    assertBucketPruned(cleanSearch, Similarity.ivfPinnedTable(p1))
+    val clean = cleanSearch.collect().toSeq
     val p2 = tempDir("ivf_pin_b")
     Similarity.buildIvfIndexPinned(emb.filter(col("vec_id") < 200), p2)
     Similarity.appendIvfIndexPinned(emb, spark, p2) // redelivers the base too
@@ -626,11 +642,9 @@ class LlmSpec extends SparkSpec {
     assert(again.count() > 0)
     assert(Similarity.ivfBuildCount.get() === builds,
       "declared embed_ivf_topk refit KMeans on an already-indexed corpus")
-    // and the search plan is the partition-pruned index scan
-    val scans = collectPlan(again.queryExecution.executedPlan)
-      .collect { case f: org.apache.spark.sql.execution.FileSourceScanExec => f }
-    assert(scans.exists(_.partitionFilters.nonEmpty),
-      s"no partition filter in:\n${again.queryExecution.executedPlan}")
+    // and the search plan is the bucket-pruned index scan
+    assertBucketPruned(again,
+      Similarity.ivfPinnedTable(Similarity.ivfIndexFor(spark, sf("sf0.001"))))
   }
 
   test("IVF index cache keys on corpus content: rewritten corpus gets a fresh index (ADVICE r7)") {
@@ -645,6 +659,12 @@ class LlmSpec extends SparkSpec {
       assert(Similarity.ivfBuildCount.get() === b0 + 1, "first touch must build")
       assert(Similarity.ivfIndexFor(spark, dir, nClusters = 4) === p1)
       assert(Similarity.ivfBuildCount.get() === b0 + 1, "unchanged corpus must not rebuild")
+      // the cache outlives a catalog: a cache hit re-attaches the table
+      val served = Similarity.ivfSearch(spark, p1, probeId = 0L, k = 5).collect().toSeq
+      spark.sql(s"DROP TABLE ${Similarity.ivfPinnedTable(p1)}")
+      assert(Similarity.ivfSearch(spark, Similarity.ivfIndexFor(spark, dir, nClusters = 4),
+        probeId = 0L, k = 5).collect().toSeq === served)
+      assert(Similarity.ivfBuildCount.get() === b0 + 1, "a re-attach must not rebuild")
       writeCorpus(60) // regenerate the corpus in place — listing/size change
       val p2 = Similarity.ivfIndexFor(spark, dir, nClusters = 4)
       assert(Similarity.ivfBuildCount.get() === b0 + 2,
@@ -709,6 +729,17 @@ class LlmSpec extends SparkSpec {
     } finally Bench.deleteRecursively(path)
   }
 
+  test("declared k-means and PQ append queries leave no catalog table behind") {
+    // each invocation builds its own index root; the `assigned` table
+    // it registers is dropped with the root when the query returns
+    for (q <- Seq("embed_ivf_topk_append", "embed_pq_topk_append")) {
+      def tables() = spark.catalog.listTables().collect().map(_.name).toSet
+      val before = tables()
+      assert(SparkEntry.queries(q)(spark, sf("sf0.001")).count() > 0)
+      assert(tables() === before, s"$q left ${tables() -- before}")
+    }
+  }
+
   test("PQ declared queries are SEARCH-ONLY and share ONE index; IVF-PQ prunes partitions") {
     val flatQ = SparkEntry.queries("embed_pq_topk")
     val prunedQ = SparkEntry.queries("embed_ivfpq_topk")
@@ -721,11 +752,9 @@ class LlmSpec extends SparkSpec {
     assert(prunedRows.nonEmpty)
     assert(Similarity.pqBuildCount.get() === builds,
       "a declared PQ query refit codebooks on an already-indexed corpus")
-    // the cluster filter reaches the file listing: partition pruning
-    val scans = collectPlan(pruned.queryExecution.executedPlan)
-      .collect { case f: org.apache.spark.sql.execution.FileSourceScanExec => f }
-    assert(scans.exists(_.partitionFilters.nonEmpty),
-      s"no partition filter in:\n${pruned.queryExecution.executedPlan}")
+    // the cluster filter reaches the file listing: bucket pruning
+    assertBucketPruned(pruned,
+      Similarity.ivfPinnedTable(Similarity.pqIndexFor(spark, sf("sf0.001"))))
     // scores are the SAME LUT in both variants: any vec_id in both top-20s
     // carries the identical ADC score
     val flatScores = flatQ(spark, sf("sf0.001")).collect()
@@ -1490,7 +1519,7 @@ class LlmSpec extends SparkSpec {
     // VERDICT r18 tasks 1 + 3 and ADVICE r18, unit level. The sidecar
     // now carries (epoch, committed); this pins each protocol rule in
     // isolation — the full crash-inside-swap × catalog-loss boot is
-    // StreamingSpec's bootGateFromCandidates test.
+    // StreamingSpec's crash-inside-swap bootGate test.
 
     // ADVICE r18 (medium): a read/parse failure must THROW, never read
     // as "no sidecar" — only genuine absence returns None
@@ -1779,10 +1808,11 @@ class LlmSpec extends SparkSpec {
       // exchanges — centroids ride as an array literal), and the full
       // append derivation pays exactly 2 exchanges with broadcast
       // disabled: the delta side + the PRUNED index side's vec_ids
-      // (no vec_id bucketing on the partitioned tier; pruning bounds
+      // (the table is bucketed by cluster, not vec_id; pruning bounds
       // that side by the delta's target clusters, not the corpus —
-      // the scan's PartitionFilters pin below is what makes "pruned"
-      // a plan property rather than a hope)
+      // the bucket-pruning pins below, on a delta that targets one
+      // cluster, are what make "pruned" a plan property rather than a
+      // hope)
       val ivfPath = s"$path/ivf_plan"
       Similarity.buildIvfIndex(emb.filter(col("vec_id") < 200), ivfPath, nClusters = 8)
       val assignOnly = Similarity.ivfAssignRows(
@@ -1794,15 +1824,22 @@ class LlmSpec extends SparkSpec {
       assert(shuffles(ivfRows) === 2,
         s"IVF append must shuffle the delta + pruned-index vec_ids only:\n" +
           s"${ivfRows.queryExecution.executedPlan}")
-      val scans = collectPlan(ivfRows.queryExecution.executedPlan)
-        .collect { case f: org.apache.spark.sql.execution.FileSourceScanExec => f }
-      assert(scans.exists(_.partitionFilters.nonEmpty),
-        s"idempotence anti-join must partition-prune the index side:\n" +
-          s"${ivfRows.queryExecution.executedPlan}")
+      assertBucketPruned(Similarity.appendIvfIndexRows(
+        emb.filter(col("vec_id") === 200L), spark, ivfPath), Similarity.ivfPinnedTable(ivfPath))
+      // the same anti-join guards the PQ and pinned appends: a
+      // redelivered pinned row reads only its own cluster's bucket
+      val pinnedPath = s"$path/ivf_pinned_plan"
+      Similarity.buildIvfIndexPinned(emb.filter(col("vec_id") < 200), pinnedPath)
+      val redelivered = spark.range(1)
+        .select(lit(0L).as("vec_id"), lit(3L).as("cluster"))
+      assertBucketPruned(Similarity.notYetIndexed(redelivered, spark, pinnedPath),
+        Similarity.ivfPinnedTable(pinnedPath))
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
       Seq("hp_idx", "gp_idx", "bp_idx_bands", "bp_idx_toks",
         "sp_idx_bands", "sp_idx_vecs").foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      Seq("ivf_plan", "ivf_pinned_plan").foreach(r =>
+        Similarity.dropIvfIndexPinned(spark, s"$path/$r"))
     }
   }
 
@@ -2851,7 +2888,8 @@ class LlmSpec extends SparkSpec {
       // catalog loss: the fresh-catalog locate must resolve to the
       // rebuild and serve identically
       spark.sql(s"DROP TABLE $tbl")
-      val dir = Similarity.pinnedAssignedDir(spark, path)
+      val dir = Dedup.resolveCommittedCandidate(
+        spark, Similarity.assignedCandidates(spark, path))
       assert(dir.exists(_.endsWith("assigned")), s"resolved $dir")
       assert(Dedup.reattachBucketedTable(spark, tbl, dir.get))
       assert(Similarity.ivfSearchPinned(spark, path, probeId = 0L, k = 10)
@@ -2915,10 +2953,18 @@ class LlmSpec extends SparkSpec {
     Dedup.buildGramIndex(corpus.filter(col("doc_id") < 100), spark, gramT, s"$path/$gramT")
     Similarity.buildSrpIndex(emb.filter(col("vec_id") < 100), spark, srpT, s"$path/$srpT")
     Similarity.buildIvfIndexPinned(emb.filter(col("vec_id") < 100), ivf)
+    // k-means cluster ids are 0..k-1, and Spark's bucket hash leaves
+    // some buckets with no id at all (k = 16 into 8 buckets never
+    // writes bucket 4); k = 4 into 2 buckets fills both, as the fixed
+    // file counts below need
+    val (kmeans, pq) = (s"$path/kmeans", s"$path/pq")
+    Similarity.buildIvfIndex(emb.filter(col("vec_id") < 100), kmeans, nClusters = 4)
+    Similarity.buildPqIndex(emb.filter(col("vec_id") < 100), pq, nClusters = 4)
     Dedup.buildGroupLabels(corpus.filter(col("doc_id") < 100).select(col("doc_id").as("id")),
       noEdges, spark, labelT, s"$path/$labelT")
     val tables = Seq(hashT, s"${bandT}_bands", s"${bandT}_toks", gramT,
-      s"${srpT}_bands", s"${srpT}_vecs", Similarity.ivfPinnedTable(ivf), labelT)
+      s"${srpT}_bands", s"${srpT}_vecs", Similarity.ivfPinnedTable(ivf), labelT,
+      Similarity.ivfPinnedTable(kmeans), Similarity.ivfPinnedTable(pq))
     def files(t: String): Int = {
       val loc = new org.apache.hadoop.fs.Path(spark.sessionState.catalog
         .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(t)).location)
@@ -2940,6 +2986,8 @@ class LlmSpec extends SparkSpec {
         Similarity.appendSrpIndex(e, spark, srpT)
         Similarity.appendIvfIndexPinned(e, spark, ivf)
         Dedup.appendGroupLabels(d.select(col("doc_id").as("id")), noEdges, spark, labelT)
+        Similarity.appendIvfIndex(e, spark, kmeans)
+        Similarity.appendPqIndex(e, spark, pq)
         for (t <- tables) {
           val added = files(t) - before(t)
           assert(added >= 1 && added <= buckets(t),
@@ -2952,28 +3000,8 @@ class LlmSpec extends SparkSpec {
     } finally {
       Seq(hashT, s"${bandT}_bands", s"${bandT}_toks", gramT, s"${srpT}_bands",
         s"${srpT}_vecs", labelT).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-      Similarity.dropIvfIndexPinned(spark, ivf)
+      Seq(ivf, kmeans, pq).foreach(r => Similarity.dropIvfIndexPinned(spark, r))
     }
-  }
-
-  test("k-means refit from the index: fresh centroids, full corpus served, corpus never read (r17)") {
-    val emb = Tables.embeddings(spark, sf("sf0.001"))
-    val path = tempDir("ivf_krefit")
-    Similarity.buildIvfIndex(emb.filter(col("vec_id") < 200), path, nClusters = 8)
-    Similarity.appendIvfIndex(emb.filter(col("vec_id") >= 200), spark, path)
-    try {
-      val builds = Similarity.ivfBuildCount.get()
-      Similarity.refitIvfIndex(spark, path, nClusters = 8)
-      assert(Similarity.ivfBuildCount.get() === builds + 1, "refit must refit")
-      // every vector survives the refit and the index serves it
-      assert(spark.read.parquet(s"$path/assigned").count() === emb.count())
-      assert(spark.read.parquet(s"$path/centroids").count() === 8L)
-      // post-refit assignment is consistent: every row sits in its own
-      // nearest fresh centroid's cluster ⇒ a probe's top hit via the
-      // pruned search equals itself
-      val res = Similarity.ivfSearch(spark, path, probeId = 0L, k = 5, nProbe = 8)
-      assert(res.count() === 5)
-    } finally Bench.deleteRecursively(path)
   }
 
   test("group-label table: attach-only append, pending-merge signal, refit heals the bridge (r17)") {

@@ -98,4 +98,27 @@ class QualitySpec extends SparkSpec {
     val keeps = rows.map(_.getAs[Int]("keep")).toSet
     assert(keeps.subsetOf(Set(0, 1)))
   }
+
+  test("scoring equals model.transform and still runs once the session has an Observation") {
+    // score() replays the binary model's arithmetic from the
+    // coefficients, so its task closure no longer carries the model:
+    // a trained model's training summary holds the SparkSession, and
+    // once the session has an Observation its ObservationManager does
+    // not serialize ("Task not serializable"). An isolated session
+    // keeps that manager out of the shared one.
+    val model = QualityModel.train(planted, "is_ref")
+    val viaTransform = model.transform(QualityModel.featurize(planted))
+      .select(col("doc_id"),
+        org.apache.spark.ml.functions.vector_to_array(col("probability")).getItem(1))
+      .as[(Long, Double)].collect().toMap
+    val viaScore = QualityModel.score(model, planted)
+      .select("doc_id", "quality_score").as[(Long, Double)].collect().toMap
+    assert(viaScore === viaTransform, "score must equal model.transform's P(reference)")
+    val session = spark.newSession()
+    val obs = org.apache.spark.sql.Observation()
+    session.range(3).observe(obs, count(lit(1)).as("n")).collect()
+    assert(obs.get("n") === 3L)
+    val rows = SparkEntry.queries("curation_quality_model")(session, sf("sf0.001")).collect()
+    assert(rows.nonEmpty && rows.forall(_.getAs[Int]("keep") <= 1))
+  }
 }

@@ -1225,12 +1225,10 @@ class StreamingSpec extends SparkSpec {
       .join(spark.table(s"${tbl}_bands"), Seq("band_idx", "band_hash"))
       .select(col("doc_id").as("delta_id"), col("corpus_id"))
     // BOTH IVF families crashed mid-swap alongside the band-table
-    // crash: the PINNED tier is a bucketed catalog table since the
-    // r16-task-4 bucketing (its swap states are catalog states —
-    // compacted write committed, DROP issued, RENAME never ran), and
-    // the UNPINNED directory-partitioned tier's states live on the
-    // filesystem. The combined boot must dispatch each ivfPath to the
-    // right recovery and heal all three artifacts before the gate
+    // crash, in the same state (compacted write committed, DROP
+    // issued, RENAME never ran): the pinned and k-means `assigned`
+    // tables are bucketed catalog tables like the band table, so the
+    // one boot heals all three artifacts the same way before the gate
     // starts.
     val embCorpus = (0L until 20L)
       .map(i => (i, Seq.tabulate(8)(d => if (d == (i % 8).toInt) 1.0 else 0.0), 0))
@@ -1240,16 +1238,16 @@ class StreamingSpec extends SparkSpec {
     llm.Dedup.compactWrite(spark, pinnedTbl, s"$path/ivf/assigned_c2")
     spark.sql(s"DROP TABLE $pinnedTbl")
     llm.Similarity.buildIvfIndex(embCorpus, s"$path/kmeans", nClusters = 4)
-    java.nio.file.Files.move(
-      java.nio.file.Paths.get(s"$path/kmeans", "assigned"),
-      java.nio.file.Paths.get(s"$path/kmeans", "assigned_compacting"))
+    val kmeansTbl = llm.Similarity.ivfPinnedTable(s"$path/kmeans")
+    llm.Dedup.compactWrite(spark, kmeansTbl, s"$path/kmeans/assigned_c2")
+    spark.sql(s"DROP TABLE $kmeansTbl")
     try {
       // construct the crash: compacted write committed, old table
       // dropped, RENAME never issued
       llm.Dedup.compactWrite(spark, s"${tbl}_bands", s"$path/${tbl}_c2")
       spark.sql(s"DROP TABLE ${tbl}_bands")
       val (actions, q) = streaming.GateOps.bootGate(
-        spark, Seq(s"${tbl}_bands"), Seq(s"$path/ivf", s"$path/kmeans")) {
+        spark, Map(s"${tbl}_bands" -> Nil), Seq(s"$path/ivf", s"$path/kmeans")) {
         () => gate().writeStream
           .format("memory").queryName("gateops_boot_run").outputMode("append").start()
       }
@@ -1259,11 +1257,11 @@ class StreamingSpec extends SparkSpec {
         assert(actions(s"$path/ivf") === "renamed",
           s"boot must heal the pinned (catalog) IVF swap too, got $actions")
         assert(actions(s"$path/kmeans") === "renamed",
-          s"boot must heal the path-based IVF swap too, got $actions")
+          s"boot must heal the k-means IVF swap too, got $actions")
         assert(spark.table(pinnedTbl).count() === 20L,
           "recovered pinned assigned table must serve the full corpus")
-        assert(spark.read.parquet(s"$path/kmeans/assigned").count() === 20L,
-          "recovered path-based assigned table must serve the full corpus")
+        assert(spark.table(kmeansTbl).count() === 20L,
+          "recovered k-means assigned table must serve the full corpus")
         mem.addData(Seq((201L, docA)))
         q.processAllAvailable()
         assert(spark.table("gateops_boot_run")
@@ -1271,14 +1269,14 @@ class StreamingSpec extends SparkSpec {
           "booted gate must serve the recovered (compacted) index")
       } finally q.stop()
       // clean re-boot is a noop recovery
-      val (actions2, q2) = streaming.GateOps.bootGate(spark, Seq(s"${tbl}_bands")) {
+      val (actions2, q2) = streaming.GateOps.bootGate(spark, Map(s"${tbl}_bands" -> Nil)) {
         () => gate().writeStream
           .format("memory").queryName("gateops_boot_run2").outputMode("append").start()
       }
       try assert(actions2(s"${tbl}_bands") === "noop") finally q2.stop()
       // a table whose compacted write never committed refuses the boot
       intercept[IllegalStateException] {
-        streaming.GateOps.bootGate(spark, Seq("gateops_absent_tbl")) {
+        streaming.GateOps.bootGate(spark, Map("gateops_absent_tbl" -> Nil)) {
           () => fail("start must not run when recovery refuses"): org.apache.spark.sql.streaming.StreamingQuery
         }
       }
@@ -1286,8 +1284,10 @@ class StreamingSpec extends SparkSpec {
       spark.sql(s"DROP TABLE IF EXISTS ${tbl}_bands")
       spark.sql(s"DROP TABLE IF EXISTS ${tbl}_bands_compacting")
       spark.sql(s"DROP TABLE IF EXISTS ${tbl}_toks")
-      spark.sql(s"DROP TABLE IF EXISTS $pinnedTbl")
-      spark.sql(s"DROP TABLE IF EXISTS ${pinnedTbl}_compacting")
+      for (t <- Seq(pinnedTbl, kmeansTbl)) {
+        spark.sql(s"DROP TABLE IF EXISTS $t")
+        spark.sql(s"DROP TABLE IF EXISTS ${t}_compacting")
+      }
     }
   }
 
@@ -1345,12 +1345,12 @@ class StreamingSpec extends SparkSpec {
       val mem = MemoryStream[(Long, String)]
       val (actions, q) = streaming.GateOps.bootGate(
         spark,
-        Map(hashTbl -> s"$path/hash",
-          s"${bandTbl}_bands" -> s"$path/band/bands",
-          s"${bandTbl}_toks" -> s"$path/band/toks",
-          gramTbl -> s"$path/gram",
-          s"${srpTbl}_bands" -> s"$path/srp/bands",
-          s"${srpTbl}_vecs" -> s"$path/srp/vecs"),
+        Map(hashTbl -> Seq(s"$path/hash"),
+          s"${bandTbl}_bands" -> Seq(s"$path/band/bands"),
+          s"${bandTbl}_toks" -> Seq(s"$path/band/toks"),
+          gramTbl -> Seq(s"$path/gram"),
+          s"${srpTbl}_bands" -> Seq(s"$path/srp/bands"),
+          s"${srpTbl}_vecs" -> Seq(s"$path/srp/vecs")),
         Seq(s"$path/ivf")) {
         () => llm.Dedup.tokenBanded(mem.toDF().toDF("doc_id", "text"))
           .join(spark.table(s"${bandTbl}_bands"), Seq("band_idx", "band_hash"))
@@ -1398,7 +1398,7 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
-  test("GateOps.bootGateFromCandidates: crash INSIDE a swap plus catalog loss heals every family automatically (r19)") {
+  test("GateOps.bootGate: crash INSIDE a swap plus catalog loss heals every family automatically (r19)") {
     // VERDICT r18 task 1's done condition: kill a swap mid-flight,
     // drop the catalog, boot fresh, and probe every index family
     // identically — with the superseded/mid-swap candidate dirs
@@ -1470,7 +1470,7 @@ class StreamingSpec extends SparkSpec {
           System.currentTimeMillis() - 2L * llm.Dedup.SweepLeaseTtlDefaultMs))
       }
       val mem = MemoryStream[(Long, String)]
-      val (actions, q) = streaming.GateOps.bootGateFromCandidates(
+      val (actions, q) = streaming.GateOps.bootGate(
         spark,
         Map(hashTbl -> Seq(s"$path/hash_v1", s"$path/hash_v2"),
           s"${bandTbl}_bands" -> Seq(s"$path/band/bands"),
@@ -1509,8 +1509,8 @@ class StreamingSpec extends SparkSpec {
       // a table with NO sidecar-bearing candidate refuses the boot —
       // nothing provably safe exists to serve
       intercept[IllegalStateException] {
-        streaming.GateOps.bootGateFromCandidates(
-          spark, Map("bootcrash_ghost" -> Seq(s"$path/nothing")), Nil) {
+        streaming.GateOps.bootGate(
+          spark, Map("bootcrash_ghost" -> Seq(s"$path/nothing"))) {
           () => fail("start must not run when resolution refuses"): org.apache.spark.sql.streaming.StreamingQuery
         }
       }
@@ -1520,6 +1520,50 @@ class StreamingSpec extends SparkSpec {
           pinnedTbl, s"${pinnedTbl}_compacting"))
         spark.sql(s"DROP TABLE IF EXISTS $t")
     }
+  }
+
+  test("GateOps.bootGate: a pinned index compacted outside its root boots on a fresh catalog") {
+    // The ingest gate compacts the pinned `assigned` table to
+    // <dir>/<table>_c<n>, outside the index root, and the swap then
+    // deletes <root>/assigned: the root alone no longer holds a
+    // candidate. The boot names the root (for the seeds check and the
+    // action) together with the table's compaction target, and serves
+    // the compacted data. A root-only boot finds no candidate and
+    // fails loudly, naming the table.
+    implicit val sqlCtx = spark.sqlContext
+    val path = tempDir("graft_boot_outside")
+    val root = s"$path/ivf"
+    val embCorpus = (0L until 24L)
+      .map(i => (i, Seq.tabulate(8)(d => if (d == (i % 8).toInt) 1.0 else 0.0), 0))
+      .toDF("vec_id", "embedding", "label")
+    llm.Similarity.buildIvfIndexPinned(embCorpus, root, nCells = 8)
+    val t = llm.Similarity.ivfPinnedTable(root)
+    val target = s"$path/${t}_c1"
+    def probe() = llm.Similarity.ivfSearchPinned(spark, root, probeId = 3L, k = 4)
+      .collect().toSeq
+    try {
+      val before = probe()
+      assert(before.nonEmpty, "fixture must produce probe hits")
+      llm.Dedup.compactIndex(spark, t, target)
+      assert(!new java.io.File(s"$root/assigned").exists(),
+        "fixture: the compaction must have moved the data out of the root")
+      spark.sql(s"DROP TABLE $t") // catalog loss
+      val refused = intercept[IllegalStateException] {
+        streaming.GateOps.bootGate(spark, Map.empty, Seq(root)) {
+          () => fail("start must not run when no candidate exists"): org.apache.spark.sql.streaming.StreamingQuery
+        }
+      }
+      assert(refused.getMessage.contains(t), refused.getMessage)
+      val mem = MemoryStream[Long]
+      val (actions, q) = streaming.GateOps.bootGate(spark, Map(t -> Seq(target)), Seq(root)) {
+        () => mem.toDF().writeStream.format("memory")
+          .queryName("bootoutside_run").outputMode("append").start()
+      }
+      try {
+        assert(actions === Map(root -> "attached+noop"), s"$actions")
+        assert(probe() === before, "the booted index must answer as before the catalog loss")
+      } finally q.stop()
+    } finally spark.sql(s"DROP TABLE IF EXISTS $t")
   }
 
   test("dropDuplicatesWithinWatermark: the unbounded-source dedup form keeps state only inside the watermark (r17)") {
